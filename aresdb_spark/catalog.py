@@ -49,10 +49,10 @@ class TableDef:
     # cast; Spark 4 ignores the flag and reads timestamp_ntz natively — the
     # cast below is guarded on the observed dtype, so both paths work.
     nanos_columns: tuple[str, ...] = ()
-    # hot/cold table: <sf_dir>/<name> is a HotColdStore root (hot/ + cold/
-    # + _cutoff.txt); reads resolve to the exactly-once union view at the
-    # persisted cutoff (the reference's live+archive scan,
-    # query/aql_processor.go:181-250, 543-570)
+    # hot/cold table: <sf_dir>/<name> is a HotColdStore root (versioned
+    # hot/cold dirs behind its _state.json pointer); reads resolve to the
+    # exactly-once union view at the committed cutoff (the reference's
+    # live+archive scan, query/aql_processor.go:181-250, 543-570)
     hotcold: bool = False
 
 

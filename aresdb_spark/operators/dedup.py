@@ -484,36 +484,18 @@ SIGSTORE_BUCKETS = 16
 SIGSTORE_GC_GRACE_SECONDS = 900.0
 
 
-def _legacy_root_files(path: str) -> "list[str]":
-    """Data files of a pre-v2 (unversioned) store sitting AT the root:
-    ``bhp=*`` partition dirs, or bare parquet part files for the empty
-    unpartitioned case. This — not mere non-emptiness — is the legacy
-    test: a root holding only ``v*/`` remnants is a CRASHED v2 initial
-    write, not a legacy store (treating it as legacy would append
-    ``bhp=*`` dirs beside the orphan and leave the root unreadable)."""
-    import glob as _glob
-    return (_glob.glob(os.path.join(path, "bhp=*"))
-            or [p for p in _glob.glob(os.path.join(path, "*.parquet"))
-                if os.path.isfile(p)]
-            or [p for p in _glob.glob(os.path.join(path, "part-*"))
-                if os.path.isfile(p)])
-
-
-def _displace(state: "dict | None", path: str) -> "list[dict]":
+def _displace(state: "dict | None") -> "list[dict]":
     """The displaced-version ledger for the NEXT commit: carry forward
-    un-reaped entries and add the record this mutation unreferences —
-    the live version being replaced, or the legacy root files on a
-    first conversion. Committed atomically WITH the flip, so the ledger
-    can never disagree with the pointer."""
+    un-reaped entries and add the live version this mutation replaces.
+    Committed atomically WITH the flip, so the ledger can never disagree
+    with the pointer."""
     import time
 
-    displaced = list((state or {}).get("displaced", []))
-    if state is not None:
-        displaced.append({"version": state["version"],
-                          "table": state["table"], "at": time.time()})
-    elif _legacy_root_files(path):
-        displaced.append({"legacy_root": True, "at": time.time()})
-    return displaced
+    if state is None:
+        return []
+    return list(state.get("displaced", [])) + [
+        {"version": state["version"], "table": state["table"],
+         "at": time.time()}]
 
 
 def gc_signature_store(spark, path: str,
@@ -553,30 +535,20 @@ def _gc_locked(spark, path: str, grace_seconds: float) -> int:
     if state is None or not state.get("displaced"):
         return 0
     now = time.time()
-
-    def ident(d):
-        return "legacy_root" if d.get("legacy_root") else d["version"]
-
     reap = [d for d in state["displaced"]
             if now - d["at"] >= grace_seconds]
     if not reap:
         return 0
     for d in reap:
-        if d.get("legacy_root"):
-            for entry in os.listdir(path):
-                if entry.startswith("bhp=") or entry.endswith(".parquet") \
-                        or entry.startswith("part-") or entry == "_SUCCESS":
-                    pointer.gc_dir(os.path.join(path, entry))
-        else:
-            spark.sql(f"DROP TABLE IF EXISTS {d['table']}")
-            pointer.gc_dir(pointer.version_dir(path, d["version"]))
+        spark.sql(f"DROP TABLE IF EXISTS {d['table']}")
+        pointer.gc_dir(pointer.version_dir(path, d["version"]))
     # keep-set recomputed from the COMMIT-TIME ledger so entries a
     # concurrent mutation added mid-reap survive this commit
     # (sources/pointer.py gc_displaced rationale)
-    reaped = {ident(d) for d in reap}
+    reaped = {d["version"] for d in reap}
     cur = pointer.read_state(path) or state
     pointer.commit_state(path, {**cur, "displaced": [
-        d for d in cur.get("displaced", []) if ident(d) not in reaped]})
+        d for d in cur.get("displaced", []) if d["version"] not in reaped]})
     return len(reap)
 
 
@@ -631,8 +603,9 @@ def build_signature_store(df: DataFrame, path: str, text_col: str = "text",
     sources/pointer.py); ``mode="append"`` extends the live version's
     bucketed table with an already-deduped increment (plain file
     appends — new files become visible as they are listed, no swap
-    needed). Stores written before v2 (plain parquet partitioned by
-    ``bhp``) stay readable; appends keep their legacy layout.
+    needed); appending to a root with no committed state creates the
+    store. A root holding only ``v*/`` remnants of a crashed initial
+    write has no committed state, so it is a fresh store too.
 
     The displaced version is NOT deleted at the flip: it enters the
     state's ``displaced`` ledger and survives ``gc_grace_seconds`` so a
@@ -648,24 +621,15 @@ def build_signature_store(df: DataFrame, path: str, text_col: str = "text",
     # (one version flip silently rolled back; pointer.ConcurrentWriteError)
     with pointer.write_lock(path):
         state = pointer.read_state(path)
-        if mode == "append":
-            if state is None and _legacy_root_files(path):
-                # legacy layout: data files (not mere non-emptiness — a
-                # root holding only v*/ remnants of a crashed initial v2
-                # write is a FRESH store) live at the root; keep their
-                # layout
-                bands.write.mode("append").partitionBy("bhp").parquet(path)
-                return
-            if state is not None:
-                table = _sigstore_register(spark, state, path)
-                (bands.write.mode("append").format("parquet")
-                 .bucketBy(state["n_buckets"], "bh").sortBy("bh")
-                 .saveAsTable(table))
-                # drop this session's cached file listing for the table;
-                # OTHER sessions refresh on read (read_signature_store)
-                spark.catalog.refreshTable(table)
-                return
-            # append to a store that doesn't exist yet == create it
+        if mode == "append" and state is not None:
+            table = _sigstore_register(spark, state, path)
+            (bands.write.mode("append").format("parquet")
+             .bucketBy(state["n_buckets"], "bh").sortBy("bh")
+             .saveAsTable(table))
+            # drop this session's cached file listing for the table;
+            # OTHER sessions refresh on read (read_signature_store)
+            spark.catalog.refreshTable(table)
+            return
         version = pointer.next_version(state)
         table = _sigstore_table(path, version)
         target = pointer.version_dir(path, version)
@@ -685,7 +649,7 @@ def build_signature_store(df: DataFrame, path: str, text_col: str = "text",
         pointer.commit_state(path, {
             "format": 2, "version": version, "table": table,
             "n_buckets": n_buckets, "schema_ddl": ddl,
-            "displaced": _displace(state, path)})
+            "displaced": _displace(state)})
         _gc_locked(spark, path, gc_grace_seconds)
 
 
@@ -703,9 +667,7 @@ def read_signature_store(spark, path: str) -> DataFrame:
     appends-since-compaction, and paid only at plan time."""
     from aresdb_spark.sources import pointer
 
-    state = pointer.read_state(path)
-    if state is None:  # pre-v2 store: plain parquet at the root
-        return spark.read.parquet(path)
+    state = pointer.committed_state(path)
     table = _sigstore_register(spark, state, path)
     spark.catalog.refreshTable(table)
     return spark.table(table)
@@ -740,7 +702,7 @@ def incremental_near_duplicates(spark, new_df: DataFrame, store_path: str,
 
     ``prune=True`` materializes the (small) probe eagerly, collects its
     distinct band hashes, and pushes them as a ``bh IN (...)`` filter —
-    on a v2 bucketed store that becomes bucket pruning
+    on the bucketed store that becomes bucket pruning
     (``SelectedBucketsCount`` in the plan), so the probe reads
     O(|probe| × store/n_buckets) instead of O(store): the reference's
     cuckoo-lookup cost model (memstore/cuckoo_index.go:63). This is the
@@ -797,10 +759,8 @@ def compact_signature_store(spark, store_path: str, keep_ids: DataFrame,
     ``gc_signature_store`` reaps it — a reader that resolved the old
     version just before the flip finishes its probe over intact files
     (the reference keeps displaced archive batch versions until purge
-    the same way, memstore/purge.go). A pre-v2 store is converted to
-    the versioned layout by its first compaction."""
+    the same way, memstore/purge.go)."""
     from aresdb_spark.sources import pointer
-    from aresdb_spark.sources.bucketed import write_bucketed
 
     with pointer.write_lock(store_path):
         return _compact_locked(spark, store_path, keep_ids, id_col,
@@ -812,35 +772,17 @@ def _compact_locked(spark, store_path, keep_ids, id_col,
     from aresdb_spark.sources import pointer
     from aresdb_spark.sources.bucketed import write_bucketed
 
-    state = pointer.read_state(store_path)
-    if state is None:
-        # legacy layout: data files sit AT the root we are about to put
-        # v0 under. Read only the data files (basePath keeps `bhp` a
-        # partition column) so neither the new version dir nor orphaned
-        # v*/ remnants of a crashed earlier write enter the scan.
-        import glob as _glob
-        if _glob.glob(os.path.join(store_path, "bhp=*")):
-            store = (spark.read.option("basePath", store_path)
-                     .parquet(os.path.join(store_path, "bhp=*")))
-        else:  # empty legacy store (unpartitioned schema-only parquet)
-            files = _legacy_root_files(store_path)
-            if not files:
-                raise FileNotFoundError(
-                    f"no signature store at {store_path}: neither a "
-                    f"committed _state.json nor legacy data files")
-            store = spark.read.parquet(*files).localCheckpoint(eager=True)
-        n_buckets = SIGSTORE_BUCKETS
-    else:
-        # read the live version dir as PLAIN parquet, not through the
-        # bucketed catalog table: compaction rewrites every row, so
-        # bucket pruning buys nothing — and the table scan's
-        # HashPartitioning claim makes Catalyst eliminate the
-        # one-file-per-bucket repartition below while the actual task
-        # layout is coalesced mixed-bucket file chunks (measured: a
-        # 50-append store compacted to 189 files instead of 16)
-        store = spark.read.parquet(
-            pointer.version_dir(store_path, int(state["version"])))
-        n_buckets = int(state["n_buckets"])
+    state = pointer.committed_state(store_path)
+    # read the live version dir as PLAIN parquet, not through the
+    # bucketed catalog table: compaction rewrites every row, so bucket
+    # pruning buys nothing — and the table scan's HashPartitioning
+    # claim makes Catalyst eliminate the one-file-per-bucket
+    # repartition below while the actual task layout is coalesced
+    # mixed-bucket file chunks (measured: a 50-append store compacted
+    # to 189 files instead of 16)
+    store = spark.read.parquet(
+        pointer.version_dir(store_path, int(state["version"])))
+    n_buckets = int(state["n_buckets"])
     kept = store.join(
         F.broadcast(keep_ids.select(F.col(id_col).alias("id")).distinct()),
         "id", "left_semi").select("id", "sig", "band", "bh", "bhp")
@@ -863,7 +805,7 @@ def _compact_locked(spark, store_path, keep_ids, id_col,
     pointer.commit_state(store_path, {
         "format": 2, "version": version, "table": table,
         "n_buckets": n_buckets, "schema_ddl": ddl,
-        "displaced": _displace(state, store_path)})
+        "displaced": _displace(state)})
     n = spark.table(table).count()
     _gc_locked(spark, store_path, gc_grace_seconds)
     return n

@@ -71,26 +71,6 @@ class _LsbBitWriter:
         return bytes(self.out)
 
 
-class _LsbBitReader:
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.n = 0
-
-    def read(self, width: int) -> int:
-        while self.n < width:
-            if self.pos >= len(self.data):
-                raise ValueError("GIF LZW stream truncated")
-            self.acc |= self.data[self.pos] << self.n
-            self.pos += 1
-            self.n += 8
-        v = self.acc & ((1 << width) - 1)
-        self.acc >>= width
-        self.n -= width
-        return v
-
-
 def lzw_encode(indices: "list[int] | np.ndarray", min_code_size: int,
                clear_every: int = 0) -> bytes:
     """GIF LZW compressor (spec Appendix F): starts with a CLEAR code,

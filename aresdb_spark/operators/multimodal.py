@@ -55,17 +55,6 @@ PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
 JPEG_SIGNATURE = b"\xff\xd8\xff"
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    """PNG Paeth predictor (RFC 2083 §6.6) — vectorized variant inline
-    in ``_unfilter``; this scalar form is the spec transcription kept
-    for the test goldens."""
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
-
-
 def _scan_average(line: "list[int]", prev: "list[int]", stride: int,
                   bpp: int) -> "list[int]":
     """Average rows (RFC 2083 §6.5) recur along x only; a Python-int

@@ -144,10 +144,6 @@ def shuffle_key(id_col: Column, seed: str = "0") -> Column:
     return F.md5(F.concat(F.lit(seed), id_col.cast("string")))
 
 
-def shuffle_key_sql(expr: str, seed: str = "0") -> str:
-    return f"md5('{seed}' || ({expr})::VARCHAR)"
-
-
 def weighted_sample(df: DataFrame, id_col: str, weight: Column,
                     salt: str = "weighted") -> DataFrame:
     """Deterministic per-row weighted sampling: each row survives with

@@ -44,7 +44,7 @@ becomes OPTIMIZE + partition move; the query-side semantics stay as here.
 
 Crash safety / object-store safety (VERDICT r6 "What's wrong" #2): every
 multi-file mutation writes its data into NEW sibling version dirs
-(``hot_v<N>``, ``cold_v<N>``, ``snap_v<N>``) and then commits ALL of the
+(``hot_v<N>``, ``coldset_v<N>``, ``snap_v<N>``) and then commits ALL of the
 mutation's metadata — live version numbers, queue-consumption
 watermarks, the archiving cutoff — in ONE small ``_state.json`` write
 (sources/pointer.py). The archive job's hot rewrite, cold rewrite and
@@ -62,7 +62,6 @@ the disk metastore flips the batch version / snapshot pointer
 from __future__ import annotations
 
 import os
-import shutil
 from contextlib import contextmanager
 from dataclasses import dataclass
 from datetime import datetime, timezone
@@ -127,17 +126,6 @@ def _utc_session(spark: SparkSession):
                 spark.conf.set("spark.sql.session.timeZone", ent[1])
 
 
-def _dir_has_column(d: str, col: str) -> bool:
-    """Whether the parquet files in ``d`` carry ``col`` — one pyarrow
-    footer read of the first file, no Spark session involvement (dirs
-    are written atomically by one code version, so one file decides)."""
-    import pyarrow.parquet as pq
-    for e in os.scandir(d):
-        if e.name.endswith(".parquet"):
-            return col in pq.ParquetFile(e.path).schema_arrow.names
-    return True
-
-
 class MissingEventTimeError(ValueError):
     """A fact-table upsert carried a NULL event time on a table that
     does not allow it — the reference rejects the batch with "Event time
@@ -185,43 +173,38 @@ class HotColdStore:
     # reference's analog is one live batch object per upsert batch.
     hot_batch_max_files: int = 8
 
-    def _state(self) -> "dict | None":
-        return pointer.read_state(self.path)
+    def _state(self) -> dict:
+        """The committed state; raises FileNotFoundError before
+        ``init_from`` (pointer.committed_state)."""
+        return pointer.committed_state(self.path)
 
     def _commit(self, **updates) -> None:
         """THE commit point of a mutation: publish every metadata change
         of this mutation (version flips, watermarks, cutoff) in one
-        atomic pointer write. An update of ``None`` DELETES the key —
-        used when a mutation retires a legacy layout field (e.g. the
-        monolithic ``cold`` version on conversion to per-day cold)."""
-        st = self._state() or {"format": 2}
-        st.update(updates)
-        pointer.commit_state(self.path,
-                             {k: v for k, v in st.items() if v is not None})
+        atomic pointer write."""
+        st = pointer.read_state(self.path) or {"format": 2}
+        pointer.commit_state(self.path, {**st, **updates})
 
-    def _version_path(self, kind: str,
-                      st: "dict | None | str" = "__load__") -> str:
-        """Resolve the live data dir for ``kind`` ("hot"/"cold"):
-        ``<path>/<kind>_v<N>`` under the committed state, or the flat
-        legacy dir for stores written before the versioned layout.
-        Pass ``st`` to resolve against an already-read state snapshot
-        (so multiple dirs resolve CONSISTENTLY — see ``read``)."""
-        if st == "__load__":
-            st = self._state()
-        if st is None or kind not in st:
-            return os.path.join(self.path, kind)
-        return os.path.join(self.path, f"{kind}_v{st[kind]}")
+    @staticmethod
+    def _version_dir(kind: str, st: dict) -> str:
+        """Root-relative live data dir for ``kind`` under ``st``:
+        ``<kind>_v<N>``. Also the name a commit ledgers when it
+        displaces that version — NOT deleted at the flip: an in-flight
+        reader that resolved the old state finishes its scan, and
+        ``gc()`` reaps after the read-grace window (the reference's
+        batches-survive-until-purge rule)."""
+        return f"{kind}_v{st[kind]}"
+
+    def _version_path(self, kind: str, st: "dict | None" = None) -> str:
+        """Absolute live data dir for ``kind``. Pass ``st`` to resolve
+        against an already-read state snapshot (so multiple dirs resolve
+        CONSISTENTLY — see ``read``)."""
+        return os.path.join(self.path,
+                            self._version_dir(kind, st or self._state()))
 
     @property
     def hot_path(self) -> str:
         return self._version_path("hot")
-
-    @property
-    def cold_path(self) -> str:
-        """LEGACY monolithic cold dir (stores committed before the
-        per-day map). Map-layout stores have no single cold dir —
-        resolve days via ``cold_day_keys``/``_cold_day_map``."""
-        return self._version_path("cold")
 
     @property
     def backfill_path(self) -> str:
@@ -231,16 +214,13 @@ class HotColdStore:
     def hot_batches_path(self) -> str:
         return os.path.join(self.path, "hotbatch")
 
-    def _pending_hot_batches(
-            self, st: "dict | None | str" = "__load__") -> list[dict]:
+    def _pending_hot_batches(self, st: "dict | None" = None) -> list[dict]:
         """Committed, not-yet-compacted hot batch records, in arrival
         order: ``[{"n": <dir number>, "modes": {...}?}, ...]``. Resolved
         from the pointer state, never a directory listing — a dir
         written by a writer that died before its commit is invisible
         (and reclaimed by number reuse on the next ingest)."""
-        if st == "__load__":
-            st = self._state()
-        return list((st or {}).get("hot_batches", []))
+        return list((st or self._state())["hot_batches"])
 
     def _hot_batch_dir(self, n: int) -> str:
         return os.path.join(self.hot_batches_path, f"batch={n}")
@@ -279,14 +259,14 @@ class HotColdStore:
         Single-writer like every other mutation (a concurrent writer's
         commit would be silently rolled back by ours)."""
         with _single_writer(self.path), _utc_session(df.sparkSession):
-            before = self._state()
+            before = pointer.read_state(self.path)   # None: brand-new
             sv = pointer.next_version(before, "schema")
             with open(os.path.join(self.path,
                                    f"_schema_v{sv}.json"), "w") as f:
                 f.write(df.schema.json())
             cut = F.lit(_utc_naive(cutoff))
             t = F.col(self.time_column)
-            hv = self._next("hot")
+            hv = pointer.next_version(before, "hot")
             ck = pointer.next_version(before, "coldset_seq")
             written0 = self._write_cold_days(df.filter(t < cut), ck)
             day_map = {d: [rel] for d, rel in written0.items()}
@@ -310,15 +290,15 @@ class HotColdStore:
                     for n in os.listdir(self.hot_batches_path)
                     if n.startswith("batch=")])
             displaced = []
-            if os.path.exists(self._schema_path(before)):  # brand-new: none
-                displaced.append(
-                    os.path.basename(self._schema_path(before)))
             if before is not None:
-                displaced += [self._displaced_dir("hot", before)]
-                displaced += self._cold_artifacts(before)
-            displaced += [f"hotbatch/batch={e['n']}"
-                          for e in self._pending_hot_batches(before)]
-            self._commit(hot=hv, cold=None, schema=sv,
+                displaced += [
+                    os.path.basename(self._schema_path(before)),
+                    self._version_dir("hot", before)]
+                displaced += [rel for dirs in before["cold_days"].values()
+                              for rel in dirs]
+                displaced += [f"hotbatch/batch={e['n']}"
+                              for e in before["hot_batches"]]
+            self._commit(hot=hv, schema=sv,
                          cold_days=day_map, coldset_seq=ck,
                          cold_day_stats=self._cold_stats_update(
                              None, day_map, written0),
@@ -329,15 +309,6 @@ class HotColdStore:
                          displaced=pointer.displace(before, displaced))
             pointer.gc_displaced(self.path)
 
-    def _cold_artifacts(self, state: "dict | None") -> list[str]:
-        """Root-relative dirs the committed state's COLD side references
-        — what a re-init or legacy conversion displaces: the per-day
-        dirs of a v3 map, or the monolithic legacy dir."""
-        m = self._cold_day_map(state)
-        if m is not None:
-            return [rel for dirs in m.values() for rel in dirs]
-        return [self._displaced_dir("cold", state)]
-
     def saved_cutoff(self) -> datetime:
         """The persisted archiving cutoff (set by init_from/archive) —
         lets readers (e.g. the catalog's union view) pick the correct
@@ -345,20 +316,14 @@ class HotColdStore:
         SAME pointer write as the hot/cold flips it describes, so a
         reader can never pair a new cutoff with an old store (or vice
         versa)."""
-        st = self._state()
-        if st is not None and "cutoff" in st:
-            return datetime.fromisoformat(st["cutoff"])
-        with open(os.path.join(self.path, "_cutoff.txt")) as f:
-            return datetime.fromisoformat(f.read().strip())
+        return datetime.fromisoformat(self._state()["cutoff"])
 
-    def _schema_path(self, st: "dict | None | str" = "__load__") -> str:
+    def _schema_path(self, st: "dict | None" = None) -> str:
         """Resolve the committed schema file (pointer.schema_file rule);
         pass ``st`` to resolve against an already-read state snapshot."""
-        if st == "__load__":
-            st = self._state()
-        return pointer.schema_file(self.path, st)
+        return pointer.schema_file(self.path, st or self._state())
 
-    def _schema(self, st: "dict | None | str" = "__load__"):
+    def _schema(self, st: "dict | None" = None):
         from pyspark.sql.types import StructType
         with open(self._schema_path(st)) as f:
             return StructType.fromJson(__import__("json").load(f))
@@ -375,35 +340,18 @@ class HotColdStore:
     # dirs (appends from successive archives); backfill compacts the
     # days it rewrites to a single dir. This is what keeps archive and
     # backfill O(touched days), never O(|cold|) — at 100 TB a daily
-    # archive job must not rewrite the whole archive. Stores committed
-    # by older code (monolithic ``cold``/``cold_v<N>``) read unchanged
-    # and CONVERT on their first cold mutation (one full rewrite — the
-    # cost every mutation already paid under the old layout).
+    # archive job must not rewrite the whole archive.
 
-    def _cold_day_map(
-            self, st: "dict | None | str" = "__load__"
-    ) -> "dict[str, list[str]] | None":
-        """The committed day→dirs map, or None for a legacy monolithic
-        cold layout."""
-        if st == "__load__":
-            st = self._state()
-        if st is not None and "cold_days" in st:
-            return {d: list(v) for d, v in st["cold_days"].items()}
-        return None
+    def _cold_day_map(self, st: "dict | None" = None
+                      ) -> "dict[str, list[str]]":
+        """The committed day→dirs map."""
+        return {d: list(v)
+                for d, v in (st or self._state())["cold_days"].items()}
 
-    def cold_day_keys(self, st: "dict | None | str" = "__load__") -> list[str]:
-        """Sorted committed day keys — pure metadata for the ops surface
-        (pointer read for per-day stores; dir listing only on legacy)."""
-        m = self._cold_day_map(st)
-        if m is not None:
-            return sorted(m)
-        if st == "__load__":
-            st = self._state()
-        legacy = self._version_path("cold", st)
-        if not os.path.isdir(legacy):
-            return []
-        return sorted(n.split("=", 1)[1] for n in os.listdir(legacy)
-                      if n.startswith("__day="))
+    def cold_day_keys(self, st: "dict | None" = None) -> list[str]:
+        """Sorted committed day keys — pure pointer metadata for the
+        ops surface."""
+        return sorted(self._cold_day_map(st))
 
     def _write_cold_days(self, df: DataFrame, k: int) -> dict[str, str]:
         """Write ``df`` day-partitioned + sorted (writer.write_archive)
@@ -487,17 +435,6 @@ class HotColdStore:
 
     def _next(self, kind: str) -> int:
         return pointer.next_version(self._state(), kind)
-
-    def _displaced_dir(self, kind: str,
-                       state_before: "dict | None") -> str:
-        """Root-relative name of the version dir a commit displaces
-        (legacy flat dir when upgrading) — ledgered in the commit, NOT
-        deleted at the flip: an in-flight reader that resolved the old
-        state finishes its scan, and ``gc()`` reaps after the read-grace
-        window (the reference's batches-survive-until-purge rule)."""
-        if state_before is None or kind not in state_before:
-            return kind
-        return f"{kind}_v{state_before[kind]}"
 
     def gc(self, grace_seconds: float = pointer.GC_GRACE_SECONDS) -> int:
         """Reap ledgered displaced artifacts older than the grace
@@ -605,9 +542,6 @@ class HotColdStore:
         schema = self._schema(st)
         cols = [f.name for f in schema.fields]
         m = self._cold_day_map(st)
-        if m is None:   # legacy monolithic layout (__day partition dirs)
-            return spark.read.schema(schema).parquet(
-                self._version_path("cold", st)).select(*cols)
         keys = sorted(m)
         if days is not None:
             keys = [d for d in keys if d in days]
@@ -652,10 +586,7 @@ class HotColdStore:
         for query paths."""
         st = self._state()
         if cutoff is None:
-            if st is not None and "cutoff" in st:
-                cutoff = datetime.fromisoformat(st["cutoff"])
-            else:
-                cutoff = self.saved_cutoff()
+            cutoff = datetime.fromisoformat(st["cutoff"])
         cut = F.lit(_utc_naive(cutoff))
         t = F.col(self.time_column)
         # ``time_range`` prunes the cold DAY LIST engine-side (whole
@@ -763,7 +694,7 @@ class HotColdStore:
                    else F.lit(None)).cast(f.dataType).alias(f.name)
                   for f in schema.fields],
                 seq_expr.alias("__seq"))
-            n = int(st.get("hot_seq", -1)) + 1 if st else 0
+            n = int(st["hot_seq"]) + 1
             hot_dir = self._hot_batch_dir(n)
             # bound the batch dir's file count (see hot_batch_max_files)
             # — coalesce is narrow, so this stays the one write job
@@ -805,15 +736,13 @@ class HotColdStore:
                 # semantics, memstore/backfill.go) — take the eager
                 # path so the override's exact semantics hold
                 if defer_backfill and not override:
-                    # ledger the committed queue BEFORE the new write
-                    # (legacy pre-ledger dirs adopt into the ledger
-                    # here), then append the new number: visibility
-                    # flips with THIS batch's one pointer commit —
-                    # never by mere directory presence (ADVICE r11 #1)
-                    prev = [int(x.split("=")[1])
-                            for x in self.queued_backfill_batches()]
+                    # append the new number to the committed queue
+                    # ledger: visibility flips with THIS batch's one
+                    # pointer commit — never by mere directory presence
+                    # (ADVICE r11 #1)
                     qn = self._enqueue_backfill(cold_part, seq_col)
-                    commit["backfill_batches"] = prev + [qn]
+                    commit["backfill_batches"] = \
+                        list(before["backfill_batches"]) + [qn]
                 else:
                     updates, cold_displaced = self._cold_upsert(
                         spark, before, [cold_part], modes, seq_col)
@@ -823,7 +752,7 @@ class HotColdStore:
             if commit:
                 displaced = commit.pop("__displaced", [])
                 if "hot" in commit:
-                    displaced.append(self._displaced_dir("hot", before))
+                    displaced.append(self._version_dir("hot", before))
                 self._commit(**commit,
                              displaced=pointer.displace(before, displaced))
                 pointer.gc_displaced(self.path)
@@ -858,8 +787,7 @@ class HotColdStore:
         never committed (and whose streaming replay would re-enqueue
         the same cold rows — double-counting add-mode columns)."""
         os.makedirs(self.backfill_path, exist_ok=True)
-        st = self._state() or {}
-        floor = int(st.get("backfill_consumed", -1))
+        floor = int(self._state()["backfill_consumed"])
         nxt = 1 + max((int(n.split("=")[1])
                        for n in os.listdir(self.backfill_path)
                        if n.startswith("batch=")), default=floor)
@@ -873,19 +801,12 @@ class HotColdStore:
 
     def _read_queue_batch(self, spark: SparkSession, schema,
                           name: str) -> DataFrame:
-        """One queued batch with its persisted ``__seq`` arrival order.
-        A legacy dir written before ``__seq`` was persisted (pre-r10
-        crash survivor) gets read-order stamping — the best available
-        for a batch whose order was never recorded."""
+        """One queued batch with its persisted ``__seq`` arrival order."""
         from pyspark.sql.types import LongType, StructField, StructType
-        d = os.path.join(self.backfill_path, name)
-        has_seq = _dir_has_column(d, "__seq")   # footer read, no job
         qschema = StructType(
             list(schema.fields) + [StructField("__seq", LongType())])
-        df = spark.read.schema(qschema).parquet(d)
-        if not has_seq:
-            df = df.withColumn("__seq", F.monotonically_increasing_id())
-        return df
+        return spark.read.schema(qschema).parquet(
+            os.path.join(self.backfill_path, name))
 
     def queued_backfill_batches(self) -> list[str]:
         """Queue entries not yet folded into cold: the COMMITTED
@@ -896,22 +817,11 @@ class HotColdStore:
         streaming replay of the torn micro-batch is clean instead of
         double-counting its cold rows at flush. A consumed dir whose
         best-effort delete failed is likewise invisible — committed
-        state, not the directory listing, is the source of truth.
-        Stores whose state predates the ledger (no ``backfill_batches``
-        key ever committed) fall back to the pre-r11 listing rule and
-        adopt into the ledger on their next deferred ingest."""
-        if not os.path.isdir(self.backfill_path):
-            return []
-        st = self._state() or {}
-        consumed = int(st.get("backfill_consumed", -1))
-        if "backfill_batches" in st:
-            nums = sorted(n for n in set(st["backfill_batches"])
-                          if n > consumed)
-            return [f"batch={n}" for n in nums]
-        return sorted((n for n in os.listdir(self.backfill_path)
-                       if n.startswith("batch=")
-                       and int(n.split("=")[1]) > consumed),
-                      key=lambda n: int(n.split("=")[1]))
+        state, not the directory listing, is the source of truth."""
+        st = self._state()
+        consumed = int(st["backfill_consumed"])
+        return [f"batch={n}" for n in sorted(set(st["backfill_batches"]))
+                if n > consumed]
 
     def backfill_buffer_bytes(self) -> int:
         """On-disk size of the queued backfill batches — the scheduler's
@@ -924,7 +834,7 @@ class HotColdStore:
                          if e.is_file())
         return total
 
-    def _cold_upsert(self, spark: SparkSession, st: "dict | None",
+    def _cold_upsert(self, spark: SparkSession, st: dict,
                      batches: list[DataFrame],
                      modes: "dict | None",
                      seq_col: "str | None") -> tuple[dict, list[str]]:
@@ -943,63 +853,51 @@ class HotColdStore:
         their committed dirs byte-identical. If update-mode arithmetic
         sends a merged row into an unaffected EXISTING day (add-mode
         time column), that day's dir list gets an APPEND — PK-disjoint
-        by construction, so readers stay exact.
-
-        Legacy monolithic stores convert here: affected = all days (one
-        full rewrite — the cost every flush already paid pre-r9)."""
+        by construction, so readers stay exact."""
         pk = list(self.primary_key)
-        t = F.col(self.time_column)
         union_b = batches[0]
         for b in batches[1:]:
             union_b = union_b.unionByName(b, allowMissingColumns=True)
         old_map = self._cold_day_map(st)
-        displaced: list[str] = []
-        if old_map is None:
-            base = self._read_cold_resolved(spark, st)
-            affected = None                   # conversion: rewrite all
-            displaced.append(self._displaced_dir("cold", st))
-            old_map = {}
-        else:
-            # ONE tiny agg job yields the touched days AND the batch's
-            # PK bounds (was two collects); the bounds drive footer-
-            # stats day pruning so the moved-day probe scans only
-            # candidate days, not O(|cold|) per flush (ADVICE r10 #3)
-            brow = union_b.agg(
-                F.collect_set(self._day_key()).alias("days"),
-                F.min(F.col(pk[0])).alias("lo"),
-                F.max(F.col(pk[0])).alias("hi"),
-                F.count(F.when(F.col(pk[0]).isNull(), 1))
-                .alias("n_null_pk")).collect()[0]
-            touched = set(brow["days"])
-            cand = self._candidate_moved_days(
-                old_map, brow["lo"], brow["hi"], bool(brow["n_null_pk"]),
-                (st or {}).get("cold_day_stats", {}))
-            moved: set[str] = set()
-            if cand:
-                probe = union_b.select(*pk).distinct()
-                cond = None
-                for k in pk:  # null-safe: a NULL PK is a legal key
-                    c = F.col(f"c.{k}").eqNullSafe(F.col(f"p.{k}"))
-                    cond = c if cond is None else cond & c
-                narrow = self._read_cold_resolved(
-                    spark, st, days=cand) \
-                    .select(*pk, self._day_key().alias("__d")).alias("c")
-                moved = {r[0] for r in narrow.join(
-                    F.broadcast(probe.alias("p")), cond, "left_semi")
-                    .select("__d").distinct().collect()}
-            affected = touched | moved
-            base = self._read_cold_resolved(spark, st, days=affected)
-            displaced += [rel for d in sorted(affected)
-                          for rel in old_map.get(d, [])]
+        # ONE tiny agg job yields the touched days AND the batch's PK
+        # bounds (was two collects); the bounds drive footer-stats day
+        # pruning so the moved-day probe scans only candidate days, not
+        # O(|cold|) per flush (ADVICE r10 #3)
+        brow = union_b.agg(
+            F.collect_set(self._day_key()).alias("days"),
+            F.min(F.col(pk[0])).alias("lo"),
+            F.max(F.col(pk[0])).alias("hi"),
+            F.count(F.when(F.col(pk[0]).isNull(), 1))
+            .alias("n_null_pk")).collect()[0]
+        touched = set(brow["days"])
+        cand = self._candidate_moved_days(
+            old_map, brow["lo"], brow["hi"], bool(brow["n_null_pk"]),
+            st["cold_day_stats"])
+        moved: set[str] = set()
+        if cand:
+            probe = union_b.select(*pk).distinct()
+            cond = None
+            for k in pk:  # null-safe: a NULL PK is a legal key
+                c = F.col(f"c.{k}").eqNullSafe(F.col(f"p.{k}"))
+                cond = c if cond is None else cond & c
+            narrow = self._read_cold_resolved(spark, st, days=cand) \
+                .select(*pk, self._day_key().alias("__d")).alias("c")
+            moved = {r[0] for r in narrow.join(
+                F.broadcast(probe.alias("p")), cond, "left_semi")
+                .select("__d").distinct().collect()}
+        affected = touched | moved
+        base = self._read_cold_resolved(spark, st, days=affected)
+        displaced = [rel for d in sorted(affected)
+                     for rel in old_map.get(d, [])]
         for b in batches:
             base = apply_upsert_batch(base, b, pk, modes, seq_col)
         ck = pointer.next_version(st, "coldset_seq")
         written = self._write_cold_days(self._conform(base, st), ck)
         new_map = {d: dirs for d, dirs in old_map.items()
-                   if affected is not None and d not in affected}
+                   if d not in affected}
         for d, rel in written.items():
             new_map[d] = new_map.get(d, []) + [rel]
-        return ({"cold_days": new_map, "coldset_seq": ck, "cold": None,
+        return ({"cold_days": new_map, "coldset_seq": ck,
                  "cold_day_stats":
                  self._cold_stats_update(st, new_map, written)},
                 displaced)
@@ -1013,13 +911,13 @@ class HotColdStore:
         probe must not scan O(|cold|) per flush). Bounds come from the
         COMMITTED ``cold_day_stats`` map (recorded at write time, so
         the steady-state probe is pure pointer metadata — the
-        Delta/Iceberg-manifest shape at 100 TB); dirs committed before
-        the stats existed fall back to a one-time parquet footer read.
-        Conservative superset: absent, non-comparable, or truncated
-        stats keep the day (parquet truncation already widens string
-        bounds outward), and any error keeps the day. With day-disjoint
-        PK ranges (monotonic ids, time-correlated keys) the probe
-        collapses to the handful of days the batch actually hits."""
+        Delta/Iceberg-manifest shape at 100 TB). Conservative superset:
+        a dir with no stats entry (bounds unknowable at write time),
+        non-comparable or truncated stats keep the day (parquet
+        truncation already widens string bounds outward), and any error
+        keeps the day. With day-disjoint PK ranges (monotonic ids,
+        time-correlated keys) the probe collapses to the handful of days
+        the batch actually hits."""
         stats = stats or {}
 
         def bounds_hit(b) -> bool:
@@ -1034,18 +932,8 @@ class HotColdStore:
             except TypeError:
                 return True
 
-        out: set[str] = set()
-        for day, rels in old_map.items():
-            for rel in rels:
-                b = stats.get(rel)
-                if b is None:             # pre-stats dir: footer fallback
-                    droot = os.path.join(self.path, rel)
-                    b = self._pk_bounds_of_dir(droot) \
-                        if os.path.isdir(droot) else None
-                if bounds_hit(b):
-                    out.add(day)
-                    break
-        return out
+        return {day for day, rels in old_map.items()
+                if any(bounds_hit(stats.get(rel)) for rel in rels)}
 
     def flush_backfill(self, spark: SparkSession,
                        modes: "dict | None" = None) -> int:
@@ -1059,10 +947,7 @@ class HotColdStore:
         Intra-batch arrival order comes from the ``__seq`` column
         ``_enqueue_backfill`` persists at write time — replay never
         trusts parquet read-back order (largest-file-first, NOT write
-        order). Queue dirs written by pre-r10 code lack the column;
-        those fall back to read order per dir (best effort for crash
-        survivors — the old, order-losing behavior they were written
-        under).
+        order).
 
         The day-map update and the queue truncation (the consumed
         watermark) commit in ONE pointer write: a crash anywhere
@@ -1098,7 +983,7 @@ class HotColdStore:
             return len(names)
 
     def _conform(self, df: DataFrame,
-                 st: "dict | None | str" = "__load__") -> DataFrame:
+                 st: "dict | None" = None) -> DataFrame:
         """Cast merged output back to the declared store schema. Update
         arithmetic can widen dtypes (sum-based `add` folds float→double);
         the store is fixed-typed like the reference's, and without this a
@@ -1137,8 +1022,7 @@ class HotColdStore:
         (a boundary day that already exists simply gains a second dir —
         plain concatenation, exactly the reference adding a new archive
         batch version beside the old days rather than rewriting the
-        store). A legacy monolithic cold converts on first archive (one
-        full rewrite, the cost every archive already paid pre-r9)."""
+        store)."""
         with _single_writer(self.path), _utc_session(spark):
             cut = F.lit(_utc_naive(new_cutoff))
             before = self._state()
@@ -1160,25 +1044,14 @@ class HotColdStore:
                 # DELETED here (in neither filter's output)
                 stay_hot = hot.filter((t >= cut) | keep_null)
                 commit = {"cutoff": _utc_naive(new_cutoff).isoformat()}
-                displaced_cold: list[str] = []
                 if to_cold.limit(1).count():
-                    old_map = self._cold_day_map(before)
-                    if old_map is None:  # legacy conversion: one rewrite
-                        to_write = self._read_cold_resolved(spark, before) \
-                            .unionByName(to_cold)
-                        displaced_cold.append(
-                            self._displaced_dir("cold", before))
-                        old_map = {}
-                    else:
-                        to_write = to_cold
                     ck = pointer.next_version(before, "coldset_seq")
                     written = self._write_cold_days(
-                        self._conform(to_write, before), ck)
-                    new_map = dict(old_map)
+                        self._conform(to_cold, before), ck)
+                    new_map = self._cold_day_map(before)
                     for d, rel in written.items():
                         new_map[d] = new_map.get(d, []) + [rel]
                     commit.update(cold_days=new_map, coldset_seq=ck,
-                                  cold=None,
                                   cold_day_stats=self._cold_stats_update(
                                       before, new_map, written))
                     commit["hot"] = self._next("hot")
@@ -1193,17 +1066,14 @@ class HotColdStore:
                     # memstore/archiving.go:62-72)
                     commit["hot"] = self._next("hot")
                     self._write_hot(stay_hot, commit["hot"])
-                displaced = displaced_cold + \
-                    [self._displaced_dir("hot", before)
-                     if "hot" in commit else None]
-                displaced = [d for d in displaced if d is not None]
+                displaced = []
                 if "hot" in commit:
-                    # consumed by the compaction; survive in the ledger
-                    # for the read-grace window like every displaced
-                    # artifact
+                    # the old base and the pending batches it folded
+                    # survive in the ledger for the read-grace window
+                    # like every displaced artifact
                     commit["hot_batches"] = []
-                    displaced += [f"hotbatch/batch={e['n']}"
-                                  for e in pending]
+                    displaced = [self._version_dir("hot", before)] + \
+                        [f"hotbatch/batch={e['n']}" for e in pending]
                 self._commit(**commit,
                              displaced=pointer.displace(before, displaced))
                 pointer.gc_displaced(self.path)
@@ -1222,7 +1092,7 @@ class HotColdStore:
                 return 0
             nxt = self._next("hot")
             self._write_hot(self._read_hot_resolved(spark, before), nxt)
-            displaced = [self._displaced_dir("hot", before)] + \
+            displaced = [self._version_dir("hot", before)] + \
                 [f"hotbatch/batch={e['n']}" for e in pending]
             self._commit(hot=nxt, hot_batches=[],
                          displaced=pointer.displace(before, displaced))
@@ -1255,8 +1125,6 @@ class HotColdStore:
         with _single_writer(self.path), _utc_session(spark):
             before = self._state()
             m = self._cold_day_map(before)
-            if m is None:
-                return 0   # legacy monolith: nothing to compact
             targets = sorted(d for d in (days if days is not None else m)
                              if len(m.get(d, [])) >= min_dirs)
             if not targets:
@@ -1281,31 +1149,22 @@ class HotColdStore:
     def purge(self, spark: SparkSession, older_than: datetime) -> None:
         """Retention delete: drop cold days entirely below the retention
         boundary (reference memstore/purge.go drops whole archive
-        batches). On the per-day map layout this is a pure METADATA
-        mutation — expired days leave the committed map in one pointer
-        write and their dirs enter the displaced ledger (an in-flight
-        reader finishes over intact files; gc reaps past the grace) —
-        no in-place delete anywhere. Legacy monolithic stores keep the
-        old partition-dir delete (the one in-place mutation of that
-        layout, operated far behind any live query window)."""
+        batches). This is a pure METADATA mutation — expired days leave
+        the committed map in one pointer write and their dirs enter the
+        displaced ledger (an in-flight reader finishes over intact
+        files; gc reaps past the grace) — no in-place delete anywhere."""
         with _single_writer(self.path):
             boundary = _utc_naive(older_than).strftime("%Y-%m-%d")
             st = self._state()
             m = self._cold_day_map(st)
-            if m is not None:
-                expired = sorted(d for d in m if d < boundary)
-                if expired:
-                    keep = {d: v for d, v in m.items() if d >= boundary}
-                    gone = [rel for d in expired for rel in m[d]]
-                    self._commit(cold_days=keep,
-                                 cold_day_stats=self._cold_stats_update(
-                                     st, keep, {}),
-                                 displaced=pointer.displace(st, gone))
-            else:
-                for name in os.listdir(self.cold_path):
-                    if name.startswith("__day=") and \
-                            name.split("=", 1)[1] < boundary:
-                        shutil.rmtree(os.path.join(self.cold_path, name))
+            expired = sorted(d for d in m if d < boundary)
+            if expired:
+                keep = {d: v for d, v in m.items() if d >= boundary}
+                gone = [rel for d in expired for rel in m[d]]
+                self._commit(cold_days=keep,
+                             cold_day_stats=self._cold_stats_update(
+                                 st, keep, {}),
+                             displaced=pointer.displace(st, gone))
             # purge is the lifecycle reaper: displaced version dirs past
             # the read-grace window go with it (reference purge.go reaps
             # the archive batch versions the swaps displaced)
@@ -1336,7 +1195,7 @@ class DimensionStore:
         referenced by the commit, like the fact store's — never an
         in-place overwrite. Single-writer like every other mutation."""
         with _single_writer(self.path):
-            before = pointer.read_state(self.path)
+            before = pointer.read_state(self.path)   # None: brand-new
             sv = pointer.next_version(before, "schema")
             with open(os.path.join(self.path,
                                    f"_schema_v{sv}.json"), "w") as f:
@@ -1350,27 +1209,24 @@ class DimensionStore:
                     int(n.split("=")[1])
                     for n in os.listdir(self.journal_path)
                     if n.startswith("batch=")])
-            displaced = []
-            if os.path.exists(self._schema_path(before)):  # brand-new: none
-                displaced.append(
-                    os.path.basename(self._schema_path(before)))
-            if before is not None and "snap" in before:
-                displaced.append(f"snap_v{before['snap']}")
+            displaced = [] if before is None else [
+                os.path.basename(self._schema_path(before)),
+                f"snap_v{before['snap']}"]
             pointer.commit_state(self.path, {
                 "format": 2, "snap": nxt, "schema": sv,
                 "journal_consumed": consumed,
                 "displaced": pointer.displace(before, displaced)})
             pointer.gc_displaced(self.path)
 
-    def _state(self) -> "dict | None":
-        return pointer.read_state(self.path)
+    def _state(self) -> dict:
+        """The committed state; raises FileNotFoundError before
+        ``init_from`` (pointer.committed_state)."""
+        return pointer.committed_state(self.path)
 
-    def _schema_path(self, st: "dict | None | str" = "__load__") -> str:
-        if st == "__load__":
-            st = self._state()
-        return pointer.schema_file(self.path, st)
+    def _schema_path(self, st: "dict | None" = None) -> str:
+        return pointer.schema_file(self.path, st or self._state())
 
-    def _schema(self, st: "dict | None | str" = "__load__"):
+    def _schema(self, st: "dict | None" = None):
         from pyspark.sql.types import StructType
         with open(self._schema_path(st)) as f:
             return StructType.fromJson(__import__("json").load(f))
@@ -1379,33 +1235,26 @@ class DimensionStore:
     def journal_path(self) -> str:
         return os.path.join(self.path, "journal")
 
-    def _journal_batches(self,
-                         st: "dict | None | str" = "__load__") -> list[str]:
+    def _journal_batches(self, st: "dict | None" = None) -> list[str]:
         """Journal entries not yet folded into a snapshot (above the
         committed watermark; a consumed dir whose best-effort delete
         failed stays invisible behind it). Pass ``st`` to list against
         an already-read state snapshot."""
         if not os.path.isdir(self.journal_path):
             return []
-        if st == "__load__":
-            st = self._state()
-        consumed = int((st or {}).get("journal_consumed", -1))
+        consumed = int((st or self._state())["journal_consumed"])
         return sorted((n for n in os.listdir(self.journal_path)
                        if n.startswith("batch=")
                        and int(n.split("=")[1]) > consumed),
                       key=lambda n: int(n.split("=")[1]))
 
-    def _snap_dir(self, st: "dict | None | str" = "__load__") -> str:
-        if st == "__load__":
-            st = self._state()
-        if st is None or "snap" not in st:
-            return os.path.join(self.path, "snap")  # pre-versioned layout
-        return os.path.join(self.path, f"snap_v{st['snap']}")
+    def _snap_dir(self, st: "dict | None" = None) -> str:
+        return os.path.join(self.path,
+                            f"snap_v{(st or self._state())['snap']}")
 
     def _read_snap(self, spark: SparkSession,
-                   st: "dict | None | str" = "__load__") -> DataFrame:
-        if st == "__load__":
-            st = self._state()
+                   st: "dict | None" = None) -> DataFrame:
+        st = st or self._state()
         return spark.read.schema(self._schema(st)).parquet(
             self._snap_dir(st))
 
@@ -1434,18 +1283,15 @@ class DimensionStore:
         merged.write.mode("overwrite").parquet(
             os.path.join(self.path, f"snap_v{nxt}"))
         consumed = int(consumed_names[-1].split("=")[1]) \
-            if consumed_names else int(
-                (st_before or {}).get("journal_consumed", -1))
-        displaced = ["snap" if st_before is None or "snap" not in st_before
-                     else f"snap_v{st_before['snap']}"]
+            if consumed_names else int(st_before["journal_consumed"])
+        displaced = [f"snap_v{st_before['snap']}"]
         if os.path.isdir(self.journal_path):
             displaced += [f"journal/{n}"
                           for n in os.listdir(self.journal_path)
                           if n.startswith("batch=")
                           and int(n.split("=")[1]) <= consumed]
         pointer.commit_state(self.path, {
-            **(st_before or {"format": 2}),
-            "snap": nxt, "journal_consumed": consumed,
+            **st_before, "snap": nxt, "journal_consumed": consumed,
             "displaced": pointer.displace(st_before, displaced)})
         pointer.gc_displaced(self.path)
 
@@ -1521,9 +1367,8 @@ class DimensionStore:
         Numbering starts above both the highest dir on disk and the
         consumed watermark (a reused number would hide behind it)."""
         with _single_writer(self.path):
+            floor = int(self._state()["journal_consumed"])
             os.makedirs(self.journal_path, exist_ok=True)
-            st = self._state() or {}
-            floor = int(st.get("journal_consumed", -1))
             nxt = 1 + max((int(n.split("=")[1])
                            for n in os.listdir(self.journal_path)
                            if n.startswith("batch=")), default=floor)
@@ -1536,17 +1381,12 @@ class DimensionStore:
 
     def _read_journal_batch(self, spark: SparkSession, sch,
                             name: str) -> DataFrame:
-        """One journal batch with its persisted ``__seq`` arrival order;
-        legacy dirs (pre-r10) fall back to read-order stamping."""
+        """One journal batch with its persisted ``__seq`` arrival order."""
         from pyspark.sql.types import LongType, StructField, StructType
-        d = os.path.join(self.journal_path, name)
-        has_seq = _dir_has_column(d, "__seq")   # footer read, no job
         jschema = StructType(
             list(sch.fields) + [StructField("__seq", LongType())])
-        df = spark.read.schema(jschema).parquet(d)
-        if not has_seq:
-            df = df.withColumn("__seq", F.monotonically_increasing_id())
-        return df
+        return spark.read.schema(jschema).parquet(
+            os.path.join(self.journal_path, name))
 
     def num_mutations(self) -> int:
         """Journaled mutation count since the last snapshot — what the

@@ -89,8 +89,7 @@ class StateCorruptionError(RuntimeError):
 
 def read_state(root: str) -> "dict | None":
     """The committed state of the store at ``root``, or None when the
-    store predates the versioned layout (legacy: data lives directly in
-    ``root``) or doesn't exist yet."""
+    store has not been initialized yet."""
     path = os.path.join(root, STATE_FILE)
     if not os.path.exists(path):
         return None
@@ -134,15 +133,25 @@ def version_dir(root: str, version: int) -> str:
     return os.path.join(root, f"v{version}")
 
 
-def schema_file(root: str, state: "dict | None") -> str:
+def committed_state(root: str) -> dict:
+    """``read_state`` for paths that need an initialized store: raises
+    a ``FileNotFoundError`` naming the root and how to create it instead
+    of letting the caller fall through to a read of files that were
+    never committed. One rule for every store kind."""
+    state = read_state(root)
+    if state is None:
+        raise FileNotFoundError(
+            f"no committed store at {root} ({STATE_FILE} is missing): "
+            f"create it first with init_from (HotColdStore, "
+            f"DimensionStore) or build_signature_store")
+    return state
+
+
+def schema_file(root: str, state: dict) -> str:
     """The schema file a committed state references
     (``_schema_v<N>.json``, versioned through the pointer commit so a
-    crashed re-init can never pair a new schema with old dirs), or the
-    flat legacy name for stores initialized before schema versioning.
-    One rule for every store kind."""
-    if state is not None and "schema" in state:
-        return os.path.join(root, f"_schema_v{state['schema']}.json")
-    return os.path.join(root, "_schema.json")
+    crashed re-init can never pair a new schema with old dirs)."""
+    return os.path.join(root, f"_schema_v{state['schema']}.json")
 
 
 def next_version(state: "dict | None", key: str = "version") -> int:

@@ -31,21 +31,6 @@ from dataclasses import dataclass, field
 from datetime import datetime
 
 
-def _footer_rows(path: str) -> int:
-    """Row count of a flat parquet dir from the file footers alone
-    (pyarrow metadata read — no Spark job). The ops analog of the
-    reference reading batch sizes out of its in-memory shard metadata
-    (debug_handler.go ShowShardMeta serializes the shard struct, it
-    never scans vector parties)."""
-    import pyarrow.parquet as pq
-
-    if not os.path.isdir(path):
-        return 0
-    return sum(pq.ParquetFile(e.path).metadata.num_rows
-               for e in os.scandir(path)
-               if e.is_file() and e.name.endswith(".parquet"))
-
-
 @dataclass
 class DebugDaemon:
     """Holds the health toggle plus the table → store map (the
@@ -93,7 +78,8 @@ class DebugDaemon:
         store = self.stores.get(table)
         if store is None:
             return 400, {"message": f"unknown table {table!r}"}
-        state = store._state() or {}
+        from aresdb_spark.sources import pointer
+        state = pointer.read_state(store.path) or {}
         meta = {"table": table, "shard": shard, "state": state,
                 "writer_lock_held": os.path.exists(
                     os.path.join(store.path, "_writer.lock"))}
@@ -110,8 +96,7 @@ class DebugDaemon:
             # ShowShardMeta -> LiveStore.Batches)
             meta["hot_pending_batches"] = \
                 len(store._pending_hot_batches())
-            # committed day keys straight from the pointer (metadata;
-            # dir listing only for legacy monolithic stores)
+            # committed day keys straight from the pointer (metadata)
             meta["cold_days"] = store.cold_day_keys()
             meta["backfill_queue"] = {
                 "batches": len(store.queued_backfill_batches()),

@@ -182,20 +182,18 @@ def dedup_batch_processor(spark: SparkSession, store_path: str,
     soak test — can attach reader options like maxFilesPerTrigger while
     exercising the EXACT production path)."""
     from aresdb_spark.operators.dedup import (
-        _legacy_root_files, build_signature_store, dedup_exact,
-        incremental_near_duplicates)
+        build_signature_store, dedup_exact, incremental_near_duplicates)
     from aresdb_spark.sources.pointer import read_state
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         batch = dedup_exact(batch_df, text_col, id_col)
-        # "first" = no committed state AND no legacy DATA files. An
-        # empty pre-created directory (mkdir -p of work dirs) is still
-        # a first batch, and so is a root holding only the v*/ remnants
-        # of a batch that crashed MID-initial-write (no pointer commit
-        # = nothing published) — treating either as an existing store
-        # would read parquet from nothing/garbage and brick the stream
-        first = read_state(store_path) is None \
-            and not _legacy_root_files(store_path)
+        # "first" = no committed state. An empty pre-created directory
+        # (mkdir -p of work dirs) is still a first batch, and so is a
+        # root holding only the v*/ remnants of a batch that crashed
+        # MID-initial-write (no pointer commit = nothing published) —
+        # treating either as an existing store would read parquet from
+        # nothing/garbage and brick the stream
+        first = read_state(store_path) is None
         if first:
             accepted = batch
         else:

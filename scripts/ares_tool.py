@@ -199,16 +199,14 @@ def cmd_ledger(store: str) -> dict:
     state = pointer.read_state(store)
     if state is None:
         return {"store": store, "state": None,
-                "note": "no committed pointer (legacy or empty store)"}
+                "note": "no committed pointer (store not initialized)"}
     now = time.time()
     ledger = []
     for e in state.get("displaced", []):
-        rel = e.get("dir", f"v{e['version']}" if "version" in e
-                    else "legacy_root")
+        rel = e.get("dir") or f"v{e['version']}"
         ledger.append({
             **e, "ageSeconds": round(now - e["at"], 1),
-            "onDisk": os.path.exists(os.path.join(store, rel))
-            if rel != "legacy_root" else None})
+            "onDisk": os.path.exists(os.path.join(store, rel))})
     return {"store": store,
             "state": {k: v for k, v in state.items() if k != "displaced"},
             "displaced": ledger,

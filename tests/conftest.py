@@ -3,10 +3,24 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 SF_DIR = os.environ.get("ARESDB_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_MED = "/root/testdata/sf0.01"
+# Checkout of the upstream AresDB repository, beside this one, whose
+# shipped fixtures the reference-golden tests read. Every such test goes
+# through the ``reference_root`` fixture, so one reason string counts the
+# skips.
+REFERENCE_ROOT = os.path.join(os.path.dirname(REPO_ROOT), "reference")
+
+
+@pytest.fixture(scope="session")
+def reference_root():
+    """The reference checkout; skips the requesting test when absent."""
+    if not os.path.isdir(REFERENCE_ROOT):
+        pytest.skip("reference fixtures not mounted")
+    return REFERENCE_ROOT
 
 
 @pytest.fixture(scope="session")

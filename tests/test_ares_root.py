@@ -8,6 +8,7 @@ import os
 import struct
 
 import pytest
+from conftest import REFERENCE_ROOT
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -29,7 +30,7 @@ from aresdb_spark.sources.ares_root import (
     write_vector_party_bytes,
 )
 
-BOOTSTRAP = "/root/reference/testing/data/bootstrap"
+BOOTSTRAP = os.path.join(REFERENCE_ROOT, "testing", "data", "bootstrap")
 
 
 # --------------------------------------------------------------------------
@@ -166,6 +167,7 @@ def test_batch_version_selection_reference_example():
     assert parse_batch_versions("3,7\n") == [(3, 0, 7)]
 
 
+@pytest.mark.usefixtures("reference_root")
 def test_bootstrap_metastore_golden():
     """The reference's shipped bootstrap fixture parses exactly:
     facttable1 schema (6 cols, PK [0,1], sort [3,4]), cutoff

@@ -5,6 +5,9 @@ own shipped fixtures and a synthetic ares-root."""
 import importlib.util
 import os
 
+import pytest
+from conftest import REFERENCE_ROOT
+
 HERE = os.path.dirname(os.path.abspath(__file__))
 _spec = importlib.util.spec_from_file_location(
     "ares_tool", os.path.join(os.path.dirname(HERE), "scripts",
@@ -12,11 +15,13 @@ _spec = importlib.util.spec_from_file_location(
 ares_tool = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(ares_tool)
 
-BOOTSTRAP = "/root/reference/testing/data/bootstrap"
-SAMPLE_REDOLOGS = ("/root/reference/testing/data/integration/"
-                   "sample-ares-root/data/abc_0/redologs")
+BOOTSTRAP = os.path.join(REFERENCE_ROOT, "testing", "data", "bootstrap")
+SAMPLE_REDOLOGS = os.path.join(
+    REFERENCE_ROOT, "testing", "data", "integration", "sample-ares-root",
+    "data", "abc_0", "redologs")
 
 
+@pytest.mark.usefixtures("reference_root")
 def test_tables_on_shipped_bootstrap():
     out = ares_tool.main(["tables", BOOTSTRAP])
     assert set(out) == {"dimtable1", "facttable1"}
@@ -32,6 +37,7 @@ def test_tables_on_shipped_bootstrap():
         "batchID": -2147483648, "index": 603670}
 
 
+@pytest.mark.usefixtures("reference_root")
 def test_redologs_and_read_upsert_batch_on_shipped_sample():
     """The reference's shipped redolog decodes exactly as its own
     redo_log_browser_test pins: one 88-byte batch of 2 rows, Uint8 +

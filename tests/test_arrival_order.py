@@ -127,32 +127,3 @@ def test_backfill_queue_caller_seq_col_is_persisted(spark, tmp_path):
     got = {r["id"]: (r["ts"], r["v"])
            for r in store.read_cold(spark).collect()}
     assert got[0] == (day0, 5.0)
-
-
-def test_legacy_queue_dir_without_seq_still_flushes(spark, tmp_path):
-    """A queue dir written by pre-r10 code (no __seq) must still flush
-    (read-order fallback) — crash survivors cannot brick the store."""
-    from aresdb_spark.sources.hotcold import HotColdStore
-
-    t0 = datetime(2024, 1, 1)
-    cutoff = t0 + timedelta(days=30)
-    store = HotColdStore(path=str(tmp_path / "t"), time_column="ts",
-                         primary_key=("id",), sort_columns=("ts",))
-    store.init_from(spark.createDataFrame(
-        [(0, t0, 0.0)], "id int, ts timestamp, v double"), cutoff)
-    # simulate the legacy layout: write the dir by hand, no __seq, and
-    # strip the r11 backfill ledger from state — a true pre-r10 store
-    # has neither (under CURRENT state, an unledgered dir is an
-    # invisible crash orphan by design, ADVICE r11 #1)
-    from aresdb_spark.sources import pointer
-    st = store._state()
-    st.pop("backfill_batches", None)
-    pointer.commit_state(store.path, st)
-    os.makedirs(store.backfill_path, exist_ok=True)
-    spark.createDataFrame([(1, t0, 9.0)],
-                          "id int, ts timestamp, v double") \
-        .coalesce(1).write.parquet(
-            os.path.join(store.backfill_path, "batch=0"))
-    assert store.flush_backfill(spark) == 1
-    got = {r["id"]: r["v"] for r in store.read_cold(spark).collect()}
-    assert got == {0: 0.0, 1: 9.0}

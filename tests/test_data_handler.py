@@ -1,9 +1,11 @@
 """Data-handler front door: wire bytes → metastore schema → enum
 translation → HotColdStore ingest, plus redo-log replay recovery."""
 
+import os
 from datetime import datetime
 
 import pytest
+from conftest import REFERENCE_ROOT
 
 from aresdb_spark.metastore import SchemaStore
 from aresdb_spark.sources.hotcold import HotColdStore
@@ -192,9 +194,11 @@ def test_recover_from_redo_log(spark, tmp_path):
 
 # --- the reference's shipped sample-ares-root, replayed end-to-end ----------
 
-SAMPLE_ROOT = "/root/reference/testing/data/integration/sample-ares-root"
+SAMPLE_ROOT = os.path.join(REFERENCE_ROOT, "testing", "data", "integration",
+                           "sample-ares-root")
 
 
+@pytest.mark.usefixtures("reference_root")
 def test_sample_ares_root_redo_log_replay(spark, tmp_path):
     """Replay the reference's shipped integration fixture: its metastore
     directory (schema file + \\x00\\n-delimited enum files) loads as-is,
@@ -203,13 +207,6 @@ def test_sample_ares_root_redo_log_replay(spark, tmp_path):
     snapshot. Expected contents are pinned by the reference's own
     redo-log browser test (memstore/redo_log_browser_test.go:68-74): one
     batch at offset 4, rows (c1=123, c2=enum id 0) and (234, id 1)."""
-    import os
-
-    import pytest
-
-    if not os.path.isdir(SAMPLE_ROOT):
-        pytest.skip("reference fixtures not mounted")
-
     from aresdb_spark.sources.hotcold import DimensionStore
 
     ss = SchemaStore(base_dir=os.path.join(SAMPLE_ROOT, "metastore"))
@@ -245,6 +242,7 @@ def test_dimension_store_pk_merge(spark, tmp_path):
     assert got == [(1, "a"), (2, "B"), (3, "c")]
 
 
+@pytest.mark.usefixtures("reference_root")
 def test_redo_log_browser_matches_reference_expectations():
     """The browser surfaces the reference's own pinned expectations for
     the shipped fixture (memstore/redo_log_browser_test.go:56-85):
@@ -252,12 +250,6 @@ def test_redo_log_browser_matches_reference_expectations():
     with column names (c1, c2), slice clamping, and the invalid-start
     error."""
     import json
-    import os
-
-    import pytest
-
-    if not os.path.isdir(SAMPLE_ROOT):
-        pytest.skip("reference fixtures not mounted")
 
     from aresdb_spark.streaming.redolog_browser import RedoLogBrowser
 

@@ -195,7 +195,7 @@ def test_dimension_table_wire_ingest_then_join(spark, tmp_path):
     assert has_broadcast_join(df)
 
 
-def test_data_sender_csv_roundtrip(spark, tmp_path):
+def test_data_sender_csv_roundtrip(spark, tmp_path, reference_root):
     """The data-sender client flow with the reference's shipped sample
     CSV (testing/data/data-sender/sample.csv, the abc table's shape):
     CSV → enum-id translation via the metastore dictionaries →
@@ -205,11 +205,8 @@ def test_data_sender_csv_roundtrip(spark, tmp_path):
     import csv
     import os
 
-    import pytest
-
-    SAMPLE = "/root/reference/testing/data/data-sender/sample.csv"
-    if not os.path.isfile(SAMPLE):
-        pytest.skip("reference fixtures not mounted")
+    SAMPLE = os.path.join(reference_root, "testing", "data", "data-sender",
+                          "sample.csv")
 
     from aresdb_spark.sources.hotcold import DimensionStore
     from aresdb_spark.streaming.upsert_wire import encode_upsert_batch_stream

@@ -18,12 +18,11 @@ from aresdb_spark.functions.hll_wire import (DENSE_DATA_LENGTH, HLL,
                                              parse_hll_query_results,
                                              parse_hll_result)
 
-FIXDIR = "/root/reference/testing/data/query"
+from tests.conftest import REFERENCE_ROOT, SF_DIR  # noqa: E402
 
-from tests.conftest import SF_DIR  # noqa: E402
+FIXDIR = os.path.join(REFERENCE_ROOT, "testing", "data", "query")
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(FIXDIR), reason="reference fixtures unavailable")
+pytestmark = pytest.mark.usefixtures("reference_root")
 
 
 def _expected_dense():

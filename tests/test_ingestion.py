@@ -723,7 +723,8 @@ def test_hot_fold_touches_only_pending_pks(spark, tmp_path):
 
 def test_moved_day_probe_is_footer_bounded(spark, tmp_path):
     """ADVICE r10 #3: the _cold_upsert moved-day probe scans only days
-    whose parquet footer PK bounds intersect the batch's PK range —
+    whose parquet footer PK bounds (read at write time and committed as
+    cold_day_stats) intersect the batch's PK range —
     with day-disjoint PK ranges (the common monotonic-id layout) an
     update touches one candidate day, not O(|cold|). Conservative:
     unknown stats keep the day; correctness of a cross-day move is
@@ -742,17 +743,22 @@ def test_moved_day_probe_is_footer_bounded(spark, tmp_path):
         rows, "id int, ts timestamp, v double"), cutoff)
     m = store._cold_day_map()
     assert len(m) == 5
+    stats = store._state()["cold_day_stats"]
 
     # footer pruning: pk 205 lives only in day index 2
-    assert store._candidate_moved_days(m, 205, 205, False) == \
+    assert store._candidate_moved_days(m, 205, 205, False, stats) == \
         {"2024-01-03"}
     # a range spanning two days' pks keeps exactly those days
-    assert store._candidate_moved_days(m, 5, 101, False) == \
+    assert store._candidate_moved_days(m, 5, 101, False, stats) == \
         {"2024-01-01", "2024-01-02"}
     # a PK nobody holds keeps nothing — the probe scan is skipped
-    assert store._candidate_moved_days(m, 9999, 9999, False) == set()
+    assert store._candidate_moved_days(m, 9999, 9999, False, stats) \
+        == set()
     # null-PK batches keep only days whose files Hold nulls (none here)
-    assert store._candidate_moved_days(m, None, None, True) == set()
+    assert store._candidate_moved_days(m, None, None, True, stats) \
+        == set()
+    # a dir with no stats entry has unknowable bounds: its day is kept
+    assert store._candidate_moved_days(m, 9999, 9999, False, {}) == set(m)
 
     # end-to-end: move pk 405 from day 4 to day 0 — the existing copy's
     # day must be found through the footer bound and rewritten
@@ -773,8 +779,7 @@ def test_moved_day_probe_uses_committed_stats(spark, tmp_path, monkeypatch):
     """The per-day PK bounds are recorded in the pointer at WRITE time
     (cold_day_stats) — the steady-state moved-day probe is pure
     committed metadata, no footer reads at all (the manifest-stats
-    shape at 100 TB); footers are only read for dirs committed before
-    the stats existed. Displaced dirs drop out of the stats with the
+    shape at 100 TB). Displaced dirs drop out of the stats with the
     same commit that retires them."""
     from datetime import timedelta
 

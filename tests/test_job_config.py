@@ -7,14 +7,15 @@ import os
 from datetime import datetime
 
 import pytest
+from conftest import REFERENCE_ROOT
 
 from aresdb_spark.streaming.job_config import JobConfig
 
-REF_JOB = "/root/reference/subscriber/config/test/jobs/job1-local.json"
+REF_JOB = os.path.join(REFERENCE_ROOT, "subscriber", "config", "test",
+                       "jobs", "job1-local.json")
 
 
-@pytest.mark.skipif(not os.path.isfile(REF_JOB),
-                    reason="reference job config not mounted")
+@pytest.mark.usefixtures("reference_root")
 def test_parses_reference_job_document():
     with open(REF_JOB) as f:
         job = JobConfig.from_json(f.read())

@@ -5,6 +5,8 @@ Mirrors the reference's own test coverage model for
 metastore/disk_metastore.go and api/schema_handler.go.
 """
 
+import os
+
 import pytest
 
 from aresdb_spark.metastore import (DEFAULT_TABLE_CONFIG,
@@ -25,7 +27,7 @@ from aresdb_spark.metastore import (DEFAULT_TABLE_CONFIG,
                                     ErrTableDoesNotExist, SchemaHandler,
                                     SchemaStore, catalog_from_store,
                                     table_def_from_schema, validate_table)
-from tests.conftest import SF_DIR, assert_df_matches_duck
+from tests.conftest import REFERENCE_ROOT, SF_DIR, assert_df_matches_duck
 
 
 def dim_table(name="cities"):
@@ -256,17 +258,16 @@ def test_enum_handler_routes():
     assert h.add_enum_case("cities", "id", {"enumCases": ["x"]})[0] == 400
 
 
-REFERENCE_SCHEMAS = "/root/reference/examples/1k_trips/schema"
+REFERENCE_SCHEMAS = os.path.join(REFERENCE_ROOT, "examples", "1k_trips",
+                                 "schema")
 
 
-@pytest.mark.skipif(not __import__("os").path.isdir(REFERENCE_SCHEMAS),
-                    reason="reference examples not mounted")
+@pytest.mark.usefixtures("reference_root")
 def test_reference_example_schemas_round_trip(tmp_path):
     """The reference's own shipped schema documents (examples/1k_trips)
     load, validate, persist, and bridge into planner TableDefs unchanged
     — the strongest document-shape parity check available."""
     import json
-    import os
 
     s = SchemaStore(base_dir=str(tmp_path / "meta"))
     for fn in sorted(os.listdir(REFERENCE_SCHEMAS)):

@@ -293,59 +293,6 @@ def test_snapshot_journal_window_exactly_once(spark, tmp_path):
     assert dim._state()["displaced"] == []
 
 
-def test_pre_r8_store_layout_reads_and_upgrades(spark, tmp_path):
-    """Stores committed before schema versioning / the displaced ledger
-    (flat _schema.json, state without "schema"/"displaced") must read
-    as-is, and the next mutation upgrades them in place: new mutations
-    ledger what they displace, the schema file goes versioned on the
-    next re-init, and the legacy flat file is ledgered, not orphaned."""
-    import json
-    import os
-
-    from aresdb_spark.sources.hotcold import HotColdStore
-
-    # fabricate the r7 layout: versioned MONOLITHIC data dirs + flat
-    # schema file + a pointer without the r8/r9 keys (no ledger, no
-    # per-day cold map)
-    from aresdb_spark.sources.writer import write_archive
-
-    store = _fact_store(spark, tmp_path)
-    st = store._state()
-    write_archive(store.read_cold(spark),
-                  os.path.join(store.path, "cold_v0"), "ts", ("ts",))
-    flat = os.path.join(store.path, "_schema.json")
-    os.replace(store._schema_path(st), flat)
-    legacy_state = {k: v for k, v in st.items()
-                    if k not in ("schema", "displaced",
-                                 "cold_days", "coldset_seq")}
-    legacy_state["cold"] = 0
-    pointer_mod.commit_state(store.path, legacy_state)
-
-    # reads resolve through the legacy fallback
-    assert sorted(r.id for r in
-                  store.read(spark, store.saved_cutoff()).collect()) \
-        == [1, 2, 3, 4]
-    # a mutation on the legacy store CONVERTS it (one full rewrite) and
-    # ledgers both displaced monoliths normally
-    store.archive(spark, datetime(2024, 1, 22))
-    st2 = store._state()
-    ledger = {e["dir"] for e in st2["displaced"]}
-    assert {"hot_v0", "cold_v0"} <= ledger
-    assert "cold" not in st2 and "cold_days" in st2  # converted
-    assert "schema" not in st2  # schema untouched until re-init
-    assert sorted(r.id for r in store.read(spark).collect()) == [1, 2, 3, 4]
-    # re-init versions the schema and ledgers the flat legacy file
-    store.init_from(spark.createDataFrame(
-        [Row(id=9, ts=datetime(2024, 2, 1, 5), v=9.0)]),
-        datetime(2024, 2, 15))
-    assert store._state()["schema"] == 0
-    assert "_schema.json" in {e["dir"] for e in store._state()["displaced"]}
-    assert os.path.exists(flat)            # grace: still on disk
-    store.gc(grace_seconds=0)
-    assert not os.path.exists(flat)
-    assert [r.id for r in store.read(spark).collect()] == [9]
-
-
 def test_fact_reader_survives_concurrent_archive(spark, tmp_path):
     """The hot/cold union a reader resolved BEFORE an archive commit
     keeps working after it: the displaced hot/cold version dirs are
@@ -620,40 +567,35 @@ def test_deferred_enqueue_crash_before_commit_is_invisible(spark, tmp_path):
     assert got == {1: 6.0, 2: 2.0, 20: 20.0}
 
 
-def test_backfill_ledger_adopts_legacy_stores(spark, tmp_path):
-    """A store whose committed state predates the backfill_batches
-    ledger (pre-r11) keeps the old listing rule until its next deferred
-    ingest, which adopts the legacy dirs into the ledger — nothing
-    queued under old code is lost."""
-    from datetime import datetime as dt
+@pytest.mark.parametrize("layout", ["missing", "bhp_only"])
+@pytest.mark.parametrize("kind", ["hotcold", "dimension", "signature"])
+def test_read_without_committed_state_names_the_fix(spark, tmp_path,
+                                                    kind, layout):
+    """A root with no committed _state.json is not a store: every
+    reader raises one FileNotFoundError naming the root and how to
+    create the store — never a fall-through read of whatever files sit
+    there (bare ``bhp=*`` parquet included)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    from aresdb_spark.sources import pointer
-    from aresdb_spark.sources.hotcold import HotColdStore
+    from aresdb_spark.operators.dedup import read_signature_store
+    from aresdb_spark.sources.hotcold import DimensionStore, HotColdStore
 
-    cutoff = dt(2024, 1, 15)
-    store = HotColdStore(path=str(tmp_path / "t"), time_column="ts",
-                         primary_key=("id",), modes={"v": "add"})
-    store.init_from(spark.createDataFrame([
-        Row(id=1, ts=dt(2024, 1, 2, 5), v=1.0),
-        Row(id=2, ts=dt(2024, 1, 20, 5), v=2.0),
-    ]), cutoff)
-    store.ingest(spark, spark.createDataFrame(
-        [Row(id=10, ts=dt(2024, 1, 3, 5), v=10.0)]),
-        cutoff, defer_backfill=True)
-
-    # simulate a pre-ledger store: strip the key from committed state
-    st = store._state()
-    st.pop("backfill_batches")
-    pointer.commit_state(store.path, st)
-    assert store.queued_backfill_batches() == ["batch=0"]  # legacy rule
-
-    # next deferred ingest adopts the legacy dir into the ledger
-    store.ingest(spark, spark.createDataFrame(
-        [Row(id=11, ts=dt(2024, 1, 4, 5), v=11.0)]),
-        cutoff, defer_backfill=True)
-    assert store._state()["backfill_batches"] == [0, 1]
-    assert store.queued_backfill_batches() == ["batch=0", "batch=1"]
-    assert store.flush_backfill(spark) == 2
-    assert store._state()["backfill_batches"] == []
-    got = {r.id: r.v for r in store.read_cold(spark).collect()}
-    assert got == {1: 1.0, 10: 10.0, 11: 11.0}
+    root = tmp_path / "store"
+    if layout == "bhp_only":
+        (root / "bhp=0").mkdir(parents=True)
+        pq.write_table(pa.table({"id": [1], "band": [0], "bh": ["0a"]}),
+                       str(root / "bhp=0" / "part-00000.parquet"))
+    if kind == "hotcold":
+        store = HotColdStore(path=str(root), time_column="ts",
+                             primary_key=("id",))
+        reads = [store.read, store.read_cold, store.read_hot]
+    elif kind == "dimension":
+        reads = [DimensionStore(path=str(root), primary_key=("id",)).read]
+    else:
+        reads = [lambda s: read_signature_store(s, str(root))]
+    for read in reads:
+        with pytest.raises(FileNotFoundError, match="init_from") as e:
+            read(spark)
+        assert str(root) in str(e.value)
+        assert "build_signature_store" in str(e.value)

@@ -36,13 +36,13 @@ import os
 
 import pytest
 
+from tests.conftest import REFERENCE_ROOT
 from tests.test_reference_backfill import parse_vp
 
-DATA = "/root/reference/testing/data"
+DATA = os.path.join(REFERENCE_ROOT, "testing", "data")
 VPS = os.path.join(DATA, "vps")
 BATCHES = os.path.join(DATA, "batches")
-pytestmark = pytest.mark.skipif(not os.path.isdir(VPS),
-                                reason="reference fixtures not mounted")
+pytestmark = pytest.mark.usefixtures("reference_root")
 
 # archiving_test.go:44-45
 CUTOFF, OLD_CUTOFF = 140, 100

@@ -17,11 +17,12 @@ import os
 from datetime import datetime
 
 import pytest
+from conftest import REFERENCE_ROOT
 
-QUERIES = "/root/reference/integration/test-data/queries"
-SCHEMA = "/root/reference/integration/test-data/schema/arraytest.json"
-pytestmark = pytest.mark.skipif(not os.path.isdir(QUERIES),
-                                reason="reference fixtures not mounted")
+QUERIES = os.path.join(REFERENCE_ROOT, "integration", "test-data", "queries")
+SCHEMA = os.path.join(REFERENCE_ROOT, "integration", "test-data", "schema",
+                      "arraytest.json")
+pytestmark = pytest.mark.usefixtures("reference_root")
 
 NOW = 1706190420  # Thu 2024-01-25 13:07:00 UTC, the repo's pinned now
 N_ROWS = 200

@@ -32,11 +32,12 @@ from __future__ import annotations
 import os
 
 import pytest
+from conftest import REFERENCE_ROOT
 
-VPS = "/root/reference/testing/data/vps/backfill"
-UBS = "/root/reference/testing/data/upsert-batches/backfill"
-pytestmark = pytest.mark.skipif(not os.path.isdir(VPS),
-                                reason="reference fixtures not mounted")
+VPS = os.path.join(REFERENCE_ROOT, "testing", "data", "vps", "backfill")
+UBS = os.path.join(REFERENCE_ROOT, "testing", "data", "upsert-batches",
+                   "backfill")
+pytestmark = pytest.mark.usefixtures("reference_root")
 
 # memstore/backfill_test.go:399-400 — base rows tombstoned by the patch
 DELETED_BASE_ROWS = {1, 4, 6, 7, 9}

@@ -15,10 +15,10 @@ import json
 import os
 
 import pytest
+from conftest import REFERENCE_ROOT
 
-EXAMPLE = "/root/reference/examples/1k_trips"
-pytestmark = pytest.mark.skipif(not os.path.isdir(EXAMPLE),
-                                reason="reference examples not mounted")
+EXAMPLE = os.path.join(REFERENCE_ROOT, "examples", "1k_trips")
+pytestmark = pytest.mark.usefixtures("reference_root")
 
 # pinned "now": Thu 2024-01-25 13:07:00 UTC (matches the repo's other
 # golden tests); {1d} rows spread deterministically over [now-1d, now)

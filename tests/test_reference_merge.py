@@ -30,13 +30,13 @@ import os
 
 import pytest
 
+from tests.conftest import REFERENCE_ROOT
 from tests.test_reference_backfill import parse_vp
 
-DATA = "/root/reference/testing/data"
+DATA = os.path.join(REFERENCE_ROOT, "testing", "data")
 VPS = os.path.join(DATA, "vps")
 BATCHES = os.path.join(DATA, "batches")
-pytestmark = pytest.mark.skipif(not os.path.isdir(VPS),
-                                reason="reference fixtures not mounted")
+pytestmark = pytest.mark.usefixtures("reference_root")
 
 # merge_test.go:94-101 — archivingPatch sortColumns {1, 2, 3, 4}
 SORT_COLS = ("c1", "c2", "c3", "c4")

@@ -27,11 +27,11 @@ from datetime import datetime, timezone
 
 import pytest
 
+from tests.conftest import REFERENCE_ROOT
 from tests.test_reference_backfill import parse_vp
 
-VPS = "/root/reference/testing/data/vps/archiving"
-pytestmark = pytest.mark.skipif(not os.path.isdir(VPS),
-                                reason="reference fixtures not mounted")
+VPS = os.path.join(REFERENCE_ROOT, "testing", "data", "vps", "archiving")
+pytestmark = pytest.mark.usefixtures("reference_root")
 
 CUTOFF_EPOCH = 100        # aql_processor_test.go:222 ArchivingCutoff
 LIVE_110_CAPACITY = 5     # :200 Capacity

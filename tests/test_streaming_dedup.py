@@ -400,8 +400,8 @@ def test_sigstore_mutations_are_single_writer(spark, tmp_path):
 def test_crashed_initial_write_is_not_legacy(spark, tmp_path):
     """ADVICE r7: a crash during the first v2 write leaves a partial
     v0/ dir and no pointer. The replayed first batch must take the
-    CREATE branch (legacy detection keys on bhp=*/root data files, not
-    dir non-emptiness) — the old rule appended bhp=* dirs beside the
+    CREATE branch (only a committed pointer makes a store, never dir
+    non-emptiness) — the old rule appended bhp=* dirs beside the
     orphan and left the root unreadable."""
     import os
 
@@ -423,36 +423,10 @@ def test_crashed_initial_write_is_not_legacy(spark, tmp_path):
     assert not (store / "v0" / "part-00000.parquet.tmp").exists()  # orphan gone
 
 
-def test_legacy_conversion_respects_read_grace(spark, tmp_path):
-    """First compaction of a pre-v2 store: the root-level legacy files
-    enter the ledger as ``legacy_root`` and survive until GC, so a
-    reader mid-scan on the legacy layout is safe too."""
-    import glob
-
-    from aresdb_spark.operators.dedup import (
-        compact_signature_store, gc_signature_store, read_signature_store,
-        signature_bands)
-    from aresdb_spark.sources.pointer import read_state
-
-    docs = _docs(spark)
-    store = str(tmp_path / "store")
-    corpus = docs.filter(F.col("doc_id") % 5 == 0)
-    signature_bands(corpus).write.partitionBy("bhp").parquet(store)  # legacy
-    n = compact_signature_store(spark, store, corpus.select("doc_id"))
-    assert n > 0
-    st = read_state(store)
-    assert st["displaced"][0]["legacy_root"] is True
-    assert glob.glob(f"{store}/bhp=*")          # legacy files still live
-    assert gc_signature_store(spark, store, grace_seconds=0) == 1
-    assert not glob.glob(f"{store}/bhp=*")      # reaped after the window
-    assert read_signature_store(spark, store).count() == n
-
-
 def test_sink_tolerates_precreated_empty_store_dir(spark, tmp_path):
     """mkdir -p of work dirs before starting the stream must still count
     as a first batch: an empty dir has no state and no data, and
-    treating it as an existing store would read parquet from nothing
-    (and freeze the store on the legacy layout)."""
+    treating it as an existing store would read parquet from nothing."""
     import os
 
     from aresdb_spark.operators.dedup import read_signature_store
@@ -466,7 +440,7 @@ def test_sink_tolerates_precreated_empty_store_dir(spark, tmp_path):
     docs.filter(F.col("doc_id") % 7 == 0).coalesce(1) \
         .write.parquet(str(src / "b1"))
     _run_sink(spark, src, store, out, str(tmp_path / "ckpt"))
-    assert read_state(store) is not None  # v2 layout, not legacy
+    assert read_state(store) is not None  # created by the first batch
     assert read_signature_store(spark, store).count() > 0
 
 
