@@ -37,6 +37,9 @@ Spark shape: two parquet layouts behind one pointer.
     bounded, because the archive job compacts the pending set into a
     new base on its cadence (memstore/archiving.go:62-72 merges live
     batches into the archive the same way).
+  - every pending set (hot batches, backfill queue, dimension journal)
+    is ONE scan of its committed ``batch=<n>`` dirs folded by ONE
+    aggregation (fold_upserts): one shuffle however many batches queued.
   - the union view applies the cutoff predicate to both sides.
 
 On a Delta/Iceberg deployment hot-rewrite becomes MERGE and archive
@@ -70,7 +73,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aresdb_spark.sources import pointer
-from aresdb_spark.streaming.upsert import UpdateMode, apply_upsert_batch
+from aresdb_spark.streaming.upsert import (UpdateMode, apply_upsert_batch,
+                                           fold_upserts)
+
+_ORD = "__batch"   # arrival ordinal of a pending-set row (_read_batches)
 
 
 def _utc_naive(dt: datetime) -> datetime:
@@ -126,6 +132,35 @@ def _utc_session(spark: SparkSession):
                 spark.conf.set("spark.sql.session.timeZone", ent[1])
 
 
+def _batch_rows(df: DataFrame, schema, seq_col: "str | None") -> DataFrame:
+    """``df`` as pending-batch rows: the store schema plus ``__seq``,
+    the intra-batch arrival order (caller seq column, else the batch's
+    row order — the redo-log replay order, as in collapse_batch).
+    Absent columns materialize as NULL — precisely the per-mode
+    semantics apply_upsert_batch gives a column the batch doesn't
+    carry (overwrite/add/min/max: keep; force: null out)."""
+    seq_expr = F.col(seq_col).cast("long") if seq_col \
+        else F.monotonically_increasing_id()
+    return df.select(
+        *[(F.col(f.name) if f.name in df.columns
+           else F.lit(None)).cast(f.dataType).alias(f.name)
+          for f in schema.fields],
+        seq_expr.alias("__seq"))
+
+
+def _read_batches(spark: SparkSession, schema, dirs: list[str]) -> DataFrame:
+    """ONE scan of a pending set's committed ``batch=<n>`` dirs (from
+    state, never a listing): ``_batch_rows`` columns plus ``__batch``
+    = n from ``_metadata.file_path`` — partition discovery would shadow
+    a store column named ``batch``."""
+    from pyspark.sql.types import LongType, StructField, StructType
+    bschema = StructType(
+        list(schema.fields) + [StructField("__seq", LongType())])
+    return spark.read.schema(bschema).parquet(*dirs).withColumn(
+        _ORD, F.regexp_extract(F.col("_metadata.file_path"),
+                               r"batch=(\d+)/[^/]*$", 1).cast("long"))
+
+
 class MissingEventTimeError(ValueError):
     """A fact-table upsert carried a NULL event time on a table that
     does not allow it — the reference rejects the batch with "Event time
@@ -165,12 +200,12 @@ class HotColdStore:
     # archive. Under the normal archiving cadence the pending set is
     # orders of magnitude below this.
     hot_probe_max_rows: int = 1_000_000
-    # file-count cap per appended hot batch dir: a micro-batch inherits
-    # its source's partitioning (a 32-way stream writing 1k-row batches
-    # would land 32 tiny files per batch — small-file explosion on the
-    # pending-set scan); the write coalesces to at most this many files
-    # while big batches keep up to this much write parallelism. The
-    # reference's analog is one live batch object per upsert batch.
+    # file-count cap on every hot, queue and journal write (hot batch,
+    # queue and — at this default — journal dirs; the hot base archive
+    # and compact_hot rewrite): a micro-batch inherits its source's
+    # partitioning (a 32-way stream would land 32 tiny files per batch),
+    # the base the fold's shuffle width. Writes coalesce to at most
+    # this many files; the reference keeps one live batch per upsert.
     hot_batch_max_files: int = 8
 
     def _state(self) -> dict:
@@ -460,69 +495,64 @@ class HotColdStore:
         """The LOGICAL hot store: compacted base + committed pending
         batch dirs resolved to one row per PK. With no pending batches
         (steady state right after archive/init) this is a plain scan of
-        the base. With pending batches and store-default modes, the
-        resolution is ONE fold aggregation (fold_upserts — a single
-        hash shuffle regardless of how many batches are pending) whose
-        input is ONLY the base rows a pending PK touches: the pending-PK
-        set broadcasts (left_semi/left_anti split of the base), and the
+        the base. Otherwise the pending dirs are ONE scan
+        (``_read_batches``), and with store-default modes the resolution
+        is ONE fold aggregation (fold_upserts — a single hash shuffle
+        regardless of how many batches are pending) whose input is ONLY
+        the base rows a pending PK touches: the pending-PK set
+        broadcasts (left_semi/left_anti split of the base), and the
         untouched slice unions back without shuffling — resolve cost
         tracks |pending|, not |hot base|. A batch ingested with override
-        modes forces the exact iterative replay instead (one merge join
-        per such chain — bounded by the archiving cadence, and only
-        ever paid by callers that use per-batch mode overrides)."""
-        from aresdb_spark.streaming.upsert import fold_upserts
-
+        modes forces the exact iterative replay instead, over
+        ``filter(__batch == n)`` of the same scan (one merge join per
+        batch — bounded by the archiving cadence, and only ever paid by
+        callers that use per-batch mode overrides)."""
         schema = self._schema(st)
         base = spark.read.schema(schema).parquet(
             self._version_path("hot", st))
         pend = self._pending_hot_batches(st)
         if not pend:
             return base
-        from pyspark.sql.types import LongType, StructField, StructType
-        batch_schema = StructType(
-            list(schema.fields) + [StructField("__seq", LongType())])
-        batches = [spark.read.schema(batch_schema).parquet(
-            self._hot_batch_dir(e["n"])) for e in pend]
+        pending = _read_batches(
+            spark, schema, [self._hot_batch_dir(e["n"]) for e in pend])
         pk = list(self.primary_key)
-        if not any("modes" in e for e in pend):
-            # Fold ONLY the base rows whose PK a pending batch touches
-            # (VERDICT r9 #4): the pending-PK set is small (bounded by
-            # the archiving cadence), so it broadcasts; the untouched
-            # slice of the base unions back SHUFFLE-FREE — under every
-            # update mode an untouched PK resolves to its base row
-            # verbatim, so bypassing the fold is exact. Without the
-            # split, every read with a non-empty pending set (the
-            # steady state under continuous ingest) shuffles the ENTIRE
-            # hot base; the reference's cuckoo probe only ever touches
-            # the updated keys (memstore/live_store.go:33-46). No
-            # distinct on the probe (it would cost a shuffle of its
-            # own; a broadcast hash relation is correct for semi/anti
-            # with duplicate keys). Guard: a pathological pending set
-            # (bulk backload before the first archive) must not blow
-            # the broadcast — parquet footers (metadata, no job) bound
-            # it, and an oversized set takes the whole-base fold that
-            # r9 always paid.
-            if self._pending_rows(pend) <= self.hot_probe_max_rows:
-                probe = batches[0].select(*pk)
-                for b in batches[1:]:
-                    probe = probe.unionByName(b.select(*pk))
-                cond = None
-                for k in pk:  # null-safe: NULL PK is a legal single key
-                    c = F.col(f"b.{k}").eqNullSafe(F.col(f"p.{k}"))
-                    cond = c if cond is None else cond & c
-                bb = base.alias("b")
-                pp = F.broadcast(probe.alias("p"))
-                matched = bb.join(pp, cond, "left_semi")
-                untouched = bb.join(pp, cond, "left_anti")
-                folded = fold_upserts(matched, batches, pk, self.modes)
-                return self._conform(folded, st).unionByName(untouched)
+        if any("modes" in e for e in pend):
+            resolved = base
+            for e in pend:
+                resolved = apply_upsert_batch(
+                    resolved,
+                    pending.filter(F.col(_ORD) == e["n"]).drop(_ORD), pk,
+                    e.get("modes", self.modes), "__seq")
+            return self._conform(resolved, st)
+        # Fold ONLY the base rows whose PK a pending batch touches
+        # (VERDICT r9 #4): the pending-PK set is small (bounded by the
+        # archiving cadence), so it broadcasts; the untouched slice of
+        # the base unions back SHUFFLE-FREE — under every update mode an
+        # untouched PK resolves to its base row verbatim, so bypassing
+        # the fold is exact. Without the split, every read with a
+        # non-empty pending set (the steady state under continuous
+        # ingest) shuffles the ENTIRE hot base; the reference's cuckoo
+        # probe only ever touches the updated keys
+        # (memstore/live_store.go:33-46). No distinct on the probe (it
+        # would cost a shuffle of its own; a broadcast hash relation is
+        # correct for semi/anti with duplicate keys). Guard: a
+        # pathological pending set (bulk backload before the first
+        # archive) must not blow the broadcast — parquet footers
+        # (metadata, no job) bound it, and an oversized set takes the
+        # whole-base fold that r9 always paid.
+        if self._pending_rows(pend) > self.hot_probe_max_rows:
             return self._conform(
-                fold_upserts(base, batches, pk, self.modes), st)
-        resolved = base
-        for e, b in zip(pend, batches):
-            resolved = apply_upsert_batch(
-                resolved, b, pk, e.get("modes", self.modes), "__seq")
-        return self._conform(resolved, st)
+                fold_upserts(base, pending, _ORD, pk, self.modes), st)
+        cond = None
+        for k in pk:  # null-safe: NULL PK is a legal single key
+            c = F.col(f"b.{k}").eqNullSafe(F.col(f"p.{k}"))
+            cond = c if cond is None else cond & c
+        bb = base.alias("b")
+        pp = F.broadcast(pending.select(*pk).alias("p"))
+        matched = bb.join(pp, cond, "left_semi")
+        untouched = bb.join(pp, cond, "left_anti")
+        folded = fold_upserts(matched, pending, _ORD, pk, self.modes)
+        return self._conform(folded, st).unionByName(untouched)
 
     def read_cold(self, spark: SparkSession,
                   time_range: "tuple | None" = None) -> DataFrame:
@@ -679,28 +709,12 @@ class HotColdStore:
             # missing-event-time records in the live store, keyed by
             # arrival time (ingestion.go:230-235)
             hot_part = observed.filter((t >= cut) | t.isNull())
-            # intra-batch arrival order, persisted so readers resolve
-            # repeated PKs exactly as the eager merge would (caller seq
-            # column, else the batch's current row order — the redo-log
-            # replay order, same rule as collapse_batch)
-            seq_expr = F.col(seq_col).cast("long") if seq_col \
-                else F.monotonically_increasing_id()
-            # absent non-PK columns materialize as NULL — precisely the
-            # per-mode semantics apply_upsert_batch gives a column the
-            # batch doesn't carry (overwrite/add/min/max: keep; force:
-            # null out)
-            stored = hot_part.select(
-                *[(F.col(f.name) if f.name in batch.columns
-                   else F.lit(None)).cast(f.dataType).alias(f.name)
-                  for f in schema.fields],
-                seq_expr.alias("__seq"))
             n = int(st["hot_seq"]) + 1
             hot_dir = self._hot_batch_dir(n)
             # bound the batch dir's file count (see hot_batch_max_files)
             # — coalesce is narrow, so this stays the one write job
-            src_parts = batch.rdd.getNumPartitions()
-            if src_parts > self.hot_batch_max_files:
-                stored = stored.coalesce(self.hot_batch_max_files)
+            stored = _batch_rows(hot_part, schema, seq_col) \
+                .coalesce(self.hot_batch_max_files)
             # "overwrite": an uncommitted dir at this number is an
             # orphan of a writer that died before its commit — invisible
             # to every reader, safe to reclaim
@@ -740,12 +754,15 @@ class HotColdStore:
                     # ledger: visibility flips with THIS batch's one
                     # pointer commit — never by mere directory presence
                     # (ADVICE r11 #1)
-                    qn = self._enqueue_backfill(cold_part, seq_col)
+                    qn = self._enqueue_backfill(
+                        _batch_rows(cold_part, schema, seq_col))
                     commit["backfill_batches"] = \
                         list(before["backfill_batches"]) + [qn]
                 else:
                     updates, cold_displaced = self._cold_upsert(
-                        spark, before, [cold_part], modes, seq_col)
+                        spark, before,
+                        _batch_rows(cold_part, schema, seq_col)
+                        .withColumn(_ORD, F.lit(0).cast("long")), modes)
                     commit.update(updates)
                     commit.setdefault("__displaced", []).extend(
                         cold_displaced)
@@ -759,15 +776,13 @@ class HotColdStore:
 
     # -- backfill queue (BackfillManager buffer, backfill_manager.go) ---------
 
-    def _enqueue_backfill(self, batch: DataFrame,
-                          seq_col: str | None = None) -> int:
-        """Append one pre-cutoff batch to the queue under a monotonically
-        numbered subdir — arrival order IS replay order, like the redo-log
-        offsets the reference's backfill buffer keys on
-        (backfill_manager.go:84-120). INTRA-batch arrival order is
-        PERSISTED as ``__seq`` at write time (the caller's seq column,
-        else the batch's current row order) — exactly like the hot
-        append (``ingest``). Without it, a multi-file queue dir would
+    def _enqueue_backfill(self, rows: DataFrame) -> int:
+        """Append one pre-cutoff batch, already in ``_batch_rows`` shape,
+        to the queue under a monotonically numbered subdir — arrival
+        order IS replay order, like the redo-log offsets the reference's
+        backfill buffer keys on (backfill_manager.go:84-120).
+        INTRA-batch arrival order is PERSISTED as ``__seq`` at write
+        time, exactly like the hot append (``ingest``). Without it, a multi-file queue dir would
         replay in parquet READ-BACK order (Spark packs multi-file scans
         largest-file-first), so a batch carrying two updates to one PK
         could resolve in REVERSE arrival order — a wrong answer the
@@ -792,21 +807,10 @@ class HotColdStore:
                        for n in os.listdir(self.backfill_path)
                        if n.startswith("batch=")), default=floor)
         nxt = max(nxt, floor + 1)
-        seq_expr = F.col(seq_col).cast("long") if seq_col \
-            else F.monotonically_increasing_id()
-        batch.withColumn("__seq", seq_expr) \
+        rows.coalesce(self.hot_batch_max_files) \
             .write.mode("errorifexists").parquet(
                 os.path.join(self.backfill_path, f"batch={nxt}"))
         return nxt
-
-    def _read_queue_batch(self, spark: SparkSession, schema,
-                          name: str) -> DataFrame:
-        """One queued batch with its persisted ``__seq`` arrival order."""
-        from pyspark.sql.types import LongType, StructField, StructType
-        qschema = StructType(
-            list(schema.fields) + [StructField("__seq", LongType())])
-        return spark.read.schema(qschema).parquet(
-            os.path.join(self.backfill_path, name))
 
     def queued_backfill_batches(self) -> list[str]:
         """Queue entries not yet folded into cold: the COMMITTED
@@ -835,12 +839,14 @@ class HotColdStore:
         return total
 
     def _cold_upsert(self, spark: SparkSession, st: dict,
-                     batches: list[DataFrame],
-                     modes: "dict | None",
-                     seq_col: "str | None") -> tuple[dict, list[str]]:
+                     pending: DataFrame,
+                     modes: "dict | None") -> tuple[dict, list[str]]:
         """Fold upsert batches into the cold store, rewriting ONLY the
-        affected day dirs (never O(|cold|)). Returns (state updates,
-        displaced dirs) for the caller's single commit.
+        affected day dirs (never O(|cold|)), in ONE fold aggregation of
+        the affected days and ``pending`` — every batch as one relation
+        with ``__batch`` and ``__seq`` — however many batches queued.
+        Returns (state updates, displaced dirs) for the caller's single
+        commit.
 
         Affected days = days the batch rows land in ∪ days holding the
         EXISTING cold copy of a batch PK (an update may move a row
@@ -855,15 +861,12 @@ class HotColdStore:
         time column), that day's dir list gets an APPEND — PK-disjoint
         by construction, so readers stay exact."""
         pk = list(self.primary_key)
-        union_b = batches[0]
-        for b in batches[1:]:
-            union_b = union_b.unionByName(b, allowMissingColumns=True)
         old_map = self._cold_day_map(st)
         # ONE tiny agg job yields the touched days AND the batch's PK
         # bounds (was two collects); the bounds drive footer-stats day
         # pruning so the moved-day probe scans only candidate days, not
         # O(|cold|) per flush (ADVICE r10 #3)
-        brow = union_b.agg(
+        brow = pending.agg(
             F.collect_set(self._day_key()).alias("days"),
             F.min(F.col(pk[0])).alias("lo"),
             F.max(F.col(pk[0])).alias("hi"),
@@ -875,7 +878,7 @@ class HotColdStore:
             st["cold_day_stats"])
         moved: set[str] = set()
         if cand:
-            probe = union_b.select(*pk).distinct()
+            probe = pending.select(*pk).distinct()
             cond = None
             for k in pk:  # null-safe: a NULL PK is a legal key
                 c = F.col(f"c.{k}").eqNullSafe(F.col(f"p.{k}"))
@@ -886,13 +889,13 @@ class HotColdStore:
                 F.broadcast(probe.alias("p")), cond, "left_semi")
                 .select("__d").distinct().collect()}
         affected = touched | moved
-        base = self._read_cold_resolved(spark, st, days=affected)
+        merged = fold_upserts(
+            self._read_cold_resolved(spark, st, days=affected), pending,
+            _ORD, pk, modes)
         displaced = [rel for d in sorted(affected)
                      for rel in old_map.get(d, [])]
-        for b in batches:
-            base = apply_upsert_batch(base, b, pk, modes, seq_col)
         ck = pointer.next_version(st, "coldset_seq")
-        written = self._write_cold_days(self._conform(base, st), ck)
+        written = self._write_cold_days(self._conform(merged, st), ck)
         new_map = {d: dirs for d, dirs in old_map.items()
                    if d not in affected}
         for d, rel in written.items():
@@ -939,15 +942,15 @@ class HotColdStore:
                        modes: "dict | None" = None) -> int:
         """The backfill job (memstore/backfill.go): fold every queued
         batch into the cold store IN ARRIVAL ORDER under the table's
-        update modes, then drop the queue. One merge per flush, no
-        matter how many batches queued, REWRITING ONLY THE AFFECTED DAY
-        DIRS (``_cold_upsert``) — at 100 TB a backfill flush must not
-        rewrite the archive. Returns the number of batches flushed.
+        update modes, then drop the queue. The queue is ONE scan folded
+        in ONE aggregation, no matter how many batches queued,
+        REWRITING ONLY THE AFFECTED DAY DIRS (``_cold_upsert``) — at
+        100 TB a backfill flush must not rewrite the archive. Returns
+        the number of batches flushed.
 
-        Intra-batch arrival order comes from the ``__seq`` column
+        Arrival order is the dir number, then the ``__seq`` column
         ``_enqueue_backfill`` persists at write time — replay never
-        trusts parquet read-back order (largest-file-first, NOT write
-        order).
+        trusts parquet read-back order (largest-file-first).
 
         The day-map update and the queue truncation (the consumed
         watermark) commit in ONE pointer write: a crash anywhere
@@ -961,11 +964,11 @@ class HotColdStore:
                 return 0
             modes = self.modes if modes is None else modes
             before = self._state()
-            schema = self._schema(before)
-            batches = [self._read_queue_batch(spark, schema, name)
-                       for name in names]
+            pending = _read_batches(
+                spark, self._schema(before),
+                [os.path.join(self.backfill_path, n) for n in names])
             updates, displaced = self._cold_upsert(
-                spark, before, batches, modes, "__seq")
+                spark, before, pending, modes)
             consumed = int(names[-1].split("=")[1])
             # ledger EVERYTHING at/below the watermark, not just this
             # flush's names — survivors of a crash between an earlier
@@ -1022,7 +1025,8 @@ class HotColdStore:
         (a boundary day that already exists simply gains a second dir —
         plain concatenation, exactly the reference adding a new archive
         batch version beside the old days rather than rewriting the
-        store)."""
+        store). The rewritten hot base holds at most
+        ``hot_batch_max_files`` files."""
         with _single_writer(self.path), _utc_session(spark):
             cut = F.lit(_utc_naive(new_cutoff))
             before = self._state()
@@ -1032,8 +1036,10 @@ class HotColdStore:
             # the pending-PK resolve re-executes per action (measured:
             # archive walled at ~2x the 16-pending resolve at the
             # store-ops probe tier, r15). Scoped to this operation and
-            # released before the lock; values are unchanged.
-            hot = self._read_hot_resolved(spark, before).persist()
+            # released before the lock; values are unchanged. The
+            # coalesce bounds the new base's files (hot_batch_max_files).
+            hot = self._read_hot_resolved(spark, before) \
+                .coalesce(self.hot_batch_max_files).persist()
             try:
                 t = F.col(self.time_column)
                 to_cold = hot.filter(t < cut)
@@ -1084,14 +1090,16 @@ class HotColdStore:
         """Fold the pending hot batch dirs into a fresh compacted base
         without touching the cutoff — the explicit compaction handle
         for ops/tests (``archive`` does the same implicitly on its
-        cadence). Returns the number of batch dirs compacted."""
+        cadence), written as at most ``hot_batch_max_files`` files.
+        Returns the number of batch dirs compacted."""
         with _single_writer(self.path):
             before = self._state()
             pending = self._pending_hot_batches(before)
             if not pending:
                 return 0
             nxt = self._next("hot")
-            self._write_hot(self._read_hot_resolved(spark, before), nxt)
+            self._write_hot(self._read_hot_resolved(spark, before)
+                            .coalesce(self.hot_batch_max_files), nxt)
             displaced = [self._version_dir("hot", before)] + \
                 [f"hotbatch/batch={e['n']}" for e in pending]
             self._commit(hot=nxt, hot_batches=[],
@@ -1309,24 +1317,21 @@ class DimensionStore:
 
     def _replay(self, spark: SparkSession, st: "dict | None",
                 base: DataFrame) -> DataFrame:
-        """Resolve snapshot + pending journal batches to current state
-        in ONE fold aggregation (streaming/upsert.fold_upserts — the
-        same read-side resolution as the fact store's hot batches, and
-        hypothesis-proved equal to the per-batch merge chain), instead
-        of one full-outer join per journal batch: plan depth and
-        shuffle count stay constant however many mutations queued
-        before the snapshot job's threshold. Journal replay always uses
-        the STORE's modes (per-batch overrides take the eager
-        ``ingest``), so the one-pass fold is always applicable."""
-        from aresdb_spark.streaming.upsert import fold_upserts
-
+        """Resolve snapshot + pending journal batches to current state:
+        the journal dirs above the watermark are ONE scan folded in ONE
+        aggregation (fold_upserts — the fact store's hot-batch
+        resolution, hypothesis-proved equal to the per-batch merge
+        chain), so plan depth and shuffle count stay constant however
+        many mutations queued. Replay always uses the STORE's modes
+        (per-batch overrides take the eager ``ingest``), so the one-pass
+        fold always applies."""
         names = self._journal_batches(st)
         if not names:
             return base
         sch = self._schema(st)
-        batches = [self._read_journal_batch(spark, sch, name)
-                   for name in names]
-        folded = fold_upserts(base, batches, list(self.primary_key),
+        pending = _read_batches(
+            spark, sch, [os.path.join(self.journal_path, n) for n in names])
+        folded = fold_upserts(base, pending, _ORD, list(self.primary_key),
                               self.modes)
         # conform: fold aggregates can widen dtypes (sum-based add)
         return folded.select(
@@ -1367,26 +1372,19 @@ class DimensionStore:
         Numbering starts above both the highest dir on disk and the
         consumed watermark (a reused number would hide behind it)."""
         with _single_writer(self.path):
-            floor = int(self._state()["journal_consumed"])
+            st = self._state()
+            floor = int(st["journal_consumed"])
             os.makedirs(self.journal_path, exist_ok=True)
             nxt = 1 + max((int(n.split("=")[1])
                            for n in os.listdir(self.journal_path)
                            if n.startswith("batch=")), default=floor)
             nxt = max(nxt, floor + 1)
-            seq_expr = F.col(seq_col).cast("long") if seq_col \
-                else F.monotonically_increasing_id()
-            batch.withColumn("__seq", seq_expr) \
+            # the fact store's default file-count cap (the field's
+            # comment on HotColdStore)
+            _batch_rows(batch, self._schema(st), seq_col) \
+                .coalesce(HotColdStore.hot_batch_max_files) \
                 .write.mode("errorifexists").parquet(
                     os.path.join(self.journal_path, f"batch={nxt}"))
-
-    def _read_journal_batch(self, spark: SparkSession, sch,
-                            name: str) -> DataFrame:
-        """One journal batch with its persisted ``__seq`` arrival order."""
-        from pyspark.sql.types import LongType, StructField, StructType
-        jschema = StructType(
-            list(sch.fields) + [StructField("__seq", LongType())])
-        return spark.read.schema(jschema).parquet(
-            os.path.join(self.journal_path, name))
 
     def num_mutations(self) -> int:
         """Journaled mutation count since the last snapshot — what the

@@ -129,39 +129,37 @@ def apply_upsert_batch(base: DataFrame, batch: DataFrame, pk_cols: list[str],
     return joined.select(*out_cols)
 
 
-def fold_upserts(base: DataFrame, batches: list[DataFrame], pk_cols: list[str],
+def fold_upserts(base: DataFrame, pending: DataFrame, ordinal: str,
+                 pk_cols: list[str],
                  modes: dict[str, UpdateMode | str] | None = None,
                  seq_col: str = "__seq") -> DataFrame:
-    """Resolve ``base`` + an ordered list of upsert batches to one row
+    """Resolve ``base`` + a relation of pending upsert batches to one row
     per PK in a SINGLE aggregation — the read-side of the append-only
     hot store (the reference resolves its appended live batches through
     the cuckoo PK index at read, memstore/live_store.go:33-46; here the
     bounded hot set folds in one hash shuffle instead).
 
-    Each batch must carry ``seq_col`` (long, intra-batch arrival order —
-    materialized at ingest write time); batches are ordered by list
-    position. Equivalent to chaining ``apply_upsert_batch`` per batch
-    because every mode's merge is associative over arrival order:
+    ``pending`` holds every batch at once: ``base``'s columns plus
+    ``ordinal`` (the batch's non-negative arrival number) and ``seq_col``
+    (long, intra-batch arrival order — materialized at write time), so
+    its row order is irrelevant. Equivalent to chaining
+    ``apply_upsert_batch`` per batch in ordinal order because every
+    mode's merge is associative over arrival order:
 
-      - overwrite: last non-null in (batch, seq) order  → max_by
-      - force:     last value outright                  → max_by
-      - add:       sum of non-null contributions        → sum
-      - min/max:   running least/greatest skipping null → min/max
+      - overwrite: last non-null in (ordinal, seq) order → max_by
+      - force:     last value outright                   → max_by
+      - add:       sum of non-null contributions         → sum
+      - min/max:   running least/greatest skipping null  → min/max
 
     The base participates at order (-1, 0) — strictly before every
     batch row. One shuffle total, independent of the number of pending
     batches (vs. one join per batch for the iterative chain)."""
     cols = base.columns
-    parts = [base.select(
-        *cols, F.lit(-1).alias("__fold_b"),
-        F.lit(0).cast("long").alias(seq_col))]
-    for i, b in enumerate(batches):
-        parts.append(b.select(
-            *cols, F.lit(i).alias("__fold_b"), F.col(seq_col)))
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
-    order = F.struct(F.col("__fold_b"), F.col(seq_col))
+    u = base.select(
+        *cols, F.lit(-1).cast("long").alias(ordinal),
+        F.lit(0).cast("long").alias(seq_col)).unionByName(pending.select(
+            *cols, F.col(ordinal).cast("long"), F.col(seq_col).cast("long")))
+    order = F.struct(F.col(ordinal), F.col(seq_col))
     aggs: list[Column] = []
     for c in cols:
         if c in pk_cols:

@@ -1,0 +1,209 @@
+"""Pending sets read as one relation and folded once.
+
+Each store's pending set (hot batch dirs, the backfill queue, the
+dimension journal) is ONE parquet scan over its committed ``batch=<n>``
+dirs, with the batch ordinal taken from the dir number, and folds in ONE
+aggregation (``fold_upserts``). These tests pin the three properties
+that shape depends on: the dirs come from committed state, so an
+uncommitted sibling dir is never scanned; the ordinal cannot collide
+with a store column; and the Spark work of a flush, and the file count
+of every hot, queue and journal write, do not grow with the number of
+batches or the source's partitioning."""
+
+import os
+from datetime import datetime
+
+from pyspark.sql import Row
+
+from aresdb_spark.sources.hotcold import DimensionStore, HotColdStore
+
+CUTOFF = datetime(2024, 1, 15)
+
+
+def _jobs_for(spark, fn, tag):
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+
+def _parquet_files(d):
+    return [n for n in os.listdir(d) if n.endswith(".parquet")]
+
+
+def _rows(df, cols=("v",)):
+    return {r["id"]: tuple(r[c] for c in cols) for r in df.collect()}
+
+
+def test_uncommitted_batch_dirs_are_never_scanned(spark, tmp_path):
+    """An uncommitted ``hotbatch/batch=<n+1>`` dir (a writer died before
+    its commit) and an uncommitted ``backfill/batch=<k>`` dir between two
+    committed queue dirs sit beside the committed ones. ``read``,
+    ``flush_backfill`` and ``archive`` must equal the model without them:
+    the one-scan read takes its dirs from the committed state, never
+    from a listing. Add mode makes any scanned orphan row change a sum."""
+    store = HotColdStore(path=str(tmp_path / "t"), time_column="ts",
+                         primary_key=("id",), modes={"v": "add"})
+    store.init_from(spark.createDataFrame([
+        Row(id=1, ts=datetime(2024, 1, 2, 5), v=1.0),
+        Row(id=2, ts=datetime(2024, 1, 20, 5), v=2.0),
+        Row(id=3, ts=datetime(2024, 1, 16, 5), v=3.0),
+    ]), CUTOFF)
+    model = {1: 1.0, 2: 2.0, 3: 3.0}
+    schema = "id long, ts timestamp, v double, __seq long"
+
+    def orphan(d, rows):
+        spark.createDataFrame(rows, schema).write.parquet(d)
+
+    # committed: one hot batch and one queued cold batch
+    store.ingest(spark, spark.createDataFrame([
+        Row(id=2, ts=datetime(2024, 1, 20, 5), v=10.0),
+        Row(id=1, ts=datetime(2024, 1, 2, 5), v=10.0),
+    ]), CUTOFF, defer_backfill=True)
+    model[2] += 10.0
+    q0 = store._state()["backfill_batches"][-1]
+    # uncommitted queue dir at the next number, then a committed batch
+    # that numbers above it
+    orphan(os.path.join(store.backfill_path, f"batch={q0 + 1}"),
+           [(1, datetime(2024, 1, 2, 5), 1000.0, 0)])
+    store.ingest(spark, spark.createDataFrame([
+        Row(id=1, ts=datetime(2024, 1, 2, 5), v=100.0),
+    ]), CUTOFF, defer_backfill=True)
+    assert store._state()["backfill_batches"] == [q0, q0 + 2]
+    # uncommitted hot dir above the committed hot batches
+    hot_orphan = store._hot_batch_dir(store._state()["hot_seq"] + 1)
+    orphan(hot_orphan, [(2, datetime(2024, 1, 20, 5), 1000.0, 0),
+                        (9, datetime(2024, 1, 20, 5), 1000.0, 1)])
+
+    assert _rows(store.read(spark)) == {k: (v,) for k, v in model.items()}
+    assert store.flush_backfill(spark) == 2
+    model[1] += 110.0
+    assert _rows(store.read(spark)) == {k: (v,) for k, v in model.items()}
+    store.archive(spark, datetime(2024, 1, 18))
+    assert _rows(store.read(spark)) == {k: (v,) for k, v in model.items()}
+    assert _rows(store.read_cold(spark)) == {1: (111.0,), 3: (3.0,)}
+    assert os.path.isdir(hot_orphan)       # present, never scanned
+
+
+def test_store_column_named_batch_round_trips(spark, tmp_path):
+    """The ordinal comes from each file's path, not from partition
+    discovery, so a store column named ``batch`` keeps its own values
+    through ingest, read, a per-batch mode override (the iterative
+    replay over the one scan), flush and archive — and through a
+    dimension store's journal replay and snapshot."""
+    store = HotColdStore(path=str(tmp_path / "t"), time_column="ts",
+                         primary_key=("id",))
+    store.init_from(spark.createDataFrame([
+        Row(id=1, ts=datetime(2024, 1, 2, 5), batch=-1, v=1.0),
+        Row(id=2, ts=datetime(2024, 1, 20, 5), batch=-2, v=2.0),
+    ]), CUTOFF)
+    store.ingest(spark, spark.createDataFrame([
+        Row(id=2, ts=datetime(2024, 1, 20, 6), batch=70, v=20.0),
+        Row(id=1, ts=datetime(2024, 1, 2, 6), batch=71, v=10.0),
+        Row(id=5, ts=datetime(2024, 1, 21, 5), batch=72, v=50.0),
+    ]), CUTOFF, defer_backfill=True)
+    store.ingest(spark, spark.createDataFrame(
+        [(5, datetime(2024, 1, 21, 5), None, None)],
+        "id long, ts timestamp, batch long, v double"),
+        CUTOFF, modes={"batch": "force", "v": "force"})
+    want = {1: (-1, 1.0), 2: (70, 20.0), 5: (None, None)}
+    assert _rows(store.read(spark), ("batch", "v")) == want
+    assert store.flush_backfill(spark) == 1
+    want[1] = (71, 10.0)
+    assert _rows(store.read(spark), ("batch", "v")) == want
+    store.archive(spark, datetime(2024, 1, 21))
+    assert _rows(store.read(spark), ("batch", "v")) == want
+    assert _rows(store.read_cold(spark), ("batch",)) == {1: (71,),
+                                                         2: (70,)}
+
+    dim = DimensionStore(path=str(tmp_path / "d"), primary_key=("id",))
+    dim.init_from(spark.createDataFrame([Row(id=1, batch=7, name="a")]))
+    dim.journal_ingest(spark.createDataFrame(
+        [Row(id=1, batch=8, name="b"), Row(id=2, batch=9, name="c")]))
+    dim.journal_ingest(spark.createDataFrame(
+        [(2, 10, None)], "id long, batch long, name string"))
+    want_dim = {1: (8, "b"), 2: (10, "c")}
+    assert _rows(dim.read(spark), ("batch", "name")) == want_dim
+    assert dim.snapshot(spark) == 3
+    assert _rows(dim.read(spark), ("batch", "name")) == want_dim
+
+
+def test_flush_backfill_jobs_do_not_grow_with_queue_length(spark, tmp_path):
+    """The queue is one scan folded with the affected days in one
+    aggregation: a flush of 5 queued batches runs the same Spark jobs as
+    a flush of 1 holding the same rows (a per-batch merge chain adds
+    stages, hence jobs, per batch)."""
+    def flush_jobs(name, n_batches):
+        store = HotColdStore(path=str(tmp_path / name), time_column="ts",
+                             primary_key=("id",), modes={"v": "add"})
+        store.init_from(spark.createDataFrame(
+            [Row(id=i, ts=datetime(2024, 1, 1 + i % 10, 5), v=1.0)
+             for i in range(20)]), CUTOFF)
+        rows = [Row(id=i, ts=datetime(2024, 1, 1 + i % 10, 5), v=2.0)
+                for i in range(5)]
+        per = len(rows) // n_batches
+        for b in range(n_batches):
+            store.ingest(spark, spark.createDataFrame(
+                rows[b * per:(b + 1) * per]), CUTOFF, defer_backfill=True)
+        jobs = _jobs_for(spark, lambda: store.flush_backfill(spark), name)
+        got = _rows(store.read(spark))
+        assert got == {i: (3.0 if i < 5 else 1.0,) for i in range(20)}
+        return jobs
+
+    assert flush_jobs("one", 1) == flush_jobs("five", 5)
+
+
+def test_hot_rewrites_are_file_bounded(spark, tmp_path):
+    """``archive`` and ``compact_hot`` write the new ``hot_v<N>`` with at
+    most ``hot_batch_max_files`` parquet files, however many files the
+    old base and the fold's shuffle would otherwise produce."""
+    store = HotColdStore(path=str(tmp_path / "t"), time_column="ts",
+                         primary_key=("id",), hot_batch_max_files=3)
+    store.init_from(spark.createDataFrame(
+        [Row(id=i, ts=datetime(2024, 1, 16, i % 24), v=float(i))
+         for i in range(200)]).repartition(12), CUTOFF)
+    assert len(_parquet_files(store.hot_path)) > 3
+
+    def upsert(ids, v):
+        store.ingest(spark, spark.createDataFrame(
+            [Row(id=i, ts=datetime(2024, 1, 17, 1), v=v) for i in ids]),
+            CUTOFF)
+
+    upsert(range(0, 200, 7), -1.0)
+    assert store.compact_hot(spark) == 1
+    assert len(_parquet_files(store.hot_path)) <= 3
+    upsert(range(0, 200, 5), -2.0)
+    store.archive(spark, datetime(2024, 1, 16, 12))
+    assert len(_parquet_files(store.hot_path)) <= 3
+    got = _rows(store.read(spark))
+    assert len(got) == 200
+    assert got[35] == (-2.0,) and got[7] == (-1.0,) and got[1] == (1.0,)
+
+
+def test_queue_and_journal_writes_are_file_bounded(spark, tmp_path):
+    """A many-partition source lands at most ``hot_batch_max_files``
+    files per backfill queue dir, and at most the field's default per
+    dimension journal dir."""
+    store = HotColdStore(path=str(tmp_path / "t"), time_column="ts",
+                         primary_key=("id",), hot_batch_max_files=2)
+    store.init_from(spark.createDataFrame(
+        [Row(id=0, ts=datetime(2024, 1, 2), v=0.0)]), CUTOFF)
+    store.ingest(spark, spark.createDataFrame(
+        [Row(id=i, ts=datetime(2024, 1, 2, i % 24), v=1.0)
+         for i in range(64)]).repartition(16), CUTOFF, defer_backfill=True)
+    (name,) = store.queued_backfill_batches()
+    assert len(_parquet_files(os.path.join(store.backfill_path, name))) <= 2
+    assert store.flush_backfill(spark) == 1
+    assert len(_rows(store.read(spark))) == 64
+
+    dim = DimensionStore(path=str(tmp_path / "d"), primary_key=("id",))
+    dim.init_from(spark.createDataFrame([Row(id=0, name="a")]))
+    dim.journal_ingest(spark.createDataFrame(
+        [Row(id=i, name=str(i)) for i in range(64)]).repartition(16))
+    (jname,) = dim._journal_batches()
+    assert len(_parquet_files(os.path.join(dim.journal_path, jname))) \
+        <= HotColdStore.hot_batch_max_files
+    assert len(_rows(dim.read(spark), ("name",))) == 64

@@ -113,13 +113,18 @@ def test_pk_only_table_collapses_to_distinct(spark):
     mode_x=st.sampled_from(MODES),
     mode_y=st.sampled_from(MODES),
 )
-def test_fold_upserts_equals_chained_merges(spark, base, batches,
-                                            mode_x, mode_y):
-    """The append-only hot store's read-side resolution (fold_upserts:
-    ONE aggregation over base + all pending batches) must equal the
-    eager chain of per-batch merges — i.e. every update mode's merge is
-    associative over (batch, seq) arrival order. This is the invariant
-    that lets ingest be O(batch) while reads stay exact."""
+def test_fold_upserts_equals_chained_merges(spark, tmp_path_factory, base,
+                                            batches, mode_x, mode_y):
+    """The append-only stores' read-side resolution (fold_upserts: ONE
+    aggregation over base + the pending batches read as ONE relation)
+    must equal the eager chain of per-batch merges — i.e. every update
+    mode's merge is associative over (batch, seq) arrival order. This
+    is the invariant that lets ingest be O(batch) while reads stay
+    exact. Each batch is written as a multi-file ``batch=<n>`` dir and
+    read back by the stores' one-scan reader, so read-back row order
+    differs from write order; only the dir number and the persisted
+    ``__seq`` may order the fold."""
+    from aresdb_spark.sources.hotcold import _ORD, _read_batches
     from aresdb_spark.streaming.upsert import fold_upserts
 
     modes = {"x": mode_x, "y": mode_y}
@@ -127,16 +132,25 @@ def test_fold_upserts_equals_chained_merges(spark, base, batches,
                                     "pk int, x int, y int")
     if not base:
         base_df = base_df.filter("pk < 0")
-    batch_dfs = []
-    for b in batches:
-        batch_dfs.append(spark.createDataFrame(
+    root = tmp_path_factory.mktemp("fold")
+    batch_dfs, dirs = [], []
+    for n, b in enumerate(batches):
+        bdf = spark.createDataFrame(
             [(pk, x, y, i) for i, (pk, x, y) in enumerate(b)],
-            "pk int, x int, y int, __seq long"))
+            "pk int, x int, y int, __seq long")
+        batch_dfs.append(bdf)
+        # numbered with gaps, like a queue whose consumed or orphaned
+        # numbers are skipped, and so that the dir names sort wrongly
+        # as strings
+        d = str(root / f"batch={(9, 10, 100, 1000)[n]}")
+        bdf.repartition(len(b), "__seq").write.parquet(d)
+        dirs.append(d)
     chained = base_df
     for bdf in batch_dfs:
         chained = apply_upsert_batch(chained, bdf, ["pk"], modes,
                                      seq_col="__seq")
-    folded = fold_upserts(base_df, batch_dfs, ["pk"], modes)
+    pending = _read_batches(spark, base_df.schema, dirs)
+    folded = fold_upserts(base_df, pending, _ORD, ["pk"], modes)
     got = {r["pk"]: (r["x"], r["y"]) for r in folded.collect()}
     want = {r["pk"]: (r["x"], r["y"]) for r in chained.collect()}
     assert got == want
