@@ -2053,10 +2053,11 @@ def _operator_queries() -> dict[str, tuple[Callable, str | None]]:
     out["dedup_video_fp"] = (q_video_dedup, video_dedup_sql())
 
     # --- cross-modality media dedup (r13): ONE entry point for a
-    # mixed corpus — media_near_duplicates routes by the kind column
-    # to the modality-appropriate fingerprint and unions the three
-    # banded joins (pairs form only WITHIN a modality; no new shuffle
-    # class). The graded corpus interleaves all three synthetic
+    # mixed corpus — media_near_duplicates hashes every row in one
+    # decode pass that dispatches on the kind column to the
+    # modality-appropriate fingerprint, then runs one banded join keyed
+    # on (kind, band, key) (pairs form only WITHIN a modality; no new
+    # shuffle class). The graded corpus interleaves all three synthetic
     # near-dup corpora over the same id range, so the row proves the
     # routing isolates modalities AND each pipeline still reproduces
     # its own brute-force oracle.
@@ -3765,8 +3766,9 @@ _DRIVER_WINDOW = [
     # r14 rotation (VERDICT r13 directive 5): dedup_media_mixed — the
     # cross-modality media-dedup router (r13's integration point:
     # media_near_duplicates routes an interleaved image+audio+video
-    # corpus by magic to the right fingerprint and unions the three
-    # banded joins) had no driver-graded row. Superset-swap within the
+    # corpus by kind to the right fingerprint in one decode pass and
+    # pairs it in one banded join keyed on kind) had no row in the
+    # graded window. Superset-swap within the
     # media near-dup family (the jpeg_420-for-jpeg_stats pattern): it
     # displaces dedup_image_phash, whose DCT-pHash + banded-LSH image
     # pipeline IS the mixed row's image leg (same fingerprint, same

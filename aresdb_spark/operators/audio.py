@@ -1447,45 +1447,21 @@ def decode_audio(payload: bytes) -> "tuple[np.ndarray, int]":
 
 def fingerprint_media(df):
     """media table → (media_id, afp bigint): decode any supported
-    audio container by magic and fingerprint. Arrow-batched
-    mapInPandas, column-pruned to id+payload; 64 bits ride a plain
-    LongType (two's complement for bit 63) — same wire convention as
-    ``phash_media``."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("afp", T.LongType(), False),
-    ])
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                samples, _ = decode_audio(bytes(payload))
-                h = audio_fingerprint(samples)
-                rows.append((int(mid),
-                             h - (1 << 64) if h >= (1 << 63) else h))
-            yield pd.DataFrame(rows, columns=["media_id", "afp"])
-
-    return df.select("media_id", "payload").mapInPandas(
-        process, schema=out_schema)
+    audio container by magic and fingerprint it
+    (``multimodal.media_hashes`` over the audio kind)."""
+    from aresdb_spark.operators.multimodal import _kind_hashes
+    return _kind_hashes(df, "audio", "afp")
 
 
 def audio_near_duplicates(df, max_hamming: int = 7, bands: int = 8):
     """Audio near-duplicate pairs: fingerprint once per clip (the only
-    Python step, localCheckpointed so the self-join reads materialized
-    rows on both sides), then the shared banded-LSH Hamming join
-    (``multimodal.banded_hamming_pairs`` — one (band, key) shuffle,
-    JVM-side verify, ``max_hamming < bands`` pigeonhole recall
-    guarantee). Returns (id_a, id_b, hamming), id_a < id_b."""
-    from aresdb_spark.operators.multimodal import banded_hamming_pairs
-    hashes = fingerprint_media(df).localCheckpoint(eager=True)
-    return banded_hamming_pairs(hashes, "afp",
-                                max_hamming=max_hamming, bands=bands)
+    Python step), then the shared banded-LSH Hamming join
+    (``multimodal.banded_hamming_pairs`` — hashes materialized once,
+    one (band, key) shuffle, JVM-side verify, ``max_hamming < bands``
+    pigeonhole recall guarantee). Returns (id_a, id_b, hamming),
+    id_a < id_b."""
+    from aresdb_spark.operators.multimodal import _kind_near_duplicates
+    return _kind_near_duplicates(df, "audio", max_hamming, bands)
 
 
 def _fp_frame_amplitudes(seed: int) -> np.ndarray:

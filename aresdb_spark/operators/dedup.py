@@ -24,8 +24,6 @@ from __future__ import annotations
 
 import os
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -146,16 +144,26 @@ def hashed_shingles_sql(col: str, n: int = SHINGLE_SIZE) -> str:
     return f"list_transform({shingles_oracle_sql(col, n)}, s -> {_hash28_sql('s')})"
 
 
+# The permutations as one literal array of (a, b) structs, so a signature
+# is one transform over it rather than one Python-built lambda per hash.
+_PERMUTATIONS_SQL = "array(" + ", ".join(
+    f"named_struct('a', {a}, 'b', {b})"
+    for a, b in zip(MINHASH_A, MINHASH_B)) + ")"
+
+
 def minhash_signature(text: Column, n_hashes: int = N_HASHES) -> Column:
     """Array of n_hashes MinHash values. Scan-side, shuffle-free.
 
     The hashed-shingle array is let-bound: tokenize/shingle/md5 run ONCE
-    per row, then each permutation is a cheap transform over the ~dozens
-    of 28-bit hashes."""
-    return _let(hashed_shingles(text), lambda hs: F.array(*[
-        F.array_min(F.transform(
-            hs, lambda h: (F.lit(MINHASH_A[j]) * h + F.lit(MINHASH_B[j])) % F.lit(P)))
-        for j in range(n_hashes)]))
+    per row. The signature is then ONE transform over the literal
+    (A_j, B_j) array, each element the min of
+    ``transform(hs, h -> (a*h + b) % P)`` over the ~dozens of 28-bit
+    hashes — so building the expression costs a fixed number of
+    Py4J round trips, whatever ``n_hashes`` is."""
+    perms = F.slice(F.expr(_PERMUTATIONS_SQL), 1, n_hashes)
+    return _let(hashed_shingles(text), lambda hs: F.transform(
+        perms, lambda p: F.array_min(F.transform(
+            hs, lambda h: (p["a"] * h + p["b"]) % F.lit(P)))))
 
 
 def minhash_signature_sql(col: str, n_hashes: int = N_HASHES) -> str:
@@ -172,13 +180,24 @@ def minhash_signature_sql(col: str, n_hashes: int = N_HASHES) -> str:
 # ---------------------------------------------------------------------------
 
 
-def _band_hash(sig: Column, b: int, rows_per_band: int) -> Column:
+def _band_hash(sig: Column, b, rows_per_band: int) -> Column:
     """Band hash: md5 over the band's slice of the signature — THE
     persisted-store format; both the in-corpus LSH and the incremental
-    store derive buckets from this one definition."""
+    store derive buckets from this one definition. ``b`` is the band
+    number, a Python int or an int Column (a lambda variable over the
+    band sequence)."""
     piece = F.slice(sig, b * rows_per_band + 1, rows_per_band)
     return F.md5(F.array_join(
         F.transform(piece, lambda x: x.cast("string")), "-"))
+
+
+def _bands(n_bands: int, band_value) -> Column:
+    """One transform over ``sequence(0, n_bands - 1)``: the array of
+    (band, <value>) structs that the band explode unnests, built with
+    one lambda whatever ``n_bands`` is. ``band_value`` maps the band
+    Column to the value Column, whose alias names the struct field."""
+    return F.transform(F.sequence(F.lit(0), F.lit(n_bands - 1)),
+                       lambda b: F.struct(b.alias("band"), band_value(b)))
 
 
 def _band_selects_sql(src: str, n_bands: int, rows_per_band: int,
@@ -230,12 +249,9 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
     # in-corpus exchange narrows.
     bands = base.select(
         "id",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"),
-                     F.unhex(_band_hash(F.col("sig"), b,
-                                        rows_per_band)).alias("bh"))
-            for b in range(n_bands)
-        ])).alias("bb"),
+        F.explode(_bands(n_bands, lambda b: F.unhex(
+            _band_hash(F.col("sig"), b, rows_per_band)).alias("bh")))
+        .alias("bb"),
     ).select("id", "bb.band", "bb.bh")
 
     buckets = (bands.groupBy("band", "bh")
@@ -261,50 +277,13 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
             .select("p.id_a", "p.id_b").distinct())
 
 
-def _jaccard_batched_udf():
-    """Arrow-batched exact-Jaccard scorer (r15): |A∩B| and |A|+|B|-|A∩B|
-    via Python sets per candidate pair. EXACTLY equal to the expression
-    form — the shingle arrays are distinct by construction, so both
-    paths compute the same two integer cardinalities, and Python's
-    float division of those ints is the same IEEE double as Spark's
-    double/double. Unlike the cosine kernels there is no rounding
-    anywhere, so no margin logic is needed.
-
-    MEASURED AND REJECTED as the default (kept for the equality test
-    and as the documented experiment): at the x100 tier the per-pair
-    cost is ~33 µs vs the array_intersect expression's ~20 — building
-    two Python sets hashes ~200 shingle strings per pair in CPython,
-    which loses to the JVM's UTF8String hashing even counting the
-    interpreted-HOF overhead; at the graded tier the two are a wash
-    (1.3-1.6 s, fixed costs dominate). The pandas-UDF win pattern
-    (q15's quantizer/pair kernels) needs numpy-vectorizable per-row
-    work; per-row Python OBJECT work is not it. PERF_NOTES r15."""
-    @F.pandas_udf("double")
-    def jac(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = np.empty(len(a), dtype=np.float64)
-        for i in range(len(a)):
-            sa, sb = set(a.iat[i]), set(b.iat[i])
-            inter = len(sa & sb)
-            denom = len(sa) + len(sb) - inter
-            out[i] = float(inter) / float(denom) if denom else float("nan")
-        return pd.Series(out)
-
-    return jac
-
-
 def ngram_jaccard(df_pairs: DataFrame, docs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id", n: int = SHINGLE_SIZE,
-                  scorer: str = "expr") -> DataFrame:
+                  id_col: str = "doc_id", n: int = SHINGLE_SIZE) -> DataFrame:
     """Exact n-gram Jaccard for candidate pairs (verification stage).
 
     Joins the (small) candidate set back to the docs — at scale the pair
     set is ≪ corpus, so these are cheap shuffles; shingle sets are
-    recomputed scan-side rather than shuffled with the signatures.
-
-    ``scorer="expr"`` (default) is the pure Column form; the Arrow
-    ``"batched"`` alternative was measured SLOWER at scale (33 vs 20
-    µs/candidate at x100 — see _jaccard_batched_udf) and is kept as
-    the documented rejection (bit-identical values either way)."""
+    recomputed scan-side rather than shuffled with the signatures."""
     sh = _parallelize(docs.select(F.col(id_col).alias("id"), F.col(text_col))) \
         .select("id", shingles(F.col(text_col), n).alias("sh"))
     # |A∪B| = |A|+|B|-|A∩B| for the (distinct) shingle arrays — the
@@ -313,14 +292,9 @@ def ngram_jaccard(df_pairs: DataFrame, docs: DataFrame, text_col: str = "text",
     # array_union allocated ~|A|+|B| strings per candidate). Integer
     # cardinalities are unchanged, so every jaccard double — and the
     # DuckDB oracle match — is bit-identical.
-    if scorer == "batched":
-        score = _jaccard_batched_udf()(F.col("sh_a"), F.col("sh_b"))
-    elif scorer == "expr":
-        score = _let(F.size(F.array_intersect("sh_a", "sh_b")),
-                     lambda i: i.cast("double")
-                     / (F.size("sh_a") + F.size("sh_b") - i).cast("double"))
-    else:
-        raise ValueError(f"scorer must be batched|expr: {scorer!r}")
+    score = _let(F.size(F.array_intersect("sh_a", "sh_b")),
+                 lambda i: i.cast("double")
+                 / (F.size("sh_a") + F.size("sh_b") - i).cast("double"))
     out = (
         df_pairs
         .join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
@@ -464,10 +438,8 @@ def signature_bands(df: DataFrame, text_col: str = "text",
 
     return (base.select(
         "id", "sig",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"),
-                     _band_hash(F.col("sig"), b, rows_per_band).alias("bh"))
-            for b in range(n_bands)])).alias("bb"))
+        F.explode(_bands(n_bands, lambda b: _band_hash(
+            F.col("sig"), b, rows_per_band).alias("bh"))).alias("bb"))
         .select("id", "sig", "bb.band", "bb.bh",
                 F.substring("bb.bh", 1, 1).alias("bhp")))
 

@@ -34,7 +34,7 @@ from typing import Callable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -1310,27 +1310,80 @@ def dct_phash(pixels: np.ndarray) -> int:
     return bits
 
 
-def phash_media(df: DataFrame) -> DataFrame:
-    """media table → (media_id, phash bigint): decode any supported
-    container by magic bytes and hash. Arrow-batched mapInPandas,
-    column-pruned to id+payload; the hash is 64 bits so it rides a
+def _media_hashers() -> "dict[str, Callable[[bytes], int]]":
+    """kind → the 64-bit hash of one payload, decoded by its magic
+    bytes: image → DCT pHash of the pixels, audio → energy-delta
+    fingerprint of the samples, video → weighted-temporal-mean pHash of
+    every frame (at corpus scale, swap ``decode_video_frames`` for
+    ``sample_video_frames`` to bound the per-clip decode cost; the
+    fingerprint contract is unchanged)."""
+    from aresdb_spark.operators.audio import audio_fingerprint, decode_audio
+    from aresdb_spark.operators.video import (decode_video_frames,
+                                              video_fingerprint)
+
+    return {
+        "image": lambda b: dct_phash(decode_image(b)),
+        "audio": lambda b: audio_fingerprint(decode_audio(b)[0]),
+        "video": lambda b: video_fingerprint(decode_video_frames(b)),
+    }
+
+
+def media_hashes(df: DataFrame) -> DataFrame:
+    """media table (media_id, kind, payload) → (kind, media_id, h
+    bigint): the ONE decode loop of every media dedup path. One
+    Arrow-batched mapInPandas, column-pruned to kind+id+payload, hashes
+    each row with its kind's hasher (``_media_hashers``); a kind with
+    no hasher gets a NULL ``h``. The hash is 64 bits, so it rides a
     plain LongType (two's complement for bit 63)."""
     out_schema = T.StructType([
+        T.StructField("kind", T.StringType()),
         T.StructField("media_id", T.LongType(), False),
-        T.StructField("phash", T.LongType(), False),
+        T.StructField("h", T.LongType()),
     ])
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        hashers = _media_hashers()
         for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                h = dct_phash(decode_image(bytes(payload)))
-                rows.append((int(mid), h - (1 << 64) if h >= (1 << 63)
-                             else h))
-            yield pd.DataFrame(rows, columns=["media_id", "phash"])
+            hs = []
+            for kind, payload in zip(pdf["kind"], pdf["payload"]):
+                fn = hashers.get(kind)
+                h = None if fn is None else fn(bytes(payload))
+                hs.append(h - (1 << 64) if h is not None and h >= (1 << 63)
+                          else h)
+            yield pd.DataFrame({"kind": pdf["kind"],
+                                "media_id": pdf["media_id"].astype("int64"),
+                                "h": pd.array(hs, dtype="Int64")})
 
-    return df.select("media_id", "payload").mapInPandas(
+    return df.select("kind", "media_id", "payload").mapInPandas(
         process, schema=out_schema)
+
+
+def _as_kind(df: DataFrame, kind: str) -> DataFrame:
+    """A one-modality (media_id, payload) table as a media table."""
+    return df.select("media_id", F.lit(kind).alias("kind"), "payload")
+
+
+def _kind_hashes(df: DataFrame, kind: str, hash_col: str) -> DataFrame:
+    """(media_id, payload) of one modality → (media_id, <hash_col>
+    bigint) through ``media_hashes``."""
+    return media_hashes(_as_kind(df, kind)).select(
+        "media_id", F.col("h").alias(hash_col))
+
+
+def _kind_near_duplicates(df: DataFrame, kind: str, max_hamming: int = 7,
+                          bands: int = 8) -> DataFrame:
+    """(media_id, payload) of one modality → (id_a, id_b, hamming)
+    through ``media_hashes`` and ``banded_hamming_pairs``."""
+    return banded_hamming_pairs(media_hashes(_as_kind(df, kind)),
+                                max_hamming=max_hamming, bands=bands) \
+        .select("id_a", "id_b", "hamming")
+
+
+def phash_media(df: DataFrame) -> DataFrame:
+    """media table → (media_id, phash bigint): decode any supported
+    image container by magic bytes and DCT-pHash it (``media_hashes``
+    over the image kind)."""
+    return _kind_hashes(df, "image", "phash")
 
 
 def image_near_duplicates(df: DataFrame, max_hamming: int = 7,
@@ -1353,30 +1406,24 @@ def image_near_duplicates(df: DataFrame, max_hamming: int = 7,
     DROPPED pairs with 4-10 flips spread across all four bands. The
     constraint is enforced: callers wanting a probabilistic-recall
     regime must lower max_hamming or raise bands explicitly."""
-    # localCheckpoint truncates lineage so the self-join reads the
-    # MATERIALIZED (media_id, phash) rows on both sides — without it the
-    # plan re-runs the decode+hash mapInPandas once per side, doubling
-    # the dominant cost at corpus scale (same pattern as the MinHash
-    # pipeline's candidate checkpoint in operators/dedup.py)
-    hashes = phash_media(df).localCheckpoint(eager=True)
-    return banded_hamming_pairs(hashes, "phash",
-                                max_hamming=max_hamming, bands=bands)
+    return _kind_near_duplicates(df, "image", max_hamming, bands)
 
 
-def banded_hamming_pairs(hashes: DataFrame, hash_col: str,
+def banded_hamming_pairs(hashes: DataFrame, hash_col: str = "h",
                          max_hamming: int = 7,
                          bands: int = 8) -> DataFrame:
-    """Generic banded-LSH join over a 64-bit signature column (r13 —
-    shared by the image pHash and audio fingerprint near-dup paths):
-    split each hash into ``bands`` contiguous slices, shuffle ONCE on
-    (band, slice-key) so only bucket collisions form candidate pairs,
-    verify JVM-side with ``bit_count(xor)``. Input: (media_id,
-    <hash_col> bigint), already materialized by the caller (a
-    localCheckpoint before the self-join, or the pipeline re-runs the
-    hashing stage once per side). Returns (id_a, id_b, hamming),
-    id_a < id_b, distinct. The ``max_hamming < bands`` pigeonhole
-    recall guarantee is enforced exactly as in
-    ``image_near_duplicates``."""
+    """The one banded-LSH Hamming join of every media dedup path.
+    Input: (kind, media_id, <hash_col> bigint), e.g. ``media_hashes``.
+    It is materialized here ONCE (eager localCheckpoint), so the
+    self-join reads the stored rows on both sides instead of re-running
+    the hashing stage per side. Each hash splits into ``bands``
+    contiguous slices (one transform over the band sequence); ONE
+    shuffle on (kind, band, slice-key) forms candidates from bucket
+    collisions only, and only within a kind; ``bit_count(xor)``
+    verifies them JVM-side. A NULL hash never pairs. Returns (kind,
+    id_a, id_b, hamming), id_a < id_b, distinct. The ``max_hamming <
+    bands`` pigeonhole recall guarantee (see ``image_near_duplicates``)
+    is enforced before anything runs."""
     if 64 % bands:
         raise ValueError("bands must divide 64")
     if max_hamming >= bands:
@@ -1385,29 +1432,24 @@ def banded_hamming_pairs(hashes: DataFrame, hash_col: str,
             f"pigeonhole recall guarantee (a pair can dirty every "
             f"band); raise bands or lower max_hamming")
     width = 64 // bands
-    slices = F.array(*[
-        F.struct(F.lit(b).alias("band"),
-                 F.shiftrightunsigned(hash_col, b * width)
-                 .bitwiseAND(F.lit((1 << width) - 1)).alias("key"))
-        for b in range(bands)])
-    exploded = (hashes
-                .select("media_id", hash_col, F.explode(slices).alias("s"))
-                .select("media_id", hash_col,
-                        F.col("s.band").alias("band"),
-                        F.col("s.key").alias("key")))
+    slices = (f"inline(transform(sequence(0, {bands - 1}), b -> "
+              f"named_struct('band', b, 'key', shiftrightunsigned("
+              f"`{hash_col}`, b * {width}) & {(1 << width) - 1})))")
+    exploded = hashes.localCheckpoint(eager=True).selectExpr(
+        "kind", "media_id", f"`{hash_col}` AS h", slices)
     a = exploded.alias("a")
     b = exploded.alias("b")
-    cand = (a.join(b, [F.col("a.band") == F.col("b.band"),
+    return (a.join(b, [F.col("a.kind") == F.col("b.kind"),
+                       F.col("a.band") == F.col("b.band"),
                        F.col("a.key") == F.col("b.key"),
                        F.col("a.media_id") < F.col("b.media_id")])
-            .select(F.col("a.media_id").alias("id_a"),
+            .select(F.col("a.kind").alias("kind"),
+                    F.col("a.media_id").alias("id_a"),
                     F.col("b.media_id").alias("id_b"),
-                    F.bit_count(F.col(f"a.{hash_col}")
-                                .bitwiseXOR(F.col(f"b.{hash_col}")))
+                    F.bit_count(F.col("a.h").bitwiseXOR(F.col("b.h")))
                     .alias("hamming"))
             .where(F.col("hamming") <= max_hamming)
             .distinct())
-    return cand
 
 
 def _blocky_pattern(seed: int) -> np.ndarray:
@@ -1533,45 +1575,28 @@ def image_near_dup_oracle_pairs(n_ids: int,
 
 def media_near_duplicates(df: DataFrame, max_hamming: int = 7,
                           bands: int = 8) -> DataFrame:
-    """Cross-modality near-duplicate pairs (r13): route a mixed media
-    table by its ``kind`` column to the modality-appropriate
-    fingerprint — image → DCT pHash, audio → energy-delta, video →
-    weighted-temporal-mean pHash — and union the three banded-LSH
-    joins. Pairs are only formed WITHIN a modality (an image never
-    collides with an audio clip: each modality hashes and joins
-    independently, and the result carries the ``kind``). One decode
-    pass per payload, three independent one-shuffle joins — the
-    composition adds no new shuffle class."""
-    from aresdb_spark.operators.audio import audio_near_duplicates
-    from aresdb_spark.operators.video import video_near_duplicates
-
-    kinds = [r["kind"] for r in df.select("kind").distinct().collect()]
-    unknown = set(kinds) - {"image", "audio", "video"}
+    """Cross-modality near-duplicate pairs of a mixed media table
+    (media_id, kind, payload): ONE decode pass hashes every row with
+    its kind's fingerprint (``media_hashes``: image → DCT pHash, audio
+    → energy-delta, video → weighted-temporal-mean pHash) and ONE
+    banded join keyed on (kind, band, key) pairs the hashes
+    (``banded_hamming_pairs``), so pairs form only WITHIN a modality
+    (an image never collides with an audio clip) and the result
+    carries the ``kind``: (kind, id_a, id_b, hamming). The kinds
+    present are observed on the hashing pass itself as it is
+    materialized — no separate scan of the payload table. Raises
+    ValueError on a kind with no fingerprint or on an empty table."""
+    seen = Observation()
+    # a struct per row, so a NULL kind is collected (and reported)
+    pairs = banded_hamming_pairs(
+        media_hashes(df).observe(
+            seen, F.collect_set(F.struct("kind")).alias("kinds")),
+        max_hamming=max_hamming, bands=bands)
+    kinds = {r["kind"] for r in seen.get["kinds"]}
+    unknown = kinds - _media_hashers().keys()
     if unknown:
         raise ValueError(f"unknown media kinds {sorted(unknown)} "
                          f"(image/audio/video only)")
-    parts = []
-    if "image" in kinds:
-        parts.append(image_near_duplicates(
-            df.filter(F.col("kind") == "image"),
-            max_hamming=max_hamming, bands=bands)
-            .select(F.lit("image").alias("kind"), "id_a", "id_b",
-                    "hamming"))
-    if "audio" in kinds:
-        parts.append(audio_near_duplicates(
-            df.filter(F.col("kind") == "audio"),
-            max_hamming=max_hamming, bands=bands)
-            .select(F.lit("audio").alias("kind"), "id_a", "id_b",
-                    "hamming"))
-    if "video" in kinds:
-        parts.append(video_near_duplicates(
-            df.filter(F.col("kind") == "video"),
-            max_hamming=max_hamming, bands=bands)
-            .select(F.lit("video").alias("kind"), "id_a", "id_b",
-                    "hamming"))
-    if not parts:
+    if not kinds:
         raise ValueError("empty media table: no kinds to route")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return pairs

@@ -21,12 +21,46 @@ def let(bound: Column, body) -> Column:
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Repartition only when the scan has fewer partitions than the
-    cluster has slots (e.g. one small local parquet file → 1 task on 32
-    cores). At scale a 100 TB scan already has ≫ cores partitions, so
-    this is a no-op — no extra shuffle is introduced."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    """Repartition only when the input would run on fewer partitions
+    than the cluster has slots (e.g. one small local parquet file → 1
+    task on 32 cores). At scale a 100 TB scan already has ≫ cores
+    partitions, so this is a no-op — no extra shuffle is introduced.
+
+    Decided from the physical plan, without running it: counting through
+    ``df.rdd`` executes an adaptive plan's broadcast and shuffle stages
+    (two Spark jobs on a broadcast semi-join) only to read a number. A
+    plan with a shuffle keeps its partitions; otherwise the count is the
+    scans' JVM-side RDD partitions (see ``_planned_partitions``)."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    n = _planned_partitions(df._jdf.queryExecution().executedPlan())
+    if n is not None and n < target:
         return df.repartition(target)
     return df
+
+
+def _planned_partitions(plan) -> "int | None":
+    """Output partitions of a physical plan (a py4j ``SparkPlan``), or
+    None when a shuffle sets them. Without a shuffle they come from the
+    leaves: summed over a union, and a broadcast build side contributes
+    none (a broadcast join keeps its streamed side's partitions). An
+    adaptive plan is read in its initial form, a cached one through its
+    cached plan. A leaf's RDD is built but not run."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _planned_partitions(plan.executedPlan())
+    if name == "InMemoryTableScanExec":
+        return _planned_partitions(plan.relation().cachedPlan())
+    if name == "ReusedExchangeExec":
+        return _planned_partitions(plan.child())
+    if name.startswith("Broadcast") and name.endswith(
+            ("ExchangeExec", "QueryStageExec")):
+        return 0
+    if name.endswith(("ExchangeExec", "QueryStageExec")):
+        return None
+    kids = plan.children()
+    if kids.isEmpty():
+        return plan.execute().getNumPartitions()
+    counts = [_planned_partitions(kids.apply(i)) for i in range(kids.size())]
+    if None in counts:
+        return None
+    return sum(counts) if name == "UnionExec" else max(counts)

@@ -866,43 +866,20 @@ def video_fingerprint(frames: "list") -> int:
 
 def video_fp_media(df):
     """media table → (media_id, vfp bigint): decode every frame of
-    each MP4/AVI payload and clip-fingerprint. Arrow-batched
-    mapInPandas, column-pruned to id+payload (at corpus scale, swap
-    ``decode_video_frames`` for ``sample_video_frames`` to bound the
-    per-clip decode cost; the fingerprint contract is unchanged)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("vfp", T.LongType(), False),
-    ])
-
-    def process(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                h = video_fingerprint(decode_video_frames(bytes(payload)))
-                rows.append((int(mid),
-                             h - (1 << 64) if h >= (1 << 63) else h))
-            yield pd.DataFrame(rows, columns=["media_id", "vfp"])
-
-    return df.select("media_id", "payload").mapInPandas(
-        process, schema=out_schema)
+    each MP4/AVI payload and clip-fingerprint it
+    (``multimodal.media_hashes`` over the video kind)."""
+    from aresdb_spark.operators.multimodal import _kind_hashes
+    return _kind_hashes(df, "video", "vfp")
 
 
 def video_near_duplicates(df, max_hamming: int = 7, bands: int = 8):
-    """Video near-duplicate pairs: fingerprint once per clip
-    (localCheckpointed — the decode is the dominant cost), then the
-    shared banded-LSH Hamming join (one (band, key) shuffle, JVM
-    bit_count(xor) verify, pigeonhole recall at bands > max_hamming).
-    Returns (id_a, id_b, hamming), id_a < id_b."""
-    from aresdb_spark.operators.multimodal import banded_hamming_pairs
-    hashes = video_fp_media(df).localCheckpoint(eager=True)
-    return banded_hamming_pairs(hashes, "vfp",
-                                max_hamming=max_hamming, bands=bands)
+    """Video near-duplicate pairs: fingerprint once per clip (the
+    decode is the dominant cost, so the hashes are materialized once),
+    then the shared banded-LSH Hamming join (one (band, key) shuffle,
+    JVM bit_count(xor) verify, pigeonhole recall at bands >
+    max_hamming). Returns (id_a, id_b, hamming), id_a < id_b."""
+    from aresdb_spark.operators.multimodal import _kind_near_duplicates
+    return _kind_near_duplicates(df, "video", max_hamming, bands)
 
 
 N_CLIP_FRAMES = 5

@@ -45,6 +45,23 @@ def duck():
     con.close()
 
 
+def count_jobs(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` submits, counted through a job group
+    of its own: the status tracker lists the group's jobs once the
+    listener bus has delivered every event posted so far."""
+    import uuid
+
+    sc = spark.sparkContext
+    tag = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(tag, tag)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+
 def load_events(spark, sf_dir=SF_DIR):
     """events with a proper timestamp ``ts``, across Spark versions.
 

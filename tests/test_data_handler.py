@@ -5,7 +5,7 @@ import os
 from datetime import datetime
 
 import pytest
-from conftest import REFERENCE_ROOT
+from conftest import REFERENCE_ROOT, count_jobs
 
 from aresdb_spark.metastore import SchemaStore
 from aresdb_spark.sources.hotcold import HotColdStore
@@ -283,21 +283,11 @@ def test_post_data_late_rows_take_the_cheap_paths(spark, tmp_path):
     h = make_handler(spark, tmp_path)
     store = h.stores["trips"]
     t_late = int(datetime(2023, 12, 20).timestamp())   # before CUTOFF
-    sc = spark.sparkContext
-
-    def jobs_for(fn, tag):
-        sc.setJobGroup(tag, tag)
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(tag))
-
     counts = []
     for k in range(4):
         body = batch([(T0, 100 + k, 0, 1.0), (t_late, 200 + k, 1, 2.0)])
-        counts.append(jobs_for(
-            lambda b=body: h.post_data("trips", 0, b), f"post{k}"))
+        counts.append(count_jobs(
+            spark, lambda b=body: h.post_data("trips", 0, b)))
     # hot append (1 observed write) + queue append (1 write) — flat in
     # the number of already-queued batches
     assert counts == [2] * 4, counts

@@ -8,6 +8,7 @@ from datetime import datetime
 from pyspark.sql import Row
 
 from aresdb_spark.streaming.debug_handler import DebugDaemon
+from tests.conftest import count_jobs
 
 
 def _stores(spark, tmp_path):
@@ -101,18 +102,15 @@ def test_show_shard_meta_schedules_no_spark_jobs(spark, tmp_path):
     work. Asserted through the job-group tracker — any Spark action the
     endpoint ran would register a job under the group."""
     d = DebugDaemon(spark, _stores(spark, tmp_path))
-    sc = spark.sparkContext
-    sc.setJobGroup("shard-meta-probe", "metadata-only assert")
-    try:
+
+    def probe():
         status, meta = d.show_shard_meta("events")
         assert status == 200
         assert meta["hot_rows"] == 1            # footer count == row count
         status, dmeta = d.show_shard_meta("cities")
         assert status == 200 and dmeta["num_mutations"] == 0
-        assert list(sc.statusTracker().getJobIdsForGroup(
-            "shard-meta-probe")) == []
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+
+    assert count_jobs(spark, probe) == 0
     # footer counts track mutations like the scan did: archive empties hot
     d.trigger("archive", "events", cutoff=datetime(2024, 1, 22))
     _, meta = d.show_shard_meta("events")

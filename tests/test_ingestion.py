@@ -5,7 +5,7 @@ from datetime import datetime, timedelta
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, count_jobs
 
 
 def _base_rows():
@@ -484,23 +484,13 @@ def test_ingest_hot_is_o_batch_append_only(spark, tmp_path):
         return sorted((e.name, e.stat().st_mtime_ns, e.stat().st_size)
                       for e in os.scandir(d) if e.is_file())
 
-    sc = spark.sparkContext
-
-    def jobs_for(fn, tag):
-        sc.setJobGroup(tag, tag)
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(tag))
-
     sig0 = base_sig()
     counts = []
     for k in range(6):  # growing pending set: job count must not grow
         batch = spark.createDataFrame(
             [Row(id=k, ts=datetime(2024, 1, 16, 1 + k), v=10.0)])
-        counts.append(jobs_for(
-            lambda b=batch: store.ingest(spark, b, cutoff), f"ing{k}"))
+        counts.append(count_jobs(
+            spark, lambda b=batch: store.ingest(spark, b, cutoff)))
     # exactly the one observed write job per hot-only batch — no count
     # probes, no hot-store read, independent of pending-batch count
     assert counts == [1] * 6, counts

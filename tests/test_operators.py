@@ -2,7 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR, assert_df_matches_duck
+from tests.conftest import SF_DIR, assert_df_matches_duck, count_jobs
 
 
 def _docs(spark):
@@ -260,19 +260,38 @@ def test_hash28_portable(spark, duck):
 
 
 def test_shingles_and_signature(spark, duck):
+    """Every MinHash component matches the DuckDB twin: a permuted or
+    truncated (A_j, B_j) literal would change some component."""
     from aresdb_spark.operators import dedup as D
 
-    # compare first minhash component (full arrays compare via near-dup test)
     df = _docs(spark).select(
         "doc_id",
-        F.element_at(D.minhash_signature(F.col("text")), 1).alias("mh0"),
+        D.minhash_signature(F.col("text")).alias("sig"),
         F.size(D.shingles(F.col("text"))).alias("n_shingles"),
     )
     sig = D.minhash_signature_sql("text")
     assert_df_matches_duck(df, duck, f"""
-        SELECT doc_id, ({sig})[1] AS mh0,
+        SELECT doc_id, {sig} AS sig,
                len({D.shingles_oracle_sql('text')})::INT AS n_shingles
         FROM documents
+    """)
+    assert all(len(r["sig"]) == D.N_HASHES for r in df.collect())
+
+
+def test_signature_bands_match_duckdb_hex_form(spark, duck):
+    """The persisted banded-index rows (id, band, bh, bhp) equal the
+    DuckDB twin of ``_band_hash`` (hex md5 per band) row for row."""
+    from aresdb_spark.operators import dedup as D
+
+    got = D.signature_bands(_docs(spark)).select("id", "band", "bh", "bhp")
+    bands = D._band_selects_sql("sigs", D.N_BANDS, D.ROWS_PER_BAND)
+    assert_df_matches_duck(got, duck, f"""
+        WITH sigs AS (SELECT doc_id AS id,
+                             {D.minhash_signature_sql('text')} AS sig
+                      FROM documents)
+        SELECT id, band, bh, substr(bh, 1, 1) AS bhp FROM (
+        {bands}
+        )
     """)
 
 
@@ -291,20 +310,30 @@ def test_minhash_near_duplicates(spark, duck):
     assert df.count() >= 0
 
 
-def test_ngram_jaccard_scorers_agree(spark):
-    """r15: the Arrow-batched Jaccard scorer (Python sets) must equal
-    the array_intersect expression form bit for bit — same two integer
-    cardinalities, same IEEE double division; no rounding exists in
-    this path so exact equality is the bar, not closeness."""
-    from aresdb_spark.operators import dedup as D
+def test_ensure_parallelism_runs_no_spark_job(spark):
+    """The parallelism guard decides from the physical plan. On a
+    broadcast semi-join (the verify stage's candidate-doc filter) it
+    runs no Spark job — counting partitions through ``df.rdd`` ran the
+    plan's broadcast and shuffle stages, 2 jobs — and still spreads the
+    one-partition scan over the cluster's slots; an input that already
+    shuffles is returned as it is."""
+    from aresdb_spark.operators.util import ensure_parallelism
 
     docs = _docs(spark)
-    cand = D.minhash_lsh_candidates(docs)
-    a = D.ngram_jaccard(cand, docs, scorer="batched") \
-        .orderBy("id_a", "id_b").collect()
-    b = D.ngram_jaccard(cand, docs, scorer="expr") \
-        .orderBy("id_a", "id_b").collect()
-    assert len(a) > 0 and a == b
+    ids = docs.select((F.col("doc_id") % 20 * 2).alias("i")).distinct()
+    semi = docs.join(F.broadcast(ids), F.col("doc_id") == F.col("i"),
+                     "left_semi")
+    out = []
+    assert count_jobs(spark,
+                      lambda: out.append(ensure_parallelism(semi))) == 0
+    target = spark.sparkContext.defaultParallelism
+    assert f"RoundRobinPartitioning({target})" in \
+        out[0]._jdf.queryExecution().executedPlan().toString()
+    assert sorted(out[0].collect()) == sorted(semi.collect())
+    shuffled = docs.groupBy("doc_id").count()
+    assert count_jobs(spark, lambda: out.append(
+        ensure_parallelism(shuffled))) == 0
+    assert out[-1] is shuffled
 
 
 def test_minhash_near_duplicates_with_id_named_id(spark):
@@ -747,18 +776,10 @@ def test_semantic_dedup_plans_without_running_a_job(spark):
     from aresdb_spark.operators import similarity as S
 
     emb = _emb(spark)
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    sc.setJobGroup("semantic-dedup-plan-probe", "plan-time job probe")
-    try:
-        planned = S.semantic_dedup(emb, threshold=0.4, n_rows=500)
-        assert list(tracker.getJobIdsForGroup(
-            "semantic-dedup-plan-probe")) == []
-        planned.collect()
-        assert len(tracker.getJobIdsForGroup(
-            "semantic-dedup-plan-probe")) > 0
-    finally:
-        sc.setJobGroup("", "")
+    planned = []
+    assert count_jobs(spark, lambda: planned.append(
+        S.semantic_dedup(emb, threshold=0.4, n_rows=500))) == 0
+    assert count_jobs(spark, planned[0].collect) > 0
 
     with pytest.raises(ValueError, match="plan time"):
         S.semantic_dedup(emb, threshold=0.4)

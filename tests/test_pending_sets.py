@@ -16,18 +16,9 @@ from datetime import datetime
 from pyspark.sql import Row
 
 from aresdb_spark.sources.hotcold import DimensionStore, HotColdStore
+from tests.conftest import count_jobs
 
 CUTOFF = datetime(2024, 1, 15)
-
-
-def _jobs_for(spark, fn, tag):
-    sc = spark.sparkContext
-    sc.setJobGroup(tag, tag)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(tag))
 
 
 def _parquet_files(d):
@@ -148,7 +139,7 @@ def test_flush_backfill_jobs_do_not_grow_with_queue_length(spark, tmp_path):
         for b in range(n_batches):
             store.ingest(spark, spark.createDataFrame(
                 rows[b * per:(b + 1) * per]), CUTOFF, defer_backfill=True)
-        jobs = _jobs_for(spark, lambda: store.flush_backfill(spark), name)
+        jobs = count_jobs(spark, lambda: store.flush_backfill(spark))
         got = _rows(store.read(spark))
         assert got == {i: (3.0 if i < 5 else 1.0,) for i in range(20)}
         return jobs

@@ -12,6 +12,7 @@ from aresdb_spark.operators.video import (decode_video_frames,
                                           encode_mp4_skeleton, probe_mp4,
                                           synthetic_mp4_media,
                                           video_probe_stats)
+from tests.conftest import count_jobs
 
 
 def _skeleton(ver):
@@ -503,6 +504,32 @@ def test_video_near_duplicates_pipeline_matches_oracle(spark):
     assert got == set(V.video_near_dup_oracle_pairs(45))
 
 
+# Spark jobs that routing the mixed table ran when it scanned the kinds and
+# then hashed, checkpointed and joined each modality on its own.
+JOBS_PER_MODALITY_ROUTING = 12
+
+
+def _mixed_media(spark):
+    """The three synthetic near-dup corpora interleaved over one id
+    range as a (media_id, kind, payload) table."""
+    from pyspark.sql import functions as F
+
+    from aresdb_spark.operators import audio as A
+    from aresdb_spark.operators import multimodal as M
+    from aresdb_spark.operators import video as V
+
+    ids = spark.range(0, 18).select(F.col("id").alias("media_id"))
+    return (
+        M.synthetic_near_dup_images(ids)
+        .select("media_id", F.lit("image").alias("kind"), "payload")
+        .unionByName(A.synthetic_near_dup_audio(ids)
+                     .select("media_id", F.lit("audio").alias("kind"),
+                             "payload"))
+        .unionByName(V.synthetic_near_dup_videos(ids)
+                     .select("media_id", F.lit("video").alias("kind"),
+                             "payload")))
+
+
 def test_media_near_duplicates_cross_modality_routing(spark):
     """The mixed-media dispatcher routes by kind, pairs form only
     WITHIN a modality, and each modality reproduces its own
@@ -514,16 +541,7 @@ def test_media_near_duplicates_cross_modality_routing(spark):
     from aresdb_spark.operators import multimodal as M
     from aresdb_spark.operators import video as V
 
-    ids = spark.range(0, 18).select(F.col("id").alias("media_id"))
-    media = (
-        M.synthetic_near_dup_images(ids)
-        .select("media_id", F.lit("image").alias("kind"), "payload")
-        .unionByName(A.synthetic_near_dup_audio(ids)
-                     .select("media_id", F.lit("audio").alias("kind"),
-                             "payload"))
-        .unionByName(V.synthetic_near_dup_videos(ids)
-                     .select("media_id", F.lit("video").alias("kind"),
-                             "payload")))
+    media = _mixed_media(spark)
     got = {(r["kind"], r["id_a"], r["id_b"], r["hamming"])
            for r in M.media_near_duplicates(media).collect()}
     want = {("image", a, b, h)
@@ -536,3 +554,42 @@ def test_media_near_duplicates_cross_modality_routing(spark):
     with pytest.raises(ValueError, match="unknown media kinds"):
         M.media_near_duplicates(
             media.withColumn("kind", F.lit("hologram"))).collect()
+    with pytest.raises(ValueError, match=r"unknown media kinds \[None\]"):
+        M.media_near_duplicates(
+            media.withColumn("kind", F.lit(None).cast("string")))
+    with pytest.raises(ValueError, match="empty media table"):
+        M.media_near_duplicates(media.limit(0))
+
+
+def test_media_near_duplicates_decodes_in_one_pass(spark, monkeypatch):
+    """ONE mapInPandas hashes every kind of the mixed table: the plans
+    that media_near_duplicates materializes hold exactly one MapInPandas
+    between them (one per modality before), and the pair join reads the
+    materialized hashes, not the decoder."""
+    from aresdb_spark.operators import multimodal as M
+
+    media = _mixed_media(spark).localCheckpoint(eager=True)
+    plans = []
+    cls = type(media)
+    checkpoint = cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    pairs = M.media_near_duplicates(media)
+    assert sum(p.count("MapInPandas") for p in plans) == 1
+    assert "MapInPandas" not in \
+        pairs._jdf.queryExecution().executedPlan().toString()
+
+
+def test_media_near_duplicates_job_count(spark):
+    """Routing the mixed table and collecting its pairs runs one hashing
+    job and one banded join: fewer Spark jobs than a kinds scan plus one
+    hashing job and one join per modality (JOBS_PER_MODALITY_ROUTING)."""
+    from aresdb_spark.operators import multimodal as M
+
+    media = _mixed_media(spark).localCheckpoint(eager=True)
+    jobs = count_jobs(spark, lambda: M.media_near_duplicates(media).collect())
+    assert jobs < JOBS_PER_MODALITY_ROUTING
