@@ -743,8 +743,9 @@ def _operator_queries() -> dict[str, tuple[Callable, str | None]]:
 
     def q_semantic_dedup_two_level(spark, sf_dir):
         """r11: semantic dedup routed through the TWO-LEVEL quantizer
-        (ivf_assign_two_level — coarse argmax over √k group reps, exact
-        argmax within the routed group: n·2√k dots instead of n·k).
+        (ivf_assign_two_level_batched — coarse argmax over √k group
+        reps, exact argmax within the routed group: n·2√k dots instead
+        of n·k).
         The x100 bench tier showed the flat argmax DOMINATING the dedup
         wall under adaptive cluster sizing (k grows with n — PERF_NOTES
         r11); this is the Θ(n^1.5) assignment the 100 TB deployment

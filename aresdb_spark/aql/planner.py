@@ -20,8 +20,6 @@ filter → join → project → reduce (query/aql_batchexecutor.go:26-39):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -30,6 +28,7 @@ from aresdb_spark.aql import expr as E
 from aresdb_spark.aql import timeutil
 from aresdb_spark.aql.model import Dimension, Measure, Query
 from aresdb_spark.catalog import Catalog
+from aresdb_spark.operators.util import fits_broadcast
 
 # measure aggregate whitelist (reference: query/aql_compiler.go:1156-1249;
 # count rewritten to sum(1) at :1191-1197; hll rewrite at
@@ -44,42 +43,6 @@ _AGG_FUNCS = {
 
 def _is_aggregate_call(node) -> bool:
     return isinstance(node, E.Call) and node.func in _AGG_FUNCS
-
-
-# Forced-broadcast ceiling for dimension joins (r16, guide §3 "broadcast
-# the side that fits"): the reference constrains joins to dimension
-# tables and hash-broadcasts them unconditionally, which is right for
-# its server-managed dims but becomes an unbounded driver-build +
-# per-executor-copy hazard when a dim grows with scale (the observed
-# HashedRelation is ~13x the on-disk parquet: 14 MB of `part` at the
-# x100 tier builds a 192 MiB relation). Dims at or under this many
-# ON-DISK bytes keep the explicit broadcast hint (protecting small dims
-# from stats misestimates); larger ones fall through to Catalyst/AQE,
-# which may still broadcast under spark.sql.autoBroadcastJoinThreshold
-# or pick a shuffle join. Parameterized for cluster tuning; the 64 MB
-# local default matches the session's own aggressive-dim-join
-# autoBroadcastJoinThreshold, so every bench/contract-tier plan
-# (dims <= 14 MB even at x100) is byte-identical to the unconditional
-# hint.
-DIM_BROADCAST_MAX_BYTES = int(os.environ.get(
-    "ARES_DIM_BROADCAST_MAX_BYTES", 64 * 1024 * 1024))
-
-
-def _path_bytes(path: str) -> "int | None":
-    """Total on-disk bytes of a parquet file or directory, or None when
-    it cannot be walked cheaply (remote FS, missing path)."""
-    try:
-        if os.path.isfile(path):
-            return os.path.getsize(path)
-        if os.path.isdir(path):
-            total = 0
-            for root, _dirs, files in os.walk(path):
-                for f in files:
-                    total += os.path.getsize(os.path.join(root, f))
-            return total
-    except OSError:
-        return None
-    return None
 
 
 def _contains_aggregate(node) -> bool:
@@ -331,23 +294,6 @@ class Planner:
 
         return walk(ast) if tcols else ast
 
-    def _maybe_broadcast(self, dim: DataFrame, table: str) -> DataFrame:
-        """Broadcast-hint a dimension side only when it fits (guide §3).
-
-        Plain parquet dims are sized from their on-disk bytes; store-
-        backed dims (hotcold pointer — size not walkable from one path)
-        and unsizable paths keep the hint, preserving the reference's
-        always-broadcast behavior where no evidence says otherwise.
-        Join TYPE and results are strategy-independent; only the
-        physical pick changes, and only for dims over the ceiling."""
-        tdef = self.catalog.table_def(table)
-        if tdef.hotcold:
-            return F.broadcast(dim)
-        size = _path_bytes(f"{self.catalog.sf_dir}/{table}.parquet")
-        if size is None or size <= DIM_BROADCAST_MAX_BYTES:
-            return F.broadcast(dim)
-        return dim
-
     def _dim_only_filters(self, q: Query, alias: str) -> list[int]:
         """Indices of row filters referencing ONLY columns of `alias` —
         these prune the (broadcast) dimension side BEFORE the join, the
@@ -466,8 +412,13 @@ class Planner:
             for c in j.conditions:
                 col = E.compile_expr(c, self._resolver(aliases, q))
                 cond = col if cond is None else cond & col
-            right = dim if dim_def.is_fact \
-                else self._maybe_broadcast(dim, j.table)
+            # the broadcast hint applies only while the dim's planned
+            # bytes fit the forced-broadcast ceiling (guide §3): small
+            # dims keep the reference's always-broadcast pick whatever
+            # Catalyst estimates; a larger one falls through to
+            # Catalyst/AQE. Results are strategy-independent.
+            right = F.broadcast(dim) \
+                if not dim_def.is_fact and fits_broadcast(dim) else dim
             df = df.join(right, on=cond, how=j.how)
             if j.how in ("left_semi", "left_anti"):
                 aliases.discard(j.name)  # no dim columns in the output

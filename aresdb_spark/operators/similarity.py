@@ -10,7 +10,7 @@
     optionally neighboring buckets by Hamming distance). Scale path: the
     bucket id is computable scan-side, so a bucketed/partitioned write on
     it turns ANN into a partition-pruned scan.
-  - embedding-cosine near-dup: all pairs with cosine ≥ τ via LSH buckets.
+  - embedding-cosine near-dup: every pair with cosine ≥ τ, exact.
 
 Determinism: hyperplanes are generated from a fixed seed with numpy's
 PCG64 — committed constants, not runtime randomness.
@@ -314,68 +314,13 @@ def ivf_group_reps(centroids: np.ndarray,
     return np.round(np.array(reps), 6), bounds
 
 
-def ivf_assign_two_level(vec: Column, centroids: np.ndarray,
-                         n_groups: "int | None" = None) -> Column:
-    """Two-level coarse quantizer assignment (r11, from the x100 bench
-    finding): argmax over g ≈ √k group representatives routes to ONE
-    group, then the exact argmax runs over that group's k/g centroids —
-    n·(g + k/g) dot products instead of n·k. With fixed cluster SIZE
-    (semantic_dedup's adaptive k = n/250) the flat argmax is Θ(n²/250),
-    the dominant term at the x100 tier (assignment wall ≈ the whole
-    dedup); two-level cuts it to Θ(n^1.5). The CASE chain carries every
-    group's dot array but EVALUATES only the routed branch.
-
-    Semantics: a valid coarse quantizer, not the identical one — rows
-    whose true argmax lives outside the routed group land in a
-    different (still deterministic) cluster, exactly the approximation
-    every production IVF router makes. Cluster ids stay global
-    (1-based, same id space as ``ivf_assign``); same 6dp rounding and
-    first-match tie rule, so a DuckDB oracle recomputes it bit-for-bit
-    (``_ivf_assign_two_level_sql``)."""
-    from aresdb_spark.operators.util import let
-
-    reps, bounds = ivf_group_reps(centroids, n_groups)
-
-    def dots(v, cents):
-        return F.array(*[
-            F.round(F.aggregate(
-                F.zip_with(v, F.array(*[F.lit(float(x)) for x in c]),
-                           lambda a, b: a * b),
-                F.lit(0.0), lambda acc, x: acc + x), 6)
-            for c in cents])
-
-    def fine_branch(v, b, e):
-        # NOTE: the body must be a SINGLE-parameter callable — a
-        # `lambda fd, b=b:` default-capture would make PySpark's HOF
-        # arity sniffing treat it as the (element, index) two-arg form
-        # and bind b to the array INDEX (0), silently dropping the
-        # group offset
-        def body(fd):
-            return F.array_position(fd, F.array_max(fd)) + F.lit(b)
-        return let(dots(v, centroids[b:e]), body)
-
-    def fine(v, gi):
-        expr = None
-        for i in range(len(reps)):
-            branch = fine_branch(v, int(bounds[i]), int(bounds[i + 1]))
-            expr = branch if expr is None \
-                else F.when(gi == i + 1, branch).otherwise(expr)
-        return expr
-
-    return let(_as_double(vec),
-               lambda v: let(dots(v, reps),
-                             lambda gd: fine(v, F.array_position(
-                                 gd, F.array_max(gd)))))
-
-
 def _seq_dots_np(X: np.ndarray, C: np.ndarray) -> np.ndarray:
     """(B, k) raw dot products accumulated DIM-SEQUENTIALLY: one
     vectorized rank-1 update per dimension, so every float64 addition
-    happens in exactly the order of the zip_with+aggregate fold the
-    expression path evaluates — the raw dots are bit-identical to
-    Catalyst's, which is what lets the batched assignment reproduce
-    the SQL oracle. (A BLAS matmul would reassociate the sum and
-    drift at the last ulp.)"""
+    happens in exactly the order of a left-to-right zip_with+aggregate
+    fold (``ivf_assign``'s, and the SQL oracle's list sum) — which is
+    what lets the batched assignment reproduce the SQL oracle. (A BLAS
+    matmul would reassociate the sum and drift at the last ulp.)"""
     acc = np.zeros((X.shape[0], C.shape[0]))
     CT = np.ascontiguousarray(np.asarray(C, dtype=np.float64).T)
     for dth in range(X.shape[1]):
@@ -421,19 +366,29 @@ def _argmax_round6_first(dots: np.ndarray) -> np.ndarray:
 
 def ivf_assign_two_level_batched(vec: Column, centroids: np.ndarray,
                                  n_groups: "int | None" = None) -> Column:
-    """Arrow-batched twin of ``ivf_assign_two_level`` (r14, VERDICT r13
-    directive 6): same routing — coarse argmax over the √k group reps,
-    exact argmax within the routed group, global 1-based ids, 6dp
-    rounding, first-match ties — but the n·(√k + k/√k) dot products run
+    """Two-level coarse quantizer assignment (r11; Arrow-batched since
+    r14, VERDICT r13 directive 6): argmax over g ≈ √k group
+    representatives routes to ONE group, then the exact argmax runs
+    over that group's k/g centroids — n·(g + k/g) dot products instead
+    of n·k. With fixed cluster SIZE (semantic_dedup's adaptive k =
+    n/250) the flat argmax is Θ(n²/250), the dominant term at the x100
+    tier; two-level cuts it to Θ(n^1.5). 6dp rounding and first-match
+    ties as ``ivf_assign``. The n·(√k + k/√k) dot products run
     as numpy rank-1 updates over whole Arrow batches instead of
-    interpreted Catalyst HOF folds (the expression path materializes a
+    interpreted Catalyst HOF folds (an expression form materializes a
     zip_with array + runs an interpreted lambda fold PER DOT; at the
     x100 tier that assignment was half the dedup wall, 48.7 of 96.5 s).
     The centroid array ships once per executor in the UDF closure.
-    Bit-identical to the expression path: _seq_dots_np preserves the
-    fold's float64 addition order and _argmax_round6_first its
-    rounded-first-match tie rule, so the DuckDB oracle
-    (_ivf_assign_two_level_sql) is unchanged."""
+    Bit-identical to the SQL fold: _seq_dots_np preserves its float64
+    addition order and _argmax_round6_first its rounded-first-match tie
+    rule, so the DuckDB oracle (_ivf_assign_two_level_sql) recomputes
+    it exactly.
+
+    Semantics: a valid coarse quantizer, not the identical one — rows
+    whose true argmax lives outside the routed group land in a
+    different (still deterministic) cluster, exactly the approximation
+    every production IVF router makes. Cluster ids stay global
+    (1-based, same id space as ``ivf_assign``)."""
     reps, bounds = ivf_group_reps(centroids, n_groups)
     cents = np.asarray(centroids, dtype=np.float64)
     bnds = [int(b) for b in bounds]
@@ -458,8 +413,9 @@ def ivf_assign_two_level_batched(vec: Column, centroids: np.ndarray,
 
 def _ivf_assign_two_level_sql(vec_col: str, centroids: np.ndarray,
                               n_groups: "int | None" = None) -> str:
-    """DuckDB rendering of ivf_assign_two_level — same group reps, same
-    rounding, same first-match ties, global ids via the group offset."""
+    """DuckDB rendering of ivf_assign_two_level_batched — same group
+    reps, same rounding, same first-match ties, global ids via the group
+    offset."""
     reps, bounds = ivf_group_reps(centroids, n_groups)
 
     def dot(c):
@@ -536,43 +492,12 @@ def ivf_topk_oracle_sql(query_vec: list[float], k: int = 10, nprobe: int = 2,
 # ---------------------------------------------------------------------------
 
 
-def embedding_near_duplicates(df: DataFrame, threshold: float = 0.95,
-                              vec_col: str = "embedding", id_col: str = "vec_id",
-                              n_planes: int = 8, dim: int = 64) -> DataFrame:
-    """All pairs with cosine ≥ threshold, bucketed by hyperplane LSH so the
-    self-join never goes O(n²): high-cosine pairs land in the same bucket
-    with high probability; the exact cosine filters candidates.
-
-    `dim` is the embedding dimensionality — a parameter, never sniffed from
-    the data (running a Spark job at plan time is a scale anti-pattern)."""
-    planes_arr = lsh_planes(dim, n_planes)
-
-    # per-row norms hoisted out of the pair stage (HOF folds run
-    # interpreted; dot/(na*nb) keeps cosine()'s exact operation order,
-    # so rounded values — and the oracle match — are bit-identical)
-    base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-                     norm(F.col(vec_col)).alias("nrm"),
-                     lsh_bucket(F.col(vec_col), planes_arr).alias("bucket"))
-    l, r = base.alias("l"), base.alias("r")
-    pairs = (
-        l.join(r, (F.col("l.bucket") == F.col("r.bucket")) & (F.col("l.id") < F.col("r.id")))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"),
-                F.round(dot(F.col("l.v"), F.col("r.v"))
-                        / (F.col("l.nrm") * F.col("r.nrm")), 6).alias("cos"))
-        .filter(F.col("cos") >= threshold)
-    )
-    return pairs
-
-
 def embedding_near_duplicates_exact_oracle_sql(threshold: float = 0.95,
                                                table: str = "embeddings",
                                                vec_col: str = "embedding",
                                                id_col: str = "vec_id") -> str:
-    """Exact O(n²) oracle (sf0.01 scale only). NOTE: the LSH plan is
-    approximate — candidates missed by bucketing won't appear; use the
-    recall test in tests/ rather than exact equality when buckets drop
-    pairs. For the driver gate we compare the *exact* pair query instead
-    (embedding_near_duplicates_exact)."""
+    """DuckDB twin of ``embedding_near_duplicates_exact``: every pair
+    with rounded cosine ≥ threshold, O(n²) (sf0.01 scale only)."""
     cos = cosine_sql(f"a.{vec_col}", f"b.{vec_col}")
     return f"""
 SELECT a.{id_col} AS id_a, b.{id_col} AS id_b, round({cos}, 6) AS cos
@@ -584,8 +509,8 @@ WHERE round({cos}, 6) >= {threshold}
 def embedding_near_duplicates_exact(df: DataFrame, threshold: float = 0.95,
                                     vec_col: str = "embedding",
                                     id_col: str = "vec_id") -> DataFrame:
-    """Exact all-pairs cosine near-dup (the correctness baseline the LSH
-    variant is measured against)."""
+    """Exact all-pairs cosine near-dup: every pair with rounded cosine ≥
+    threshold."""
     base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
                      norm(F.col(vec_col)).alias("nrm"))
     l, r = base.alias("l"), base.alias("r")
@@ -611,12 +536,12 @@ def _semantic_keep_batched(pdf: "pd.DataFrame", threshold: float,
     bit-exactness discipline as the r14 quantizer: the pair-dot matrix
     accumulates DIM-SEQUENTIALLY (one rank-1 update per dimension, so
     every entry reproduces the fold's float64 addition order), the
-    denominator multiplies norms before dividing (the expression's
+    denominator multiplies norms before dividing (cosine()'s
     dot/(na*nb) order), and round(·,6) ≥ threshold is decided by a raw
     2e-6 margin with the rare in-margin pairs resolved through Spark's
     exact BigDecimal HALF_UP semantics (_round6_spark_exact) — so the
-    outcome per pair, and therefore the DuckDB oracle match, is
-    identical to the expression path. Column blocks bound the pair
+    outcome per pair, and therefore the DuckDB oracle match, is that
+    of the rounded cosine. Column blocks bound the pair
     matrix to ~10^7 doubles for skewed clusters.
 
     SKEW GUARD (r16, VERDICT r15 directive 2): groupBy(cluster).
@@ -678,7 +603,6 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.95,
                    vec_col: str = "embedding",
                    id_col: str = "vec_id",
                    assignment: "str | None" = None,
-                   pair_mode: "str | None" = None,
                    max_cluster_rows: int = SEMANTIC_MAX_CLUSTER_ROWS
                    ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al., "SemDeDup:
@@ -688,10 +612,10 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.95,
     lower-id semantic twin (cosine ≥ threshold) in its cluster. Returns
     one row per input: (id, cluster, keep).
 
-    100 TB shape: assignment is a scan-side expression (no UDF); the
-    within-cluster self-join shuffles both sides once on the cluster key,
-    and pair cost is Σ cluster² — the paper's own cost model (they use
-    ~11k clusters for LAION-scale). With n_clusters=None the count is
+    100 TB shape: assignment is scan-side (an expression, or one Arrow
+    UDF for two_level); the within-cluster pair stage shuffles once on
+    the cluster key, and pair cost is Σ cluster² — the paper's own cost
+    model (they use ~11k clusters for LAION-scale). With n_clusters=None the count is
     sized as ceil(n_rows / target_cluster_size): FIXED cluster size ⇒
     pair count ≈ n × target_cluster_size, LINEAR in corpus size (a
     fixed cluster COUNT would be n²/k — measured 8.8x wall at 10x data
@@ -710,8 +634,8 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.95,
     inline them; pass md5-sample-trained centroids for real corpora.
 
     ``assignment="two_level"`` (r11): route each row through the
-    two-level quantizer (``ivf_assign_two_level``, n·(√k + k/√k) dots
-    instead of n·k). With the adaptive k = n/250 the flat argmax is
+    two-level quantizer (``ivf_assign_two_level_batched``,
+    n·(√k + k/√k) dots instead of n·k). With the adaptive k = n/250 the flat argmax is
     Θ(n²) and DOMINATES the x100 bench tier (assignment wall ≈ the
     whole dedup — PERF_NOTES r11); two-level cuts the assignment to
     Θ(n^1.5). Clusterings differ slightly (a coarser router, still a
@@ -726,14 +650,10 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.95,
     n·k dots are linear in n, and paper-exact callers keep the exact
     argmax). Pass either name explicitly to override.
 
-    ``pair_mode`` (r15): ``"batched"`` (the default) runs the
-    within-cluster pair stage as one applyInPandas kernel per cluster
-    (_semantic_keep_batched — dim-sequential rank-1 pair dots, outcome
-    bit-identical to the expression self-join; measured 5.6x at the
-    x10 tier where the interpreted per-pair fold was the wall);
-    ``"expr"`` keeps the pure-Column self-join. ``assignment=
-    "two_level_expr"`` defaults pair_mode to "expr" — that caller asked
-    for a Python-free plan.
+    The within-cluster pair stage (r15) is one applyInPandas kernel per
+    cluster (_semantic_keep_batched — dim-sequential rank-1 pair dots,
+    outcome bit-identical to the oracle's rounded cosine; measured 5.6x
+    over an interpreted per-pair expression fold at the x10 tier).
 
     ``max_cluster_rows`` (r16, VERDICT r15 directive 2): loud skew
     guard for the batched pair kernel — one cluster runs on one task,
@@ -758,69 +678,27 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.95,
         else ivf_centroids(dim, n_clusters)
     if assignment is None:
         assignment = "two_level" if adaptive_k else "exact"
-    if assignment not in ("exact", "two_level", "two_level_expr"):
-        raise ValueError(f"assignment must be exact|two_level|"
-                         f"two_level_expr: {assignment!r}")
-    # "two_level" routes through the Arrow-batched quantizer (r14):
-    # bit-identical clustering to the expression form (same fold order,
-    # rounding and tie rule — ivf_assign_two_level_batched), so the
-    # oracle twin is shared; "two_level_expr" keeps the pure-Column
-    # form for plan-shape tests and UDF-free deployments.
+    if assignment not in ("exact", "two_level"):
+        raise ValueError(f"assignment must be exact|two_level: "
+                         f"{assignment!r}")
+    # "two_level" routes through the Arrow-batched quantizer (r14)
     assign_fn = {"exact": ivf_assign,
-                 "two_level": ivf_assign_two_level_batched,
-                 "two_level_expr": ivf_assign_two_level}[assignment]
-    # pair stage (r15): "batched" routes each cluster group through the
-    # Arrow-batched pairwise kernel (_semantic_keep_batched — one
-    # shuffle on the cluster key, then BLAS-class work per group,
-    # bit-identical outcomes); "expr" keeps the pure-Column self-join
-    # for UDF-free deployments and plan tests. The default follows the
-    # assignment choice: the two_level_expr caller asked for a
-    # Python-free plan, everyone else gets the fast pair kernel.
-    if pair_mode is None:
-        pair_mode = "expr" if assignment == "two_level_expr" else "batched"
-    if pair_mode not in ("batched", "expr"):
-        raise ValueError(f"pair_mode must be batched|expr: {pair_mode!r}")
-    if pair_mode == "batched":
-        id_type = df.schema[id_col].dataType.simpleString()
-        assigned = df.select(
-            F.col(id_col).alias("id"),
-            _as_double(F.col(vec_col)).alias("v"),
-            assign_fn(F.col(vec_col), cents).alias("cluster"))
-
-        def keep_fn(pdf):
-            return _semantic_keep_batched(pdf, threshold, dim, id_col,
-                                          max_cluster_rows)
-
-        return assigned.groupBy("cluster").applyInPandas(
-            keep_fn, schema=f"{id_col} {id_type}, cluster long, "
-                            f"keep boolean")
-    # norms are hoisted PER ROW (n sqrt-folds) instead of recomputed
-    # per PAIR: the pair stage's higher-order-function expressions run
-    # interpreted (no whole-stage codegen), so per-pair work is the
-    # wall clock — this cuts it from three 64-element folds to one.
-    # dot/(na*nb) keeps the exact operation order of cosine(), so every
-    # rounded value (and the DuckDB oracle match) is bit-identical.
+                 "two_level": ivf_assign_two_level_batched}[assignment]
+    # pair stage (r15): each cluster group goes through the Arrow-batched
+    # pairwise kernel (_semantic_keep_batched — one shuffle on the
+    # cluster key, then BLAS-class work per group)
+    id_type = df.schema[id_col].dataType.simpleString()
     assigned = df.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"),
-        assign_fn(F.col(vec_col), cents).alias("cluster"),
-        norm(F.col(vec_col)).alias("nrm"))
-    right = (assigned.select(F.col("id").alias("id_b"),
-                             F.col("v").alias("v_b"),
-                             F.col("cluster").alias("cluster_b"),
-                             F.col("nrm").alias("nrm_b")))
-    pair_dot = F.aggregate(     # v, v_b are already double arrays
-        F.zip_with(F.col("v"), F.col("v_b"), lambda x, y: x * y),
-        F.lit(0.0), lambda acc, x: acc + x)
-    dominated = (
-        assigned.join(right, (F.col("cluster") == F.col("cluster_b"))
-                      & (F.col("id") < F.col("id_b")))
-        .filter(F.round(pair_dot / (F.col("nrm") * F.col("nrm_b")), 6)
-                >= threshold)
-        .select(F.col("id_b").alias("id")).distinct()
-        .withColumn("_dropped", F.lit(True)))
-    return (assigned.join(dominated, "id", "left")
-            .select(F.col("id").alias(id_col), F.col("cluster"),
-                    F.col("_dropped").isNull().alias("keep")))
+        F.col(id_col).alias("id"),
+        _as_double(F.col(vec_col)).alias("v"),
+        assign_fn(F.col(vec_col), cents).alias("cluster"))
+
+    def keep_fn(pdf):
+        return _semantic_keep_batched(pdf, threshold, dim, id_col,
+                                      max_cluster_rows)
+
+    return assigned.groupBy("cluster").applyInPandas(
+        keep_fn, schema=f"{id_col} {id_type}, cluster long, keep boolean")
 
 
 def semantic_dedup_oracle_sql(threshold: float = 0.95, n_clusters: int = 8,

@@ -1,5 +1,6 @@
-"""Shared operator utilities: expression let-binding and local-parallelism
-guard. Both exist for 100 TB-scale reasons — see docstrings."""
+"""Shared operator utilities: expression let-binding, the local-parallelism
+guard and plan sizing. All exist for 100 TB-scale reasons — see
+docstrings."""
 
 from __future__ import annotations
 
@@ -18,6 +19,53 @@ def let(bound: Column, body) -> Column:
     times per row. Measured 40× slowdown on the MinHash signature at
     sf0.1 before this fix."""
     return F.element_at(F.transform(F.array(bound), body), 1)
+
+
+# Forced-broadcast ceiling: a relation planned at or under this many
+# bytes may carry an explicit broadcast (a dimension join's hint, the hot
+# store's pending-PK probe); a larger one is left to Catalyst/AQE, which
+# may still broadcast under spark.sql.autoBroadcastJoinThreshold or pick
+# a shuffle join. The broadcast side is built on the driver and copied to
+# every executor (the observed HashedRelation is ~13x the on-disk
+# parquet: 14 MB of `part` at the x100 tier builds a 192 MiB relation),
+# so an unbounded forced broadcast is an OOM at scale. 64 MB matches
+# get_spark's autoBroadcastJoinThreshold; every bench and contract dim
+# (<= 14 MB even at x100) fits, so those plans keep the hint.
+BROADCAST_MAX_BYTES = 64 * 1024 * 1024
+
+# Upper clamp of write_files: a write whose input is not plan-sized (an
+# RDD-backed frame, a streaming micro-batch) reports Long.MaxValue bytes
+# and lands this many files, never its source's partition count.
+MAX_WRITE_FILES = 8
+
+
+def plan_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df``'s optimized logical plan, in
+    bytes, without running it: 0 Spark jobs. A file scan reports its
+    files' bytes through Hadoop's FileSystem (so a ``file:`` or remote
+    URI sizes like a local path); operators scale their child's
+    estimate. An RDD-backed relation (``createDataFrame`` of a list)
+    reports Long.MaxValue: unknown counts as big."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats()
+               .sizeInBytes())
+
+
+def fits_broadcast(df: DataFrame) -> bool:
+    """Whether ``df`` is planned small enough to force a broadcast of
+    (``BROADCAST_MAX_BYTES``)."""
+    return plan_bytes(df) <= BROADCAST_MAX_BYTES
+
+
+def write_files(df: DataFrame) -> int:
+    """How many files a store write of ``df`` lands: one per
+    ``spark.sql.files.maxPartitionBytes`` of planned bytes — the split
+    size a later scan reads them back at — clamped to
+    [1, ``MAX_WRITE_FILES``]. Coalesce the write to it: a micro-batch
+    otherwise inherits its source's partitioning (a 4-way local frame of
+    500 rows lands 4 tiny files), a rewrite its shuffle width."""
+    split = df.sparkSession._jsparkSession.sessionState().conf() \
+        .filesMaxPartitionBytes()
+    return max(1, min(MAX_WRITE_FILES, -(-plan_bytes(df) // split)))
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:

@@ -72,6 +72,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aresdb_spark.operators.util import fits_broadcast, write_files
 from aresdb_spark.sources import pointer
 from aresdb_spark.streaming.upsert import (UpdateMode, apply_upsert_batch,
                                            fold_upserts)
@@ -193,20 +194,6 @@ class HotColdStore:
     # skips them in createArchivingPatches (archiving.go:150-165, pinned
     # by the batch-120 golden in archiving_test.go:316-363).
     allow_missing_event_time: bool = False
-    # pending-set size (footer row count) above which the read-side
-    # pending-PK broadcast probe is skipped in favor of the whole-base
-    # fold — the broadcast must never be the thing that OOMs a reader
-    # when a bulk backload queues millions of rows before the first
-    # archive. Under the normal archiving cadence the pending set is
-    # orders of magnitude below this.
-    hot_probe_max_rows: int = 1_000_000
-    # file-count cap on every hot, queue and journal write (hot batch,
-    # queue and — at this default — journal dirs; the hot base archive
-    # and compact_hot rewrite): a micro-batch inherits its source's
-    # partitioning (a 32-way stream would land 32 tiny files per batch),
-    # the base the fold's shuffle width. Writes coalesce to at most
-    # this many files; the reference keeps one live batch per upsert.
-    hot_batch_max_files: int = 8
 
     def _state(self) -> dict:
         """The committed state; raises FileNotFoundError before
@@ -270,11 +257,6 @@ class HotColdStore:
                 if e.name.endswith(".parquet"):
                     total += pq.ParquetFile(e.path).metadata.num_rows
         return total
-
-    def _pending_rows(self, pend: list[dict]) -> int:
-        """Physical rows across the pending hot batch dirs (footers)."""
-        return sum(self._dir_rows(self._hot_batch_dir(e["n"]))
-                   for e in pend)
 
     # -- bootstrap -----------------------------------------------------------
 
@@ -537,10 +519,12 @@ class HotColdStore:
         # would cost a shuffle of its own; a broadcast hash relation is
         # correct for semi/anti with duplicate keys). Guard: a
         # pathological pending set (bulk backload before the first
-        # archive) must not blow the broadcast — parquet footers
-        # (metadata, no job) bound it, and an oversized set takes the
-        # whole-base fold that r9 always paid.
-        if self._pending_rows(pend) > self.hot_probe_max_rows:
+        # archive) must not blow the broadcast — the probe's planned
+        # bytes (plan statistics, no job) must fit the forced-broadcast
+        # ceiling, and an oversized set takes the whole-base fold that
+        # r9 always paid.
+        probe = pending.select(*pk)
+        if not fits_broadcast(probe):
             return self._conform(
                 fold_upserts(base, pending, _ORD, pk, self.modes), st)
         cond = None
@@ -548,7 +532,7 @@ class HotColdStore:
             c = F.col(f"b.{k}").eqNullSafe(F.col(f"p.{k}"))
             cond = c if cond is None else cond & c
         bb = base.alias("b")
-        pp = F.broadcast(pending.select(*pk).alias("p"))
+        pp = F.broadcast(probe.alias("p"))
         matched = bb.join(pp, cond, "left_semi")
         untouched = bb.join(pp, cond, "left_anti")
         folded = fold_upserts(matched, pending, _ORD, pk, self.modes)
@@ -711,10 +695,11 @@ class HotColdStore:
             hot_part = observed.filter((t >= cut) | t.isNull())
             n = int(st["hot_seq"]) + 1
             hot_dir = self._hot_batch_dir(n)
-            # bound the batch dir's file count (see hot_batch_max_files)
-            # — coalesce is narrow, so this stays the one write job
-            stored = _batch_rows(hot_part, schema, seq_col) \
-                .coalesce(self.hot_batch_max_files)
+            # size the batch dir's file count from the plan
+            # (write_files) — coalesce is narrow, so this stays the one
+            # write job
+            stored = _batch_rows(hot_part, schema, seq_col)
+            stored = stored.coalesce(write_files(stored))
             # "overwrite": an uncommitted dir at this number is an
             # orphan of a writer that died before its commit — invisible
             # to every reader, safe to reclaim
@@ -807,7 +792,7 @@ class HotColdStore:
                        for n in os.listdir(self.backfill_path)
                        if n.startswith("batch=")), default=floor)
         nxt = max(nxt, floor + 1)
-        rows.coalesce(self.hot_batch_max_files) \
+        rows.coalesce(write_files(rows)) \
             .write.mode("errorifexists").parquet(
                 os.path.join(self.backfill_path, f"batch={nxt}"))
         return nxt
@@ -1025,8 +1010,7 @@ class HotColdStore:
         (a boundary day that already exists simply gains a second dir —
         plain concatenation, exactly the reference adding a new archive
         batch version beside the old days rather than rewriting the
-        store). The rewritten hot base holds at most
-        ``hot_batch_max_files`` files."""
+        store). The rewritten hot base is plan-sized (``write_files``)."""
         with _single_writer(self.path), _utc_session(spark):
             cut = F.lit(_utc_naive(new_cutoff))
             before = self._state()
@@ -1037,9 +1021,9 @@ class HotColdStore:
             # archive walled at ~2x the 16-pending resolve at the
             # store-ops probe tier, r15). Scoped to this operation and
             # released before the lock; values are unchanged. The
-            # coalesce bounds the new base's files (hot_batch_max_files).
-            hot = self._read_hot_resolved(spark, before) \
-                .coalesce(self.hot_batch_max_files).persist()
+            # coalesce sizes the new base's files (write_files).
+            resolved = self._read_hot_resolved(spark, before)
+            hot = resolved.coalesce(write_files(resolved)).persist()
             try:
                 t = F.col(self.time_column)
                 to_cold = hot.filter(t < cut)
@@ -1090,7 +1074,7 @@ class HotColdStore:
         """Fold the pending hot batch dirs into a fresh compacted base
         without touching the cutoff — the explicit compaction handle
         for ops/tests (``archive`` does the same implicitly on its
-        cadence), written as at most ``hot_batch_max_files`` files.
+        cadence), written plan-sized (``write_files``).
         Returns the number of batch dirs compacted."""
         with _single_writer(self.path):
             before = self._state()
@@ -1098,8 +1082,8 @@ class HotColdStore:
             if not pending:
                 return 0
             nxt = self._next("hot")
-            self._write_hot(self._read_hot_resolved(spark, before)
-                            .coalesce(self.hot_batch_max_files), nxt)
+            resolved = self._read_hot_resolved(spark, before)
+            self._write_hot(resolved.coalesce(write_files(resolved)), nxt)
             displaced = [self._version_dir("hot", before)] + \
                 [f"hotbatch/batch={e['n']}" for e in pending]
             self._commit(hot=nxt, hot_batches=[],
@@ -1115,8 +1099,9 @@ class HotColdStore:
         reference's live-store row stats count pre-merge records the
         same way)."""
         st = self._state()
-        return self._dir_rows(self._version_path("hot", st)) + \
-            self._pending_rows(self._pending_hot_batches(st))
+        pend = self._pending_hot_batches(st)
+        return sum(map(self._dir_rows, [self._version_path("hot", st)] + [
+            self._hot_batch_dir(e["n"]) for e in pend]))
 
     def compact_cold_days(self, spark: SparkSession,
                           days: "list[str] | None" = None,
@@ -1379,10 +1364,8 @@ class DimensionStore:
                            for n in os.listdir(self.journal_path)
                            if n.startswith("batch=")), default=floor)
             nxt = max(nxt, floor + 1)
-            # the fact store's default file-count cap (the field's
-            # comment on HotColdStore)
-            _batch_rows(batch, self._schema(st), seq_col) \
-                .coalesce(HotColdStore.hot_batch_max_files) \
+            rows = _batch_rows(batch, self._schema(st), seq_col)
+            rows.coalesce(write_files(rows)) \
                 .write.mode("errorifexists").parquet(
                     os.path.join(self.journal_path, f"batch={nxt}"))
 

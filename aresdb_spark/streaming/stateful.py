@@ -43,7 +43,13 @@ def first_seen(sdf: DataFrame, key_cols: list[str],
     dedup (the reference's live store solves it with retention-based
     purge of the PK index, memstore/purge.go). Each arrival refreshes the
     key's clock. Default (None) keeps state forever: exact dedup, state
-    O(distinct keys)."""
+    O(distinct keys).
+
+    A TTL stream never terminates on its own, not even under an
+    ``availableNow`` trigger: the processing-time timeout always asks
+    for one more (no-data) batch, so ``processAllAvailable()`` never
+    returns either. Its caller must ``stop()`` the query (for example
+    once ``recentProgress`` shows the data batches)."""
     import pandas as pd
 
     out_schema = sdf.schema

@@ -32,6 +32,23 @@ def spark():
     yield s
 
 
+@pytest.fixture(autouse=True)
+def no_leaked_streams():
+    """Fail a test that leaves a streaming query active, after stopping
+    it: a leaked query keeps running micro-batches through every later
+    test."""
+    yield
+    from pyspark.sql import SparkSession
+
+    session = SparkSession.getActiveSession()
+    leaked = session.streams.active if session is not None else []
+    for q in leaked:
+        q.stop()
+    if leaked:
+        pytest.fail(f"{len(leaked)} streaming query(ies) left active: "
+                    f"{[q.name or q.id for q in leaked]}")
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

@@ -660,7 +660,7 @@ def test_compact_cold_days_squashes_append_fanin(spark, tmp_path):
     assert store.compact_cold_days(spark) == 0
 
 
-def test_hot_fold_touches_only_pending_pks(spark, tmp_path):
+def test_hot_fold_touches_only_pending_pks(spark, tmp_path, monkeypatch):
     """VERDICT r9 #4 / r10 directive 2: with pending batches, the hot
     read must NOT shuffle the whole base — the pending-PK set broadcasts
     (left_semi/left_anti split), only the matched slice feeds the fold
@@ -695,11 +695,13 @@ def test_hot_fold_touches_only_pending_pks(spark, tmp_path):
     assert plan.count("BroadcastHashJoin") == 2, plan
     assert "SortMergeJoin" not in plan
 
-    # oversized pending set falls back to the whole-base fold (the
-    # broadcast must never OOM a reader) — same values, no joins
+    # oversized pending set (forced via a 0-byte broadcast ceiling)
+    # falls back to the whole-base fold (the broadcast must never OOM a
+    # reader) — same values, no joins
+    from aresdb_spark.operators import util
+    monkeypatch.setattr(util, "BROADCAST_MAX_BYTES", 0)
     small = HotColdStore(path=str(tmp_path / "s"), time_column="ts",
-                         primary_key=("id",), modes={"v": "add"},
-                         hot_probe_max_rows=0)
+                         primary_key=("id",), modes={"v": "add"})
     small.init_from(spark.createDataFrame(
         [Row(id=i, ts=datetime(2024, 1, 16), v=1.0) for i in range(50)]),
         cutoff)

@@ -607,49 +607,46 @@ def test_semantic_dedup_matches_oracle(spark, duck):
         threshold=0.4))
 
 
-def test_semantic_dedup_pair_modes_agree(spark):
-    """r15: the batched per-cluster pair kernel must reproduce the
-    expression self-join row for row — including pairs INSIDE the
-    2e-6 rounding margin, where the kernel falls back to Spark's exact
+def test_semantic_dedup_pair_modes_agree(spark, duck):
+    """r15: the batched per-cluster pair kernel must decide every pair
+    as the rounded cosine does — including pairs INSIDE the 2e-6
+    rounding margin, where the kernel falls back to Spark's exact
     BigDecimal HALF_UP semantics. The planted corpus puts one pair at
     raw cosine 0.4999995 (rounds HALF_UP to 0.500000 ⇒ dominated at
     threshold 0.5) and one at 0.49999949 (rounds to 0.499999 ⇒ kept),
     both inside the fast-path margin, plus an exact duplicate and an
-    orthogonal pair."""
+    orthogonal pair. Checked against the explicit expectations and the
+    DuckDB oracle (one cluster: every pair compared)."""
     import math
 
-    import numpy as np
+    import pandas as pd
 
     from aresdb_spark.operators import similarity as S
 
-    def vec(c):  # unit vector at cosine c to e0, inside one cluster
+    def vec(c):  # unit vector at cosine c to e0
         return [float(c), math.sqrt(1.0 - c * c)] + [0.0] * 62
+
+    def keeps(rows):
+        df = spark.createDataFrame(rows,
+                                   "vec_id long, embedding array<double>")
+        got = S.semantic_dedup(df, threshold=0.5, n_clusters=1)
+        duck.register("pair_margin_emb", pd.DataFrame(
+            rows, columns=["vec_id", "embedding"]))
+        try:
+            assert_df_matches_duck(got, duck, S.semantic_dedup_oracle_sql(
+                threshold=0.5, n_clusters=1, table="pair_margin_emb"))
+        finally:
+            duck.unregister("pair_margin_emb")
+        return {r["vec_id"]: r["keep"] for r in got.collect()}
 
     rows = [
         (1, vec(1.0)), (2, vec(1.0)),           # exact twin: 2 dropped
         (3, vec(0.4999995)),                    # HALF_UP → 0.5: dropped
         (4, [0.0, -1.0] + [0.0] * 62),          # anti-aligned: kept
     ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = np.zeros((1, 64))
-    cents[0, 0] = 1.0                           # one cluster: all pairs
-    got = {}
-    for pm in ("batched", "expr"):
-        out = S.semantic_dedup(df, threshold=0.5, centroids=cents,
-                               pair_mode=pm).orderBy("vec_id").collect()
-        got[pm] = [(r["vec_id"], r["cluster"], r["keep"]) for r in out]
-    assert got["batched"] == got["expr"]
-    keeps = {vid: k for vid, _, k in got["batched"]}
-    assert keeps == {1: True, 2: False, 3: False, 4: True}
-
+    assert keeps(rows) == {1: True, 2: False, 3: False, 4: True}
     rows[2] = (3, vec(0.49999949))              # rounds DOWN: kept
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    for pm in ("batched", "expr"):
-        out = S.semantic_dedup(df, threshold=0.5, centroids=cents,
-                               pair_mode=pm).orderBy("vec_id").collect()
-        got[pm] = [(r["vec_id"], r["keep"]) for r in out]
-    assert got["batched"] == got["expr"]
-    assert dict(got["batched"])[3] is True
+    assert keeps(rows) == {1: True, 2: False, 3: True, 4: True}
 
 
 def test_semantic_dedup_mega_cluster_guard(spark):
@@ -720,9 +717,8 @@ def test_ivf_assign_two_level_matches_reference(spark):
     reps, exact argmax within the routed group, global 1-based ids)
     must match a straight-line numpy transcription of the SAME
     algorithm bit-for-bit — same 6dp rounding, same first-match tie
-    rule, offsets applied (the regression: a default-capture lambda in
-    the CASE chain made PySpark's HOF arity sniffing bind the group
-    offset to the array index, silently dropping it)."""
+    rule, group offsets applied (a dropped offset would map every
+    group onto the first group's ids)."""
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -734,7 +730,7 @@ def test_ivf_assign_two_level_matches_reference(spark):
 
     emb = _emb(spark)
     got = [r["c"] for r in emb.select(
-        "vec_id", S.ivf_assign_two_level(
+        "vec_id", S.ivf_assign_two_level_batched(
             F.col("embedding"), cents).alias("c"))
         .orderBy("vec_id").collect()]
     want = []

@@ -3,16 +3,19 @@
 Each store's pending set (hot batch dirs, the backfill queue, the
 dimension journal) is ONE parquet scan over its committed ``batch=<n>``
 dirs, with the batch ordinal taken from the dir number, and folds in ONE
-aggregation (``fold_upserts``). These tests pin the three properties
+aggregation (``fold_upserts``). These tests pin the properties
 that shape depends on: the dirs come from committed state, so an
 uncommitted sibling dir is never scanned; the ordinal cannot collide
-with a store column; and the Spark work of a flush, and the file count
-of every hot, queue and journal write, do not grow with the number of
-batches or the source's partitioning."""
+with a store column; the Spark work of a flush does not grow with the
+number of batches; and every hot, queue and journal write lands as many
+files as its planned bytes need, not as many as its source has
+partitions."""
 
 import os
+from contextlib import contextmanager
 from datetime import datetime
 
+import pandas as pd
 from pyspark.sql import Row
 
 from aresdb_spark.sources.hotcold import DimensionStore, HotColdStore
@@ -147,54 +150,101 @@ def test_flush_backfill_jobs_do_not_grow_with_queue_length(spark, tmp_path):
     assert flush_jobs("one", 1) == flush_jobs("five", 5)
 
 
+@contextmanager
+def _split_bytes(spark, n):
+    """``spark.sql.files.maxPartitionBytes`` set to ``n`` for the block."""
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _frame(spark, rows):
+    """A plan-sized in-memory frame: pandas input plans as a local
+    relation with a byte estimate (a list of Rows plans RDD-backed, which
+    sizes as Long.MaxValue)."""
+    return spark.createDataFrame(pd.DataFrame(rows))
+
+
 def test_hot_rewrites_are_file_bounded(spark, tmp_path):
-    """``archive`` and ``compact_hot`` write the new ``hot_v<N>`` with at
-    most ``hot_batch_max_files`` parquet files, however many files the
-    old base and the fold's shuffle would otherwise produce."""
+    """``compact_hot`` and ``archive`` write the new ``hot_v<N>`` with
+    ``write_files``' count — one file per split of planned bytes,
+    clamped to [1, 8] — however many files the old base and the fold's
+    shuffle would otherwise produce: 8 (the upper clamp) when the split
+    size is 1 KB, far below the ~30 KB planned, and 1 at the default
+    split size. (A 1-byte split would also clamp, but the rewrite scans
+    the base, and a scan plans one task per split: over a minute of
+    empty tasks.)"""
     store = HotColdStore(path=str(tmp_path / "t"), time_column="ts",
-                         primary_key=("id",), hot_batch_max_files=3)
-    store.init_from(spark.createDataFrame(
-        [Row(id=i, ts=datetime(2024, 1, 16, i % 24), v=float(i))
-         for i in range(200)]).repartition(12), CUTOFF)
-    assert len(_parquet_files(store.hot_path)) > 3
+                         primary_key=("id",))
+    store.init_from(_frame(spark, [
+        dict(id=i, ts=datetime(2024, 1, 16, i % 24), v=float(i))
+        for i in range(200)]).repartition(12), CUTOFF)
+    assert len(_parquet_files(store.hot_path)) == 12
 
     def upsert(ids, v):
-        store.ingest(spark, spark.createDataFrame(
-            [Row(id=i, ts=datetime(2024, 1, 17, 1), v=v) for i in ids]),
+        store.ingest(spark, _frame(spark, [
+            dict(id=i, ts=datetime(2024, 1, 17, 1), v=v) for i in ids]),
             CUTOFF)
 
     upsert(range(0, 200, 7), -1.0)
-    assert store.compact_hot(spark) == 1
-    assert len(_parquet_files(store.hot_path)) <= 3
+    with _split_bytes(spark, 1024):
+        assert store.compact_hot(spark) == 1
+    assert len(_parquet_files(store.hot_path)) == 8
     upsert(range(0, 200, 5), -2.0)
     store.archive(spark, datetime(2024, 1, 16, 12))
-    assert len(_parquet_files(store.hot_path)) <= 3
+    assert len(_parquet_files(store.hot_path)) == 1
     got = _rows(store.read(spark))
     assert len(got) == 200
     assert got[35] == (-2.0,) and got[7] == (-1.0,) and got[1] == (1.0,)
 
 
 def test_queue_and_journal_writes_are_file_bounded(spark, tmp_path):
-    """A many-partition source lands at most ``hot_batch_max_files``
-    files per backfill queue dir, and at most the field's default per
-    dimension journal dir."""
+    """A 16-partition source lands one file per backfill queue and
+    dimension journal dir at the default split size, and 8 (the upper
+    clamp) when the split size is 1 byte."""
     store = HotColdStore(path=str(tmp_path / "t"), time_column="ts",
-                         primary_key=("id",), hot_batch_max_files=2)
-    store.init_from(spark.createDataFrame(
-        [Row(id=0, ts=datetime(2024, 1, 2), v=0.0)]), CUTOFF)
-    store.ingest(spark, spark.createDataFrame(
-        [Row(id=i, ts=datetime(2024, 1, 2, i % 24), v=1.0)
-         for i in range(64)]).repartition(16), CUTOFF, defer_backfill=True)
-    (name,) = store.queued_backfill_batches()
-    assert len(_parquet_files(os.path.join(store.backfill_path, name))) <= 2
-    assert store.flush_backfill(spark) == 1
-    assert len(_rows(store.read(spark))) == 64
-
+                         primary_key=("id",))
+    store.init_from(_frame(spark, [
+        dict(id=0, ts=datetime(2024, 1, 2), v=0.0)]), CUTOFF)
     dim = DimensionStore(path=str(tmp_path / "d"), primary_key=("id",))
-    dim.init_from(spark.createDataFrame([Row(id=0, name="a")]))
-    dim.journal_ingest(spark.createDataFrame(
-        [Row(id=i, name=str(i)) for i in range(64)]).repartition(16))
-    (jname,) = dim._journal_batches()
-    assert len(_parquet_files(os.path.join(dim.journal_path, jname))) \
-        <= HotColdStore.hot_batch_max_files
-    assert len(_rows(dim.read(spark), ("name",))) == 64
+    dim.init_from(_frame(spark, [dict(id=0, name="a")]))
+
+    def write(ids):
+        store.ingest(spark, _frame(spark, [
+            dict(id=i, ts=datetime(2024, 1, 2, i % 24), v=1.0)
+            for i in ids]).repartition(16), CUTOFF, defer_backfill=True)
+        dim.journal_ingest(_frame(spark, [
+            dict(id=i, name=str(i)) for i in ids]).repartition(16))
+        queued = os.path.join(store.backfill_path,
+                              store.queued_backfill_batches()[-1])
+        journal = os.path.join(dim.journal_path, dim._journal_batches()[-1])
+        return len(_parquet_files(queued)), len(_parquet_files(journal))
+
+    assert write(range(64)) == (1, 1)
+    with _split_bytes(spark, 1):
+        assert write(range(64, 128)) == (8, 8)
+    assert store.flush_backfill(spark) == 2
+    assert len(_rows(store.read(spark))) == 128
+    assert len(_rows(dim.read(spark), ("name",))) == 128
+
+
+def test_small_batch_ingests_as_one_file_per_dir(spark, tmp_path):
+    """A 500-row pandas batch split across the hot store and the backfill
+    queue is a few KB of planned bytes, so each side lands exactly one
+    file, whatever partitioning the frame arrived with."""
+    store = HotColdStore(path=str(tmp_path / "t"), time_column="ts",
+                         primary_key=("id",))
+    store.init_from(_frame(spark, [
+        dict(id=0, ts=datetime(2024, 1, 16), v=0.0)]), CUTOFF)
+    store.ingest(spark, _frame(spark, [
+        dict(id=i, ts=datetime(2024, 1, 2 if i % 2 else 16, 5), v=1.0)
+        for i in range(500)]).repartition(4), CUTOFF, defer_backfill=True)
+    (entry,) = store._state()["hot_batches"]
+    (queued,) = store.queued_backfill_batches()
+    assert len(_parquet_files(store._hot_batch_dir(entry["n"]))) == 1
+    assert len(_parquet_files(
+        os.path.join(store.backfill_path, queued))) == 1

@@ -1,8 +1,10 @@
 """End-to-end AQL planner tests vs DuckDB oracle at sf0.001."""
 
+import os
+
 from aresdb_spark.aql import Dimension, Join, Measure, Query, SortField, TimeFilter
 from aresdb_spark.aql.planner import plan_query
-from tests.conftest import SF_DIR, assert_df_matches_duck
+from tests.conftest import SF_DIR, assert_df_matches_duck, count_jobs
 
 # pinned "now" → 2024-05-15 13:47:23 UTC (events ts range must intersect)
 NOW = 1715780843
@@ -407,14 +409,11 @@ def test_count_is_row_count_even_with_null_arg(spark, duck):
     assert df.collect()[0]["c"] == want  # rows, not non-null values
 
 
-def test_dim_broadcast_hint_is_size_conditional(spark, duck, monkeypatch):
-    """r16 (guide §3): the dim-join broadcast hint applies only while
-    the dim's on-disk bytes fit DIM_BROADCAST_MAX_BYTES; an over-ceiling
-    dim falls through to Catalyst's own choice. Observed by disabling
-    auto-broadcast: with the hint the plan keeps BroadcastHashJoin even
-    then; without it Catalyst must pick a shuffle join. Results are
-    strategy-independent — both variants match the oracle."""
-    import aresdb_spark.aql.planner as P
+def _dim_join_plans(spark, sf_dir, monkeypatch):
+    """(plan under the default ceiling, plan with a 1-byte ceiling) of
+    a lineitem ⋈ part dimension join, with auto-broadcast off so only
+    the planner's hint can put a BroadcastHashJoin in the plan."""
+    from aresdb_spark.operators import util
 
     q = Query(
         table="lineitem",
@@ -423,27 +422,63 @@ def test_dim_broadcast_hint_is_size_conditional(spark, duck, monkeypatch):
         dimensions=[Dimension(expr="p.p_brand", alias="brand")],
         measures=[Measure(expr="sum(l_quantity)", alias="qty")],
     )
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        df_hint = plan_query(spark, sf_dir, q)
+        with monkeypatch.context() as m:
+            m.setattr(util, "BROADCAST_MAX_BYTES", 1)
+            df_big = plan_query(spark, sf_dir, q)
+        plans = [d._jdf.queryExecution().executedPlan().toString()
+                 for d in (df_hint, df_big)]
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    return df_hint, df_big, plans
+
+
+def test_dim_broadcast_hint_is_size_conditional(spark, duck, monkeypatch):
+    """r16 (guide §3): the dim-join broadcast hint applies only while
+    the dim's planned bytes fit the forced-broadcast ceiling
+    (``operators.util.BROADCAST_MAX_BYTES``); an over-ceiling dim falls
+    through to Catalyst's own choice. Observed by disabling
+    auto-broadcast: with the hint the plan keeps BroadcastHashJoin even
+    then; without it Catalyst must pick a shuffle join. Results are
+    strategy-independent — both variants match the oracle."""
     oracle = """
         SELECT p.p_brand AS brand, sum(l.l_quantity) AS qty
         FROM lineitem l LEFT JOIN part p ON p.p_partkey = l.l_partkey
         GROUP BY 1
     """
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        # under the ceiling: hint forces BHJ even with auto off
-        df_hint = plan_query(spark, SF_DIR, q)
-        plan_hint = df_hint._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan_hint
-        assert_df_matches_duck(df_hint, duck, oracle, approx=True)
-        # over the ceiling (forced via a 1-byte cap): no hint -> with
-        # auto-broadcast off Catalyst must use a shuffle join
-        monkeypatch.setattr(P, "DIM_BROADCAST_MAX_BYTES", 1)
-        df_big = plan_query(spark, SF_DIR, q)
-        plan_big = df_big._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" not in plan_big
-        assert ("SortMergeJoin" in plan_big
-                or "ShuffledHashJoin" in plan_big)
-        assert_df_matches_duck(df_big, duck, oracle, approx=True)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    df_hint, df_big, (plan_hint, plan_big) = _dim_join_plans(
+        spark, SF_DIR, monkeypatch)
+    # under the ceiling: hint forces BHJ even with auto off
+    assert "BroadcastHashJoin" in plan_hint
+    assert_df_matches_duck(df_hint, duck, oracle, approx=True)
+    # over the ceiling (forced via a 1-byte cap): no hint -> with
+    # auto-broadcast off Catalyst must use a shuffle join
+    assert "BroadcastHashJoin" not in plan_big
+    assert "SortMergeJoin" in plan_big or "ShuffledHashJoin" in plan_big
+    assert_df_matches_duck(df_big, duck, oracle, approx=True)
+
+
+def test_dim_broadcast_ceiling_sizes_uri_paths(spark, monkeypatch):
+    """A dimension read through a ``file:`` URI is sized like a local
+    path: plan statistics size through Hadoop's FileSystem, so the
+    1-byte ceiling drops the hint (a local-disk walk cannot size a URI
+    and would keep the forced broadcast on any remote dim)."""
+    _, _, (plan_hint, plan_big) = _dim_join_plans(
+        spark, "file://" + os.path.abspath(SF_DIR), monkeypatch)
+    assert "BroadcastHashJoin" in plan_hint
+    assert "BroadcastHashJoin" not in plan_big
+
+
+def test_plan_bytes_runs_no_job(spark):
+    """Sizing reads the optimized plan's statistics: no Spark job, and a
+    parquet scan reports its exact on-disk bytes."""
+    from aresdb_spark.operators.util import plan_bytes
+
+    path = os.path.join(SF_DIR, "part.parquet")
+    df = spark.read.parquet(path)
+    got = []
+    assert count_jobs(spark, lambda: got.append(plan_bytes(df))) == 0
+    assert got == [os.path.getsize(path)]

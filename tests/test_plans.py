@@ -179,8 +179,7 @@ def test_aql_time_filter_prunes_cold_day_dirs(spark, tmp_path):
 def test_semantic_dedup_two_level_assignment_is_arrow_batched(spark):
     """r14: the two_level assignment plans an ARROW-batched Python
     eval (ArrowEvalPython — whole record batches through numpy), never
-    the row-at-a-time BatchEvalPython, and the expression twin
-    (two_level_expr) plans no Python eval at all."""
+    the row-at-a-time BatchEvalPython."""
     from aresdb_spark.operators import similarity as S
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
@@ -192,8 +191,3 @@ def test_semantic_dedup_two_level_assignment_is_arrow_batched(spark):
     # r15: the pair stage defaults to the per-cluster Arrow kernel —
     # exactly ONE grouped-pandas node, after the single cluster shuffle
     assert plan.count("FlatMapGroupsInPandas") == 1
-    expr = S.semantic_dedup(emb, threshold=0.4, n_clusters=16,
-                            assignment="two_level_expr")
-    eplan = expr._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in eplan and "EvalPython" not in eplan
-    assert "FlatMapGroupsInPandas" not in eplan

@@ -1,3 +1,4 @@
+import time
 from datetime import datetime
 
 from pyspark.sql import Row
@@ -88,6 +89,16 @@ def test_first_seen_with_ttl_still_dedups_within_window(spark, tmp_path):
          .writeStream.foreachBatch(sink).outputMode("append")
          .trigger(availableNow=True)
          .option("checkpointLocation", str(tmp_path / "ckpt")).start())
-    q.awaitTermination(120)
+    # a processing-time timeout always asks for another (no-data) batch,
+    # so this availableNow query never terminates, and
+    # processAllAvailable never returns: wait for the data batch's
+    # progress, then stop the query
+    try:
+        deadline = time.monotonic() + 120
+        while not any(p["numInputRows"] for p in q.recentProgress):
+            assert time.monotonic() < deadline, "data batch never ran"
+            time.sleep(0.1)
+    finally:
+        q.stop()
     rows = spark.read.schema(schema).parquet(out).collect()
     assert [(r["k"], r["v"]) for r in rows] == [("x", "first")]
