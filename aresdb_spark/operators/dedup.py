@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from aresdb_spark.operators.text import tokens, tokens_oracle_sql
 from aresdb_spark.operators.util import ensure_parallelism as _parallelize
 from aresdb_spark.operators.util import let as _let
+from aresdb_spark.sources.pointer import GC_GRACE_SECONDS
 
 P = 2_147_483_647  # 2^31 - 1
 
@@ -445,15 +446,6 @@ def signature_bands(df: DataFrame, text_col: str = "text",
 
 
 SIGSTORE_BUCKETS = 16
-# Read-grace window for displaced store versions: a version unreferenced
-# by an overwrite/compaction stays on disk (and in the catalog) until it
-# has been displaced for at least this long, so a reader that resolved it
-# just before the pointer flip can finish its probe join over intact
-# files. The reference keeps displaced archive batch versions the same
-# way — purge, on its own cadence, reaps them, never the archiving swap
-# itself (memstore/purge.go). 15 min dwarfs any store-probe scan; tune
-# per deployment via the writers' ``gc_grace_seconds``.
-SIGSTORE_GC_GRACE_SECONDS = 900.0
 
 
 def _displace(state: "dict | None") -> "list[dict]":
@@ -471,7 +463,7 @@ def _displace(state: "dict | None") -> "list[dict]":
 
 
 def gc_signature_store(spark, path: str,
-                       grace_seconds: float = SIGSTORE_GC_GRACE_SECONDS
+                       grace_seconds: float = GC_GRACE_SECONDS
                        ) -> int:
     """Reap displaced store versions older than the read-grace window;
     returns how many were reaped. Run this on the lifecycle cadence
@@ -553,7 +545,7 @@ def build_signature_store(df: DataFrame, path: str, text_col: str = "text",
                           mode: str = "overwrite",
                           n_buckets: int = SIGSTORE_BUCKETS,
                           gc_grace_seconds: float =
-                          SIGSTORE_GC_GRACE_SECONDS) -> None:
+                          GC_GRACE_SECONDS) -> None:
     """Persist a corpus's banded MinHash index so later batches dedup
     against it WITHOUT re-mining the corpus (the continuous-crawl
     pattern: at 100 TB you never re-shingle history — each increment
@@ -709,7 +701,7 @@ def incremental_near_duplicates(spark, new_df: DataFrame, store_path: str,
 def compact_signature_store(spark, store_path: str, keep_ids: DataFrame,
                             id_col: str = "doc_id",
                             gc_grace_seconds: float =
-                            SIGSTORE_GC_GRACE_SECONDS) -> int:
+                            GC_GRACE_SECONDS) -> int:
     """Retention for the signature store: rewrite it down to the ids
     still in the corpus (the dedup-index half of the reference's purge
     job — a doc dropped by ``recordRetentionInDays`` must also stop

@@ -47,6 +47,7 @@ from typing import Callable, Union
 from pyspark.sql import SparkSession
 
 from aresdb_spark.sources.hotcold import DimensionStore, HotColdStore
+from aresdb_spark.sources.pointer import GC_GRACE_SECONDS
 
 ARCHIVING = "archiving"
 BACKFILL = "backfill"
@@ -111,11 +112,10 @@ class SignatureStoreHandle:
         ``gcGraceSeconds`` here — ADVICE r10 #4: the config must not be
         honored for fact/dimension stores but silently ignored for
         signature stores), else the module default."""
-        from aresdb_spark.operators.dedup import (
-            SIGSTORE_GC_GRACE_SECONDS, gc_signature_store)
+        from aresdb_spark.operators.dedup import gc_signature_store
         grace = self.grace_seconds if self.grace_seconds is not None \
             else grace_seconds if grace_seconds is not None \
-            else SIGSTORE_GC_GRACE_SECONDS
+            else GC_GRACE_SECONDS
         return gc_signature_store(spark, self.path, grace)
 
 

@@ -94,8 +94,7 @@ class DebugDaemon:
             # await the archive compaction (the reference exposes its
             # live batch list the same way, debug_handler.go
             # ShowShardMeta -> LiveStore.Batches)
-            meta["hot_pending_batches"] = \
-                len(store._pending_hot_batches())
+            meta["hot_pending_batches"] = len(store._batches("hot"))
             # committed day keys straight from the pointer (metadata)
             meta["cold_days"] = store.cold_day_keys()
             meta["backfill_queue"] = {
@@ -103,7 +102,7 @@ class DebugDaemon:
                 "bytes": store.backfill_buffer_bytes()}
         else:  # dimension store
             meta["kind"] = "dimension"
-            meta["journal_batches"] = len(store._journal_batches())
+            meta["journal_batches"] = len(store._batches("journal"))
             meta["num_mutations"] = store.num_mutations()
         return 200, meta
 

@@ -748,7 +748,9 @@ def upsert_batch_to_df(spark, buffer: "bytes | UpsertBatch",
     to its UpdateMode name. Unknown column ids error like the reference's
     ingestion path. An already-parsed ``UpsertBatch`` is accepted so
     callers that need batch metadata don't parse twice."""
+    import pyarrow as pa
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     batch = buffer if isinstance(buffer, UpsertBatch) \
         else parse_upsert_batch(buffer)
@@ -766,9 +768,15 @@ def upsert_batch_to_df(spark, buffer: "bytes | UpsertBatch",
         fields.append(T.StructField(
             name, T._parse_datatype_string(_spark_type(c.type_name))))
 
-    rows = [tuple(_wire_to_bridge(c.type_name, c.values[r]) for c in keep)
-            for r in range(len(keep[0].values) if keep else 0)]
-    return spark.createDataFrame(rows, T.StructType(fields)), modes
+    # built column by column as an Arrow table: it plans as a local
+    # relation with a byte estimate, so the store write that follows is
+    # plan-sized (a frame from a row list is RDD-backed and sizes as
+    # Long.MaxValue, landing one file per partition)
+    schema = to_arrow_schema(T.StructType(fields))
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array([_wire_to_bridge(c.type_name, v) for v in c.values],
+                  type=f.type) for c, f in zip(keep, schema)],
+        schema=schema)), modes
 
 
 def encode_upsert_batch_stream(df, schema_doc: dict, arrival_time: int,

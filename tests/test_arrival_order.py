@@ -65,8 +65,7 @@ def test_backfill_queue_resolves_duplicate_pk_in_arrival_order(
         "id int, ts timestamp, v double")
     store.ingest(spark, batch, cutoff, defer_backfill=True)
 
-    qdir = os.path.join(store.backfill_path,
-                        store.queued_backfill_batches()[0])
+    qdir = store._batch_dir("backfill", store._batches("backfill")[0]["n"])
     _assert_small_then_large(qdir)
 
     store.flush_backfill(spark)
@@ -94,7 +93,7 @@ def test_dimension_journal_resolves_duplicate_pk_in_arrival_order(
         "k int, name string")
     dim.journal_ingest(batch)
 
-    jdir = os.path.join(dim.journal_path, dim._journal_batches()[0])
+    jdir = dim._batch_dir("journal", dim._batches("journal")[0]["n"])
     _assert_small_then_large(jdir)
 
     got = {r["k"]: r["name"] for r in dim.read(spark).collect()}

@@ -81,6 +81,23 @@ def test_post_data_ingests_and_translates_enums(spark, tmp_path):
     assert rows[1]["status"] == "completed"        # overwrite-not-null kept
 
 
+def test_wire_batch_lands_one_hot_file(spark, tmp_path):
+    """A decoded wire batch is an Arrow-backed local relation with a
+    byte estimate, so its hot append is plan-sized: a 500-row batch
+    lands one file (a frame built from a row list is RDD-backed, sizes
+    as Long.MaxValue and lands one file per partition)."""
+    from aresdb_spark.sources import pointer
+
+    h = make_handler(spark, tmp_path)
+    assert h.post_data("trips", 0, batch(
+        [(T0 + i, i, i % 2, float(i)) for i in range(500)]))[0] == 200
+    store = h.stores["trips"]
+    (entry,) = pointer.read_state(store.path)["hot_batches"]
+    d = os.path.join(store.path, "hotbatch", f"batch={entry['n']}")
+    assert len([n for n in os.listdir(d) if n.endswith(".parquet")]) == 1
+    assert store.read_hot(spark).count() == 500
+
+
 def test_post_data_error_codes(spark, tmp_path):
     h = make_handler(spark, tmp_path)
     assert h.post_data("nope", 0, b"whatever")[0] == 404
@@ -292,9 +309,9 @@ def test_post_data_late_rows_take_the_cheap_paths(spark, tmp_path):
     # the number of already-queued batches
     assert counts == [2] * 4, counts
     assert len(store.queued_backfill_batches()) == 4
-    assert len(store._pending_hot_batches()) == 4
+    assert len(store._batches("hot")) == 4
     # no pending entry carries per-batch modes: reads stay on the fold
-    assert not any("modes" in e for e in store._pending_hot_batches())
+    assert not any("modes" in e for e in store._batches("hot"))
     # queued rows surface after the backfill job (reference semantics)
     assert store.read_cold(spark).count() == 0
     assert store.flush_backfill(spark) == 4
@@ -342,7 +359,7 @@ def test_post_data_dimension_routes_to_journal(spark, tmp_path):
     b.add_column(1, "Int64")
     b.add_row(); b.set_value(0, 0, 2); b.set_value(0, 1, 200)
     assert h.post_data("cities", 0, b.to_byte_array())[0] == 200
-    assert len(dim._journal_batches()) == 1       # journaled, not merged
+    assert len(dim._batches("journal")) == 1       # journaled, not merged
     assert snap_sig() == sig0                     # snapshot untouched
     got = sorted(tuple(r) for r in dim.read(spark).collect())
     assert got == [(1, 100), (2, 200)]

@@ -97,6 +97,7 @@ def test_hotcold_exactly_once(spark, duck, tmp_path):
     """Union view counts every row exactly once across hot/cold, matching
     a DuckDB oracle over the source table; archived-but-still-hot overlap
     never double-counts."""
+    from aresdb_spark.sources import pointer
     from aresdb_spark.sources.hotcold import HotColdStore
 
     from tests.conftest import load_events
@@ -114,9 +115,10 @@ def test_hotcold_exactly_once(spark, duck, tmp_path):
     # but not yet compacted) — the cutoff union must not double count
     overlap = ev.filter(F.col("ts") < F.lit(cutoff)).limit(50)
     hot_plus = store.read_hot(spark).unionByName(overlap)
-    nxt = store._next("hot")
+    st = store._state()
+    nxt = pointer.next_version(st, "hot")
     store._write_hot(hot_plus, nxt)
-    store._commit(hot=nxt)
+    store._commit(st, hot=nxt)
     assert store.read(spark, cutoff).count() == want
 
 
@@ -380,9 +382,8 @@ def test_store_mutations_are_single_writer(spark, tmp_path):
     on success and on error."""
     import pytest
 
-    from aresdb_spark.sources.hotcold import (ConcurrentWriteError,
-                                              DimensionStore, HotColdStore,
-                                              _single_writer)
+    from aresdb_spark.sources.hotcold import DimensionStore, HotColdStore
+    from aresdb_spark.sources.pointer import ConcurrentWriteError, write_lock
 
     cutoff = datetime(2024, 1, 1)
     store = HotColdStore(path=str(tmp_path / "t"), time_column="ts",
@@ -392,7 +393,7 @@ def test_store_mutations_are_single_writer(spark, tmp_path):
     batch = spark.createDataFrame(
         [(1, datetime(2024, 1, 5), 1)], "id int, ts timestamp, v int")
 
-    with _single_writer(store.path):  # a writer in flight
+    with write_lock(store.path):  # a writer in flight
         with pytest.raises(ConcurrentWriteError, match="single-writer"):
             store.ingest(spark, batch, cutoff=cutoff)
         with pytest.raises(ConcurrentWriteError):
@@ -406,7 +407,7 @@ def test_store_mutations_are_single_writer(spark, tmp_path):
 
     dim = DimensionStore(path=str(tmp_path / "d"), primary_key=("k",))
     dim.init_from(spark.createDataFrame([], "k int, v string"))
-    with _single_writer(dim.path):
+    with write_lock(dim.path):
         with pytest.raises(ConcurrentWriteError):
             dim.ingest(spark, spark.createDataFrame([(1, "a")],
                                                     "k int, v string"))
@@ -496,7 +497,7 @@ def test_ingest_hot_is_o_batch_append_only(spark, tmp_path):
     assert counts == [1] * 6, counts
     # the compacted base was never touched
     assert base_sig() == sig0
-    assert len(store._pending_hot_batches()) == 6
+    assert len(store._batches("hot")) == 6
 
     # reads resolve the pending set exactly (additive mode folds)
     rows = {r["id"]: r["v"] for r in store.read_hot(spark).collect()}
@@ -505,7 +506,7 @@ def test_ingest_hot_is_o_batch_append_only(spark, tmp_path):
 
     # explicit compaction folds identically and empties the pending set
     assert store.compact_hot(spark) == 6
-    assert store._pending_hot_batches() == []
+    assert store._batches("hot") == []
     rows2 = {r["id"]: r["v"] for r in store.read_hot(spark).collect()}
     assert rows2 == rows
 
@@ -513,9 +514,9 @@ def test_ingest_hot_is_o_batch_append_only(spark, tmp_path):
     # the fold): ingest one more, then advance the cutoff
     store.ingest(spark, spark.createDataFrame(
         [Row(id=1, ts=datetime(2024, 1, 16, 9), v=5.0)]), cutoff)
-    assert len(store._pending_hot_batches()) == 1
+    assert len(store._batches("hot")) == 1
     store.archive(spark, datetime(2024, 1, 16, 5))
-    assert store._pending_hot_batches() == []
+    assert store._batches("hot") == []
     got = {r["id"]: r["v"] for r in store.read(spark).collect()}
     assert got[1] == 16.0 and len(got) == 500  # 1 + 10 (loop) + 5
 

@@ -116,7 +116,7 @@ def test_dimension_journal_read_equals_eager(spark, tmp_path):
     assert {(r["k"], r["name"]) for r in lazy.read(spark).collect()} == want
     # compacted state is IN the snapshot now, not replay-derived
     assert {(r["k"], r["name"])
-            for r in lazy._read_snap(spark).collect()} == want
+            for r in spark.read.parquet(lazy._snap_dir()).collect()} == want
 
 
 # --- scheduler eligibility rules ---------------------------------------------

@@ -34,11 +34,12 @@ def _rows(df, cols=("v",)):
 
 def test_uncommitted_batch_dirs_are_never_scanned(spark, tmp_path):
     """An uncommitted ``hotbatch/batch=<n+1>`` dir (a writer died before
-    its commit) and an uncommitted ``backfill/batch=<k>`` dir between two
-    committed queue dirs sit beside the committed ones. ``read``,
-    ``flush_backfill`` and ``archive`` must equal the model without them:
-    the one-scan read takes its dirs from the committed state, never
-    from a listing. Add mode makes any scanned orphan row change a sum."""
+    its commit) sits beside the committed ones, and an uncommitted
+    ``backfill/batch=<k>`` dir at the next queue number is reclaimed by
+    the next committed enqueue. ``read``, ``flush_backfill`` and
+    ``archive`` must equal the model without them: the one-scan read
+    takes its dirs from the committed state, never from a listing. Add
+    mode makes any scanned orphan row change a sum."""
     store = HotColdStore(path=str(tmp_path / "t"), time_column="ts",
                          primary_key=("id",), modes={"v": "add"})
     store.init_from(spark.createDataFrame([
@@ -58,17 +59,18 @@ def test_uncommitted_batch_dirs_are_never_scanned(spark, tmp_path):
         Row(id=1, ts=datetime(2024, 1, 2, 5), v=10.0),
     ]), CUTOFF, defer_backfill=True)
     model[2] += 10.0
-    q0 = store._state()["backfill_batches"][-1]
+    q0 = store._state()["backfill_seq"]
     # uncommitted queue dir at the next number, then a committed batch
-    # that numbers above it
-    orphan(os.path.join(store.backfill_path, f"batch={q0 + 1}"),
+    # that reclaims the number
+    orphan(store._batch_dir("backfill", q0 + 1),
            [(1, datetime(2024, 1, 2, 5), 1000.0, 0)])
     store.ingest(spark, spark.createDataFrame([
         Row(id=1, ts=datetime(2024, 1, 2, 5), v=100.0),
     ]), CUTOFF, defer_backfill=True)
-    assert store._state()["backfill_batches"] == [q0, q0 + 2]
+    assert store._state()["backfill_batches"] == [{"n": q0},
+                                                  {"n": q0 + 1}]
     # uncommitted hot dir above the committed hot batches
-    hot_orphan = store._hot_batch_dir(store._state()["hot_seq"] + 1)
+    hot_orphan = store._batch_dir("hot", store._state()["hot_seq"] + 1)
     orphan(hot_orphan, [(2, datetime(2024, 1, 20, 5), 1000.0, 0),
                         (9, datetime(2024, 1, 20, 5), 1000.0, 1)])
 
@@ -219,9 +221,9 @@ def test_queue_and_journal_writes_are_file_bounded(spark, tmp_path):
             for i in ids]).repartition(16), CUTOFF, defer_backfill=True)
         dim.journal_ingest(_frame(spark, [
             dict(id=i, name=str(i)) for i in ids]).repartition(16))
-        queued = os.path.join(store.backfill_path,
-                              store.queued_backfill_batches()[-1])
-        journal = os.path.join(dim.journal_path, dim._journal_batches()[-1])
+        queued = store._batch_dir("backfill",
+                                  store._batches("backfill")[-1]["n"])
+        journal = dim._batch_dir("journal", dim._batches("journal")[-1]["n"])
         return len(_parquet_files(queued)), len(_parquet_files(journal))
 
     assert write(range(64)) == (1, 1)
@@ -243,8 +245,36 @@ def test_small_batch_ingests_as_one_file_per_dir(spark, tmp_path):
     store.ingest(spark, _frame(spark, [
         dict(id=i, ts=datetime(2024, 1, 2 if i % 2 else 16, 5), v=1.0)
         for i in range(500)]).repartition(4), CUTOFF, defer_backfill=True)
-    (entry,) = store._state()["hot_batches"]
-    (queued,) = store.queued_backfill_batches()
-    assert len(_parquet_files(store._hot_batch_dir(entry["n"]))) == 1
+    (entry,) = store._batches("hot")
+    (queued,) = store._batches("backfill")
+    assert len(_parquet_files(store._batch_dir("hot", entry["n"]))) == 1
     assert len(_parquet_files(
-        os.path.join(store.backfill_path, queued))) == 1
+        store._batch_dir("backfill", queued["n"]))) == 1
+
+
+def test_uncommitted_journal_dir_is_invisible_and_reclaimed(spark, tmp_path):
+    """A journal dir whose writer died before its commit (written here
+    at the first number) is invisible to ``read``, ``num_mutations``,
+    ``snapshot`` and the debug daemon's shard meta, exactly like an
+    uncommitted hot batch; the next ``journal_ingest`` takes its number
+    and overwrites it. Add mode shows any replay of the orphan: 1011,
+    not 11."""
+    from aresdb_spark.streaming.debug_handler import DebugDaemon
+
+    dim = DimensionStore(path=str(tmp_path / "d"), primary_key=("id",),
+                         modes={"n": "add"})
+    dim.init_from(spark.createDataFrame([Row(id=1, n=10)]))
+    spark.createDataFrame([(1, 1000, 0)], "id long, n long, __seq long") \
+        .write.parquet(os.path.join(dim.path, "journal", "batch=0"))
+    meta = DebugDaemon(spark, {"d": dim}).show_shard_meta("d")[1]
+
+    assert _rows(dim.read(spark), ("n",)) == {1: (10,)}
+    assert dim.num_mutations() == 0
+    assert (meta["journal_batches"], meta["num_mutations"]) == (0, 0)
+    assert dim.snapshot(spark) == 0
+    dim.journal_ingest(spark.createDataFrame([Row(id=1, n=1)]))
+    assert dim._batches("journal") == [{"n": 0}]
+    assert _rows(dim.read(spark), ("n",)) == {1: (11,)}
+    assert dim.num_mutations() == 1
+    assert dim.snapshot(spark) == 1
+    assert _rows(dim.read(spark), ("n",)) == {1: (11,)}

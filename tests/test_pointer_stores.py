@@ -5,6 +5,7 @@ writer between the data write and the flip must leave the previous
 state fully live — the reference's publication order (vector-party
 files, then the disk metastore's batch-version/snapshot pointer)."""
 
+import os
 from datetime import datetime
 
 import pytest
@@ -75,7 +76,7 @@ def test_archive_crash_before_flip_preserves_old_state(spark, tmp_path):
 
 
 def test_flush_backfill_crash_before_flip_requeues(spark, tmp_path):
-    """The cold flip and the queue-consumed watermark commit together:
+    """The cold flip and the emptied queue ledger commit together:
     a crash mid-flush leaves the full queue visible and cold untouched;
     the retried flush folds every batch exactly once."""
     store = _fact_store(spark, tmp_path)
@@ -99,17 +100,18 @@ def test_flush_backfill_crash_before_flip_requeues(spark, tmp_path):
     assert store.queued_backfill_batches() == []
     assert sorted(r.id for r in store.read_cold(spark).collect()) \
         == [1, 2, 10, 11]
-    # a batch queued after the flush numbers ABOVE the watermark even
-    # though the consumed dirs are gone (no number reuse)
+    # a batch queued after the flush numbers above ``backfill_seq``,
+    # never reusing the consumed dir that still awaits gc
+    seq = store._state()["backfill_seq"]
+    assert os.path.isdir(store._batch_dir("backfill", seq))
     store.ingest(spark, late.withColumn("id", F.col("id") + 5),
                  cutoff=datetime(2024, 1, 15), defer_backfill=True)
-    names = store.queued_backfill_batches()
-    assert len(names) == 1
-    assert int(names[0].split("=")[1]) > store._state()["backfill_consumed"]
+    assert store.queued_backfill_batches() == [f"batch={seq + 1}"]
+    assert os.path.isdir(store._batch_dir("backfill", seq))
 
 
 def test_dimension_snapshot_crash_before_flip(spark, tmp_path):
-    """Snapshot writes snap_v<N+1> then flips snap+journal watermark in
+    """Snapshot writes snap_v<N+1> then flips snap + journal ledger in
     one commit: a crash before the flip keeps the old snapshot + full
     journal (read() replays it, nothing lost); the retry compacts."""
     from aresdb_spark.sources.hotcold import DimensionStore
@@ -127,17 +129,18 @@ def test_dimension_snapshot_crash_before_flip(spark, tmp_path):
             dim.snapshot(spark)
 
     # old snapshot + journal still live and consistent
-    assert len(dim._journal_batches()) == 1
+    assert len(dim._batches("journal")) == 1
     assert {(r.k, r.name) for r in dim.read(spark).collect()} == want
 
     assert dim.snapshot(spark) == 2  # retry compacts both mutations
-    assert dim._journal_batches() == []
+    assert dim._batches("journal") == []
     assert {(r.k, r.name) for r in dim.read(spark).collect()} == want
-    # journal numbering continues above the watermark after GC
+    # journal numbering continues above ``journal_seq``, never reusing
+    # the consumed dirs that still await gc
+    seq = dim._state()["journal_seq"]
+    assert os.path.isdir(dim._batch_dir("journal", seq))
     dim.journal_ingest(spark.createDataFrame([Row(k=4, name="d")]))
-    names = dim._journal_batches()
-    assert len(names) == 1
-    assert int(names[0].split("=")[1]) > dim._state()["journal_consumed"]
+    assert dim._batches("journal") == [{"n": seq + 1}]
     assert {(r.k, r.name) for r in dim.read(spark).collect()} \
         == want | {(4, "d")}
 
@@ -145,9 +148,9 @@ def test_dimension_snapshot_crash_before_flip(spark, tmp_path):
 def test_reinit_is_versioned_and_hides_stale_backfill(spark, tmp_path):
     """Re-initializing an existing store is a normal versioned mutation:
     fresh dirs (never an in-place overwrite of the live hot_v0/cold_v0),
-    and backfill batches queued before the re-init stay invisible behind
-    the advanced watermark — a later flush must not fold stale pre-reinit
-    data into the new dataset."""
+    and backfill batches queued before the re-init leave the committed
+    ledger — a later flush must not fold stale pre-reinit data into the
+    new dataset."""
     store = _fact_store(spark, tmp_path)
     stale = spark.createDataFrame(
         [Row(id=10, ts=datetime(2024, 1, 2, 5), v=10.0)])
@@ -175,7 +178,7 @@ def test_reinit_is_versioned_and_hides_stale_backfill(spark, tmp_path):
     dim.journal_ingest(spark.createDataFrame([Row(k=2, name="b")]))
     dim.init_from(spark.createDataFrame([Row(k=9, name="z")]))
     assert dim._state()["snap"] == 1
-    assert dim._journal_batches() == []  # stale journal hidden
+    assert dim._batches("journal") == []  # stale journal hidden
     assert {(r.k, r.name) for r in dim.read(spark).collect()} == {(9, "z")}
 
 
@@ -224,13 +227,13 @@ def test_reinit_crash_never_pairs_new_schema_with_old_dirs(spark, tmp_path):
 
 def test_snapshot_journal_window_exactly_once(spark, tmp_path):
     """VERDICT r8 directive 5: the window between a journal append and
-    the snapshot's watermark-bounded truncate. The snapshot's commit
-    flips snap + watermark + displaced-ledger together and deletes
+    the snapshot's journal truncate. The snapshot's commit flips snap +
+    emptied journal ledger + displaced-ledger together and deletes
     NOTHING at the flip -- consumed journal dirs and the old snapshot
     survive the read-grace window, so (a) a reader that resolved the
     OLD state mid-replay finishes over intact files, and (b) a reader
-    of the NEW state applies every mutation exactly once (the watermark
-    hides the surviving dirs: add-mode would read 12, not 11, on a
+    of the NEW state applies every mutation exactly once (the emptied
+    ledger hides the surviving dirs: add-mode would read 12, not 11, on a
     double replay). A kill inside the age-gated GC (files deleted,
     ledger commit lost) self-heals: the next pass re-reaps as a no-op."""
     import os
@@ -249,10 +252,10 @@ def test_snapshot_journal_window_exactly_once(spark, tmp_path):
 
     assert dim.snapshot(spark) == 2
     # nothing deleted at the flip: consumed dirs + old snap ledgered
-    on_disk = [n for n in os.listdir(dim.journal_path)
+    on_disk = [n for n in os.listdir(os.path.join(dim.path, "journal"))
                if n.startswith("batch=")]
     assert len(on_disk) == 2
-    assert dim._journal_batches() == []          # hidden by watermark
+    assert dim._batches("journal") == []          # ledger emptied
     ledger = {e["dir"] for e in dim._state()["displaced"]}
     assert {"journal/" + n for n in on_disk} <= ledger
     # old-state reader finishes its replay across the snapshot commit
@@ -261,12 +264,11 @@ def test_snapshot_journal_window_exactly_once(spark, tmp_path):
     assert {(r.k, r.n) for r in dim.read(spark).collect()} == want
     assert dim.snapshot(spark) == 0  # nothing left to compact
 
-    # a writer appending AFTER the snapshot numbers above the watermark
-    # even though the consumed dirs still exist (no number reuse)
+    # a writer appending AFTER the snapshot numbers above
+    # ``journal_seq``, never reusing a consumed dir (they still exist)
+    seq = dim._state()["journal_seq"]
     dim.journal_ingest(spark.createDataFrame([Row(k=1, n=5)]))
-    names = dim._journal_batches()
-    assert len(names) == 1
-    assert int(names[0].split("=")[1]) > dim._state()["journal_consumed"]
+    assert dim._batches("journal") == [{"n": seq + 1}]
     assert {(r.k, r.n) for r in dim.read(spark).collect()} \
         == {(1, 16), (2, 20), (3, 30)}
 
@@ -283,7 +285,7 @@ def test_snapshot_journal_window_exactly_once(spark, tmp_path):
             dim.gc(grace_seconds=0)
     finally:
         pointer_mod.commit_state = real_commit
-    left = [n for n in os.listdir(dim.journal_path)
+    left = [n for n in os.listdir(os.path.join(dim.path, "journal"))
             if n.startswith("batch=")]
     assert len(left) < 2                         # deletes happened
     assert dim._state()["displaced"]             # ledger survived crash
@@ -427,7 +429,7 @@ def test_hot_reader_survives_concurrent_compaction(spark, tmp_path):
         store.ingest(spark, spark.createDataFrame(
             [Row(id=30 + h, ts=datetime(2024, 1, 21, h), v=float(h))]),
             cutoff=cutoff)
-    assert len(store._pending_hot_batches()) == 3
+    assert len(store._batches("hot")) == 3
     reader = store.read_hot(spark)           # resolves pending dirs
     want = sorted(r.id for r in reader.collect())
 
@@ -553,9 +555,9 @@ def test_deferred_enqueue_crash_before_commit_is_invisible(spark, tmp_path):
     # not ledgered; the hot dir is an uncommitted orphan
     import os
     assert any(n.startswith("batch=")
-               for n in os.listdir(store.backfill_path))
+               for n in os.listdir(os.path.join(store.path, "backfill")))
     assert store.queued_backfill_batches() == []
-    assert store._pending_hot_batches() == []
+    assert store._batches("hot") == []
     assert sorted(r.id for r in store.read(spark).collect()) == [1, 2]
 
     # the streaming replay of the SAME micro-batch is clean
@@ -599,3 +601,32 @@ def test_read_without_committed_state_names_the_fix(spark, tmp_path,
             read(spark)
         assert str(root) in str(e.value)
         assert "build_signature_store" in str(e.value)
+
+
+@pytest.mark.parametrize("kind", ["hotcold", "dimension"])
+def test_other_state_format_names_the_fix(spark, tmp_path, kind):
+    """Both stores read one state layout, format 3: a root committed in
+    any other format (format 2 kept its queue and journal behind
+    ``*_consumed`` watermarks) raises one error naming the root and
+    ``init_from`` from every reader and from a re-init over it — no
+    conversion path, nothing read through the old keys."""
+    from aresdb_spark.sources.hotcold import DimensionStore
+
+    if kind == "hotcold":
+        store = _fact_store(spark, tmp_path)
+        reinit = [lambda: store.init_from(
+            spark.createDataFrame([Row(id=1, ts=datetime(2024, 1, 1),
+                                       v=1.0)]), datetime(2024, 1, 15))]
+        reads = [store.read, store.read_hot, store.read_cold]
+    else:
+        store = DimensionStore(path=str(tmp_path / "d"), primary_key=("k",))
+        store.init_from(spark.createDataFrame([Row(k=1, name="a")]))
+        reinit = [lambda: store.init_from(
+            spark.createDataFrame([Row(k=1, name="a")]))]
+        reads = [store.read]
+    st = pointer_mod.read_state(store.path)
+    pointer_mod.commit_state(store.path, {**st, "format": 2})
+    for call in [lambda r=r: r(spark) for r in reads] + reinit:
+        with pytest.raises(ValueError, match="init_from") as e:
+            call()
+        assert store.path in str(e.value) and "format 2" in str(e.value)
