@@ -28,7 +28,7 @@ from aresdb_spark.aql import expr as E
 from aresdb_spark.aql import timeutil
 from aresdb_spark.aql.model import Dimension, Measure, Query
 from aresdb_spark.catalog import Catalog
-from aresdb_spark.operators.util import fits_broadcast
+from aresdb_spark.operators.util import fits_broadcast, lit
 
 # measure aggregate whitelist (reference: query/aql_compiler.go:1156-1249;
 # count rewritten to sum(1) at :1191-1197; hll rewrite at
@@ -466,11 +466,14 @@ class Planner:
         # already pushed into the fact scan by _build_joined)
         tcol_name, lo, hi = self._time_bounds(q)
         if tcol_name is not None and tcol_name != self.catalog.table_def(q.table).time_column:
-            tcol = resolver(tcol_name)
-            if lo is not None:
-                df = df.filter(tcol >= F.lit(lo.replace(tzinfo=None)))
-            if hi is not None:
-                df = df.filter(tcol < F.lit(hi.replace(tzinfo=None)))
+            # one filter; lit() renders each bound as its UTC instant
+            tcol, cond = resolver(tcol_name), None
+            for b, cmp in ((lo, tcol.__ge__), (hi, tcol.__lt__)):
+                if b is not None:
+                    c = cmp(F.expr(lit(b)))
+                    cond = c if cond is None else cond & c
+            if cond is not None:
+                df = df.filter(cond)
 
         tcols = self._timestamp_time_cols(q, df)
         for i, f in enumerate(q.filters):

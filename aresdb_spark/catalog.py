@@ -21,6 +21,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aresdb_spark.operators.util import ident, lit, utc_naive
+
 
 def _epoch_ns(d) -> int:
     """UTC-naive datetime → epoch nanoseconds, integer arithmetic end to
@@ -146,30 +148,25 @@ class Catalog:
             df = spark.read.parquet(f"{self.sf_dir}/{name}.parquet")
         if time_range is not None and tdef.time_column:
             # normalize bounds through the SAME helper the hotcold
-            # day-list pruning uses (_utc_naive): a tz-aware non-UTC
+            # day-list pruning uses (utc_naive): a tz-aware non-UTC
             # bound handled as bare wall time here would disagree with
             # the UTC pruning and drop whole days the exact filter
-            # should match (ADVICE r10 #2)
-            from aresdb_spark.sources.hotcold import _utc_naive
-            lo, hi = time_range
-            lo = _utc_naive(lo) if lo is not None else None
-            hi = _utc_naive(hi) if hi is not None else None
+            # should match (ADVICE r10 #2). Both bounds are ONE filter.
             tc = tdef.time_column
-            if tc in tdef.nanos_columns and dict(df.dtypes).get(tc) == "bigint":
-                if lo is not None:
-                    df = df.filter(F.col(tc) >= _epoch_ns(lo))
-                if hi is not None:
-                    df = df.filter(F.col(tc) < _epoch_ns(hi))
-            else:
-                if lo is not None:
-                    df = df.filter(F.col(tc) >= F.lit(lo))
-                if hi is not None:
-                    df = df.filter(F.col(tc) < F.lit(hi))
+            raw = tc in tdef.nanos_columns and \
+                dict(df.dtypes).get(tc) == "bigint"
+            bounds = [f"{ident(tc)} {op} "
+                      f"{_epoch_ns(utc_naive(b)) if raw else lit(b)}"
+                      for op, b in zip((">=", "<"), time_range)
+                      if b is not None]
+            if bounds:
+                df = df.filter(" AND ".join(bounds))
         for c in tdef.nanos_columns:
             if c in df.columns and dict(df.dtypes)[c] == "bigint":
                 # nanos → micros by integer division (no double rounding;
                 # matches DuckDB's truncating ns→us cast)
-                df = df.withColumn(c, F.timestamp_micros(F.expr(f"{c} div 1000")))
+                df = df.withColumn(
+                    c, F.expr(f"timestamp_micros({ident(c)} div 1000)"))
         if time_range is None and not tdef.hotcold:
             # hotcold/dimension stores resolve through the pointer: a
             # cached plan would pin the version dirs of ONE committed

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from aresdb_spark.operators.text import tokens, tokens_oracle_sql
 from aresdb_spark.operators.util import ensure_parallelism as _parallelize
+from aresdb_spark.operators.util import hof as _hof
 from aresdb_spark.operators.util import let as _let
 from aresdb_spark.sources.pointer import GC_GRACE_SECONDS
 
@@ -57,9 +58,10 @@ MAX_BUCKET_SIZE = 100_000
 SHINGLE_SIZE = 3
 
 
-def _hash28(c: Column) -> Column:
-    """Portable 28-bit integer hash of a string (md5-derived)."""
-    return F.conv(F.substring(F.md5(c), 1, 7), 16, 10).cast("long")
+def _hash28(c: str) -> str:
+    """Portable 28-bit integer hash of a string (md5-derived), as Spark
+    SQL text over the SQL text ``c``."""
+    return f"CAST(conv(substring(md5({c}), 1, 7), 16, 10) AS BIGINT)"
 
 
 def _hash28_sql(expr: str) -> str:
@@ -110,22 +112,24 @@ def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 # ---------------------------------------------------------------------------
 
 
+def _token_runs(text: Column, n: int, stride: int = 1,
+                fn: str = "") -> Column:
+    """Distinct runs of ``n`` lowercased tokens starting every ``stride``
+    tokens, each joined by spaces and passed through the SQL function
+    ``fn``; docs shorter than ``n`` tokens contribute their full token
+    string as one run. The token array is let-bound so tokenization runs
+    once per row even though the body references it three times."""
+    return _let(tokens(F.lower(text)), (
+        f"tk -> CASE WHEN size(tk) >= {n} THEN array_distinct(transform("
+        f"sequence(1, greatest(size(tk) - {n - 1}, 1), {stride}), "
+        f"i -> {fn}(array_join(slice(tk, i, {n}), ' ')))) "
+        f"ELSE array({fn}(array_join(tk, ' '))) END"))
+
+
 def shingles(text: Column, n: int = SHINGLE_SIZE) -> Column:
     """Word n-gram shingles of the lowercased text; docs shorter than n
-    tokens contribute their full token string as a single shingle.
-
-    The token array is let-bound so tokenization runs once per row even
-    though it is referenced three times below."""
-    def build(toks: Column) -> Column:
-        joined = F.array_join(toks, " ")
-        grams = F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))),
-            lambda i: F.array_join(F.slice(toks, i, n), " "),
-        )
-        return F.when(F.size(toks) >= n, F.array_distinct(grams)) \
-                .otherwise(F.array(joined))
-
-    return _let(tokens(F.lower(text)), build)
+    tokens contribute their full token string as a single shingle."""
+    return _token_runs(text, n)
 
 
 def shingles_oracle_sql(col: str, n: int = SHINGLE_SIZE) -> str:
@@ -138,7 +142,7 @@ def shingles_oracle_sql(col: str, n: int = SHINGLE_SIZE) -> str:
 
 
 def hashed_shingles(text: Column, n: int = SHINGLE_SIZE) -> Column:
-    return F.transform(shingles(text, n), _hash28)
+    return _hof("transform", shingles(text, n), f"s -> {_hash28('s')}")
 
 
 def hashed_shingles_sql(col: str, n: int = SHINGLE_SIZE) -> str:
@@ -159,12 +163,11 @@ def minhash_signature(text: Column, n_hashes: int = N_HASHES) -> Column:
     per row. The signature is then ONE transform over the literal
     (A_j, B_j) array, each element the min of
     ``transform(hs, h -> (a*h + b) % P)`` over the ~dozens of 28-bit
-    hashes — so building the expression costs a fixed number of
-    Py4J round trips, whatever ``n_hashes`` is."""
-    perms = F.slice(F.expr(_PERMUTATIONS_SQL), 1, n_hashes)
-    return _let(hashed_shingles(text), lambda hs: F.transform(
-        perms, lambda p: F.array_min(F.transform(
-            hs, lambda h: (p["a"] * h + p["b"]) % F.lit(P)))))
+    hashes — built as Spark-SQL text, so the expression costs a fixed
+    handful of Py4J round trips, whatever ``n_hashes`` is."""
+    return _let(hashed_shingles(text), (
+        f"hs -> transform(slice({_PERMUTATIONS_SQL}, 1, {n_hashes}), "
+        f"p -> array_min(transform(hs, h -> (p.a * h + p.b) % {P})))"))
 
 
 def minhash_signature_sql(col: str, n_hashes: int = N_HASHES) -> str:
@@ -181,29 +184,30 @@ def minhash_signature_sql(col: str, n_hashes: int = N_HASHES) -> str:
 # ---------------------------------------------------------------------------
 
 
-def _band_hash(sig: Column, b, rows_per_band: int) -> Column:
-    """Band hash: md5 over the band's slice of the signature — THE
-    persisted-store format; both the in-corpus LSH and the incremental
-    store derive buckets from this one definition. ``b`` is the band
-    number, a Python int or an int Column (a lambda variable over the
-    band sequence)."""
-    piece = F.slice(sig, b * rows_per_band + 1, rows_per_band)
-    return F.md5(F.array_join(
-        F.transform(piece, lambda x: x.cast("string")), "-"))
+def _bands(n_bands: int, rows_per_band: int, fn: str = "") -> str:
+    """SQL text over column ``sig``: one transform over
+    ``sequence(0, n_bands - 1)`` giving the array of (band, bh) structs
+    that the band explode unnests. ``bh`` is the band hash, md5 over the
+    band's slice of the signature — THE persisted-store format; both the
+    in-corpus LSH and the incremental store derive buckets from this one
+    definition — passed through the SQL function ``fn``."""
+    return (f"transform(sequence(0, {n_bands - 1}), b -> named_struct("
+            f"'band', b, 'bh', {fn}(md5(array_join(transform(slice(sig, "
+            f"b * {rows_per_band} + 1, {rows_per_band}), "
+            f"x -> CAST(x AS STRING)), '-')))))")
 
 
-def _bands(n_bands: int, band_value) -> Column:
-    """One transform over ``sequence(0, n_bands - 1)``: the array of
-    (band, <value>) structs that the band explode unnests, built with
-    one lambda whatever ``n_bands`` is. ``band_value`` maps the band
-    Column to the value Column, whose alias names the struct field."""
-    return F.transform(F.sequence(F.lit(0), F.lit(n_bands - 1)),
-                       lambda b: F.struct(b.alias("band"), band_value(b)))
+# Every (id_a, id_b) pair of a sorted ``ids`` bucket, id_a first, as the
+# struct column ``p``.
+_BUCKET_PAIRS = (
+    "explode(flatten(transform(ids, (a, i) -> transform(slice(ids, i + 2, "
+    "greatest(0, size(ids) - i - 1)), "
+    "b -> named_struct('id_a', a, 'id_b', b))))) AS p")
 
 
 def _band_selects_sql(src: str, n_bands: int, rows_per_band: int,
                       extra: str = "") -> str:
-    """DuckDB twin of _band_hash, one SELECT per band over ``src``
+    """DuckDB twin of _bands, one SELECT per band over ``src``
     (which must expose ``id`` and ``sig``)."""
     return "\nUNION ALL\n".join(
         f"  SELECT id, {extra}{b} AS band, "
@@ -248,11 +252,8 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
     # no NIC prices the exchange). The PERSISTED store format
     # (signature_bands) keeps the hex string — only this transient
     # in-corpus exchange narrows.
-    bands = base.select(
-        "id",
-        F.explode(_bands(n_bands, lambda b: F.unhex(
-            _band_hash(F.col("sig"), b, rows_per_band)).alias("bh")))
-        .alias("bb"),
+    bands = base.selectExpr(
+        "id", f"explode({_bands(n_bands, rows_per_band, 'unhex')}) AS bb"
     ).select("id", "bb.band", "bb.bh")
 
     buckets = (bands.groupBy("band", "bh")
@@ -268,13 +269,7 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
             F.lit("LSH bucket of size "), F.size("ids").cast("string"),
             F.lit(f" exceeds max_bucket_size={max_bucket_size}; run exact "
                   "dedup first or raise max_bucket_size"))).isNull())
-    combos = F.flatten(F.transform(
-        F.col("ids"),
-        lambda a, i: F.transform(
-            F.slice(F.col("ids"), i + 2,
-                    F.greatest(F.lit(0), F.size(F.col("ids")) - i - 1)),
-            lambda b: F.struct(a.alias("id_a"), b.alias("id_b")))))
-    return (buckets.select(F.explode(combos).alias("p"))
+    return (buckets.selectExpr(_BUCKET_PAIRS)
             .select("p.id_a", "p.id_b").distinct())
 
 
@@ -437,10 +432,8 @@ def signature_bands(df: DataFrame, text_col: str = "text",
     sig = minhash_signature(F.col(text_col))
     base = df.select(F.col(id_col).alias("id"), sig.alias("sig"))
 
-    return (base.select(
-        "id", "sig",
-        F.explode(_bands(n_bands, lambda b: _band_hash(
-            F.col("sig"), b, rows_per_band).alias("bh"))).alias("bb"))
+    return (base.selectExpr(
+        "id", "sig", f"explode({_bands(n_bands, rows_per_band)}) AS bb")
         .select("id", "sig", "bb.band", "bb.bh",
                 F.substring("bb.bh", 1, 1).alias("bhp")))
 
@@ -826,10 +819,11 @@ WHERE {agree} >= {threshold}
 SIMHASH_BITS = 32
 
 
-def _hash32(c: Column) -> Column:
-    """Full-entropy 32-bit token hash (first 8 md5 hex digits). SimHash
-    only — MinHash keeps the 28-bit hash so A*h stays inside int64."""
-    return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
+def _hash32(c: str) -> str:
+    """Full-entropy 32-bit token hash (first 8 md5 hex digits), as SQL
+    text over ``c``. SimHash only — MinHash keeps the 28-bit hash so A*h
+    stays inside int64."""
+    return f"CAST(conv(substring(md5({c}), 1, 8), 16, 10) AS BIGINT)"
 
 
 def _hash32_sql(expr: str) -> str:
@@ -843,26 +837,16 @@ def simhash(text: Column, bits: int = SIMHASH_BITS) -> Column:
     Single fold: ONE aggregate() pass over the token array carrying an
     array<int> of per-bit counters (vs. 32 independent folds, which blew
     up codegen and re-scanned the array per bit)."""
-    hs = F.transform(tokens(F.lower(text)), _hash32)
-    idx = F.sequence(F.lit(0), F.lit(bits - 1))
+    idx = f"sequence(0, {bits - 1})"
     # 2^b by float pow is exact for b ≤ 31; (h div 2^b) mod 2 = bit b of h
-    sums = F.aggregate(
-        hs,
-        F.array_repeat(F.lit(0), bits),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(
-                idx,
-                lambda b: F.when(
-                    F.floor(h / F.pow(F.lit(2.0), b.cast("double"))).cast("long") % 2 == 1,
-                    F.lit(1)).otherwise(F.lit(-1))),
-            lambda a, s: a + s),
-    )
-    packed = F.zip_with(
-        sums, idx,
-        lambda s, b: F.when(s > 0, F.pow(F.lit(2.0), b.cast("double")).cast("long"))
-                      .otherwise(F.lit(0).cast("long")))
-    return F.aggregate(packed, F.lit(0).cast("long"), lambda acc, x: acc + x)
+    pow2 = "pow(2.0D, CAST(b AS DOUBLE))"
+    sums = (f"aggregate(hs, array_repeat(0, {bits}), (acc, h) -> zip_with("
+            f"acc, transform({idx}, b -> CASE WHEN CAST(floor(h / {pow2}) "
+            f"AS BIGINT) % 2 = 1 THEN 1 ELSE -1 END), (a, s) -> a + s))")
+    hs = _hof("transform", tokens(F.lower(text)), f"t -> {_hash32('t')}")
+    return _let(hs, f"hs -> aggregate(zip_with({sums}, {idx}, (s, b) -> CASE "
+                f"WHEN s > 0 THEN CAST({pow2} AS BIGINT) ELSE CAST(0 AS "
+                f"BIGINT) END), CAST(0 AS BIGINT), (acc, x) -> acc + x)")
 
 
 def simhash_oracle_sql(col: str, bits: int = SIMHASH_BITS) -> str:
@@ -1214,18 +1198,7 @@ def _token_windows(text: Column, window: int, stride: int) -> Column:
     """Distinct md5 hashes of every `window`-token run (at `stride`);
     docs shorter than the window contribute their whole text as one
     window, mirroring the shingle convention."""
-    def build(toks: Column) -> Column:
-        joined = F.array_join(toks, " ")
-        runs = F.transform(
-            F.sequence(F.lit(1),
-                       F.greatest(F.size(toks) - (window - 1), F.lit(1)),
-                       F.lit(stride)),
-            lambda i: F.md5(F.array_join(F.slice(toks, i, window), " ")),
-        )
-        return F.when(F.size(toks) >= window, F.array_distinct(runs)) \
-                .otherwise(F.array(F.md5(joined)))
-
-    return _let(tokens(F.lower(text)), build)
+    return _token_runs(text, window, stride, "md5")
 
 
 def shared_substring_pairs(df: DataFrame, text_col: str = "text",
@@ -1249,13 +1222,7 @@ def shared_substring_pairs(df: DataFrame, text_col: str = "text",
     buckets = (w.groupBy("h")
                .agg(F.array_sort(F.collect_list("id")).alias("ids"))
                .filter(F.size("ids") >= 2))
-    combos = F.flatten(F.transform(
-        F.col("ids"),
-        lambda a, i: F.transform(
-            F.slice(F.col("ids"), i + 2,
-                    F.greatest(F.lit(0), F.size(F.col("ids")) - i - 1)),
-            lambda b: F.struct(a.alias("id_a"), b.alias("id_b")))))
-    return (buckets.select(F.explode(combos).alias("p"))
+    return (buckets.selectExpr(_BUCKET_PAIRS)
             .groupBy("p.id_a", "p.id_b")
             .agg(F.count("*").alias("shared_windows"))
             .select(F.col("id_a"), F.col("id_b"), "shared_windows"))

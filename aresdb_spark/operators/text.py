@@ -22,7 +22,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from aresdb_spark.operators.util import hof as _hof
 from aresdb_spark.operators.util import let as _let
+from aresdb_spark.operators.util import lit as _lit_sql
 
 # small fixed stopword sets (language ID by stopword hits — the classic
 # n-gram/stopword heuristic; deterministic and engine-portable)
@@ -33,7 +35,7 @@ STOPWORDS_FR = ("le", "la", "les", "et", "est", "un", "une", "dans", "pour", "qu
 
 def tokens(text: Column) -> Column:
     """Whitespace tokenization; empty string → empty array (not [''])."""
-    return F.filter(F.split(F.trim(text), r"\s+"), lambda t: t != "")
+    return _hof("filter", F.split(F.trim(text), r"\s+"), "t -> t != ''")
 
 
 def token_count(text: Column) -> Column:
@@ -64,49 +66,43 @@ def bpe_token_count_oracle_sql(col: str) -> str:
     return f"len(regexp_extract_all({col}, '{_BPE_RE}'))::INT"
 
 
-# --- internals over a bound lowercase-token array -----------------------------
+# --- internals: Spark-SQL text over a let-bound token array ``tk`` -----------
 
 
-def _sw_ratio(toks: Column, stopwords: tuple[str, ...]) -> Column:
-    hits = F.size(F.filter(toks, lambda t: t.isin(*stopwords)))
-    return hits.cast("double") / F.greatest(F.size(toks), F.lit(1)).cast("double")
+def _hits(stopwords: tuple[str, ...]) -> str:
+    return f"size(filter(tk, t -> t IN ({', '.join(map(_lit_sql, stopwords))})))"
 
 
-def _mean_len(toks: Column) -> Column:
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return total.cast("double") / F.greatest(F.size(toks), F.lit(1)).cast("double")
+_LEN_SUM = "aggregate(tk, 0, (acc, t) -> acc + length(t))"
+_FP = "md5(array_join(tk, ' '))"
 
 
-def _quality(toks: Column) -> Column:
-    n_tok = F.size(toks).cast("double")
-    len_score = F.least(n_tok / F.lit(50.0), F.lit(1.0))
-    sw_score = F.least(_sw_ratio(toks, STOPWORDS_EN) * F.lit(5.0), F.lit(1.0))
-    mtl = _mean_len(toks)
-    mtl_score = F.when((mtl >= 3.0) & (mtl <= 10.0), F.lit(1.0)).otherwise(F.lit(0.5))
-    return (len_score + sw_score + mtl_score) / F.lit(3.0)
+def _stats(n: str, en: str, de: str, fr: str, len_sum: str) -> dict:
+    """Every derived statistic from the primitive counters (SQL text):
+    token count ``n``, per-language stopword hits, total token length."""
+    nd = f"CAST(greatest({n}, 1) AS DOUBLE)"
+    sw, mtl = f"CAST({en} AS DOUBLE) / {nd}", f"CAST({len_sum} AS DOUBLE) / {nd}"
+    return {
+        "stopword_ratio": sw, "mean_token_len": mtl,
+        "quality": f"(least(CAST({n} AS DOUBLE) / 50.0D, 1.0D) + least({sw} "
+                   f"* 5.0D, 1.0D) + CASE WHEN {mtl} >= 3.0D AND {mtl} <= "
+                   f"10.0D THEN 1.0D ELSE 0.5D END) / 3.0D",
+        "lang_id": f"CASE WHEN {en} = 0 AND {de} = 0 AND {fr} = 0 THEN "
+                   f"'unknown' WHEN {en} >= {de} AND {en} >= {fr} THEN 'en' "
+                   f"WHEN {de} >= {fr} THEN 'de' ELSE 'fr' END"}
 
 
-def _lang(toks: Column) -> Column:
-    en = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS_EN)))
-    de = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS_DE)))
-    fr = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS_FR)))
-    return (
-        F.when((en == 0) & (de == 0) & (fr == 0), F.lit("unknown"))
-        .when((en >= de) & (en >= fr), F.lit("en"))
-        .when(de >= fr, F.lit("de"))
-        .otherwise(F.lit("fr"))
-    )
-
-
-def _fp(toks: Column) -> Column:
-    return F.md5(F.array_join(toks, " "))
+_TK_STATS = _stats("size(tk)", _hits(STOPWORDS_EN), _hits(STOPWORDS_DE),
+                   _hits(STOPWORDS_FR), _LEN_SUM)
 
 
 # --- public operators ---------------------------------------------------------
 
 
 def stopword_ratio(text: Column, stopwords: tuple[str, ...] = STOPWORDS_EN) -> Column:
-    return _let(tokens(F.lower(text)), lambda tk: _sw_ratio(tk, stopwords))
+    return _let(tokens(F.lower(text)),
+                f"tk -> CAST({_hits(stopwords)} AS DOUBLE) / "
+                f"CAST(greatest(size(tk), 1) AS DOUBLE)")
 
 
 def stopword_ratio_oracle_sql(col: str, stopwords: tuple[str, ...] = STOPWORDS_EN) -> str:
@@ -117,7 +113,7 @@ def stopword_ratio_oracle_sql(col: str, stopwords: tuple[str, ...] = STOPWORDS_E
 
 
 def mean_token_length(text: Column) -> Column:
-    return _let(tokens(text), _mean_len)
+    return _let(tokens(text), f"tk -> {_TK_STATS['mean_token_len']}")
 
 
 def mean_token_length_oracle_sql(col: str) -> str:
@@ -133,7 +129,7 @@ def quality_score(text: Column) -> Column:
 
     Token count / mean length are case-insensitive, so the single bound
     lowercase token array serves all three components."""
-    return _let(tokens(F.lower(text)), _quality)
+    return _let(tokens(F.lower(text)), f"tk -> {_TK_STATS['quality']}")
 
 
 def quality_score_oracle_sql(col: str) -> str:
@@ -148,7 +144,7 @@ def quality_score_oracle_sql(col: str) -> str:
 def language_id(text: Column) -> Column:
     """Stopword-hit language ID over {en, de, fr}; 'unknown' when no set
     scores. Ties break en > de > fr (deterministic)."""
-    return _let(tokens(F.lower(text)), _lang)
+    return _let(tokens(F.lower(text)), f"tk -> {_TK_STATS['lang_id']}")
 
 
 def language_id_oracle_sql(col: str) -> str:
@@ -168,7 +164,7 @@ def fingerprint(text: Column) -> Column:
     """Normalized-content fingerprint: md5 of the lowercased,
     whitespace-collapsed text. Identical content → identical fingerprint
     regardless of spacing/case (rolling-hash-class dedup key)."""
-    return _let(tokens(F.lower(text)), _fp)
+    return _let(tokens(F.lower(text)), f"tk -> {_FP}")
 
 
 def fingerprint_oracle_sql(col: str) -> str:
@@ -196,47 +192,17 @@ def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     language_id), so values are bit-identical to composing them
     individually."""
     t = F.col(text_col)
-
-    def from_counts(tk: Column) -> Column:
-        n = F.size(tk)
-        nd = F.greatest(n, F.lit(1)).cast("double")
-        counters = F.struct(
-            F.size(F.filter(tk, lambda x: x.isin(*STOPWORDS_EN)))
-            .alias("en"),
-            F.size(F.filter(tk, lambda x: x.isin(*STOPWORDS_DE)))
-            .alias("de"),
-            F.size(F.filter(tk, lambda x: x.isin(*STOPWORDS_FR)))
-            .alias("fr"),
-            F.aggregate(tk, F.lit(0), lambda a, x: a + F.length(x))
-            .alias("len_sum"),
-        )
-
-        def stats(g: Column) -> Column:
-            en, de, fr = g["en"], g["de"], g["fr"]
-            sw = en.cast("double") / nd
-            mtl = g["len_sum"].cast("double") / nd
-            len_score = F.least(n.cast("double") / F.lit(50.0), F.lit(1.0))
-            sw_score = F.least(sw * F.lit(5.0), F.lit(1.0))
-            mtl_score = F.when((mtl >= 3.0) & (mtl <= 10.0),
-                               F.lit(1.0)).otherwise(F.lit(0.5))
-            lang = (
-                F.when((en == 0) & (de == 0) & (fr == 0), F.lit("unknown"))
-                .when((en >= de) & (en >= fr), F.lit("en"))
-                .when(de >= fr, F.lit("de"))
-                .otherwise(F.lit("fr")))
-            return F.struct(
-                n.alias("n_tokens"),
-                sw.alias("stopword_ratio"),
-                mtl.alias("mean_token_len"),
-                ((len_score + sw_score + mtl_score) / F.lit(3.0))
-                .alias("quality"),
-                lang.alias("lang_id"),
-                _fp(tk).alias("fingerprint"),
-            )
-
-        return _let(counters, stats)
-
-    s = _let(tokens(F.lower(t)), from_counts)
+    g = _stats("size(tk)", "g.en", "g.de", "g.fr", "g.len_sum")
+    stats = ", ".join(f"'{k}', {g[k]}" for k in (
+        "stopword_ratio", "mean_token_len", "quality", "lang_id"))
+    # the counters struct is let-bound inside the token let (the same
+    # single-element array + transform as operators.util.let)
+    s = _let(tokens(F.lower(t)), (
+        f"tk -> element_at(transform(array(named_struct("
+        f"'en', {_hits(STOPWORDS_EN)}, 'de', {_hits(STOPWORDS_DE)}, "
+        f"'fr', {_hits(STOPWORDS_FR)}, 'len_sum', {_LEN_SUM})), "
+        f"g -> named_struct('n_tokens', size(tk), {stats}, "
+        f"'fingerprint', {_FP})), 1)"))
     return (
         df.withColumn("__s", s)
         .withColumn("n_subwords", bpe_token_count(t))
@@ -391,7 +357,8 @@ def gopher_rules(df: DataFrame, text_col: str = "text",
     def rules(tk: Column, lns: Column) -> Column:
         n = F.size(tk)
         n_lines = F.greatest(F.size(lns), F.lit(1)).cast("double")
-        mwl = _mean_len(tk)
+        mwl = F.aggregate(tk, F.lit(0), lambda acc, t: acc + F.length(t)) \
+            .cast("double") / F.greatest(n, F.lit(1)).cast("double")
         symbol_ratio = F.round(
             F.size(F.filter(tk, lambda t: t.contains("#")
                             | t.contains("..."))) / F.greatest(n, F.lit(1)),

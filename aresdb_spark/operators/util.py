@@ -1,16 +1,21 @@
-"""Shared operator utilities: expression let-binding, the local-parallelism
-guard and plan sizing. All exist for 100 TB-scale reasons — see
-docstrings."""
+"""Shared operator utilities: expression let-binding, expression text,
+the local-parallelism guard and plan sizing. All exist for 100 TB-scale
+reasons — see docstrings."""
 
 from __future__ import annotations
 
+from datetime import datetime, timezone
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def let(bound: Column, body) -> Column:
     """Poor-man's let-binding: evaluate `bound` ONCE per row and feed it to
     `body` as a lambda variable (single-element array + transform).
+    ``body`` is a Python function of that variable, or the text of a
+    Spark-SQL lambda (``"x -> ..."``, see ``hof``).
 
     Catalyst does not common-subexpression-eliminate across higher-order-
     function lambdas — without this, expressions that reference an
@@ -18,7 +23,73 @@ def let(bound: Column, body) -> Column:
     quality score's 3 token statistics) re-expand the whole pipeline N
     times per row. Measured 40× slowdown on the MinHash signature at
     sf0.1 before this fix."""
-    return F.element_at(F.transform(F.array(bound), body), 1)
+    arr = F.array(bound)
+    return F.element_at(hof("transform", arr, body) if isinstance(body, str)
+                        else F.transform(arr, body), 1)
+
+
+# -- expression text: every Python-built Column node costs Py4J round
+# trips; an expression list as SQL text is one selectExpr / filter(str) /
+# F.expr (PERF_NOTES.md, "The freshness path builds its expressions as
+# SQL text").
+
+
+def ident(name: str) -> str:
+    """``name`` as one backtick-quoted identifier (inner backticks
+    doubled): a dot, space or keyword in a column name stays part of
+    the name."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def utc_naive(dt: datetime) -> datetime:
+    """``dt`` as a naive UTC wall time; a naive ``dt`` already is one."""
+    return dt.astimezone(timezone.utc).replace(tzinfo=None) \
+        if dt.tzinfo is not None else dt
+
+
+def lit(value) -> str:
+    """SQL text of a literal typed like ``F.lit(value)`` — except that a
+    ``datetime`` is the absolute UTC instant (a naive one read as UTC)
+    whatever the driver process's ``TZ``: ``F.lit`` converts a naive
+    datetime in the process's local zone."""
+    if value is None:
+        return "NULL"
+    if isinstance(value, bool):
+        return "TRUE" if value else "FALSE"
+    if isinstance(value, int):
+        return str(value)
+    if isinstance(value, float):
+        return f"{value!r}D"
+    if isinstance(value, str):
+        return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(value, datetime):
+        return f"TIMESTAMP_LTZ '{utc_naive(value).isoformat(sep=' ')}Z'"
+    raise TypeError(f"no SQL literal for {type(value).__name__}")
+
+
+def sql_type(dt: T.DataType) -> str:
+    """SQL text of ``dt`` for ``CAST``: struct field names quoted
+    (``struct<a b:int>`` does not parse) and ``timestamp_ltz`` spelled
+    out (``spark.sql.timestampType`` cannot change it). SQL types have
+    no non-null array element or map value: those cast to nullable."""
+    if isinstance(dt, T.StructType):
+        return "struct<" + ", ".join(
+            f"{ident(f.name)}: {sql_type(f.dataType)}"
+            + ("" if f.nullable else " NOT NULL") for f in dt.fields) + ">"
+    if isinstance(dt, T.ArrayType):
+        return f"array<{sql_type(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"map<{sql_type(dt.keyType)}, {sql_type(dt.valueType)}>"
+    if isinstance(dt, T.TimestampType):
+        return "timestamp_ltz"
+    return dt.simpleString()
+
+
+def hof(name: str, arg: Column, fn: str) -> Column:
+    """Higher-order function ``name`` over ``arg`` with a lambda given as
+    SQL text (``"x -> ..."``): the lambda parses JVM-side in one call,
+    where a Python lambda costs ~33 Py4J round trips."""
+    return F.call_function(name, arg, F.expr(fn))
 
 
 # Forced-broadcast ceiling: a relation planned at or under this many

@@ -71,23 +71,19 @@ import json
 import os
 from contextlib import contextmanager
 from dataclasses import dataclass
-from datetime import datetime, timezone
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from aresdb_spark.operators.util import fits_broadcast, write_files
+from aresdb_spark.operators.util import (fits_broadcast, ident, lit,
+                                         sql_type, utc_naive, write_files)
 from aresdb_spark.sources import pointer
 from aresdb_spark.streaming.upsert import (UpdateMode, apply_upsert_batch,
-                                           fold_upserts)
+                                           fold_upserts, pk_match)
 
 _ORD = "__batch"   # arrival ordinal of a pending-set row (_read_batches)
-
-
-def _utc_naive(dt: datetime) -> datetime:
-    if dt.tzinfo is not None:
-        dt = dt.astimezone(timezone.utc).replace(tzinfo=None)
-    return dt
+_BATCH_NO = lit(r"batch=(\d+)/[^/]*$")   # the n of a batch=<n> file path
 
 
 # per-session refcount for _utc_session (ADVICE r11 #3): the
@@ -137,20 +133,27 @@ def _utc_session(spark: SparkSession):
                 spark.conf.set("spark.sql.session.timeZone", ent[1])
 
 
-def _batch_rows(df: DataFrame, schema, seq_col: "str | None") -> DataFrame:
+def _casts(schema, have=None) -> list[str]:
+    """SQL text casting each column to its ``schema`` type, in schema
+    order; a column not in ``have`` (when given) is a typed NULL."""
+    return [f"CAST({ident(f.name) if have is None or f.name in have else 'NULL'}"
+            f" AS {sql_type(f.dataType)}) AS {ident(f.name)}"
+            for f in schema.fields]
+
+
+def _batch_rows(df: DataFrame, schema, seq_col: "str | None",
+                *extra: str) -> DataFrame:
     """``df`` as pending-batch rows: the store schema plus ``__seq``,
     the intra-batch arrival order (caller seq column, else the batch's
-    row order — the redo-log replay order, as in collapse_batch).
-    Absent columns materialize as NULL — precisely the per-mode
-    semantics apply_upsert_batch gives a column the batch doesn't
-    carry (overwrite/add/min/max: keep; force: null out)."""
-    seq_expr = F.col(seq_col).cast("long") if seq_col \
-        else F.monotonically_increasing_id()
-    return df.select(
-        *[(F.col(f.name) if f.name in df.columns
-           else F.lit(None)).cast(f.dataType).alias(f.name)
-          for f in schema.fields],
-        seq_expr.alias("__seq"))
+    row order — the redo-log replay order, as in collapse_batch), plus
+    the ``extra`` SQL columns, in one projection. Absent columns
+    materialize as NULL — precisely the per-mode semantics
+    apply_upsert_batch gives a column the batch doesn't carry
+    (overwrite/add/min/max: keep; force: null out)."""
+    seq = f"CAST({ident(seq_col)} AS BIGINT)" if seq_col \
+        else "monotonically_increasing_id()"
+    return df.selectExpr(*_casts(schema, set(df.columns)),
+                         f"{seq} AS __seq", *extra)
 
 
 def _read_batches(spark: SparkSession, schema, dirs: list[str]) -> DataFrame:
@@ -160,9 +163,10 @@ def _read_batches(spark: SparkSession, schema, dirs: list[str]) -> DataFrame:
     from pyspark.sql.types import LongType, StructField, StructType
     bschema = StructType(
         list(schema.fields) + [StructField("__seq", LongType())])
-    return spark.read.schema(bschema).parquet(*dirs).withColumn(
-        _ORD, F.regexp_extract(F.col("_metadata.file_path"),
-                               r"batch=(\d+)/[^/]*$", 1).cast("long"))
+    return spark.read.schema(bschema).parquet(*dirs).selectExpr(
+        *[ident(f.name) for f in bschema.fields],
+        f"CAST(regexp_extract(_metadata.file_path, {_BATCH_NO}, 1) "
+        f"AS BIGINT) AS {_ORD}")
 
 
 class MissingEventTimeError(ValueError):
@@ -267,8 +271,7 @@ class _PointerStore:
         arithmetic can widen dtypes (sum-based `add` folds float→double);
         the store is fixed-typed like the reference's, and without this a
         widened write would poison later reads of the parquet dir."""
-        return df.select(
-            [F.col(f.name).cast(f.dataType) for f in self._schema(st)])
+        return df.selectExpr(*_casts(self._schema(st)))
 
     def gc(self, grace_seconds: float = pointer.GC_GRACE_SECONDS) -> int:
         """Reap ledgered displaced artifacts (version dirs, consumed log
@@ -390,15 +393,14 @@ class HotColdStore(_PointerStore):
         commit would be silently rolled back by ours)."""
         with pointer.write_lock(self.path), _utc_session(df.sparkSession):
             before, updates, displaced = self._reinit(df.schema)
-            cut = F.lit(_utc_naive(cutoff))
-            t = F.col(self.time_column)
             hv = pointer.next_version(before, "hot")
             ck = pointer.next_version(before, "coldset_seq")
-            written0 = self._write_cold_days(df.filter(t < cut), ck)
+            written0 = self._write_cold_days(
+                df.filter(self._before(cutoff)), ck)
             day_map = {d: [rel] for d, rel in written0.items()}
             # NULL event times (when allowed) belong to hot — they
             # never archive
-            self._write_hot(df.filter((t >= cut) | t.isNull()), hv)
+            self._write_hot(df.filter(self._from(cutoff)), hv)
             if before is not None:
                 displaced.append(self._version_dir("hot", before))
                 displaced += [rel for dirs in before["cold_days"].values()
@@ -407,7 +409,7 @@ class HotColdStore(_PointerStore):
                          cold_days=day_map, coldset_seq=ck,
                          cold_day_stats=self._cold_stats_update(
                              None, day_map, written0),
-                         cutoff=_utc_naive(cutoff).isoformat())
+                         cutoff=utc_naive(cutoff).isoformat())
 
     def saved_cutoff(self) -> datetime:
         """The persisted archiving cutoff (set by init_from/archive) —
@@ -516,8 +518,20 @@ class HotColdStore(_PointerStore):
                 out[rel] = b
         return out
 
-    def _day_key(self) -> "F.Column":
-        return F.date_format(F.col(self.time_column), "yyyy-MM-dd")
+    def _day_key(self) -> str:
+        return f"date_format({ident(self.time_column)}, 'yyyy-MM-dd')"
+
+    def _before(self, when: datetime) -> str:
+        """SQL predicate: the event time is below ``when`` — the cold
+        side of a cutoff."""
+        return f"{ident(self.time_column)} < {lit(when)}"
+
+    def _from(self, when: datetime) -> str:
+        """SQL predicate: the event time is at/above ``when`` or NULL —
+        the hot side of a cutoff (a NULL event time, when allowed,
+        never archives) and what a retention bound keeps."""
+        t = ident(self.time_column)
+        return f"{t} >= {lit(when)} OR {t} IS NULL"
 
     def _write_hot(self, df: DataFrame, version: int) -> None:
         df.write.mode("overwrite").parquet(
@@ -558,9 +572,8 @@ class HotColdStore(_PointerStore):
             resolved = base
             for e in pend:
                 resolved = apply_upsert_batch(
-                    resolved,
-                    pending.filter(F.col(_ORD) == e["n"]).drop(_ORD), pk,
-                    e.get("modes", self.modes), "__seq")
+                    resolved, pending.filter(f"{_ORD} = {e['n']}").drop(_ORD),
+                    pk, e.get("modes", self.modes), "__seq")
             return self._conform(resolved, st)
         # Fold ONLY the base rows whose PK a pending batch touches
         # (VERDICT r9 #4): the pending-PK set is small (bounded by the
@@ -579,14 +592,11 @@ class HotColdStore(_PointerStore):
         # bytes (plan statistics, no job) must fit the forced-broadcast
         # ceiling, and an oversized set takes the whole-base fold that
         # r9 always paid.
-        probe = pending.select(*pk)
+        probe = pending.selectExpr(*map(ident, pk))
         if not fits_broadcast(probe):
             return self._conform(
                 fold_upserts(base, pending, _ORD, pk, self.modes), st)
-        cond = None
-        for k in pk:  # null-safe: NULL PK is a legal single key
-            c = F.col(f"b.{k}").eqNullSafe(F.col(f"p.{k}"))
-            cond = c if cond is None else cond & c
+        cond = pk_match("b", "p", pk)
         bb = base.alias("b")
         pp = F.broadcast(probe.alias("p"))
         matched = bb.join(pp, cond, "left_semi")
@@ -610,7 +620,6 @@ class HotColdStore(_PointerStore):
                             time_range: "tuple | None" = None,
                             days: "set[str] | None" = None) -> DataFrame:
         schema = self._schema(st)
-        cols = [f.name for f in schema.fields]
         m = self._cold_day_map(st)
         keys = sorted(m)
         if days is not None:
@@ -620,16 +629,18 @@ class HotColdStore(_PointerStore):
             # day D covers [D, D+1): include iff D >= date(lo) and D < hi
             if lo is not None:
                 keys = [d for d in keys
-                        if d >= _utc_naive(lo).strftime("%Y-%m-%d")]
+                        if d >= utc_naive(lo).strftime("%Y-%m-%d")]
             if hi is not None:
-                hid = _utc_naive(hi)
+                hid = utc_naive(hi)
                 last = (hid - __import__("datetime").timedelta(
                     microseconds=1)).strftime("%Y-%m-%d")
                 keys = [d for d in keys if d <= last]
         dirs = [os.path.join(self.path, rel) for d in keys for rel in m[d]]
         if not dirs:
             return spark.createDataFrame([], schema)
-        return spark.read.schema(schema).parquet(*dirs).select(*cols)
+        # leaf day dirs: no partition column is discovered, so the scan
+        # yields exactly the schema's columns
+        return spark.read.schema(schema).parquet(*dirs)
 
     def read(self, spark: SparkSession,
              cutoff: "datetime | None" = None,
@@ -657,19 +668,17 @@ class HotColdStore(_PointerStore):
         st = self._state()
         if cutoff is None:
             cutoff = datetime.fromisoformat(st["cutoff"])
-        cut = F.lit(_utc_naive(cutoff))
-        t = F.col(self.time_column)
         # ``time_range`` prunes the cold DAY LIST engine-side (whole
         # days only — conservative, the caller's row filter is exact);
         # the hot side is small and needs no dir pruning
         cold = self._read_cold_resolved(spark, st, time_range) \
-            .filter(t < cut)
+            .filter(self._before(cutoff))
         # NULL-event-time rows (allow_missing_event_time) exist only in
         # hot, so including them here can never double-count. PK
         # resolution happens over the FULL hot set BEFORE the cutoff
         # filter — identical to filtering a materialized merged store.
         hot = self._read_hot_resolved(spark, st) \
-            .filter((t >= cut) | t.isNull())
+            .filter(self._from(cutoff))
         return cold.unionByName(hot)
 
     # -- write path ----------------------------------------------------------
@@ -717,7 +726,6 @@ class HotColdStore(_PointerStore):
         from pyspark.sql import Observation
 
         with pointer.write_lock(self.path), _utc_session(spark):
-            t = F.col(self.time_column)
             st = self._state()
             schema = self._schema(st)
             missing_pk = [c for c in self.primary_key
@@ -727,10 +735,9 @@ class HotColdStore(_PointerStore):
                     f"upsert batch is missing primary-key column(s) "
                     f"{missing_pk}")
             if retention is not None:
-                batch = batch.filter(
-                    (t >= F.lit(_utc_naive(retention))) | t.isNull())
-            cut = F.lit(_utc_naive(cutoff))
-            pk = list(self.primary_key)
+                batch = batch.filter(self._from(retention))
+            t = ident(self.time_column)
+            is_cold, is_hot = self._before(cutoff), self._from(cutoff)
             override = modes is not None
             modes = self.modes if modes is None else modes
 
@@ -740,15 +747,14 @@ class HotColdStore(_PointerStore):
             # pushdown barrier, so the hot filter below cannot reach
             # the scan and skew them), never from extra count jobs.
             obs = Observation()
-            observed = batch.observe(
-                obs,
-                F.count(F.when(t.isNull(), 1)).alias("n_null"),
-                F.count(F.when(t < cut, 1)).alias("n_cold"),
-                F.count(F.when((t >= cut) | t.isNull(), 1)).alias("n_hot"))
+            observed = batch.observe(obs, *[
+                F.expr(f"count(CASE WHEN {p} THEN 1 END) AS {n}")
+                for n, p in (("n_null", f"{t} IS NULL"),
+                             ("n_cold", is_cold), ("n_hot", is_hot))])
             # NULL event times route to hot: the reference keeps
             # missing-event-time records in the live store, keyed by
             # arrival time (ingestion.go:230-235)
-            hot_part = observed.filter((t >= cut) | t.isNull())
+            hot_part = observed.filter(is_hot)
             # the hot rows append as the hot log's next batch (one
             # write job; see _PointerStore._append)
             hot = self._append("hot", _batch_rows(hot_part, schema, seq_col),
@@ -775,7 +781,7 @@ class HotColdStore(_PointerStore):
             else:  # nothing routed hot: the empty dir is reclaimable
                 pointer.gc_dir(hot_dir)
             if m["n_cold"]:
-                cold = _batch_rows(batch.filter(t < cut), schema, seq_col)
+                cold = batch.filter(is_cold)
                 # a per-batch mode OVERRIDE cannot defer: the queue
                 # replays under the table's modes at flush (the
                 # reference's backfill merge likewise applies table
@@ -787,11 +793,13 @@ class HotColdStore(_PointerStore):
                     # #1): a crash in between leaves an invisible orphan,
                     # never a torn batch whose streaming replay would
                     # re-enqueue — and double-count — the same cold rows
-                    commit.update(self._append("backfill", cold, st))
+                    commit.update(self._append(
+                        "backfill", _batch_rows(cold, schema, seq_col), st))
                 else:
                     updates, displaced = self._cold_upsert(
-                        spark, st, cold.withColumn(_ORD, F.lit(0).cast(
-                            "long")), modes)
+                        spark, st, _batch_rows(
+                            cold, schema, seq_col,
+                            f"CAST(0 AS BIGINT) AS {_ORD}"), modes)
                     commit.update(updates)
             if commit:
                 self._commit(st, displaced, **commit)
@@ -847,27 +855,25 @@ class HotColdStore(_PointerStore):
         # bounds (was two collects); the bounds drive footer-stats day
         # pruning so the moved-day probe scans only candidate days, not
         # O(|cold|) per flush (ADVICE r10 #3)
-        brow = pending.agg(
-            F.collect_set(self._day_key()).alias("days"),
-            F.min(F.col(pk[0])).alias("lo"),
-            F.max(F.col(pk[0])).alias("hi"),
-            F.count(F.when(F.col(pk[0]).isNull(), 1))
-            .alias("n_null_pk")).collect()[0]
+        k0 = ident(pk[0])
+        brow = pending.selectExpr(
+            f"collect_set({self._day_key()}) AS days",
+            f"min({k0}) AS lo", f"max({k0}) AS hi",
+            f"count(CASE WHEN {k0} IS NULL THEN 1 END) AS n_null_pk"
+        ).collect()[0]
         touched = set(brow["days"])
         cand = self._candidate_moved_days(
             old_map, brow["lo"], brow["hi"], bool(brow["n_null_pk"]),
             st["cold_day_stats"])
         moved: set[str] = set()
         if cand:
-            probe = pending.select(*pk).distinct()
-            cond = None
-            for k in pk:  # null-safe: a NULL PK is a legal key
-                c = F.col(f"c.{k}").eqNullSafe(F.col(f"p.{k}"))
-                cond = c if cond is None else cond & c
+            probe = pending.selectExpr(*map(ident, pk)).distinct()
             narrow = self._read_cold_resolved(spark, st, days=cand) \
-                .select(*pk, self._day_key().alias("__d")).alias("c")
+                .selectExpr(*map(ident, pk),
+                            f"{self._day_key()} AS __d").alias("c")
             moved = {r[0] for r in narrow.join(
-                F.broadcast(probe.alias("p")), cond, "left_semi")
+                F.broadcast(probe.alias("p")), pk_match("c", "p", pk),
+                "left_semi")
                 .select("__d").distinct().collect()}
         affected = touched | moved
         merged = fold_upserts(
@@ -985,7 +991,6 @@ class HotColdStore(_PointerStore):
         batch version beside the old days rather than rewriting the
         store). The rewritten hot base is plan-sized (``write_files``)."""
         with pointer.write_lock(self.path), _utc_session(spark):
-            cut = F.lit(_utc_naive(new_cutoff))
             before = self._state()
             pending = self._batches("hot", before)
             # the resolved view feeds the cutoff gate AND up to two
@@ -998,15 +1003,15 @@ class HotColdStore(_PointerStore):
             resolved = self._read_hot_resolved(spark, before)
             hot = resolved.coalesce(write_files(resolved)).persist()
             try:
-                t = F.col(self.time_column)
-                to_cold = hot.filter(t < cut)
-                keep_null = t.isNull()
+                t, cut = ident(self.time_column), lit(new_cutoff)
+                to_cold = hot.filter(f"{t} < {cut}")
+                keep_null = f"{t} IS NULL"
                 if arrival_column is not None:
-                    keep_null = keep_null & (F.col(arrival_column) >= cut)
+                    keep_null += f" AND {ident(arrival_column)} >= {cut}"
                 # without the null arm, null-time rows would be silently
                 # DELETED here (in neither filter's output)
-                stay_hot = hot.filter((t >= cut) | keep_null)
-                commit = {"cutoff": _utc_naive(new_cutoff).isoformat()}
+                stay_hot = hot.filter(f"{t} >= {cut} OR {keep_null}")
+                commit = {"cutoff": utc_naive(new_cutoff).isoformat()}
                 if to_cold.limit(1).count():
                     ck = pointer.next_version(before, "coldset_seq")
                     written = self._write_cold_days(
@@ -1114,7 +1119,7 @@ class HotColdStore(_PointerStore):
         displaced ledger (an in-flight reader finishes over intact
         files; gc reaps past the grace) — no in-place delete anywhere."""
         with pointer.write_lock(self.path):
-            boundary = _utc_naive(older_than).strftime("%Y-%m-%d")
+            boundary = utc_naive(older_than).strftime("%Y-%m-%d")
             st = self._state()
             m = self._cold_day_map(st)
             expired = sorted(d for d in m if d < boundary)

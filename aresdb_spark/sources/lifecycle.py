@@ -41,11 +41,12 @@ bounded Spark job documented on the store itself.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from datetime import datetime, timedelta, timezone
+from datetime import datetime, timedelta
 from typing import Callable, Union
 
 from pyspark.sql import SparkSession
 
+from aresdb_spark.operators.util import utc_naive
 from aresdb_spark.sources.hotcold import DimensionStore, HotColdStore
 from aresdb_spark.sources.pointer import GC_GRACE_SECONDS
 
@@ -63,12 +64,6 @@ PURGE = "purge"
 GC = "gc"
 
 _EPOCH = datetime(1970, 1, 1)
-
-
-def _naive_utc(dt: datetime) -> datetime:
-    if dt.tzinfo is not None:
-        dt = dt.astimezone(timezone.utc).replace(tzinfo=None)
-    return dt
 
 
 def job_identifier(table: str, shard: int, job_type: str) -> str:
@@ -168,7 +163,7 @@ class Scheduler:
     # -- job generation (pure; no Spark work) --------------------------------
 
     def generate_jobs(self, now: datetime) -> list[Job]:
-        now = _naive_utc(now)
+        now = utc_naive(now)
         jobs: list[Job] = []
         for t in self.tables:
             # first sighting seeds the time-based managers, like the

@@ -27,6 +27,8 @@ from enum import Enum
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from aresdb_spark.operators.util import ident
+
 
 class UpdateMode(str, Enum):
     OVERWRITE = "overwrite"   # UpdateOverwriteNotNull (default)
@@ -36,9 +38,47 @@ class UpdateMode(str, Enum):
     MAX = "max"               # UpdateWithMax
 
 
+def pk_match(left: str, right: str, pk_cols: list[str]) -> Column:
+    """Join condition: the PK columns of aliases ``left`` and ``right``
+    are equal NULL-safely — a NULL PK is a legal (single) key."""
+    return F.expr(" AND ".join(f"{left}.{ident(k)} <=> {right}.{ident(k)}"
+                               for k in pk_cols))
+
+
 def _mode(modes: dict[str, UpdateMode | str] | None, col: str) -> UpdateMode:
     m = (modes or {}).get(col, UpdateMode.OVERWRITE)
     return UpdateMode(m)
+
+
+# Spark-SQL text of each mode, over column ``{c}``: the aggregate that
+# folds it in arrival order ``{o}`` (collapse_batch, fold_upserts), and
+# the merge of base value ``{b}`` with update value ``{u}`` for a PK in
+# both (apply_upsert_batch).
+_FOLD = {
+    UpdateMode.OVERWRITE: "max_by({c}, CASE WHEN {c} IS NOT NULL THEN {o} END)",
+    UpdateMode.FORCE: "max_by({c}, {o})",   # last value outright
+    UpdateMode.ADD: "sum({c})",             # sum of non-null contributions
+    UpdateMode.MIN: "min({c})",             # min/max skip nulls
+    UpdateMode.MAX: "max({c})",
+}
+_MERGE = {
+    UpdateMode.OVERWRITE: "coalesce({u}, {b})",
+    UpdateMode.FORCE: "CASE WHEN u.__in_u IS NOT NULL THEN {u} ELSE {b} END",
+    # existing null → 0 (reference treats missing as 0); new null → keep
+    UpdateMode.ADD:
+        "CASE WHEN {u} IS NOT NULL THEN coalesce({b}, 0) + {u} ELSE {b} END",
+    # least()/greatest() skip nulls: existing null loses (ref: null = MAX_INT)
+    UpdateMode.MIN:
+        "CASE WHEN {u} IS NOT NULL THEN least({b}, {u}) ELSE {b} END",
+    UpdateMode.MAX:
+        "CASE WHEN {u} IS NOT NULL THEN greatest({b}, {u}) ELSE {b} END",
+}
+
+
+def _fold_aggs(cols, modes, order: str) -> list[Column]:
+    """One folding aggregate per column of ``cols``, aliased to it."""
+    return [F.expr(f"{_FOLD[_mode(modes, c)].format(c=ident(c), o=order)} "
+                   f"AS {ident(c)}") for c in cols]
 
 
 def collapse_batch(batch: DataFrame, pk_cols: list[str],
@@ -53,28 +93,15 @@ def collapse_batch(batch: DataFrame, pk_cols: list[str],
     batches, matching redo-log replay order).
     """
     seq = seq_col or "__seq"
-    b = batch if seq_col else batch.withColumn(seq, F.monotonically_increasing_id())
-    aggs: list[Column] = []
-    for c in batch.columns:
-        if c in pk_cols or c == seq_col:
-            continue
-        mode = _mode(modes, c)
-        if mode is UpdateMode.FORCE:
-            aggs.append(F.max_by(c, F.col(seq)).alias(c))
-        elif mode is UpdateMode.ADD:
-            aggs.append(F.sum(c).alias(c))
-        elif mode is UpdateMode.MIN:
-            aggs.append(F.min(c).alias(c))
-        elif mode is UpdateMode.MAX:
-            aggs.append(F.max(c).alias(c))
-        else:  # OVERWRITE: last non-null in arrival order
-            aggs.append(
-                F.max_by(c, F.when(F.col(c).isNotNull(), F.col(seq))).alias(c))
+    b = batch if seq_col else batch.withColumn(
+        seq, F.expr("monotonically_increasing_id()"))
+    aggs = _fold_aggs([c for c in batch.columns
+                       if c not in pk_cols and c != seq_col], modes, ident(seq))
     if seq_col:
-        aggs.append(F.max(seq).alias(seq_col))
+        aggs.append(F.expr(f"max({ident(seq)}) AS {ident(seq_col)}"))
     if not aggs:
         # a PK-only table: nothing to fold, collapsing is just dedupe
-        return b.select(*pk_cols).distinct()
+        return b.selectExpr(*map(ident, pk_cols)).distinct()
     return b.groupBy(*pk_cols).agg(*aggs)
 
 
@@ -94,39 +121,21 @@ def apply_upsert_batch(base: DataFrame, batch: DataFrame, pk_cols: list[str],
     # presence markers, NOT PK nullability: the join is null-safe, so a
     # NULL PK is a legal (single) key — detecting presence via
     # `pk IS NOT NULL` would silently drop its update
-    b = base.withColumn("__in_b", F.lit(True)).alias("b")
-    u = upd.withColumn("__in_u", F.lit(True)).alias("u")
-    cond = None
-    for k in pk_cols:
-        c = F.col(f"b.{k}").eqNullSafe(F.col(f"u.{k}"))
-        cond = c if cond is None else cond & c
-    joined = b.join(u, cond, "full_outer")
-    in_update = F.col("u.__in_u").isNotNull()
-    in_base = F.col("b.__in_b").isNotNull()
-
-    out_cols: list[Column] = []
-    for k in pk_cols:
-        out_cols.append(F.coalesce(F.col(f"b.{k}"), F.col(f"u.{k}")).alias(k))
+    b = base.selectExpr("*", "TRUE AS __in_b").alias("b")
+    u = upd.selectExpr("*", "TRUE AS __in_u").alias("u")
+    joined = b.join(u, pk_match("b", "u", pk_cols), "full_outer")
+    upd_cols = set(upd.columns)
+    out = [f"coalesce(b.{ident(k)}, u.{ident(k)}) AS {ident(k)}"
+           for k in pk_cols]
     for c in base.columns:
         if c in pk_cols:
             continue
-        bc, uc = F.col(f"b.{c}"), (F.col(f"u.{c}") if c in upd.columns else F.lit(None))
-        mode = _mode(modes, c)
-        if mode is UpdateMode.FORCE:
-            merged = F.when(in_update, uc).otherwise(bc)
-        elif mode is UpdateMode.ADD:
-            # existing null → 0 (reference treats missing as 0); new null → keep
-            merged = F.when(uc.isNotNull(), F.coalesce(bc, F.lit(0)) + uc).otherwise(bc)
-        elif mode is UpdateMode.MIN:
-            # least() skips nulls: existing null loses (ref: null = MAX_INT)
-            merged = F.when(uc.isNotNull(), F.least(bc, uc)).otherwise(bc)
-        elif mode is UpdateMode.MAX:
-            merged = F.when(uc.isNotNull(), F.greatest(bc, uc)).otherwise(bc)
-        else:  # OVERWRITE
-            merged = F.coalesce(uc, bc)
+        uc = f"u.{ident(c)}" if c in upd_cols else "NULL"
+        merged = _MERGE[_mode(modes, c)].format(b=f"b.{ident(c)}", u=uc)
         # rows only present in the update keep the update value outright
-        out_cols.append(F.when(in_base, merged).otherwise(uc).alias(c))
-    return joined.select(*out_cols)
+        out.append(f"CASE WHEN b.__in_b IS NOT NULL THEN {merged} "
+                   f"ELSE {uc} END AS {ident(c)}")
+    return joined.selectExpr(*out)
 
 
 def fold_upserts(base: DataFrame, pending: DataFrame, ordinal: str,
@@ -139,10 +148,10 @@ def fold_upserts(base: DataFrame, pending: DataFrame, ordinal: str,
     the cuckoo PK index at read, memstore/live_store.go:33-46; here the
     bounded hot set folds in one hash shuffle instead).
 
-    ``pending`` holds every batch at once: ``base``'s columns plus
-    ``ordinal`` (the batch's non-negative arrival number) and ``seq_col``
-    (long, intra-batch arrival order — materialized at write time), so
-    its row order is irrelevant. Equivalent to chaining
+    ``pending`` holds every batch at once: exactly ``base``'s columns
+    plus ``ordinal`` (long, the batch's non-negative arrival number) and
+    ``seq_col`` (long, intra-batch arrival order — materialized at write
+    time), so its row order is irrelevant; it unions by name as is. Equivalent to chaining
     ``apply_upsert_batch`` per batch in ordinal order because every
     mode's merge is associative over arrival order:
 
@@ -155,30 +164,16 @@ def fold_upserts(base: DataFrame, pending: DataFrame, ordinal: str,
     batch row. One shuffle total, independent of the number of pending
     batches (vs. one join per batch for the iterative chain)."""
     cols = base.columns
-    u = base.select(
-        *cols, F.lit(-1).cast("long").alias(ordinal),
-        F.lit(0).cast("long").alias(seq_col)).unionByName(pending.select(
-            *cols, F.col(ordinal).cast("long"), F.col(seq_col).cast("long")))
-    order = F.struct(F.col(ordinal), F.col(seq_col))
-    aggs: list[Column] = []
-    for c in cols:
-        if c in pk_cols:
-            continue
-        mode = _mode(modes, c)
-        if mode is UpdateMode.FORCE:
-            aggs.append(F.max_by(c, order).alias(c))
-        elif mode is UpdateMode.ADD:
-            aggs.append(F.sum(c).alias(c))
-        elif mode is UpdateMode.MIN:
-            aggs.append(F.min(c).alias(c))
-        elif mode is UpdateMode.MAX:
-            aggs.append(F.max(c).alias(c))
-        else:  # OVERWRITE: last non-null in global arrival order
-            aggs.append(
-                F.max_by(c, F.when(F.col(c).isNotNull(), order)).alias(c))
+    q = [ident(c) for c in cols]
+    o, s = ident(ordinal), ident(seq_col)
+    u = base.selectExpr(
+        *q, f"CAST(-1 AS BIGINT) AS {o}", f"CAST(0 AS BIGINT) AS {s}"
+    ).unionByName(pending)
+    aggs = _fold_aggs([c for c in cols if c not in pk_cols], modes,
+                      f"struct({o}, {s})")
     if not aggs:  # PK-only table: fold is plain dedupe
-        return u.select(*pk_cols).distinct()
-    return u.groupBy(*pk_cols).agg(*aggs).select(*cols)
+        return u.selectExpr(*map(ident, pk_cols)).distinct()
+    return u.groupBy(*pk_cols).agg(*aggs).selectExpr(*q)
 
 
 def upsert_merge_oracle_sql(base: str, batch: str, pk: str,

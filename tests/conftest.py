@@ -79,6 +79,34 @@ def count_jobs(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(tag))
 
 
+def count_py4j(spark, fn) -> int:
+    """Number of Py4J commands ``fn()`` sends to the JVM: each is one
+    driver round trip. Memory-delete commands (``m\\nd``) are left out —
+    Python's GC sends them at arbitrary points, for objects made before
+    ``fn`` as much as by it."""
+    from py4j.clientserver import ClientServer, ClientServerConnection
+    from py4j.java_gateway import GatewayConnection
+
+    conn = ClientServerConnection \
+        if isinstance(spark.sparkContext._gateway, ClientServer) \
+        else GatewayConnection
+    send = conn.send_command
+    sent = 0
+
+    def counted(self, command, *args, **kwargs):
+        nonlocal sent
+        if not command.startswith("m\nd"):
+            sent += 1
+        return send(self, command, *args, **kwargs)
+
+    conn.send_command = counted
+    try:
+        fn()
+    finally:
+        conn.send_command = send
+    return sent
+
+
 def load_events(spark, sf_dir=SF_DIR):
     """events with a proper timestamp ``ts``, across Spark versions.
 

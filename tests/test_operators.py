@@ -253,7 +253,7 @@ def test_exact_duplicates(spark, duck):
 def test_hash28_portable(spark, duck):
     from aresdb_spark.operators.dedup import _hash28, _hash28_sql
 
-    df = _docs(spark).select("doc_id", _hash28(F.col("text")).alias("h"))
+    df = _docs(spark).select("doc_id", F.expr(_hash28("text")).alias("h"))
     assert_df_matches_duck(df, duck, f"""
         SELECT doc_id, {_hash28_sql('text')} AS h FROM documents
     """)

@@ -3,7 +3,7 @@
 The cold store's day keys are derived with ``date_format`` — a
 session-timezone-dependent rendering — while ``read_cold``'s engine-side
 day-list pruning compares committed keys against UTC day strings
-(``_utc_naive``). catalog.load pins UTC on reads, but before r10 the
+(``operators.util.utc_naive``). catalog.load pins UTC on reads, but before r10 the
 mutation paths never did: a writer session in, say, America/Los_Angeles
 committed LOCAL-tz day keys, so UTC pruning (and the touched/moved-day
 probes in ``_cold_upsert``) silently missed rows. ``_utc_session`` now
@@ -101,7 +101,7 @@ def test_catalog_exact_filter_agrees_with_pruning_for_aware_bounds(
         spark, tmp_path):
     """ADVICE r10 #2: a tz-aware non-UTC bound must filter rows at the
     same instant the day-list pruning uses — both normalize through
-    _utc_naive. Bound 2024-01-02T02:00+02:00 == 2024-01-02T00:00Z."""
+    utc_naive. Bound 2024-01-02T02:00+02:00 == 2024-01-02T00:00Z."""
     from zoneinfo import ZoneInfo
 
     from aresdb_spark.catalog import Catalog, TableDef
@@ -190,3 +190,46 @@ def test_epoch_ns_is_integer_exact():
     assert _epoch_ns(d) == 16474485682453789000
     assert int(d.replace(tzinfo=timezone.utc).timestamp()
                * 1_000_000) * 1000 == 16474485682453788000  # the old bug
+
+
+def test_cutoff_literals_ignore_the_driver_process_tz(spark, tmp_path,
+                                                       monkeypatch):
+    """The cutoff, retention and time-range literals name UTC instants
+    whatever the driver process's ``TZ``: ``F.lit`` of a naive datetime
+    converts through ``time.mktime`` in the process's local zone, which
+    shifted every such literal by the UTC offset — a row an hour past
+    the cutoff routed to the deferred backfill queue under
+    ``TZ=America/New_York`` and stayed invisible until the flush. (The
+    rows themselves are tz-aware: ``createDataFrame`` converts naive
+    datetimes in the local zone too.)"""
+    import time
+
+    from aresdb_spark.catalog import Catalog, TableDef
+    from aresdb_spark.sources.hotcold import HotColdStore
+
+    cutoff = datetime(2024, 1, 29)
+    root = tmp_path / "sf"
+    root.mkdir()
+    store = HotColdStore(path=str(root / "facts"), time_column="ts",
+                         primary_key=("id",), sort_columns=("ts",))
+    cat = Catalog(str(root), tables={"facts": TableDef(
+        "facts", is_fact=True, time_column="ts", primary_key=("id",),
+        sort_columns=("ts",), hotcold=True)})
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        store.init_from(spark.createDataFrame(
+            [(1, _utc(2024, 1, 28, 23), 1.0)],
+            "id int, ts timestamp, v double"), cutoff)
+        store.ingest(spark, spark.createDataFrame(
+            [(2, _utc(2024, 1, 29, 1), 2.0)],
+            "id int, ts timestamp, v double"), cutoff,
+            retention=cutoff - timedelta(days=1), defer_backfill=True)
+        assert store.queued_backfill_batches() == []
+        got = cat.load(spark, "facts",
+                       time_range=(cutoff - timedelta(hours=1),
+                                   cutoff + timedelta(hours=2)))
+        assert sorted(r["id"] for r in got.collect()) == [1, 2]
+    finally:
+        monkeypatch.undo()
+        time.tzset()
