@@ -22,8 +22,6 @@ oracle. MinHash permutations h_j(x) = (A_j * x + B_j) mod P with P =
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -31,7 +29,6 @@ from aresdb_spark.operators.text import tokens, tokens_oracle_sql
 from aresdb_spark.operators.util import ensure_parallelism as _parallelize
 from aresdb_spark.operators.util import hof as _hof
 from aresdb_spark.operators.util import let as _let
-from aresdb_spark.sources.pointer import GC_GRACE_SECONDS
 
 P = 2_147_483_647  # 2^31 - 1
 
@@ -438,196 +435,44 @@ def signature_bands(df: DataFrame, text_col: str = "text",
                 F.substring("bb.bh", 1, 1).alias("bhp")))
 
 
-SIGSTORE_BUCKETS = 16
-
-
-def _displace(state: "dict | None") -> "list[dict]":
-    """The displaced-version ledger for the NEXT commit: carry forward
-    un-reaped entries and add the live version this mutation replaces.
-    Committed atomically WITH the flip, so the ledger can never disagree
-    with the pointer."""
-    import time
-
-    if state is None:
-        return []
-    return list(state.get("displaced", [])) + [
-        {"version": state["version"], "table": state["table"],
-         "at": time.time()}]
-
-
-def gc_signature_store(spark, path: str,
-                       grace_seconds: float = GC_GRACE_SECONDS
-                       ) -> int:
-    """Reap displaced store versions older than the read-grace window;
-    returns how many were reaped. Run this on the lifecycle cadence
-    (alongside ``compact_signature_store``) — the writers call it with
-    the default grace after every flip, so steady-state garbage is one
-    window deep; an explicit ``grace_seconds=0`` force-reaps everything
-    displaced (safe only when no reader can be mid-scan on an old
-    version).
-
-    Writer-locked: the reap ends in a whole-state commit, and an
-    unserialized commit racing a concurrent overwrite/compaction would
-    silently roll back that writer's version flip — after which the
-    next writer would delete the rolled-back version dir as an
-    "orphan". Readers never take the lock (the grace window is what
-    protects them).
-
-    Order: files first, ledger commit second — a crash mid-reap leaves
-    entries whose dirs are already gone, and the next pass re-reaps
-    them as no-ops (``DROP TABLE IF EXISTS`` + best-effort ``gc_dir``);
-    the reverse order would leak the dirs invisibly forever."""
-    from aresdb_spark.sources import pointer
-
-    with pointer.write_lock(path):
-        return _gc_locked(spark, path, grace_seconds)
-
-
-def _gc_locked(spark, path: str, grace_seconds: float) -> int:
-    import time
-
-    from aresdb_spark.sources import pointer
-
-    state = pointer.read_state(path)
-    if state is None or not state.get("displaced"):
-        return 0
-    now = time.time()
-    reap = [d for d in state["displaced"]
-            if now - d["at"] >= grace_seconds]
-    if not reap:
-        return 0
-    for d in reap:
-        spark.sql(f"DROP TABLE IF EXISTS {d['table']}")
-        pointer.gc_dir(pointer.version_dir(path, d["version"]))
-    # keep-set recomputed from the COMMIT-TIME ledger so entries a
-    # concurrent mutation added mid-reap survive this commit
-    # (sources/pointer.py gc_displaced rationale)
-    reaped = {d["version"] for d in reap}
-    cur = pointer.read_state(path) or state
-    pointer.commit_state(path, {**cur, "displaced": [
-        d for d in cur.get("displaced", []) if d["version"] not in reaped]})
-    return len(reap)
-
-
-def _sigstore_table(path: str, version: int) -> str:
-    import hashlib
-    digest = hashlib.md5(os.path.abspath(path).encode()).hexdigest()[:10]
-    return f"sigstore_{digest}_v{version}"
-
-
-def _sigstore_register(spark, state: dict, path: str) -> str:
-    """Ensure the committed version's bucketed table exists in this
-    session's catalog (bucket metadata lives in the catalog, not the
-    files — a fresh session re-creates the external table from the
-    state record) and return its name."""
-    from aresdb_spark.sources.pointer import version_dir
-
-    table = state["table"]
-    if not spark.catalog.tableExists(table):
-        loc = version_dir(path, state["version"]).replace("'", "''")
-        spark.sql(
-            f"CREATE TABLE {table} ({state['schema_ddl']}) USING PARQUET "
-            f"CLUSTERED BY (bh) SORTED BY (bh) "
-            f"INTO {state['n_buckets']} BUCKETS "
-            f"LOCATION '{loc}'")
-    return table
-
-
 def build_signature_store(df: DataFrame, path: str, text_col: str = "text",
                           id_col: str = "doc_id",
-                          mode: str = "overwrite",
-                          n_buckets: int = SIGSTORE_BUCKETS,
-                          gc_grace_seconds: float =
-                          GC_GRACE_SECONDS) -> None:
+                          mode: str = "overwrite") -> None:
     """Persist a corpus's banded MinHash index so later batches dedup
     against it WITHOUT re-mining the corpus (the continuous-crawl
     pattern: at 100 TB you never re-shingle history — each increment
-    costs one bucket-pruned store probe plus the new batch's
+    costs one partition-pruned store probe plus the new batch's
     signatures).
 
-    Layout (v2): ``<path>/_state.json`` pointer + ``<path>/v<N>/``
-    parquet BUCKETED by ``bh`` into ``n_buckets`` files, sorted by
-    ``bh`` within each bucket. Bucketing is the probe's index: an
-    ``bh IN (<probe keys>)`` filter prunes the scan to the buckets the
-    probe's band hashes actually land in (explain shows
-    ``SelectedBucketsCount``) — the persisted-store analog of the
-    reference's cuckoo PK probe (memstore/cuckoo_index.go:63: a lookup
-    touches O(1) buckets, never the whole store). Scale ``n_buckets``
-    with corpus size: probe cost tracks ``|probe| × store/n_buckets``.
+    Layout (sources/hotcold.py ``SignatureStore``): a ``_state.json``
+    pointer, a base ``sig_v<N>/bhp=<c>/`` partitioned by the first hex
+    char of the band hash, and an append log of increments
+    ``sigbatch/batch=<n>/``. ``bhp`` is the probe's index: a
+    ``bhp IN (<probe prefixes>)`` filter prunes the base to the
+    partitions the probe's band hashes land in — the persisted-store
+    analog of the reference's cuckoo PK probe
+    (memstore/cuckoo_index.go:63: a lookup touches O(1) buckets, never
+    the whole store).
 
-    ``mode="overwrite"`` writes a NEW version dir and atomically flips
-    the pointer (object-store-safe: no rename of data files, see
-    sources/pointer.py); ``mode="append"`` extends the live version's
-    bucketed table with an already-deduped increment (plain file
-    appends — new files become visible as they are listed, no swap
-    needed); appending to a root with no committed state creates the
-    store. A root holding only ``v*/`` remnants of a crashed initial
-    write has no committed state, so it is a fresh store too.
+    ``mode="overwrite"`` writes a NEW base and atomically flips the
+    pointer (object-store-safe: no rename of data files, see
+    sources/pointer.py); ``mode="append"`` logs an already-deduped
+    increment, visible once its ledger entry commits; appending to a
+    root with no committed state creates the store. Displaced dirs are
+    NOT deleted at the flip: they survive the read-grace window so a
+    reader that resolved them mid-probe finishes over intact files
+    (``SignatureStore.gc``)."""
+    from aresdb_spark.sources.hotcold import SignatureStore
 
-    The displaced version is NOT deleted at the flip: it enters the
-    state's ``displaced`` ledger and survives ``gc_grace_seconds`` so a
-    reader that resolved it mid-probe finishes over intact files
-    (``gc_signature_store``)."""
-    from aresdb_spark.sources import pointer
-    from aresdb_spark.sources.bucketed import write_bucketed
-
-    spark = df.sparkSession
-    bands = signature_bands(df, text_col, id_col)
-    # single-writer: every branch ends in either a bucketed-table append
-    # or a whole-state commit — racing writers would be last-commit-wins
-    # (one version flip silently rolled back; pointer.ConcurrentWriteError)
-    with pointer.write_lock(path):
-        state = pointer.read_state(path)
-        if mode == "append" and state is not None:
-            table = _sigstore_register(spark, state, path)
-            (bands.write.mode("append").format("parquet")
-             .bucketBy(state["n_buckets"], "bh").sortBy("bh")
-             .saveAsTable(table))
-            # drop this session's cached file listing for the table;
-            # OTHER sessions refresh on read (read_signature_store)
-            spark.catalog.refreshTable(table)
-            return
-        version = pointer.next_version(state)
-        table = _sigstore_table(path, version)
-        target = pointer.version_dir(path, version)
-        if os.path.isdir(target):  # orphan of a crashed, uncommitted write
-            pointer.gc_dir(target)
-        # catalog repair (VERDICT r8 #6): a writer that died between its
-        # saveAsTable (catalog write) and its pointer commit left a
-        # catalog entry for THIS version name — possibly with a
-        # different bucket spec. The version is uncommitted by
-        # construction (allocated above the committed state), so the
-        # entry can never be a live table; drop it rather than letting
-        # saveAsTable merge into a stale definition.
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                        for f in bands.schema.fields)
-        write_bucketed(bands, table, target, n_buckets, ["bh"])
-        pointer.commit_state(path, {
-            "format": 2, "version": version, "table": table,
-            "n_buckets": n_buckets, "schema_ddl": ddl,
-            "displaced": _displace(state)})
-        _gc_locked(spark, path, gc_grace_seconds)
+    SignatureStore(path).write(signature_bands(df, text_col, id_col), mode)
 
 
 def read_signature_store(spark, path: str) -> DataFrame:
-    """Resolve the committed store version and return it as a DataFrame
-    (through the catalog, so bucket metadata — and therefore bucket
-    pruning — survives; sources/bucketed.py read_bucketed rationale).
+    """The committed store — base plus logged increments — as one
+    DataFrame of (id, sig, band, bh, bhp) rows."""
+    from aresdb_spark.sources.hotcold import SignatureStore
 
-    The table's cached FILE LISTING is refreshed first: catalog tables
-    cache their file index per session, and a store appended by ANOTHER
-    session (the continuous-crawl sink's micro-batches each run in a
-    cloned session) is otherwise served STALE — the r8 soak caught the
-    probe deduping against only the first batch's signatures. Cost: one
-    re-list of the live version dir per read; bounded by n_buckets ×
-    appends-since-compaction, and paid only at plan time."""
-    from aresdb_spark.sources import pointer
-
-    state = pointer.committed_state(path)
-    table = _sigstore_register(spark, state, path)
-    spark.catalog.refreshTable(table)
-    return spark.table(table)
+    return SignatureStore(path).read(spark)
 
 
 def estimated_jaccard(sig_a: Column, sig_b: Column,
@@ -644,12 +489,11 @@ def incremental_near_duplicates(spark, new_df: DataFrame, store_path: str,
                                 text_col: str = "text",
                                 id_col: str = "doc_id",
                                 threshold: float = 0.5,
-                                prune: bool = False,
-                                prune_max_keys: int = 65536) -> DataFrame:
+                                prune: bool = False) -> DataFrame:
     """New-batch docs that near-duplicate a document already in the
     signature store: (new_id, store_id, est_jaccard).
 
-    Plan shape: bucket-pruned store scan → join the BROADCAST banded
+    Plan shape: partition-pruned store scan → join the BROADCAST banded
     probe on (band, bhp, bh) → distinct pairs → signature-agreement
     estimate. The store is never shuffled and never re-shingled; the
     increment's cost is one store probe + the new batch's scan-side
@@ -658,28 +502,22 @@ def incremental_near_duplicates(spark, new_df: DataFrame, store_path: str,
     history side only.
 
     ``prune=True`` materializes the (small) probe eagerly, collects its
-    distinct band hashes, and pushes them as a ``bh IN (...)`` filter —
-    on the bucketed store that becomes bucket pruning
-    (``SelectedBucketsCount`` in the plan), so the probe reads
-    O(|probe| × store/n_buckets) instead of O(store): the reference's
-    cuckoo-lookup cost model (memstore/cuckoo_index.go:63). This is the
-    right mode for continuous-crawl micro-batches, where the probe is
-    tiny relative to history; it trades one batch-sized collect (the
-    probe's own keys, capped at ``prune_max_keys``) for skipping most
-    of the store. When the probe exceeds the cap it will touch most
-    buckets anyway, so the filter is dropped and the full scan — the
-    correct plan at that ratio — runs instead. Default False keeps the
-    operator fully lazy for batch callers."""
+    distinct ``bhp`` values (at most 16) and filters the store on them
+    — partition pruning on the base, a pushed filter on the log — so
+    the probe reads O(|probe| × store/16) instead of O(store): the
+    reference's cuckoo-lookup cost model (memstore/cuckoo_index.go:63).
+    Dynamic partition pruning cannot do this, as the probe carries no
+    selective predicate. This is the right mode for continuous-crawl
+    micro-batches, where the probe is tiny relative to history; default
+    False keeps the operator fully lazy for batch callers."""
     store = read_signature_store(spark, store_path)
     probe = (signature_bands(new_df, text_col, id_col)
              .withColumnRenamed("id", "new_id")
              .withColumnRenamed("sig", "new_sig"))
     if prune:
         probe = probe.localCheckpoint(eager=True)  # compute signatures once
-        keys = [r[0] for r in (probe.select("bh").distinct()
-                               .limit(prune_max_keys + 1).collect())]
-        if len(keys) <= prune_max_keys:
-            store = store.filter(F.col("bh").isin(keys))
+        store = store.filter(F.col("bhp").isin(
+            [r[0] for r in probe.select("bhp").distinct().collect()]))
     cand = (store.join(F.broadcast(probe), ["band", "bhp", "bh"])
             .select(F.col("new_id"), F.col("id").alias("store_id"),
                     "new_sig", "sig")
@@ -692,80 +530,28 @@ def incremental_near_duplicates(spark, new_df: DataFrame, store_path: str,
 
 
 def compact_signature_store(spark, store_path: str, keep_ids: DataFrame,
-                            id_col: str = "doc_id",
-                            gc_grace_seconds: float =
-                            GC_GRACE_SECONDS) -> int:
+                            id_col: str = "doc_id") -> int:
     """Retention for the signature store: rewrite it down to the ids
     still in the corpus (the dedup-index half of the reference's purge
     job — a doc dropped by ``recordRetentionInDays`` must also stop
     matching new crawls, or the store pins deleted content forever).
 
-    One broadcast semi-join against the keep-set, one bucketed rewrite;
-    returns the number of band rows kept. Like the purge job, run it on
-    the lifecycle cadence, not per increment. Compaction also folds the
-    small files that per-micro-batch appends accumulate back into one
-    file set per bucket.
+    One broadcast semi-join of base + log against the keep-set, one
+    ``bhp``-partitioned rewrite into a NEW base (one file per ``bhp``
+    dir, so the per-increment log dirs fold away); returns the number
+    of band rows kept. Like the purge job, run it on the lifecycle
+    cadence, not per increment.
 
-    Crash safety (VERDICT r6 #2): the rewrite lands in a NEW version
-    dir ``<store>/v<N+1>`` and becomes visible only when the
-    ``_state.json`` pointer flips (sources/pointer.py — one small
-    atomic write, object-store-safe; no rmtree+rename of data files on
-    the committed path). A crash before the flip leaves the old version
-    fully live; after the flip, the old version enters the ``displaced``
-    ledger and survives the read-grace window before
-    ``gc_signature_store`` reaps it — a reader that resolved the old
-    version just before the flip finishes its probe over intact files
-    (the reference keeps displaced archive batch versions until purge
-    the same way, memstore/purge.go)."""
-    from aresdb_spark.sources import pointer
+    Crash safety: the new base and the emptied ledger become visible in
+    ONE pointer commit (sources/pointer.py); a crash before it leaves
+    the old base and log fully live. The displaced dirs survive the
+    read-grace window, so a reader that resolved them just before the
+    flip finishes its probe over intact files (the reference keeps
+    displaced archive batch versions until purge the same way,
+    memstore/purge.go)."""
+    from aresdb_spark.sources.hotcold import SignatureStore
 
-    with pointer.write_lock(store_path):
-        return _compact_locked(spark, store_path, keep_ids, id_col,
-                               gc_grace_seconds)
-
-
-def _compact_locked(spark, store_path, keep_ids, id_col,
-                    gc_grace_seconds) -> int:
-    from aresdb_spark.sources import pointer
-    from aresdb_spark.sources.bucketed import write_bucketed
-
-    state = pointer.committed_state(store_path)
-    # read the live version dir as PLAIN parquet, not through the
-    # bucketed catalog table: compaction rewrites every row, so bucket
-    # pruning buys nothing — and the table scan's HashPartitioning
-    # claim makes Catalyst eliminate the one-file-per-bucket
-    # repartition below while the actual task layout is coalesced
-    # mixed-bucket file chunks (measured: a 50-append store compacted
-    # to 189 files instead of 16)
-    store = spark.read.parquet(
-        pointer.version_dir(store_path, int(state["version"])))
-    n_buckets = int(state["n_buckets"])
-    kept = store.join(
-        F.broadcast(keep_ids.select(F.col(id_col).alias("id")).distinct()),
-        "id", "left_semi").select("id", "sig", "band", "bh", "bhp")
-    # one output file per bucket: repartition on the bucket column with
-    # n_buckets partitions (same Murmur3 hash as the bucket spec, so
-    # each task holds exactly one bucket's rows). Without this a
-    # K-task compaction writes K × n_buckets files — the r8 soak
-    # measured 50 micro-batch appends compacting to 189 files, which
-    # defeats the fold-the-small-files purpose. n_buckets scales with
-    # corpus size, so the write parallelism stays right at scale.
-    kept = kept.repartition(n_buckets, F.col("bh"))
-    version = pointer.next_version(state)
-    table = _sigstore_table(store_path, version)
-    target = pointer.version_dir(store_path, version)
-    if os.path.isdir(target):  # orphan of a crashed, uncommitted write
-        pointer.gc_dir(target)
-    ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                    for f in kept.schema.fields)
-    write_bucketed(kept, table, target, n_buckets, ["bh"])
-    pointer.commit_state(store_path, {
-        "format": 2, "version": version, "table": table,
-        "n_buckets": n_buckets, "schema_ddl": ddl,
-        "displaced": _displace(state)})
-    n = spark.table(table).count()
-    _gc_locked(spark, store_path, gc_grace_seconds)
-    return n
+    return SignatureStore(store_path).compact(keep_ids.select(id_col))
 
 
 def incremental_oracle_sql(old_where: str, new_select: str,

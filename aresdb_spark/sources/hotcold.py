@@ -37,12 +37,13 @@ Spark shape: two parquet layouts behind one pointer.
     bounded, because the archive job compacts the pending set into a
     new base on its cadence (memstore/archiving.go:62-72 merges live
     batches into the archive the same way).
-  - every pending set (hot batches, backfill queue, dimension journal)
-    is one append log under one rule (``_PointerStore``): batches are
-    numbered and published by the pointer commit, never by a directory
-    listing, and a read is ONE scan of the committed ``batch=<n>`` dirs
-    folded by ONE aggregation (fold_upserts): one shuffle however many
-    batches queued.
+  - every pending set (hot batches, backfill queue, dimension journal,
+    signature-store increments) is one append log under one rule
+    (``_PointerStore``): batches are numbered and published by the
+    pointer commit, never by a directory listing, and a read is ONE
+    scan of the committed ``batch=<n>`` dirs (for the upsert logs,
+    folded by ONE aggregation, fold_upserts: one shuffle however many
+    batches queued).
   - the union view applies the cutoff predicate to both sides.
 
 On a Delta/Iceberg deployment hot-rewrite becomes MERGE and archive
@@ -178,17 +179,19 @@ class MissingEventTimeError(ValueError):
     store instead."""
 
 
-FORMAT = 3          # the state layout both stores below read and write
-_LOG_DIRS = {"hot": "hotbatch", "backfill": "backfill", "journal": "journal"}
+FORMAT = 3          # the state layout every store below reads and writes
+_LOG_DIRS = {"hot": "hotbatch", "backfill": "backfill", "journal": "journal",
+             "sig": "sigbatch"}
 
 
 class _PointerStore:
-    """What ``HotColdStore`` and ``DimensionStore`` share behind their
-    one ``_state.json`` pointer: the format-checked committed state, the
-    versioned schema file, the commit-then-reap step, ``gc``, the cast
-    back to the store schema, footer row counts — and the ONE rule of
-    every pending set, an append log (``_LOGS``: the hot batches and
-    the backfill queue; the dimension journal).
+    """What ``HotColdStore``, ``DimensionStore`` and ``SignatureStore``
+    share behind their one ``_state.json`` pointer: the format-checked
+    committed state, the versioned schema file, the commit-then-reap
+    step, ``gc``, the cast back to the store schema, footer row counts —
+    and the ONE rule of every pending set, an append log (``_LOGS``: the
+    hot batches and the backfill queue; the dimension journal; the
+    signature increments).
 
     A log ``L`` is two state keys: ``L_seq``, the last batch number
     handed out, and ``L_batches``, the committed, unconsumed entries
@@ -217,7 +220,8 @@ class _PointerStore:
             raise ValueError(
                 f"store at {self.path} has state format "
                 f"{st.get('format')}, this engine reads format {FORMAT} "
-                f"only: rebuild it with init_from into an empty root")
+                f"only: rebuild it into an empty root with init_from "
+                f"(HotColdStore, DimensionStore) or build_signature_store")
         return st
 
     def _commit(self, before: "dict | None", displaced=(), **updates) -> None:
@@ -453,8 +457,7 @@ class HotColdStore(_PointerStore):
         died before its commit at the same number."""
         from aresdb_spark.sources.writer import write_archive
         out = os.path.join(self.path, f"coldset_v{k}")
-        write_archive(df, out, self.time_column, self.sort_columns,
-                      "overwrite")
+        write_archive(df, out, self.time_column, self.sort_columns)
         return {n.split("=", 1)[1]: f"coldset_v{k}/{n}"
                 for n in os.listdir(out) if n.startswith("__day=")}
 
@@ -1274,3 +1277,79 @@ class DimensionStore(_PointerStore):
             compacted = self._log_rows("journal", st)
             self._publish_snap(self._replay(spark, st), st)
             return compacted
+
+
+@dataclass
+class SignatureStore(_PointerStore):
+    """The continuous-crawl dedup index (operators/dedup.py
+    ``build_signature_store``): banded MinHash rows ``(id, sig, band,
+    bh, bhp)`` as a base ``sig_v<N>`` written ``partitionBy("bhp")``
+    plus the ``sig`` append log of increments. ``bhp``, the first hex
+    char of the band hash, is the probe's index: a ``bhp IN (...)``
+    filter is partition pruning on the base and a pushed filter on the
+    log. Every dir is immutable once its commit names it, so a session's
+    cached file listing can never hide a later increment."""
+
+    path: str
+
+    _LOGS = ("sig",)
+
+    def _base_dir(self, n: int) -> str:
+        return os.path.join(self.path, f"sig_v{n}")
+
+    def _write_base(self, bands: DataFrame, st: "dict | None") -> int:
+        """Write ``bands`` as the next, unpublished base version, one
+        file per ``bhp`` dir; "overwrite" reclaims the orphan of a
+        writer that died before its commit at the same number."""
+        n = pointer.next_version(st, "sig")
+        (bands.repartition("bhp").write.mode("overwrite")
+         .partitionBy("bhp").parquet(self._base_dir(n)))
+        return n
+
+    def write(self, bands: DataFrame, mode: str) -> None:
+        """``mode="append"`` logs ``bands`` as the next increment;
+        "overwrite" (or any mode on a root with no committed state)
+        re-initializes the store to ``bands``, displacing the old base
+        and every logged increment."""
+        with pointer.write_lock(self.path):
+            st = self._state(new_ok=True)
+            if mode == "append" and st is not None:
+                self._commit(st, **self._append("sig", bands, st))
+                return
+            before, updates, displaced = self._reinit(bands.schema)
+            n = self._write_base(bands, before)
+            if before is not None:
+                displaced.append(f"sig_v{before['sig']}")
+            self._commit(before, displaced, **updates, sig=n)
+
+    def read(self, spark: SparkSession,
+             st: "dict | None" = None) -> DataFrame:
+        """The base and the committed increments, resolved from ONE
+        state snapshot: two scans (one relation cannot mix the base's
+        ``bhp=`` dirs with flat batch dirs), each with the store
+        schema, so ``bhp`` stays a string however its values look."""
+        st = st or self._state()
+        schema = self._schema(st)
+        df = spark.read.schema(schema).parquet(self._base_dir(st["sig"]))
+        dirs = [self._batch_dir("sig", e["n"])
+                for e in self._batches("sig", st)]
+        if dirs:
+            df = df.unionByName(spark.read.schema(schema).parquet(*dirs))
+        return df
+
+    def compact(self, keep_ids: DataFrame) -> int:
+        """Rewrite base + log down to the rows whose ``id`` is in
+        ``keep_ids`` (one column) as a new base, and publish it with the
+        emptied ledger in one commit; returns the rows kept."""
+        spark = keep_ids.sparkSession
+        with pointer.write_lock(self.path):
+            st = self._state()
+            kept = self.read(spark, st).join(
+                F.broadcast(keep_ids.toDF("id").distinct()), "id",
+                "left_semi")
+            n = self._write_base(kept, st)
+            self._commit(st, [f"sig_v{st['sig']}"]
+                         + self._logged_dirs("sig", st),
+                         sig=n, sig_batches=[])
+            return spark.read.schema(self._schema(st)).parquet(
+                self._base_dir(n)).count()

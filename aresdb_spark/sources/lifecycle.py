@@ -47,8 +47,8 @@ from typing import Callable, Union
 from pyspark.sql import SparkSession
 
 from aresdb_spark.operators.util import utc_naive
-from aresdb_spark.sources.hotcold import DimensionStore, HotColdStore
-from aresdb_spark.sources.pointer import GC_GRACE_SECONDS
+from aresdb_spark.sources.hotcold import (DimensionStore, HotColdStore,
+                                          SignatureStore)
 
 ARCHIVING = "archiving"
 BACKFILL = "backfill"
@@ -90,38 +90,13 @@ class Job:
 
 
 @dataclass
-class SignatureStoreHandle:
-    """Lifecycle adapter for a persisted signature store
-    (operators/dedup.py build_signature_store): not a fact or dimension
-    table — its only lifecycle need is the ledger reaper, so under the
-    scheduler it generates gc jobs and nothing else. ``grace_seconds``
-    None uses the store's default read-grace window."""
-
-    path: str
-    grace_seconds: "float | None" = None
-
-    def gc(self, spark: SparkSession,
-           grace_seconds: "float | None" = None) -> int:
-        """Grace precedence: the handle's own setting, else the
-        caller's (the scheduler threads the table-config
-        ``gcGraceSeconds`` here — ADVICE r10 #4: the config must not be
-        honored for fact/dimension stores but silently ignored for
-        signature stores), else the module default."""
-        from aresdb_spark.operators.dedup import gc_signature_store
-        grace = self.grace_seconds if self.grace_seconds is not None \
-            else grace_seconds if grace_seconds is not None \
-            else GC_GRACE_SECONDS
-        return gc_signature_store(spark, self.path, grace)
-
-
-@dataclass
 class TableLifecycle:
     """One table shard under scheduler management: the store, its
     metastore config dict, and the mutable trigger state the reference
     keeps on the per-shard managers."""
 
     name: str
-    store: Union[HotColdStore, DimensionStore, SignatureStoreHandle]
+    store: Union[HotColdStore, DimensionStore, SignatureStore]
     config: dict
     shard: int = 0
     # PurgeManager.LastPurgeTime inits to "now" at construction
@@ -264,10 +239,6 @@ class Scheduler:
         def run(spark: SparkSession, t=t, now=now):
             t.last_gc_time = now
             grace = t.config.get("gcGraceSeconds")
-            if isinstance(t.store, SignatureStoreHandle):
-                # catalog-table drops need spark; the table-config grace
-                # applies here exactly as for the other store kinds
-                return t.store.gc(spark, grace_seconds=grace)
             return t.store.gc() if grace is None \
                 else t.store.gc(grace_seconds=grace)
 

@@ -129,10 +129,6 @@ def commit_state(root: str, state: dict) -> None:
         os.close(dfd)
 
 
-def version_dir(root: str, version: int) -> str:
-    return os.path.join(root, f"v{version}")
-
-
 def committed_state(root: str) -> dict:
     """``read_state`` for paths that need an initialized store: raises
     a ``FileNotFoundError`` naming the root and how to create it instead

@@ -22,10 +22,9 @@ DAY_COL = "__day"
 
 
 def write_archive(df: DataFrame, path: str, time_column: str,
-                  sort_columns: tuple[str, ...] = (),
-                  mode: str = "overwrite",
-                  max_records_per_file: int | None = None) -> None:
-    """Write a day-partitioned, sorted archive.
+                  sort_columns: tuple[str, ...] = ()) -> None:
+    """Write a day-partitioned, sorted archive, replacing whatever
+    ``path`` held (a store reclaims an uncommitted dir this way).
 
     At 100 TB: one shuffle on the day key (repartition by partition value
     → one task per output day, no small-file explosion), then an in-task
@@ -37,7 +36,4 @@ def write_archive(df: DataFrame, path: str, time_column: str,
         # ordering on the partition key and would otherwise re-sort the
         # task's rows, destroying the sort-column order inside each file
         out = out.sortWithinPartitions(DAY_COL, *sort_columns)
-    writer = out.write.mode(mode).partitionBy(DAY_COL)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-    writer.parquet(path)
+    out.write.mode("overwrite").partitionBy(DAY_COL).parquet(path)

@@ -203,10 +203,9 @@ def cmd_ledger(store: str) -> dict:
     now = time.time()
     ledger = []
     for e in state.get("displaced", []):
-        rel = e.get("dir") or f"v{e['version']}"
         ledger.append({
             **e, "ageSeconds": round(now - e["at"], 1),
-            "onDisk": os.path.exists(os.path.join(store, rel))})
+            "onDisk": os.path.exists(os.path.join(store, e["dir"]))})
     return {"store": store,
             "state": {k: v for k, v in state.items() if k != "displaced"},
             "displaced": ledger,
@@ -216,22 +215,11 @@ def cmd_ledger(store: str) -> dict:
 
 def cmd_gc(store: str, grace: float) -> dict:
     """Run the ledger reaper with an explicit grace window. Uses the
-    store's writer lock; refuses (loudly) if a writer is in flight.
-    Routes through gc_signature_store when the state looks like a
-    signature store (its ledger carries catalog table names to DROP),
-    else the generic pointer reaper."""
+    store's writer lock; refuses (loudly) if a writer is in flight."""
     from aresdb_spark.sources import pointer
 
-    state = pointer.read_state(store)
-    if state is not None and "table" in state and "n_buckets" in state:
-        from aresdb_spark.operators.dedup import gc_signature_store
-        from aresdb_spark.session import get_spark
-        spark = get_spark(app_name="ares-gc", cpus=4, shuffle_partitions=4)
-        spark.sparkContext.setLogLevel("ERROR")
-        n = gc_signature_store(spark, store, grace_seconds=grace)
-    else:
-        with pointer.write_lock(store):
-            n = pointer.gc_displaced(store, grace_seconds=grace)
+    with pointer.write_lock(store):
+        n = pointer.gc_displaced(store, grace_seconds=grace)
     return {"store": store, "reaped": n,
             "remaining": (pointer.read_state(store) or {}).get(
                 "displaced", [])}

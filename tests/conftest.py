@@ -15,6 +15,13 @@ SF_DIR_MED = "/root/testdata/sf0.01"
 REFERENCE_ROOT = os.path.join(os.path.dirname(REPO_ROOT), "reference")
 
 
+def pytest_addoption(parser):
+    parser.addoption(
+        "--full-soak", action="store_true",
+        help="run the streaming-dedup soak (test_streaming_dedup.py) at "
+             "50 micro-batches instead of the in-suite 25")
+
+
 @pytest.fixture(scope="session")
 def reference_root():
     """The reference checkout; skips the requesting test when absent."""

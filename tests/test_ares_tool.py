@@ -169,9 +169,8 @@ def test_select_batch_version_model(entries, cutoff):
 
 def test_ledger_and_gc_commands(spark, tmp_path, capsys):
     """ledger prints the committed state + displaced entries with ages
-    and on-disk presence; gc reaps past an explicit grace window
-    (routing signature stores through gc_signature_store for the
-    catalog DROPs) and reports what remains."""
+    and on-disk presence; gc reaps past an explicit grace window and
+    reports what remains — one pointer reaper for every store kind."""
     from pyspark.sql import functions as F
 
     from aresdb_spark.operators.dedup import (
@@ -185,11 +184,11 @@ def test_ledger_and_gc_commands(spark, tmp_path, capsys):
 
     out = ares_tool.main(["ledger", store])
     capsys.readouterr()
-    assert out["state"]["version"] == 1
+    assert out["state"]["sig"] == 1
     assert out["writerLockHeld"] is False
     assert len(out["displaced"]) == 1
     e = out["displaced"][0]
-    assert e["version"] == 0 and e["onDisk"] is True
+    assert e["dir"] == "sig_v0" and e["onDisk"] is True
     assert e["ageSeconds"] >= 0
 
     out = ares_tool.main(["gc", store, "--grace", "0"])

@@ -384,12 +384,10 @@ def test_scheduler_gc_job_reaps_idle_store_ledgers(spark, tmp_path):
     import os
     import time as _time
 
-    from aresdb_spark.operators.dedup import (_sigstore_table,
-                                              build_signature_store)
+    from aresdb_spark.operators.dedup import build_signature_store
     from aresdb_spark.sources import pointer
-    from aresdb_spark.sources.hotcold import DimensionStore
+    from aresdb_spark.sources.hotcold import DimensionStore, SignatureStore
     from aresdb_spark.sources.lifecycle import (GC, Scheduler,
-                                                SignatureStoreHandle,
                                                 TableLifecycle)
 
     # dimension store: one ingest displaces snap_v0 into the ledger
@@ -401,15 +399,15 @@ def test_scheduler_gc_job_reaps_idle_store_ledgers(spark, tmp_path):
     assert os.path.isdir(old_snap)
     assert pointer.read_state(dim.path)["displaced"]
 
-    # signature store: a second overwrite displaces v0 (and its catalog
-    # table), ledgered behind the pointer
+    # signature store: a second overwrite displaces sig_v0, ledgered
+    # behind the pointer
     docs = spark.createDataFrame(
         [(i, f"alpha beta gamma delta {i}") for i in range(30)],
         "doc_id long, text string")
     sig = str(tmp_path / "sig")
     build_signature_store(docs, sig)
     build_signature_store(docs, sig)
-    v0_dir = pointer.version_dir(sig, 0)
+    v0_dir = os.path.join(sig, "sig_v0")
     assert os.path.isdir(v0_dir)
     assert pointer.read_state(sig)["displaced"]
 
@@ -417,11 +415,10 @@ def test_scheduler_gc_job_reaps_idle_store_ledgers(spark, tmp_path):
         TableLifecycle(name="dim", store=dim, config={
             "snapshotIntervalMinutes": 360, "snapshotThreshold": 100,
             "gcGraceSeconds": 1.0, "gcIntervalHours": 24}),
-        # no handle-level grace: the table-config gcGraceSeconds must
-        # be honored for signature stores exactly as for the other
-        # store kinds (ADVICE r10 #4 — it was silently ignored before)
+        # the table-config gcGraceSeconds is honored for signature
+        # stores exactly as for the other store kinds (ADVICE r10 #4)
         TableLifecycle(name="sig",
-                       store=SignatureStoreHandle(sig),
+                       store=SignatureStore(sig),
                        config={"gcGraceSeconds": 1.0,
                                "gcIntervalHours": 24}),
     ]
@@ -436,7 +433,6 @@ def test_scheduler_gc_job_reaps_idle_store_ledgers(spark, tmp_path):
     # displaced artifacts gone, ledgers drained — with zero mutations
     assert not os.path.isdir(old_snap)
     assert not os.path.isdir(v0_dir)
-    assert not spark.catalog.tableExists(_sigstore_table(sig, 0))
     assert not pointer.read_state(dim.path).get("displaced")
     assert not pointer.read_state(sig).get("displaced")
     # disabled like any reference job type (EnableJobType)

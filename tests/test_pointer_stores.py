@@ -359,61 +359,79 @@ def test_ingest_crash_before_flip_drops_whole_batch(spark, tmp_path):
         == before + [20, 21]
 
 
-def test_sigstore_catalog_registration_crash_window(spark, tmp_path):
-    """VERDICT r8 #6: a signature-store writer dying BETWEEN its
-    bucketed saveAsTable (catalog write) and its pointer commit leaves
-    a catalog entry for an uncommitted version. The store must stay
-    readable off the committed pointer (the catalog stale entry is
-    never resolved by readers), and a retry — even with a DIFFERENT
-    bucket spec — must repair the stale entry rather than reuse it."""
-    import os
+def _sig_docs(spark, lo, phrase):
+    return spark.createDataFrame(
+        [(lo + i, f"{phrase} {i}") for i in range(40)],
+        "doc_id long, text string")
 
-    from aresdb_spark.operators.dedup import (_sigstore_table,
-                                              build_signature_store,
-                                              incremental_near_duplicates,
+
+@pytest.mark.parametrize("op", ["append", "build", "compact"])
+def test_signature_store_crash_before_commit_is_invisible(spark, tmp_path,
+                                                          op):
+    """The signature store publishes like the other stores: an append
+    (its ``sig`` log entry), a rebuild (a new ``sig_v<N>`` base) and a
+    compaction (a new base plus the emptied ledger) that die before
+    their commit leave the store row-identical to before, and the next
+    append reclaims the orphan ``batch=<n>`` its number points at."""
+    from aresdb_spark.operators.dedup import (build_signature_store,
+                                              compact_signature_store,
                                               read_signature_store)
 
-    docs = spark.createDataFrame(
-        [(i, f"the quick brown fox {i} jumps over the lazy dog")
-         for i in range(40)], "doc_id long, text string")
     path = str(tmp_path / "sig")
-    build_signature_store(docs, path)                    # v0 committed
-    v0_rows = read_signature_store(spark, path).count()
-    assert pointer_mod.read_state(path)["version"] == 0
-
-    more = spark.createDataFrame(
-        [(100 + i, f"pack my box with five dozen liquor jugs {i}")
-         for i in range(40)], "doc_id long, text string")
+    docs = _sig_docs(spark, 0, "the quick brown fox jumps over the dog")
+    more = _sig_docs(spark, 100, "pack my box with five dozen liquor jugs")
+    build_signature_store(docs, path)
+    build_signature_store(more.filter("doc_id < 110"), path, mode="append")
+    rows = lambda: sorted(  # noqa: E731
+        map(tuple, read_signature_store(spark, path).collect()))
+    before, st = rows(), pointer_mod.read_state(path)
+    crash = {
+        "append": lambda: build_signature_store(more, path, mode="append"),
+        "build": lambda: build_signature_store(more, path),
+        "compact": lambda: compact_signature_store(
+            spark, path, docs.select("doc_id")),
+    }[op]
     with _CrashOnCommit():
         with pytest.raises(RuntimeError, match="pointer flip"):
-            build_signature_store(docs.unionByName(more), path)
+            crash()
+    assert pointer_mod.read_state(path) == st
+    assert rows() == before
+    orphan = {"append": "sigbatch/batch=1", "build": "sig_v1",
+              "compact": "sig_v1"}[op]
+    assert os.path.isdir(os.path.join(path, orphan))
 
-    # files + catalog entry for v1 exist, but the pointer still says v0
-    st = pointer_mod.read_state(path)
-    assert st["version"] == 0
-    stale = _sigstore_table(path, 1)
-    assert spark.catalog.tableExists(stale)
-    # the read path resolves via the committed pointer — stale entry
-    # ignored, old version served intact
-    assert read_signature_store(spark, path).count() == v0_rows
+    # the next append takes the crashed append's number: its dir holds
+    # only the new rows, never the orphan's
+    build_signature_store(more.filter("doc_id >= 130"), path, mode="append")
+    assert [e["n"] for e in pointer_mod.read_state(path)["sig_batches"]] \
+        == [0, 1]
+    after = rows()
+    assert len(after) == len(before) + 40  # 10 docs x 4 bands
+    assert {r[0] for r in after} - {r[0] for r in before} == \
+        set(range(130, 140))
 
-    # retry with a DIFFERENT bucket count: the repair line must drop
-    # the stale v1 definition (8-bucket spec must win, not the crashed
-    # 16-bucket one — a reused stale spec would silently mis-prune)
-    build_signature_store(docs.unionByName(more), path, n_buckets=8)
-    st = pointer_mod.read_state(path)
-    assert st["version"] == 1 and st["n_buckets"] == 8
-    desc = spark.sql(f"DESCRIBE EXTENDED {st['table']}").collect()
-    buckets = {r["data_type"] for r in desc
-               if r["col_name"] == "Num Buckets"}
-    assert buckets == {"8"}
-    assert read_signature_store(spark, path).count() > v0_rows
-    # and the pruned probe (the bucket filter consumer) stays correct
-    probe = docs.limit(3)
-    hits = incremental_near_duplicates(spark, probe, path,
-                                       threshold=0.9, prune=True)
-    assert {r["store_id"] for r in hits.collect()} >= \
-        {r["doc_id"] for r in probe.collect()}
+
+def test_signature_store_leaves_catalog_untouched(spark, tmp_path):
+    """Build, append, read, compact and gc go through the pointer alone:
+    the session catalog lists the same tables before and after."""
+    from aresdb_spark.operators.dedup import (build_signature_store,
+                                              compact_signature_store,
+                                              read_signature_store)
+    from aresdb_spark.sources.hotcold import SignatureStore
+
+    tables = lambda: sorted(  # noqa: E731
+        (t.name, t.database) for t in spark.catalog.listTables())
+    want = tables()
+    path = str(tmp_path / "sig")
+    docs = _sig_docs(spark, 0, "sphinx of black quartz judge my vow")
+    build_signature_store(docs, path)
+    build_signature_store(docs, path)
+    build_signature_store(docs, path, mode="append")
+    assert read_signature_store(spark, path).count() == 2 * 40 * 4
+    assert compact_signature_store(spark, path, docs.select("doc_id")) == 320
+    # sig_v0 and _schema_v0.json (rebuild), sig_v1 and batch=0 (compact)
+    assert SignatureStore(path).gc(grace_seconds=0) == 4
+    assert tables() == want
 
 
 def test_hot_reader_survives_concurrent_compaction(spark, tmp_path):
@@ -603,14 +621,17 @@ def test_read_without_committed_state_names_the_fix(spark, tmp_path,
         assert "build_signature_store" in str(e.value)
 
 
-@pytest.mark.parametrize("kind", ["hotcold", "dimension"])
+@pytest.mark.parametrize("kind", ["hotcold", "dimension", "signature"])
 def test_other_state_format_names_the_fix(spark, tmp_path, kind):
-    """Both stores read one state layout, format 3: a root committed in
+    """Every store reads one state layout, format 3: a root committed in
     any other format (format 2 kept its queue and journal behind
-    ``*_consumed`` watermarks) raises one error naming the root and
-    ``init_from`` from every reader and from a re-init over it — no
-    conversion path, nothing read through the old keys."""
-    from aresdb_spark.sources.hotcold import DimensionStore
+    ``*_consumed`` watermarks, and the signature store in a catalog
+    table) raises one error naming the root and ``init_from`` from
+    every reader and from a re-init over it — no conversion path,
+    nothing read through the old keys."""
+    from aresdb_spark.operators.dedup import (build_signature_store,
+                                              read_signature_store)
+    from aresdb_spark.sources.hotcold import DimensionStore, SignatureStore
 
     if kind == "hotcold":
         store = _fact_store(spark, tmp_path)
@@ -618,12 +639,19 @@ def test_other_state_format_names_the_fix(spark, tmp_path, kind):
             spark.createDataFrame([Row(id=1, ts=datetime(2024, 1, 1),
                                        v=1.0)]), datetime(2024, 1, 15))]
         reads = [store.read, store.read_hot, store.read_cold]
-    else:
+    elif kind == "dimension":
         store = DimensionStore(path=str(tmp_path / "d"), primary_key=("k",))
         store.init_from(spark.createDataFrame([Row(k=1, name="a")]))
         reinit = [lambda: store.init_from(
             spark.createDataFrame([Row(k=1, name="a")]))]
         reads = [store.read]
+    else:
+        store = SignatureStore(str(tmp_path / "s"))
+        docs = _sig_docs(spark, 0, "how vexingly quick daft zebras jump")
+        build_signature_store(docs, store.path)
+        reinit = [lambda mode=mode: build_signature_store(
+            docs, store.path, mode=mode) for mode in ("overwrite", "append")]
+        reads = [lambda s: read_signature_store(s, store.path)]
     st = pointer_mod.read_state(store.path)
     pointer_mod.commit_state(store.path, {**st, "format": 2})
     for call in [lambda r=r: r(spark) for r in reads] + reinit:

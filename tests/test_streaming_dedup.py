@@ -32,17 +32,52 @@ def _run_sink(spark, src, store, out, ckpt, threshold=0.8):
     q.awaitTermination(180)
 
 
+def _file_scans(df):
+    """The executed plan's parquet scans as (root path, partitions
+    read), after the final adaptive plan; collects ``df``."""
+    df.collect()
+    out = []
+
+    def walk(p):
+        cls = p.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            return walk(p.executedPlan())
+        if cls.endswith("QueryStageExec"):
+            return walk(p.plan())
+        if cls == "ReusedExchangeExec":
+            return walk(p.child())
+        if cls == "FileSourceScanExec":
+            m = p.metrics()
+            out.append((p.relation().location().rootPaths().apply(0)
+                        .toString(),
+                        m.get("numPartitions").get().value()
+                        if m.contains("numPartitions") else None))
+        ch = p.children()
+        for i in range(ch.size()):
+            walk(ch.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
 def test_probe_plan_is_one_pruned_store_scan(spark, tmp_path):
-    """The per-micro-batch accepted-set plan reads the signature store
-    exactly ONCE (r6 found two full scans), and the read is
-    bucket-pruned: a tiny probe's band hashes select a strict subset of
-    the store's buckets (SelectedBucketsCount k out of n, k < n)."""
+    """The per-micro-batch accepted-set plan scans each committed store
+    dir exactly ONCE (r6 found two full scans of the store), and the
+    base scan is partition-pruned: a 1-doc probe's ``bhp`` values are a
+    ``PartitionFilters`` entry that reads at most 4 of the base's 16
+    ``bhp`` partitions. Pruned and plain probes return the same rows."""
+    import os
+
     from aresdb_spark.operators.dedup import (
         build_signature_store, dedup_exact, incremental_near_duplicates)
 
     docs = _docs(spark)
     store = str(tmp_path / "store")
     build_signature_store(docs.filter(F.col("doc_id") % 3 == 0), store)
+    build_signature_store(docs.filter(F.col("doc_id") % 3 == 1), store,
+                          mode="append")  # one logged increment
+    assert len([n for n in os.listdir(os.path.join(store, "sig_v0"))
+                if n.startswith("bhp=")]) == 16
 
     # mirror start_dedup_stream's non-first-batch body for one tiny batch
     batch = dedup_exact(docs.filter(F.col("doc_id") == 1))
@@ -52,38 +87,26 @@ def test_probe_plan_is_one_pruned_store_scan(spark, tmp_path):
         hits.select(F.col("new_id").alias("doc_id")).distinct(),
         "doc_id", "left_anti")
     plan = accepted._jdf.queryExecution().executedPlan().toString()
+    # only the base is partitioned: its scan carries the bhp filter
+    assert re.search(r"PartitionFilters: \[bhp#\d+ IN \(", plan), plan
 
-    store_scans = plan.count("sigstore_")
-    assert store_scans == 1, f"store scanned {store_scans}x:\n{plan}"
-    m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
-    assert m, f"no bucket pruning in plan:\n{plan}"
-    selected, total = int(m.group(1)), int(m.group(2))
-    # 1 doc × 4 bands = ≤4 band hashes → ≤4 of 16 buckets
-    assert selected < total, plan
-    assert selected <= 4, (selected, total)
+    scans = [s for s in _file_scans(accepted) if s[0].startswith(
+        "file:" + store)]
+    assert sorted(s[0].rsplit("/", 1)[1] for s in scans) == \
+        ["batch=0", "sig_v0"], scans
+    base = next(s for s in scans if s[0].endswith("sig_v0"))
+    # 1 doc × 4 bands = ≤4 band-hash prefixes → ≤4 of 16 partitions
+    assert 1 <= base[1] <= 4, scans
+    assert accepted.count() == 0  # doc 1 is in the logged increment
 
-
-def test_probe_over_prune_budget_falls_back_to_full_scan(spark, tmp_path):
-    """A probe larger than the key budget would touch most buckets
-    anyway; the filter is dropped and results stay identical to the
-    unpruned plan."""
-    from aresdb_spark.operators.dedup import (
-        build_signature_store, incremental_near_duplicates)
-
-    docs = _docs(spark)
-    store = str(tmp_path / "store")
-    build_signature_store(docs.filter(F.col("doc_id") % 3 == 0), store)
-    probe = docs.filter(F.col("doc_id") % 3 == 1)
-
-    pruned = incremental_near_duplicates(
-        spark, probe, store, threshold=0.5, prune=True)
-    capped = incremental_near_duplicates(
-        spark, probe, store, threshold=0.5, prune=True, prune_max_keys=2)
-    plain = incremental_near_duplicates(
-        spark, probe, store, threshold=0.5)
+    recrawl = (docs.filter(F.col("doc_id") % 9 == 0)
+               .withColumn("doc_id", F.col("doc_id") + 1000000))
+    probe = docs.filter(F.col("doc_id") % 3 == 2).unionByName(recrawl)
     rows = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
-    assert rows(pruned) == rows(plain)
-    assert rows(capped) == rows(plain)
+    pruned = rows(incremental_near_duplicates(
+        spark, probe, store, threshold=0.5, prune=True))
+    assert pruned and pruned == rows(incremental_near_duplicates(
+        spark, probe, store, threshold=0.5))
 
 
 def test_crash_between_accept_and_store_append(spark, tmp_path):
@@ -150,17 +173,19 @@ def test_crash_between_accept_and_store_append(spark, tmp_path):
     _run_sink(spark, src, store, out, ckpt)
 
 
-def test_soak_fifty_microbatches_stays_flat(spark, tmp_path):
-    """VERDICT r8 directive 6 (soak, deliberately in-suite): run the
-    continuous-crawl sink for 50 micro-batches and assert the two
-    slow-killer signals stay bounded:
+def test_soak_microbatches_stay_flat(spark, tmp_path, request):
+    """VERDICT r8 directive 6 (soak): run the continuous-crawl sink for
+    25 micro-batches — the fewest for which the early window (batches
+    5–14, past warm-up) and the late window (the last 10) are disjoint;
+    ``--full-soak`` runs 50 — and assert the two slow-killer signals
+    stay bounded:
 
     1. per-batch wall time is FLAT — the pruned probe must track batch
        size, not accumulated store size (late-window batches no slower
        than early ones beyond a noise factor);
-    2. small-file accumulation from per-batch bucketed appends is
-       folded by one lifecycle compaction back to ~n_buckets files
-       with no row lost.
+    2. the per-micro-batch increments pile up as logged dirs, and one
+       lifecycle compaction folds the whole ledger into one base of at
+       most one file per ``bhp`` partition with no row lost.
     """
     import glob
     import os
@@ -169,11 +194,12 @@ def test_soak_fifty_microbatches_stays_flat(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from aresdb_spark.operators.dedup import (
-        SIGSTORE_BUCKETS, compact_signature_store, read_signature_store)
-    from aresdb_spark.sources.pointer import read_state, version_dir
+    from aresdb_spark.operators.dedup import (compact_signature_store,
+                                              read_signature_store)
+    from aresdb_spark.sources.pointer import read_state
 
-    n_batches, per_batch = 50, 20
+    n_batches = 50 if request.config.getoption("--full-soak") else 25
+    per_batch = 20
     src = tmp_path / "in"
     src.mkdir()
     # batch k: 15 fresh docs + 5 near-verbatim repeats of batch 0 (the
@@ -210,7 +236,8 @@ def test_soak_fifty_microbatches_stays_flat(spark, tmp_path):
     progress = [p for p in (q.recentProgress or []) if p is not None]
     durs = [p["durationMs"].get("triggerExecution", 0) for p in progress
             if p.get("numInputRows", 0) > 0]
-    assert len(durs) >= 40, f"expected ~50 batches, saw {len(durs)}"
+    assert len(durs) == n_batches, f"expected {n_batches} batches, " \
+        f"saw {len(durs)}"
     early = statistics.median(durs[5:15])   # skip JIT warmup batches
     late = statistics.median(durs[-10:])
     print(f"\nsoak: {len(durs)} batches, per-batch median early={early}ms "
@@ -219,10 +246,9 @@ def test_soak_fifty_microbatches_stays_flat(spark, tmp_path):
         f"per-batch time drifted: early median {early}ms late {late}ms"
 
     # dedup semantics over the whole soak: each repeated TEXT survives
-    # exactly once across all 50 batches — ROW count, not distinct-text
-    # count (the weaker form passed even when a stale table-file-index
-    # cache froze the probe's store view at batch 0; r8's fix refreshes
-    # the listing on every store read)
+    # exactly once across all batches — ROW count, not distinct-text
+    # count (the weaker form passed even when a stale file listing
+    # froze the probe's store view at batch 0, the r8 defect)
     accepted = spark.read.parquet(out)
     assert accepted.count() == accepted.select("doc_id").distinct().count()
     n_rep_rows = accepted.filter(
@@ -230,27 +256,25 @@ def test_soak_fifty_microbatches_stays_flat(spark, tmp_path):
     assert n_rep_rows == 5, \
         f"{n_rep_rows} repeated-text rows accepted (want exactly 5)"
 
-    # the store grew with every accepted batch (N_BANDS rows per doc)
+    # the store grew with every accepted batch (N_BANDS rows per doc):
+    # the first batch built the base, every later one is a logged dir
     st = read_state(store)
-    live = version_dir(store, st["version"])
-    files_before = len(glob.glob(os.path.join(live, "*.parquet")))
+    assert [e["n"] for e in st["sig_batches"]] == list(range(n_batches - 1))
     rows_before = read_signature_store(spark, store).count()
     assert rows_before == 4 * accepted.count(), \
         f"store rows {rows_before} != 4 x {accepted.count()} accepted"
 
-    # small files: 50 bucketed appends accumulate many part files;
-    # one lifecycle compaction folds them to ~n_buckets with no row lost
-    assert files_before > 2 * SIGSTORE_BUCKETS  # soak accumulated files
     kept = compact_signature_store(spark, store,
                                    accepted.select("doc_id"))
     assert kept == rows_before  # nothing dropped: all ids retained
     st2 = read_state(store)
-    files_after = len(glob.glob(
-        os.path.join(version_dir(store, st2["version"]), "*.parquet")))
-    print(f"soak: store files {files_before} -> {files_after} "
-          f"after compaction ({rows_before} rows kept)")
-    assert files_after <= 2 * SIGSTORE_BUCKETS, \
-        f"compaction left {files_after} files"
+    assert st2["sig_batches"] == []
+    files_after = glob.glob(os.path.join(
+        store, f"sig_v{st2['sig']}", "bhp=*", "*.parquet"))
+    print(f"soak: {n_batches - 1} logged dirs -> {len(files_after)} base "
+          f"files after compaction ({rows_before} rows kept)")
+    assert len(files_after) <= 16, f"compaction left {len(files_after)} files"
+    assert read_signature_store(spark, store).count() == rows_before
 
 
 def test_compact_crash_before_pointer_flip_leaves_store_live(
@@ -298,41 +322,47 @@ def test_displaced_version_survives_grace_for_inflight_reader(
         spark, tmp_path):
     """VERDICT r7 #1: a reader that resolved the OLD store version
     completes its scan across a concurrent compaction — the flip moves
-    the old version into the ``displaced`` ledger instead of deleting
-    it, and only ``gc_signature_store`` (age-gated, lifecycle-cadence)
-    reaps it."""
+    the old base and the folded log dirs into the ``displaced`` ledger
+    instead of deleting them, and only ``gc`` (age-gated,
+    lifecycle-cadence) reaps them."""
     import os
 
     from aresdb_spark.operators.dedup import (
         build_signature_store, compact_signature_store,
-        gc_signature_store, incremental_near_duplicates,
-        read_signature_store)
-    from aresdb_spark.sources.pointer import read_state, version_dir
+        incremental_near_duplicates, read_signature_store)
+    from aresdb_spark.sources.hotcold import SignatureStore
+    from aresdb_spark.sources.pointer import read_state
 
     docs = _docs(spark)
     store = str(tmp_path / "store")
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
-    build_signature_store(corpus, store)
+    build_signature_store(corpus.filter(F.col("doc_id") % 4 == 0), store)
+    build_signature_store(corpus.filter(F.col("doc_id") % 4 == 2), store,
+                          mode="append")
 
-    # the in-flight reader: plan resolved against v0, not yet executed
+    # the in-flight reader: plan resolved against sig_v0 + batch=0, not
+    # yet executed
     probe = docs.filter(F.col("doc_id").isin([2, 3, 4, 5]))
     reader = incremental_near_duplicates(spark, probe, store, threshold=0.8)
     expected = {(r.new_id, r.store_id) for r in reader.collect()}
+    assert {2, 4} <= {r[1] for r in expected}  # base and log both hit
 
-    # concurrent compaction flips to v1 (default grace: old files live)
-    retained = corpus.filter(F.col("doc_id") % 4 == 0).select("doc_id")
+    # concurrent compaction flips to sig_v1 (default grace: old files live)
+    retained = corpus.filter(F.col("doc_id") % 8 == 0).select("doc_id")
     compact_signature_store(spark, store, retained)
     st = read_state(store)
-    assert st["version"] == 1
-    assert [d["version"] for d in st["displaced"]] == [0]
-    assert os.path.isdir(version_dir(store, 0))  # old files intact
+    assert st["sig"] == 1 and st["sig_batches"] == []
+    assert [d["dir"] for d in st["displaced"]] == \
+        ["sig_v0", "sigbatch/batch=0"]
+    assert os.path.isdir(os.path.join(store, "sig_v0"))  # old files intact
 
     # the old-version reader finishes its scan with correct results
     assert {(r.new_id, r.store_id) for r in reader.collect()} == expected
 
-    # GC after the window (forced): old version reaped, ledger empty
-    assert gc_signature_store(spark, store, grace_seconds=0) == 1
-    assert not os.path.isdir(version_dir(store, 0))
+    # GC after the window (forced): old dirs reaped, ledger empty
+    assert SignatureStore(store).gc(grace_seconds=0) == 2
+    assert not os.path.isdir(os.path.join(store, "sig_v0"))
+    assert not os.path.isdir(os.path.join(store, "sigbatch", "batch=0"))
     assert read_state(store)["displaced"] == []
     # live version unaffected
     assert read_signature_store(spark, store).count() > 0
@@ -345,8 +375,9 @@ def test_gc_reaps_only_expired_displaced_versions(spark, tmp_path):
     import os
 
     from aresdb_spark.operators.dedup import (
-        build_signature_store, compact_signature_store, gc_signature_store)
-    from aresdb_spark.sources.pointer import read_state, version_dir
+        build_signature_store, compact_signature_store)
+    from aresdb_spark.sources.hotcold import SignatureStore
+    from aresdb_spark.sources.pointer import read_state
 
     docs = _docs(spark)
     store = str(tmp_path / "store")
@@ -355,25 +386,27 @@ def test_gc_reaps_only_expired_displaced_versions(spark, tmp_path):
     compact_signature_store(spark, store, corpus.select("doc_id"))
     compact_signature_store(spark, store, corpus.select("doc_id"))
     st = read_state(store)
-    assert [d["version"] for d in st["displaced"]] == [0, 1]
-    assert gc_signature_store(spark, store, grace_seconds=3600) == 0
-    assert os.path.isdir(version_dir(store, 0))
-    assert gc_signature_store(spark, store, grace_seconds=0) == 2
-    assert not os.path.isdir(version_dir(store, 0))
-    assert not os.path.isdir(version_dir(store, 1))
-    assert gc_signature_store(spark, store, grace_seconds=0) == 0  # idempotent
+    assert [d["dir"] for d in st["displaced"]] == ["sig_v0", "sig_v1"]
+    sig = SignatureStore(store)
+    assert sig.gc(grace_seconds=3600) == 0
+    assert os.path.isdir(os.path.join(store, "sig_v0"))
+    assert sig.gc(grace_seconds=0) == 2
+    assert not os.path.isdir(os.path.join(store, "sig_v0"))
+    assert not os.path.isdir(os.path.join(store, "sig_v1"))
+    assert sig.gc(grace_seconds=0) == 0  # idempotent
 
 
 def test_sigstore_mutations_are_single_writer(spark, tmp_path):
     """Store mutations AND the ledger GC end in whole-state commits, so
     racing writers would be last-commit-wins: one version flip silently
-    rolled back — after which the next writer deletes the rolled-back
-    version dir as an 'orphan'. The writer lock turns that destruction
-    into a loud ConcurrentWriteError; readers never take it (the
-    read-grace window is their protection)."""
+    rolled back — after which the next writer overwrites the
+    rolled-back version dir as an 'orphan'. The writer lock turns that
+    destruction into a loud ConcurrentWriteError; readers never take it
+    (the read-grace window is their protection)."""
     from aresdb_spark.operators.dedup import (
-        build_signature_store, compact_signature_store, gc_signature_store,
+        build_signature_store, compact_signature_store,
         incremental_near_duplicates)
+    from aresdb_spark.sources.hotcold import SignatureStore
     from aresdb_spark.sources.pointer import ConcurrentWriteError, write_lock
 
     docs = _docs(spark)
@@ -387,7 +420,7 @@ def test_sigstore_mutations_are_single_writer(spark, tmp_path):
         with pytest.raises(ConcurrentWriteError):
             compact_signature_store(spark, store, corpus.select("doc_id"))
         with pytest.raises(ConcurrentWriteError):
-            gc_signature_store(spark, store, grace_seconds=0)
+            SignatureStore(store).gc(grace_seconds=0)
         # readers are lock-free
         probe = docs.filter(F.col("doc_id") == 3)
         assert incremental_near_duplicates(
@@ -398,8 +431,8 @@ def test_sigstore_mutations_are_single_writer(spark, tmp_path):
 
 
 def test_crashed_initial_write_is_not_legacy(spark, tmp_path):
-    """ADVICE r7: a crash during the first v2 write leaves a partial
-    v0/ dir and no pointer. The replayed first batch must take the
+    """ADVICE r7: a crash during the first write leaves a partial
+    sig_v0/ dir and no pointer. The replayed first batch must take the
     CREATE branch (only a committed pointer makes a store, never dir
     non-emptiness) — the old rule appended bhp=* dirs beside the
     orphan and left the root unreadable."""
@@ -411,16 +444,18 @@ def test_crashed_initial_write_is_not_legacy(spark, tmp_path):
 
     docs = _docs(spark)
     store = tmp_path / "store"
-    (store / "v0").mkdir(parents=True)  # partial uncommitted write
-    (store / "v0" / "part-00000.parquet.tmp").write_bytes(b"torn")
+    (store / "sig_v0").mkdir(parents=True)  # partial uncommitted write
+    (store / "sig_v0" / "part-00000.parquet.tmp").write_bytes(b"torn")
 
     build_signature_store(docs.filter(F.col("doc_id") % 7 == 0),
                           str(store), mode="append")  # the sink's replay
     st = read_state(str(store))
-    assert st is not None and st["version"] == 0  # fresh v2 store
+    assert st is not None and st["sig"] == 0  # fresh store
+    assert st["sig_batches"] == []
     assert not [n for n in os.listdir(store) if n.startswith("bhp=")]
     assert read_signature_store(spark, str(store)).count() > 0
-    assert not (store / "v0" / "part-00000.parquet.tmp").exists()  # orphan gone
+    # the orphan is reclaimed by the overwrite at the same number
+    assert not (store / "sig_v0" / "part-00000.parquet.tmp").exists()
 
 
 def test_sink_tolerates_precreated_empty_store_dir(spark, tmp_path):
@@ -444,30 +479,31 @@ def test_sink_tolerates_precreated_empty_store_dir(spark, tmp_path):
     assert read_signature_store(spark, store).count() > 0
 
 
-def test_store_reregisters_in_fresh_catalog(spark, tmp_path):
-    """Bucket metadata lives in the session catalog; a LATER session
-    must rebuild the external table from the _state.json record (same
-    name, same bucket spec) and keep pruning. Simulated by dropping the
-    table between build and read."""
+def test_store_reads_in_fresh_session(spark, tmp_path):
+    """The store needs no session state: a session that never wrote it
+    reads it off the pointer, keeps partition pruning, and — after it
+    has listed the store once — still sees an increment another session
+    appends (every dir is immutable once committed, so no cached file
+    listing can go stale: the r8 soak defect)."""
     from aresdb_spark.operators.dedup import (
         build_signature_store, incremental_near_duplicates,
         read_signature_store)
-    from aresdb_spark.sources.pointer import read_state
 
     docs = _docs(spark)
     store = str(tmp_path / "store")
     build_signature_store(docs.filter(F.col("doc_id") % 3 == 0), store)
-    state = read_state(store)
-    spark.sql(f"DROP TABLE {state['table']}")  # "new session"
 
-    df = read_signature_store(spark, store)
-    assert df.count() > 0
-    assert spark.catalog.tableExists(state["table"])  # re-registered
+    other = spark.newSession()
+    n0 = read_signature_store(other, store).count()
+    build_signature_store(docs.filter(F.col("doc_id") % 3 == 1), store,
+                          mode="append")
+    assert read_signature_store(other, store).count() > n0
+
     hits = incremental_near_duplicates(
-        spark, docs.filter(F.col("doc_id") == 9), store,
+        other, docs.filter(F.col("doc_id") == 10), store,
         threshold=0.8, prune=True)
     plan = hits._jdf.queryExecution().executedPlan().toString()
-    assert re.search(r"SelectedBucketsCount: \d+ out of \d+", plan)
+    assert re.search(r"PartitionFilters: \[bhp#\d+ IN \(", plan), plan
     assert hits.filter(F.col("new_id") == F.col("store_id")).count() == 1
 
 
