@@ -65,7 +65,7 @@ def test_probe_plan_is_one_pruned_store_scan(spark, tmp_path):
     dir exactly ONCE (r6 found two full scans of the store), and the
     base scan is partition-pruned: a 1-doc probe's ``bhp`` values are a
     ``PartitionFilters`` entry that reads at most 4 of the base's 16
-    ``bhp`` partitions. Pruned and plain probes return the same rows."""
+    ``bhp`` partitions."""
     import os
 
     from aresdb_spark.operators.dedup import (
@@ -99,14 +99,35 @@ def test_probe_plan_is_one_pruned_store_scan(spark, tmp_path):
     assert 1 <= base[1] <= 4, scans
     assert accepted.count() == 0  # doc 1 is in the logged increment
 
+
+def test_probe_over_prune_budget_falls_back_to_full_scan(spark, tmp_path):
+    """A wide probe whose band-hash prefixes cover every ``bhp`` value
+    leaves nothing to prune: the pruned plan reads all 16 base
+    partitions, the same scan as the unpruned plan, and returns the same
+    rows."""
+    from aresdb_spark.operators.dedup import (
+        build_signature_store, incremental_near_duplicates)
+
+    docs = _docs(spark)
+    store = str(tmp_path / "store")
+    build_signature_store(docs.filter(F.col("doc_id") % 3 == 0), store)
+    build_signature_store(docs.filter(F.col("doc_id") % 3 == 1), store,
+                          mode="append")  # one logged increment
+
     recrawl = (docs.filter(F.col("doc_id") % 9 == 0)
                .withColumn("doc_id", F.col("doc_id") + 1000000))
     probe = docs.filter(F.col("doc_id") % 3 == 2).unionByName(recrawl)
+    pruned = incremental_near_duplicates(
+        spark, probe, store, threshold=0.5, prune=True)
+    plain = incremental_near_duplicates(spark, probe, store, threshold=0.5)
+
+    def base_partitions(df):
+        return [n for path, n in _file_scans(df)
+                if path == "file:" + store + "/sig_v0"]
+
+    assert base_partitions(pruned) == base_partitions(plain) == [16]
     rows = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
-    pruned = rows(incremental_near_duplicates(
-        spark, probe, store, threshold=0.5, prune=True))
-    assert pruned and pruned == rows(incremental_near_duplicates(
-        spark, probe, store, threshold=0.5))
+    assert rows(pruned) and rows(pruned) == rows(plain)
 
 
 def test_crash_between_accept_and_store_append(spark, tmp_path):
