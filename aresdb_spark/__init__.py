@@ -4,7 +4,7 @@ data-processing capabilities of uber/aresdb.
 Architecture (Spark-first, NOT a port):
   - ``catalog``    table registry + parquet readers (archive store analog)
   - ``aql``        AQL query model, expression dialect compiler, planner
-  - ``functions``  scalar/bucketizer/geo/HLL helpers → pyspark Columns
+  - ``functions``  geo predicates (Spark-SQL text) and HLL sketch helpers
   - ``operators``  data-pipeline operators (dedup, similarity, text, multimodal)
   - ``sources``    hot/cold union view, streaming-ish sources
   - ``streaming``  ingestion: upsert semantics, retention, backfill

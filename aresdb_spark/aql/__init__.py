@@ -1,7 +1,7 @@
 """AQL — the reference's query dialect, re-expressed on Spark.
 
 ``model``   dataclasses mirroring query/common/aql.go:95-151
-``expr``    expression parser + Spark Column compiler
+``expr``    expression parser + Spark-SQL text compiler
             (reference: query/expr/parser.go + query/context/query_context_helper.go)
 ``timeutil`` relative-time grammar + time bucketizers
             (reference: query/common/time_filter.go, query/time_bucketizer.go)

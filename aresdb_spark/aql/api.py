@@ -20,9 +20,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from aresdb_spark.aql import expr as E
 from aresdb_spark.aql.model import Query, query_from_json
-from aresdb_spark.aql.planner import Planner, _contains_aggregate
+from aresdb_spark.aql.planner import Planner
 from aresdb_spark.aql.result import to_aggregate_result, to_matrix_result
 from aresdb_spark.catalog import Catalog
+from aresdb_spark.operators.util import ident
 
 
 def _is_aggregate_query(q: Query) -> bool:
@@ -32,7 +33,7 @@ def _is_aggregate_query(q: Query) -> bool:
     holds only derived ratios (each WITH leg lands in
     ``supporting_measures``) is aggregated by the planner and must be
     shaped as the nested aggregate map, not a matrix."""
-    return any(_contains_aggregate(E.parse(m.expr))
+    return any(E.contains_aggregate(E.parse(m.expr))
                for m in q.measures + q.supporting_measures)
 
 
@@ -173,6 +174,65 @@ def execute_request(spark: SparkSession, catalog: Catalog | str,
 
 # --- application/hll response (reference api/query_handler.go:382-420) -------
 
+def _hll_sketches(spark: SparkSession, catalog: Catalog, q: Query,
+                  register_cap: int, key=None, epoch_timestamps=False):
+    """One HLL sketch per dimension-key group of ``q``'s single
+    ``hll()`` / ``countdistincthll()`` measure, built from the
+    reference-exact register pipeline (``hll_registers``). Measure-level
+    row filters merge into the WHERE set like the single-measure planner
+    rule, and the driver collect is bounded by ``register_cap``
+    (``limit(N+1)`` inside the collect, then overflow raises).
+
+    ``key(i, value, dtype)`` maps the i-th dimension value to its group
+    key part (default: the value). ``epoch_timestamps`` converts
+    timestamp dimensions to epoch seconds IN SPARK — PySpark's non-Arrow
+    collect renders TimestampType via the driver OS timezone, so
+    converting Python datetimes on the driver would shift the epoch on a
+    non-UTC host. Returns ({key: HLL}, dim_names, {dim name: dtype});
+    the dtypes are the dimensions' before any conversion."""
+    import copy
+
+    from aresdb_spark.functions.hll import hll_registers
+    from aresdb_spark.functions.hll_wire import HLL
+
+    ast = E.parse(q.measures[0].expr)
+    if not isinstance(ast, E.Call) or \
+            ast.func not in ("hll", "countdistincthll"):
+        raise ValueError(
+            "application/hll requires an hll()/countdistincthll() measure")
+    if q.measures[0].filters:
+        q = copy.deepcopy(q)
+        q.filters = list(q.filters) + list(q.measures[0].filters)
+    df, resolver, dim_sql, dim_names = Planner(spark, catalog)._filtered_rows(q)
+    rows = df.selectExpr(
+        *dim_sql, f"{E.compile_ast(ast.args[0], resolver)} AS __hv_in")
+    dtypes = {n: t for n, t in rows.dtypes if n in dim_names}
+    if epoch_timestamps and any(t.startswith("timestamp")
+                                for t in dtypes.values()):
+        rows = rows.selectExpr(
+            *[f"CAST(unix_timestamp({ident(n)}) AS BIGINT) AS {ident(n)}"
+              if dtypes[n].startswith("timestamp") else ident(n)
+              for n in dim_names], "__hv_in")
+    collected = hll_registers(rows, dim_names, "__hv_in") \
+        .limit(register_cap + 1).collect()
+    if len(collected) > register_cap:
+        raise ValueError(
+            f"hll register payload exceeds register cap ({register_cap}); "
+            "raise register_cap= or reduce dimension cardinality")
+    groups: dict[tuple, list[tuple[int, int]]] = {}
+    for r in collected:
+        k = tuple(r[n] if key is None else key(i, r[n], dtypes[n])
+                  for i, n in enumerate(dim_names))
+        groups.setdefault(k, []).append((r["reg_index"], r["rho"]))
+    sketches = {}
+    for k, sparse in groups.items():
+        h = HLL(sparse=sorted(sparse), non_zero=len(sparse))
+        if not h.convert_to_sparse():
+            h.convert_to_dense()
+        sketches[k] = h
+    return sketches, dim_names, dtypes
+
+
 def _hll_result_tree(spark: SparkSession, catalog: Catalog, q: Query,
                      register_cap: int = 8_000_000) -> dict:
     """One shard's nested AQL result with mergeable HLL SKETCH leaves
@@ -180,51 +240,19 @@ def _hll_result_tree(spark: SparkSession, catalog: Catalog, q: Query,
     query/common/hll.go:505-527): dim keys formatted exactly like
     ``to_aggregate_result`` (same ``dim_key_formatters``/``_key``
     pipeline, so a merged tree computes to the same shape as a
-    single-store ``execute_query``), an ``HLL`` at each leaf, built from
-    the reference-exact register pipeline. Measure-level row filters
-    merge into the WHERE set like the single-measure planner rule, and
-    the driver collect is bounded by ``register_cap``."""
-    import copy
-
+    single-store ``execute_query``), an ``HLL`` at each leaf."""
     from aresdb_spark.aql.result import _key, dim_key_formatters
-    from aresdb_spark.functions.hll import hll_registers
-    from aresdb_spark.functions.hll_wire import HLL
 
-    ast = E.parse(q.measures[0].expr)
-    if not isinstance(ast, E.Call) or \
-            ast.func not in ("hll", "countdistincthll"):
-        raise ValueError("hll result tree requires an hll() measure")
-    if q.measures[0].filters:
-        q = copy.deepcopy(q)
-        q.filters = list(q.filters) + list(q.measures[0].filters)
-    planner = Planner(spark, catalog)
-    df, resolver, dim_cols, dim_names = planner._filtered_rows(q)
-    rows = df.select(*dim_cols,
-                     E.compile_ast(ast.args[0], resolver).alias("__hv_in"))
     fmts = dim_key_formatters(q)
-    f32 = {n: t == "float" for n, t in rows.select(*dim_names).dtypes} \
-        if dim_names else {}
 
-    def kf(i, v):
+    def kf(i, v, dtype):
         if v is None or fmts[i] is None:
-            return _key(v, float32=f32.get(dim_names[i], False))
+            return _key(v, float32=dtype == "float")
         return fmts[i](v)
 
-    regs = hll_registers(rows, dim_names, "__hv_in")
-    collected = regs.limit(register_cap + 1).collect()
-    if len(collected) > register_cap:
-        raise ValueError(
-            f"hll register payload exceeds register cap ({register_cap}); "
-            "raise register_cap= or reduce dimension cardinality")
-    groups: dict[tuple, list[tuple[int, int]]] = {}
-    for r in collected:
-        key = tuple(kf(i, r[n]) for i, n in enumerate(dim_names))
-        groups.setdefault(key, []).append((r["reg_index"], r["rho"]))
+    sketches, _, _ = _hll_sketches(spark, catalog, q, register_cap, key=kf)
     result: dict = {}
-    for key, sparse in groups.items():
-        h = HLL(sparse=sorted(sparse), non_zero=len(sparse))
-        if not h.convert_to_sparse():
-            h.convert_to_dense()
+    for key, h in sketches.items():
         node = result
         for part in key[:-1]:
             node = node.setdefault(part, {})
@@ -491,12 +519,10 @@ def execute_request_hll(spark: SparkSession, catalog: Catalog | str,
     dense group holds up to 2^14 registers, so the default admits ~488
     dense groups or millions of sparse ones — dense-heavy workloads
     raise it explicitly)."""
-    from aresdb_spark.functions.hll import hll_registers
     from aresdb_spark.functions.hll_wire import (DT_BOOL, DT_FLOAT32,
                                                  DT_INT8, DT_INT16, DT_INT32,
                                                  DT_INT64, DT_SMALL_ENUM,
-                                                 DT_BIG_ENUM, DT_UINT32, HLL,
-                                                 HLL_M,
+                                                 DT_BIG_ENUM, DT_UINT32,
                                                  HLLQueryResultsWriter)
 
     if isinstance(request, str):
@@ -511,40 +537,8 @@ def execute_request_hll(spark: SparkSession, catalog: Catalog | str,
             q.validate_strict()
             if len(q.measures) != 1:
                 raise ValueError("application/hll requires exactly one measure")
-            ast = E.parse(q.measures[0].expr)
-            if not isinstance(ast, E.Call) or ast.func not in ("hll", "countdistincthll"):
-                raise ValueError(
-                    "application/hll requires an hll()/countdistincthll() measure")
-
-            planner = Planner(spark, catalog)
-            df, resolver, dim_cols, dim_names = planner._filtered_rows(q)
-            rows = df.select(*dim_cols,
-                             E.compile_ast(ast.args[0], resolver).alias("__hv_in"))
-            # dimension dtypes BEFORE any conversion; timestamp dims are
-            # converted to epoch seconds IN SPARK — PySpark's non-Arrow
-            # collect renders TimestampType via the driver OS timezone,
-            # so converting Python datetimes on the driver would shift
-            # the epoch on a non-UTC host
-            from pyspark.sql import functions as F
-            dtypes = dict(rows.select(*dim_names).dtypes) if dim_names else {}
-            for name, t in dtypes.items():
-                if t.startswith("timestamp"):
-                    rows = rows.withColumn(
-                        name, F.unix_timestamp(F.col(name)).cast("long"))
-            regs = hll_registers(rows, dim_names, "__hv_in")
-            # caps enforced INSIDE the collect: limit(N+1) bounds driver
-            # memory no matter the group count, then overflow raises
-            collected = regs.limit(register_cap + 1).collect()
-            if len(collected) > register_cap:
-                raise ValueError(
-                    f"hll register payload exceeds register cap "
-                    f"({register_cap}); raise register_cap= or reduce "
-                    f"dimension cardinality")
-
-            groups: dict[tuple, list[tuple[int, int]]] = {}
-            for r in collected:
-                key = tuple(r[n] for n in dim_names)
-                groups.setdefault(key, []).append((r["reg_index"], r["rho"]))
+            groups, dim_names, dtypes = _hll_sketches(
+                spark, catalog, q, register_cap, epoch_timestamps=True)
             if len(groups) > row_cap:
                 raise ValueError(
                     f"hll result exceeds row cap ({row_cap} groups)")
@@ -578,14 +572,10 @@ def execute_request_hll(spark: SparkSession, catalog: Catalog | str,
                 else:
                     raise ValueError(f"unsupported hll dimension type {t!r}")
 
-            out_rows = []
-            for key in sorted(groups, key=lambda k: tuple(str(x) for x in k)):
-                sparse = sorted(groups[key])
-                h = HLL(sparse=sparse, non_zero=len(sparse))
-                if not h.convert_to_sparse():
-                    h.convert_to_dense()
-                out_rows.append((
-                    [conv(v) for conv, v in zip(converters, key)], h))
+            out_rows = [
+                ([conv(v) for conv, v in zip(converters, key)], groups[key])
+                for key in sorted(groups,
+                                  key=lambda k: tuple(str(x) for x in k))]
             writer.write_result(out_rows, data_types, enum_dicts)
         except Exception as e:  # per-query isolation
             writer.write_error(str(e))

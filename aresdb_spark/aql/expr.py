@@ -1,4 +1,4 @@
-"""AQL expression dialect: parser + Spark Column compiler.
+"""AQL expression dialect: parser + Spark-SQL text compiler.
 
 Reference surface:
   - tokens/operators: query/expr/token.go:177-227 (= != <> < <= > >=,
@@ -13,20 +13,21 @@ Reference surface:
     from_unixtime, hex, length, contains, element_at,
     geography_intersects, floor(x, N))
 
-The compiler emits pyspark ``Column`` expressions only — everything stays
-JVM-side in Catalyst codegen; no Python UDF appears in this module (the geo
-predicate is provided by aresdb_spark.functions.geo and injected via the
-function registry).
+The compiler emits Spark-SQL expression text, aggregates included, that
+the planner hands to Catalyst in one ``selectExpr`` / ``filter(str)`` /
+``F.expr`` call per expression — everything stays JVM-side in Catalyst
+codegen; no Python UDF appears in this module (the geo predicate is
+provided by aresdb_spark.functions.geo and injected via the function
+registry).
 """
 
 from __future__ import annotations
 
 import re
 from dataclasses import dataclass
-from typing import Any, Callable
+from typing import Any, Callable, Iterator
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from aresdb_spark.operators.util import ident, lit
 
 # ---------------------------------------------------------------------------
 # Tokenizer
@@ -147,13 +148,6 @@ class Call:
 class Case:
     whens: list[tuple[Any, Any]]
     else_: Any | None
-
-
-@dataclass
-class Wrapped:
-    """A pre-compiled Column embedded in an AST (planner internal)."""
-
-    col: Any
 
 
 # ---------------------------------------------------------------------------
@@ -329,71 +323,135 @@ def parse(text: str) -> Any:
     return _Parser(tokenize(text)).parse()
 
 
+
+
 # ---------------------------------------------------------------------------
-# Compiler: AST → pyspark Column
+# AST walkers
 # ---------------------------------------------------------------------------
 
-Resolver = Callable[[str], Column]
+# measure aggregates (reference: query/aql_compiler.go:1156-1249) as
+# templates over the argument text. count and percentile render in
+# _aggregate; hll/countdistincthll are Spark's HLL++ at its default rsd.
+_AGG_TEMPLATES = {
+    "sum": "sum({})", "avg": "avg({})", "min": "min({})", "max": "max({})",
+    "hll": "approx_count_distinct({})",
+    "countdistincthll": "approx_count_distinct({})",
+    # engine extensions
+    "count_distinct": "count(DISTINCT {})", "stddev": "stddev({})",
+    "median": "median({})",
+}
+_AGG_FUNCS = frozenset({"count", "percentile", *_AGG_TEMPLATES})
 
 
-def default_resolver(name: str) -> Column:
-    return F.col(name)
+def _children(node: Any) -> Iterator[Any]:
+    """The direct sub-expressions of ``node``, in source order."""
+    if isinstance(node, (Unary, IsNull, IsBool)):
+        yield node.operand
+    elif isinstance(node, Binary):
+        yield from (node.left, node.right)
+    elif isinstance(node, InList):
+        yield node.operand
+        yield from node.items
+    elif isinstance(node, Between):
+        yield from (node.operand, node.low, node.high)
+    elif isinstance(node, Call):
+        yield from node.args
+    elif isinstance(node, Case):
+        for cond, val in node.whens:
+            yield from (cond, val)
+        if node.else_ is not None:
+            yield node.else_
 
 
-# Closed function whitelist (reference errors on unknown functions,
-# query/context/query_context_helper.go:723-725). Each entry maps to a
-# builder over compiled arg Columns. All JVM-side builtins.
-def _fn_convert_tz(args: list[Column]) -> Column:
+def _walk(node: Any) -> Iterator[Any]:
+    yield node
+    for child in _children(node):
+        yield from _walk(child)
+
+
+def column_refs(node: Any) -> set[str]:
+    """Referenced column names (for usage analysis / pruning audits)."""
+    return {n.name for n in _walk(node) if isinstance(n, Col)}
+
+
+def contains_aggregate(node: Any) -> bool:
+    """Whether ``node`` or any sub-expression of it is an aggregate call."""
+    return any(isinstance(n, Call) and n.func in _AGG_FUNCS
+               for n in _walk(node))
+
+
+# ---------------------------------------------------------------------------
+# Compiler: AST → Spark-SQL expression text
+# ---------------------------------------------------------------------------
+
+# An AQL column name → its SQL text.
+Resolver = Callable[[str], str]
+
+
+def default_resolver(name: str) -> str:
+    """One quoted identifier per dotted part (``c.x`` → `c`.`x`, the
+    way Spark splits a column name ``c.x``); ``*`` stays a star."""
+    return "*" if name == "*" else ".".join(ident(p) for p in name.split("."))
+
+
+def _unary(name: str) -> Callable[[list[str]], str]:
+    return lambda a: f"{name}({a[0]})"
+
+
+def _fn_convert_tz(a: list[str]) -> str:
     # MySQL convert_tz(ts, from, to): interpret ts as from_tz wall time,
     # re-express in to_tz wall time (reference constant-folds this to
     # ts + offset, query_context_helper.go:348-387; the tz-aware form is
     # DST-correct where the reference's constant offset is not)
-    ts, from_tz, to_tz = args
-    return F.from_utc_timestamp(F.to_utc_timestamp(ts, _lit_str(from_tz)), _lit_str(to_tz))
+    ts, from_tz, to_tz = a
+    return f"from_utc_timestamp(to_utc_timestamp({ts}, {from_tz}), {to_tz})"
 
 
-def _lit_str(c: Column) -> Column:
-    return c  # tz args arrive as literal Columns already
-
-
-_FUNCTIONS: dict[str, Callable[[list[Column]], Column]] = {
-    # time (reference: query_context_helper.go:348-483)
-    "convert_tz": _fn_convert_tz,
-    "dayofweek": lambda a: F.dayofweek(a[0]),  # MySQL-compatible Sunday=1 in both
-    "hour": lambda a: F.hour(a[0]),
-    "minute": lambda a: F.minute(a[0]),
-    "second": lambda a: F.second(a[0]),
-    "from_unixtime": lambda a: F.from_unixtime(a[0]).cast("timestamp"),
-    "to_unixtime": lambda a: F.unix_timestamp(a[0]),
-    "now": lambda a: F.current_timestamp(),
-    # misc scalar (reference: :526-539)
-    "hex": lambda a: F.hex(a[0]),
-    # array functions (reference: :603-721)
-    "length": lambda a: F.size(a[0]),
-    "array_length": lambda a: F.size(a[0]),
-    "contains": lambda a: F.array_contains(a[0], a[1]),
-    "array_contains": lambda a: F.array_contains(a[0], a[1]),
+def _fn_element_at(a: list[str]) -> str:
     # reference element_at is 0-BASED for non-negative indices
     # (ArrayElementAtFunctor, query/functor.hpp:540-569: index 0 = first,
     # negative = from end, out-of-range = null) — Spark's is 1-based, so
     # shift non-negative indices by one
-    "element_at": lambda a: F.element_at(
-        a[0], F.when(a[1] >= 0, a[1].cast("int") + 1)
-               .otherwise(a[1].cast("int"))),
-    "array_element_at": lambda a: F.element_at(
-        a[0], F.when(a[1] >= 0, a[1].cast("int") + 1)
-               .otherwise(a[1].cast("int"))),
+    arr, i = a[0], a[1]
+    return (f"element_at({arr}, CASE WHEN ({i} >= 0) THEN "
+            f"(CAST({i} AS INT) + 1) ELSE CAST({i} AS INT) END)")
+
+
+# Closed function whitelist (reference errors on unknown functions,
+# query/context/query_context_helper.go:723-725). Each entry maps the
+# compiled argument texts to a JVM-side builtin call.
+_FUNCTIONS: dict[str, Callable[[list[str]], str]] = {
+    # time (reference: query_context_helper.go:348-483)
+    "convert_tz": _fn_convert_tz,
+    "dayofweek": _unary("dayofweek"),  # MySQL-compatible Sunday=1 in both
+    "hour": _unary("hour"),
+    "minute": _unary("minute"),
+    "second": _unary("second"),
+    "from_unixtime": lambda a: f"CAST(from_unixtime({a[0]}) AS TIMESTAMP)",
+    "to_unixtime": _unary("unix_timestamp"),
+    "now": lambda a: "current_timestamp()",
+    # misc scalar (reference: :526-539)
+    "hex": _unary("hex"),
+    # array functions (reference: :603-721)
+    "length": _unary("size"),
+    "array_length": _unary("size"),
+    "contains": lambda a: f"array_contains({a[0]}, {a[1]})",
+    "array_contains": lambda a: f"array_contains({a[0]}, {a[1]})",
+    "element_at": _fn_element_at,
+    "array_element_at": _fn_element_at,
     # numeric floor(x, N) → floor(x / N) * N (reference: SQL udfRegister.go:83-87)
-    "floor": lambda a: F.floor(a[0] / a[1]) * a[1] if len(a) == 2 else F.floor(a[0]),
-    "ceil": lambda a: F.ceil(a[0]),
-    "abs": lambda a: F.abs(a[0]),
-    "round": lambda a: F.round(a[0], 0) if len(a) == 1 else F.round(*a),
-    # geo — injected by functions.geo at registry setup; placeholder errors
+    "floor": lambda a: (f"(floor(({a[0]} / {a[1]})) * {a[1]})" if len(a) == 2
+                        else f"floor({a[0]})"),
+    "ceil": _unary("ceil"),
+    "abs": _unary("abs"),
+    "round": lambda a: f"round({a[0]}, {a[1] if len(a) > 1 else 0})",
+    # geo — registered by functions.geo
 }
 
 
-def register_function(name: str, builder: Callable[[list[Column]], Column]) -> None:
-    """Extend the function whitelist (used by functions.geo / functions.hll)."""
+def register_function(name: str, builder: Callable[[list[str]], str]) -> None:
+    """Extend the function whitelist with a builder over the compiled
+    argument texts (used by functions.geo)."""
     _FUNCTIONS[name.lower()] = builder
 
 
@@ -401,8 +459,16 @@ class UnknownFunctionError(ValueError):
     pass
 
 
-def compile_ast(node: Any, resolver: Resolver = default_resolver) -> Column:
-    """Compile a parsed AST node into a pyspark Column.
+_BINARY_OPS = {
+    "and": "AND", "or": "OR", "=": "=", "!=": "!=", "<": "<", "<=": "<=",
+    ">": ">", ">=": ">=", "+": "+", "-": "-", "*": "*", "%": "%",
+    "&": "&", "|": "|", "^": "^", "like": "LIKE",
+}
+
+
+def compile_ast(node: Any, resolver: Resolver = default_resolver,
+                measure_filter: str | None = None) -> str:
+    """Compile a parsed AST node into Spark-SQL expression text.
 
     Type rules kept from the reference (query_context_helper.go):
       * '/' always float division (:241-267) — both sides cast to double
@@ -410,93 +476,55 @@ def compile_ast(node: Any, resolver: Resolver = default_resolver) -> Column:
         from the data simply compares false (Spark-native; matches the
         enum-miss → -1 → false semantics at :299-310)
       * IS TRUE / IS FALSE null-safe boolean tests
-    """
-    c = _compile(node, resolver)
-    return c
 
+    Aggregate calls render as templates; ``measure_filter`` (SQL text)
+    is a measure's row filter, applied to every aggregate's argument
+    (reference merges measure filters into the WHERE set,
+    query/aql_compiler.go:807-818; this form lets several measures
+    carry different filters)."""
+    def c(n: Any) -> str:
+        return compile_ast(n, resolver, measure_filter)
 
-def _compile(node: Any, r: Resolver) -> Column:
-    if isinstance(node, Wrapped):
-        return node.col
     if isinstance(node, Lit):
-        return F.lit(node.value)
+        return lit(node.value)
     if isinstance(node, Col):
-        return r(node.name)
+        return resolver(node.name)
     if isinstance(node, Unary):
-        x = _compile(node.operand, r)
+        x = c(node.operand)
         if node.op == "-":
-            return -x
+            return f"(- {x})"
         if node.op in ("!", "not"):
-            return ~x.cast("boolean")
+            return f"(NOT CAST({x} AS BOOLEAN))"
         if node.op == "~":
-            return F.bitwise_not(x)
+            return f"(~ {x})"
         raise AQLSyntaxError(f"unknown unary op {node.op}")
     if isinstance(node, Binary):
-        le, ri = _compile(node.left, r), _compile(node.right, r)
         op = node.op
-        if op == "and":
-            return le & ri
-        if op == "or":
-            return le | ri
-        if op == "=":
-            return le == ri
-        if op == "!=":
-            return le != ri
-        if op == "<":
-            return le < ri
-        if op == "<=":
-            return le <= ri
-        if op == ">":
-            return le > ri
-        if op == ">=":
-            return le >= ri
-        if op == "+":
-            return le + ri
-        if op == "-":
-            return le - ri
-        if op == "*":
-            return le * ri
+        le, ri = c(node.left), c(node.right)
+        if op in ("<<", ">>", "like") and not isinstance(node.right, Lit):
+            raise AQLSyntaxError("LIKE pattern must be a string literal"
+                                 if op == "like"
+                                 else "shift amount must be a literal")
         if op == "/":
             # reference: division is ALWAYS float (query_context_helper.go:241-267)
-            return le.cast("double") / ri.cast("double")
-        if op == "%":
-            return le % ri
-        if op == "&":
-            return le.bitwiseAND(ri)
-        if op == "|":
-            return le.bitwiseOR(ri)
-        if op == "^":
-            return le.bitwiseXOR(ri)
-        if op == "<<":
-            if not isinstance(node.right, Lit):
-                raise AQLSyntaxError("shift amount must be a literal")
-            return F.shiftleft(le, node.right.value)
-        if op == ">>":
-            if not isinstance(node.right, Lit):
-                raise AQLSyntaxError("shift amount must be a literal")
-            return F.shiftright(le, node.right.value)
-        if op == "like":
-            if not isinstance(node.right, Lit):
-                raise AQLSyntaxError("LIKE pattern must be a string literal")
-            return le.like(node.right.value)
-        raise AQLSyntaxError(f"unknown binary op {op}")
+            return f"(CAST({le} AS DOUBLE) / CAST({ri} AS DOUBLE))"
+        if op in ("<<", ">>"):
+            return f"shift{'left' if op == '<<' else 'right'}({le}, {ri})"
+        if op not in _BINARY_OPS:
+            raise AQLSyntaxError(f"unknown binary op {op}")
+        return f"({le} {_BINARY_OPS[op]} {ri})"
     if isinstance(node, InList):
-        x = _compile(node.operand, r)
-        vals = [_compile(i, r) for i in node.items]
-        c = x.isin(*vals)
-        return ~c if node.negated else c
+        out = f"({c(node.operand)} IN ({', '.join(map(c, node.items))}))"
+        return f"(NOT {out})" if node.negated else out
     if isinstance(node, IsNull):
-        x = _compile(node.operand, r)
-        return x.isNotNull() if node.negated else x.isNull()
+        return f"({c(node.operand)} IS {'NOT ' if node.negated else ''}NULL)"
     if isinstance(node, IsBool):
-        x = _compile(node.operand, r).cast("boolean")
-        want = F.lit(node.value)
-        c = x.eqNullSafe(want)
-        return ~c if node.negated else c
+        out = f"(CAST({c(node.operand)} AS BOOLEAN) <=> {lit(node.value)})"
+        return f"(NOT {out})" if node.negated else out
     if isinstance(node, Between):
-        x = _compile(node.operand, r)
-        c = x.between(_compile(node.low, r), _compile(node.high, r))
-        return ~c if node.negated else c
+        x = c(node.operand)
+        out = f"(({x} >= {c(node.low)}) AND ({x} <= {c(node.high)}))"
+        return f"(NOT {out})" if node.negated else out
     if isinstance(node, Call):
         # reference rewrite: from_unixtime(X / 1000) IS the raw time
         # value X — millisecond-stored clients write this form and the
@@ -509,52 +537,37 @@ def _compile(node: Any, r: Resolver) -> Column:
                 and node.args[0].op == "/" \
                 and isinstance(node.args[0].right, Lit) \
                 and node.args[0].right.value == 1000:
-            return _compile(node.args[0].left, r)
+            return c(node.args[0].left)
+        if node.func in _AGG_FUNCS:
+            return _aggregate(node, resolver, measure_filter)
         fn = _FUNCTIONS.get(node.func)
         if fn is None:
             raise UnknownFunctionError(
                 f"unknown function {node.func!r} "
                 "(closed whitelist, ref query_context_helper.go:723-725)")
-        return fn([_compile(a, r) for a in node.args])
+        return fn([c(a) for a in node.args])
     if isinstance(node, Case):
-        col: Column | None = None
-        for cond, val in node.whens:
-            cc, cv = _compile(cond, r), _compile(val, r)
-            col = F.when(cc, cv) if col is None else col.when(cc, cv)
-        assert col is not None
-        return col.otherwise(_compile(node.else_, r)) if node.else_ is not None else col
+        whens = " ".join(f"WHEN {c(w)} THEN {c(v)}" for w, v in node.whens)
+        else_ = f" ELSE {c(node.else_)}" if node.else_ is not None else ""
+        return f"CASE {whens}{else_} END"
     raise AQLSyntaxError(f"cannot compile node {node!r}")
 
 
-def compile_expr(text: str, resolver: Resolver = default_resolver) -> Column:
-    """Parse + compile an AQL expression string to a pyspark Column."""
+def _aggregate(node: Call, r: Resolver, measure_filter: str | None) -> str:
+    if node.func == "count":
+        # the reference REPLACES count's argument with the literal 1 and
+        # sums it (aql_compiler.go:1191-1197) — count(c1) is a pure ROW
+        # count even when c1 is null, not Spark's null-skipping count
+        return (f"sum(CASE WHEN {measure_filter} THEN 1 ELSE 0 END)"
+                if measure_filter is not None else "count(1)")
+    arg = compile_ast(node.args[0], r)
+    if measure_filter is not None:
+        arg = f"CASE WHEN {measure_filter} THEN {arg} END"
+    if node.func == "percentile":
+        return f"percentile({arg}, {lit(node.args[1].value)}, 1)"
+    return _AGG_TEMPLATES[node.func].format(arg)
+
+
+def compile_expr(text: str, resolver: Resolver = default_resolver) -> str:
+    """Parse + compile an AQL expression string to Spark-SQL text."""
     return compile_ast(parse(text), resolver)
-
-
-def column_refs(node: Any) -> set[str]:
-    """Collect referenced column names (for usage analysis / pruning audits)."""
-    out: set[str] = set()
-
-    def walk(n: Any) -> None:
-        if isinstance(n, Col):
-            out.add(n.name)
-        elif isinstance(n, Unary):
-            walk(n.operand)
-        elif isinstance(n, Binary):
-            walk(n.left); walk(n.right)
-        elif isinstance(n, InList):
-            walk(n.operand); [walk(i) for i in n.items]
-        elif isinstance(n, (IsNull, IsBool)):
-            walk(n.operand)
-        elif isinstance(n, Between):
-            walk(n.operand); walk(n.low); walk(n.high)
-        elif isinstance(n, Call):
-            [walk(a) for a in n.args]
-        elif isinstance(n, Case):
-            for c, v in n.whens:
-                walk(c); walk(v)
-            if n.else_ is not None:
-                walk(n.else_)
-
-    walk(node)
-    return out

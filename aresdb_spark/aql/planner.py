@@ -16,92 +16,31 @@ filter → join → project → reduce (query/aql_batchexecutor.go:26-39):
       → project dimensions (bucketizers) + measure inputs
       → groupBy(dims).agg(measures)   [or select+limit for non-agg]
       → sorts / limit
+
+Every filter, join condition, projection, grouping, aggregate and sort
+is Spark-SQL text from the AQL compiler (``expr.compile_ast``), handed to
+Catalyst in one ``filter(str)`` / ``selectExpr`` / ``F.expr`` call.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 import aresdb_spark.functions.geo  # noqa: F401  (registers geography_intersects)
 from aresdb_spark.aql import expr as E
 from aresdb_spark.aql import timeutil
-from aresdb_spark.aql.model import Dimension, Measure, Query
+from aresdb_spark.aql.model import Dimension, Query
 from aresdb_spark.catalog import Catalog
-from aresdb_spark.operators.util import fits_broadcast, lit
-
-# measure aggregate whitelist (reference: query/aql_compiler.go:1156-1249;
-# count rewritten to sum(1) at :1191-1197; hll rewrite at
-# query_context_helper.go:540-577). Spark generalizes freely, but we keep
-# the reference set recognizable.
-_AGG_FUNCS = {
-    "count", "sum", "avg", "min", "max",
-    "hll", "countdistincthll",          # → approx_count_distinct (HLL++)
-    "count_distinct", "stddev", "median", "percentile",  # engine extensions
-}
+from aresdb_spark.operators.util import fits_broadcast, ident, lit
 
 
-def _is_aggregate_call(node) -> bool:
-    return isinstance(node, E.Call) and node.func in _AGG_FUNCS
-
-
-def _contains_aggregate(node) -> bool:
-    if _is_aggregate_call(node):
-        return True
-    for attr in ("operand", "left", "right", "else_"):
-        child = getattr(node, attr, None)
-        if child is not None and _contains_aggregate(child):
-            return True
-    for attr in ("items", "args"):
-        for child in getattr(node, attr, []) or []:
-            if _contains_aggregate(child):
-                return True
-    for c, v in getattr(node, "whens", []) or []:
-        if _contains_aggregate(c) or _contains_aggregate(v):
-            return True
-    return False
-
-
-def _compile_aggregate(node: E.Call, resolver, measure_filter: Column | None) -> Column:
-    """Compile an aggregate Call, applying measure-level row filters by
-    rewriting arg → when(filter, arg) (reference merges measure filters
-    into the WHERE set, query/aql_compiler.go:807-818; the when() form is
-    equivalent and lets several measures carry different filters)."""
-    func = node.func
-
-    def arg(i: int = 0) -> Column:
-        c = E.compile_ast(node.args[i], resolver)
-        if measure_filter is not None:
-            c = F.when(measure_filter, c)
-        return c
-
-    if func == "count":
-        # the reference REPLACES count's argument with the literal 1 and
-        # sums it (aql_compiler.go:1191-1197) — count(c1) is a pure ROW
-        # count even when c1 is null, not Spark's null-skipping count
-        if measure_filter is not None:
-            return F.sum(F.when(measure_filter, F.lit(1)).otherwise(F.lit(0)))
-        return F.count(F.lit(1))
-    if func == "sum":
-        return F.sum(arg())
-    if func == "avg":
-        return F.avg(arg())
-    if func == "min":
-        return F.min(arg())
-    if func == "max":
-        return F.max(arg())
-    if func in ("hll", "countdistincthll"):
-        return F.approx_count_distinct(arg())
-    if func == "count_distinct":
-        return F.count_distinct(arg())
-    if func == "stddev":
-        return F.stddev(arg())
-    if func == "median":
-        return F.median(arg())
-    if func == "percentile":
-        p = node.args[1].value
-        return F.percentile(arg(), F.lit(p))
-    raise ValueError(f"unsupported aggregate {func!r}")
+def _conjoin(conds: list[str]) -> str | None:
+    """The SQL conjunction of ``conds``, left-nested; None when empty."""
+    out = None
+    for c in conds:
+        out = c if out is None else f"({out} AND {c})"
+    return out
 
 
 class Planner:
@@ -306,7 +245,7 @@ class Planner:
                 out.append(i)
         return out
 
-    def _build_joined(self, q: Query) -> tuple[DataFrame, E.Resolver, set[int]]:
+    def _build_joined(self, q: Query) -> tuple[DataFrame, E.Resolver, set[int], str | None]:
         """Scan fact table and join every dimension table.
 
         Regular dimension joins: LEFT broadcast hash join (reference
@@ -324,7 +263,9 @@ class Planner:
 
         The time filter is pushed into the fact scan (raw-column range
         predicate → parquet row-group pruning) rather than applied after
-        the join. Returns (df, resolver, consumed_filter_indices).
+        the join. Returns (df, resolver, consumed_filter_indices, tz_sql):
+        tz_sql is the per-row timezone's SQL text under a timezone-column
+        join, else None.
         """
         tcol, lo, hi = self._time_bounds(q)
         default_tcol = self.catalog.table_def(q.table).time_column
@@ -383,7 +324,7 @@ class Planner:
                     if on_dim(ast.args[1]):
                         ast = E.Call(ast.func,
                                      [ast.args[1], ast.args[0]])
-                cond = E.compile_ast(ast, self._resolver(aliases, q))
+                cond = F.expr(E.compile_ast(ast, self._resolver(aliases, q)))
                 if negated:
                     # the reference kernel removes NULL points from BOTH
                     # the in and not-in results (a null test point writes
@@ -396,10 +337,10 @@ class Planner:
                                  and ast.args[1:] or []):
                         pc = E.compile_ast(parg, fact_resolver)
                         if len(ast.args) == 2:  # struct point column
-                            df = df.filter(pc["lat"].isNotNull()
-                                           & pc["long"].isNotNull())
+                            df = df.filter(f"(({pc}.lat IS NOT NULL) AND "
+                                           f"({pc}.`long` IS NOT NULL))")
                         else:                   # (shape, lat, lng) form
-                            df = df.filter(pc.isNotNull())
+                            df = df.filter(f"({pc} IS NOT NULL)")
                     df = df.join(F.broadcast(dim), on=cond, how="left_anti")
                     aliases.discard(j.name)  # anti join exposes no dim columns
                 else:
@@ -408,10 +349,9 @@ class Planner:
 
             if j.how not in ("left", "inner", "left_semi", "left_anti"):
                 raise ValueError(f"unsupported join how: {j.how!r}")
-            cond = None
-            for c in j.conditions:
-                col = E.compile_expr(c, self._resolver(aliases, q))
-                cond = col if cond is None else cond & col
+            resolver = self._resolver(aliases, q)
+            cond = F.expr(_conjoin([E.compile_expr(c, resolver)
+                                    for c in j.conditions]))
             # the broadcast hint applies only while the dim's planned
             # bytes fit the forced-broadcast ceiling (guide §3): small
             # dims keep the reference's always-broadcast pick whatever
@@ -427,51 +367,51 @@ class Planner:
         # broadcast join to the timezone lookup table (id → timezone) and
         # buckets use the per-row tz (reference processTimezone,
         # aql_compiler.go:439-466, alias __timezone_lookup)
-        tz_col = None
+        tz_sql = None
         tz_key = self._tz_column_key(q)
         if tz_key is not None:
             alias = "__timezone_lookup"
             tzt = self.catalog.load(self.spark, self.catalog.timezone_table).alias(alias)
             key = self._resolver(aliases, q)(tz_key)
-            df = df.join(F.broadcast(tzt), on=key == F.col(f"{alias}.id"), how="left")
+            df = df.join(F.broadcast(tzt), how="left",
+                         on=F.expr(f"({key} = {ident(alias)}.id)"))
             aliases.add(alias)
             # join miss ⇒ UTC; and a BLANK timezone string is UTC too —
             # the reference builds its offset lookup with Go's
             # time.LoadLocation, for which "" is UTC (aql_processor.go:
             # 487-497 prepareTimezoneTable; its tz-column golden has ""
             # enum cases)
-            tzv = F.col(f"{alias}.timezone")
-            tz_col = F.when(tzv.isNull() | (F.trim(tzv) == ""),
-                            F.lit("UTC")).otherwise(tzv)
-        return df, self._resolver(aliases, q), consumed, tz_col
+            tzv = f"{ident(alias)}.timezone"
+            tz_sql = (f"CASE WHEN (({tzv} IS NULL) OR (trim({tzv}) = '')) "
+                      f"THEN 'UTC' ELSE {tzv} END")
+        return df, self._resolver(aliases, q), consumed, tz_sql
 
     def _resolver(self, aliases: set[str], q: Query) -> E.Resolver:
-        def resolve(name: str) -> Column:
-            if "." in name:
-                head, rest = name.split(".", 1)
-                if head in aliases:
-                    return F.col(f"{head}.{rest}")
-            # bare column → fact table
-            return F.col(f"{q.table}.{name}") if name != "*" else F.col("*")
+        """AQL name → SQL text: ``alias.col`` of a joined table as
+        `alias`.`col`; any other name binds to the fact table."""
+        def resolve(name: str) -> str:
+            if name == "*" or ("." in name and name.split(".", 1)[0] in aliases):
+                return E.default_resolver(name)
+            return E.default_resolver(f"{q.table}.{name}")
         return resolve
 
     # -- planning -----------------------------------------------------------
 
     def _filtered_rows(self, q: Query):
         """Shared head of plan(): joined + filtered rows plus compiled
-        dimension columns. Returns (df, resolver, dim_cols, dim_names)."""
-        df, resolver, consumed_filters, tz_col = self._build_joined(q)
+        dimensions. Returns (df, resolver, dim_sql, dim_names); each
+        dim_sql item is ``<expr> AS <name>`` text."""
+        df, resolver, consumed_filters, tz_sql = self._build_joined(q)
 
         # time filter on a non-default column (the default-column case was
         # already pushed into the fact scan by _build_joined)
         tcol_name, lo, hi = self._time_bounds(q)
         if tcol_name is not None and tcol_name != self.catalog.table_def(q.table).time_column:
             # one filter; lit() renders each bound as its UTC instant
-            tcol, cond = resolver(tcol_name), None
-            for b, cmp in ((lo, tcol.__ge__), (hi, tcol.__lt__)):
-                if b is not None:
-                    c = cmp(F.expr(lit(b)))
-                    cond = c if cond is None else cond & c
+            tcol = resolver(tcol_name)
+            cond = _conjoin([f"({tcol} {op} {lit(b)})"
+                             for b, op in ((lo, ">="), (hi, "<"))
+                             if b is not None])
             if cond is not None:
                 df = df.filter(cond)
 
@@ -485,36 +425,32 @@ class Planner:
         # dimensions (time buckets computed in the query timezone — fixed
         # tz, or the per-row tz column from the timezone join;
         # query/time_bucketizer.go:93-146)
-        if tz_col is not None:
-            tz = tz_col
-        else:
-            tz = q.timezone if q.timezone and q.timezone.upper() != "UTC" else None
-            if tz is not None:
-                self._tz(q)  # validate early: unknown tz errors, not silently UTC
-        dim_cols: list[Column] = []
-        dim_names: list[str] = []
+        tz = tz_sql
+        if tz is None and q.timezone and q.timezone.upper() != "UTC":
+            self._tz(q)  # validate early: unknown tz errors, not silently UTC
+            tz = lit(q.timezone)
         dims = self._expand_wildcard(q)
-        for i, d in enumerate(dims):
-            dim_cols.append(self._dimension_col(d, resolver, tz).alias(d.output_name(i)))
-            dim_names.append(d.output_name(i))
-        return df, resolver, dim_cols, dim_names
+        dim_names = [d.output_name(i) for i, d in enumerate(dims)]
+        dim_sql = [f"{self._dimension_sql(d, resolver, tz)} AS {ident(n)}"
+                   for d, n in zip(dims, dim_names)]
+        return df, resolver, dim_sql, dim_names
 
     def plan(self, q: Query) -> DataFrame:
         q.validate_strict()
-        df, resolver, dim_cols, dim_names = self._filtered_rows(q)
+        df, resolver, dim_sql, dim_names = self._filtered_rows(q)
 
         # non-aggregate query: measure literal 1 / no measures ⇒ projection
         # (reference: query/aql_compiler.go:1147-1154, default limit 1000)
         parsed_measures = [(m, E.parse(m.expr)) for m in q.measures]
         parsed_supporting = [(m, E.parse(m.expr))
                              for m in q.supporting_measures]
-        is_agg = any(_contains_aggregate(ast)
+        is_agg = any(E.contains_aggregate(ast)
                      for _, ast in parsed_measures + parsed_supporting)
 
         # reference parity: with exactly ONE measure, its rowFilters merge
         # into the WHERE set (rows are EXCLUDED — groups with no passing
         # rows disappear; query/aql_compiler.go:807-818). The per-measure
-        # when() rewrite below only generalizes multi-measure queries.
+        # filter template below only generalizes multi-measure queries.
         merged_measure_filters = False
         if (len(parsed_measures) == 1 and parsed_measures[0][0].filters
                 and not parsed_supporting):
@@ -523,14 +459,13 @@ class Planner:
             merged_measure_filters = True
 
         if not is_agg:
-            cols = list(dim_cols)
+            cols = list(dim_sql)
             for i, (m, ast) in enumerate(parsed_measures):
                 if isinstance(ast, E.Lit) and ast.value == 1:
                     continue  # literal-1 measure marks "non-agg", not an output
-                cols.append(E.compile_ast(ast, resolver).alias(m.output_name(i)))
-            if not cols:
-                cols = [F.col("*")]
-            out = df.select(*cols)
+                cols.append(f"{E.compile_ast(ast, resolver)} "
+                            f"AS {ident(m.output_name(i))}")
+            out = df.selectExpr(*(cols or ["*"]))
             if q.distinct:
                 out = out.distinct()
             out = self._apply_sorts(out, q, resolver)
@@ -542,25 +477,24 @@ class Planner:
         # "Completed/Requested" — query/sql/sql_parser_test.go:257-319).
         # Supporting measures aggregate like the rest but are dropped
         # from the output (SupportingMeasures, query/common/aql.go).
-        agg_cols: list[Column] = []
+        agg_cols = []
         derived: list[tuple[str, object]] = []
         n_main = len(parsed_measures)
         for i, (m, ast) in enumerate(parsed_measures + parsed_supporting):
             name = (m.output_name(i) if i < n_main
                     else m.alias or f"s{i - n_main}")
-            if i < n_main and not _contains_aggregate(ast):
+            if i < n_main and not E.contains_aggregate(ast):
                 derived.append((name, ast))
                 continue
-            mf: Column | None = None
-            if not merged_measure_filters:
-                for f in m.filters:
-                    c = E.compile_expr(f, resolver)
-                    mf = c if mf is None else mf & c
-            agg_cols.append(self._measure_col(ast, resolver, mf).alias(name))
+            mf = None if merged_measure_filters else _conjoin(
+                [E.compile_expr(f, resolver) for f in m.filters])
+            agg_cols.append(F.expr(
+                f"{E.compile_ast(ast, resolver, mf)} AS {ident(name)}"))
 
         if q.group_type not in ("groupby", "rollup", "cube"):
             raise ValueError(f"unknown group_type: {q.group_type!r}")
-        if dim_cols:
+        if dim_sql:
+            dim_cols = [F.expr(t) for t in dim_sql]
             grouped = (df.rollup(*dim_cols) if q.group_type == "rollup"
                        else df.cube(*dim_cols) if q.group_type == "cube"
                        else df.groupBy(*dim_cols))
@@ -569,21 +503,21 @@ class Planner:
             out = df.agg(*agg_cols)
         for name, ast in derived:
             # default resolver: refs bind against the aggregated output
-            out = out.withColumn(name, E.compile_ast(ast))
+            out = out.withColumn(name, F.expr(E.compile_ast(ast)))
         for h in q.having:
             # having refs OUTPUT columns (dims/measure aliases) by name;
-            # the default resolver (F.col) binds them against `out`
+            # the default resolver binds them against `out`
             out = out.filter(E.compile_expr(h))
         # sorts BEFORE the supporting-column drop, so ORDER BY may
         # reference an unselected supporting alias
         out = self._apply_sorts(out, q, resolver)
         if parsed_supporting or derived:
             # supporting columns drop; output order follows q.measures.
-            # out[name] (not select-by-string) — derived names like
-            # "Completed/Requested" must not be parsed as expressions
-            out = out.select(*[out[n] for n in dim_names],
-                             *[out[m.output_name(i)] for i, (m, _) in
-                               enumerate(parsed_measures)])
+            # Quoted names — derived names like "Completed/Requested"
+            # must not be parsed as expressions
+            out = out.selectExpr(*[ident(n) for n in dim_names],
+                                 *[ident(m.output_name(i)) for i, (m, _) in
+                                   enumerate(parsed_measures)])
         if q.limit is not None:
             out = out.limit(q.limit)
         return out
@@ -604,7 +538,8 @@ class Planner:
                 out.append(Dimension(expr=f.name, alias=f.name))
         return out
 
-    def _dimension_col(self, d: Dimension, resolver: E.Resolver, tz: str | None = None) -> Column:
+    def _dimension_sql(self, d: Dimension, resolver: E.Resolver,
+                       tz: str | None = None) -> str:
         base = E.compile_expr(d.expr, resolver)
         if d.time_bucketizer:
             return timeutil.time_bucket(base, d.time_bucketizer, tz=tz)
@@ -615,46 +550,20 @@ class Planner:
                 manual_partitions=nb.manual_partitions)
         return base
 
-    def _measure_col(self, ast, resolver: E.Resolver, mf: Column | None) -> Column:
-        if _is_aggregate_call(ast):
-            return _compile_aggregate(ast, resolver, mf)
-        # expression over aggregates, e.g. sum(a)/sum(b)
-        return self._compile_agg_expr(ast, resolver, mf)
-
-    def _compile_agg_expr(self, node, resolver: E.Resolver, mf: Column | None) -> Column:
-        if _is_aggregate_call(node):
-            return _compile_aggregate(node, resolver, mf)
-        if isinstance(node, E.Binary):
-            le = self._compile_agg_expr(node.left, resolver, mf)
-            ri = self._compile_agg_expr(node.right, resolver, mf)
-            return E.compile_ast(E.Binary(node.op, E.Wrapped(le), E.Wrapped(ri)), resolver)
-        if isinstance(node, E.Unary):
-            x = self._compile_agg_expr(node.operand, resolver, mf)
-            return E.compile_ast(E.Unary(node.op, E.Wrapped(x)), resolver)
-        if isinstance(node, E.Call):
-            # scalar function over aggregate subexpressions, e.g.
-            # round(sum(value), 4) — compile each arg with agg awareness
-            args = [E.Wrapped(self._compile_agg_expr(a, resolver, mf)) for a in node.args]
-            return E.compile_ast(E.Call(node.func, args), resolver)
-        return E.compile_ast(node, resolver)
-
-    def _apply_sorts(self, df: DataFrame, q: Query, resolver: E.Resolver | None = None) -> DataFrame:
+    def _apply_sorts(self, df: DataFrame, q: Query,
+                     resolver: E.Resolver) -> DataFrame:
         """ORDER BY. Sort expressions that name an output column resolve to
         it; anything else compiles with the query's alias-aware resolver
         (the reference parses sorts but never executes them,
         query/common/aql.go:145 — we implement them for real)."""
-        if q.sorts:
-            cols = []
-            for s in q.sorts:
-                if s.expr in df.columns:
-                    c = F.col(s.expr)
-                elif resolver is not None:
-                    c = E.compile_expr(s.expr, resolver)
-                else:
-                    c = E.compile_expr(s.expr)
-                cols.append(c.desc() if s.order.lower() == "desc" else c.asc())
-            return df.orderBy(*cols)
-        return df
+        if not q.sorts:
+            return df
+        cols = []
+        for s in q.sorts:
+            c = F.expr(ident(s.expr) if s.expr in df.columns
+                       else E.compile_expr(s.expr, resolver))
+            cols.append(c.desc() if s.order.lower() == "desc" else c.asc())
+        return df.orderBy(*cols)
 
 
 def plan_query(spark: SparkSession, sf_dir: str, q: Query) -> DataFrame:

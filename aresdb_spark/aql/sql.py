@@ -31,9 +31,6 @@ from aresdb_spark.aql import expr as E
 from aresdb_spark.aql.model import (Dimension, Join, Measure,
                                     NumericBucketizer, Query, SortField)
 
-_AGG_FUNCS = {"count", "sum", "avg", "min", "max", "hll", "countdistincthll",
-              "count_distinct", "stddev", "median", "percentile"}
-
 _KEYWORDS = ["select", "from", "join", "where", "group by", "having",
              "order by", "limit"]
 
@@ -172,33 +169,6 @@ _BUCKET_NAME = {
     "day_of_month": "day of month", "day_of_year": "day of year",
     "month_of_year": "month of year", "quarter_of_year": "quarter of year",
 }
-
-
-def _is_aggregate_expr(text: str) -> bool:
-    try:
-        ast = E.parse(text)
-    except Exception as e:
-        raise SQLSyntaxError(f"cannot parse expression {text!r}: {e}") from e
-
-    def walk(n) -> bool:
-        if isinstance(n, E.Call):
-            if n.func in _AGG_FUNCS:
-                return True
-            return any(walk(a) for a in n.args)
-        for attr in ("operand", "left", "right", "else_", "low", "high"):
-            c = getattr(n, attr, None)
-            if c is not None and walk(c):
-                return True
-        for attr in ("items", "args"):
-            for c in getattr(n, attr, []) or []:
-                if walk(c):
-                    return True
-        for cond, v in getattr(n, "whens", []) or []:
-            if walk(cond) or walk(v):
-                return True
-        return False
-
-    return walk(ast)
 
 
 def _parse_select_item(item: str) -> tuple[str, str | None]:
@@ -566,7 +536,12 @@ def sql_to_query(sql: str) -> Query:
     plain_selects: list[tuple[str, str | None]] = []
     for item in _split_top(select_body, ","):
         expr_text, alias = _parse_select_item(item)
-        if _is_aggregate_expr(expr_text):
+        try:
+            ast = E.parse(expr_text)
+        except Exception as e:
+            raise SQLSyntaxError(
+                f"cannot parse expression {expr_text!r}: {e}") from e
+        if E.contains_aggregate(ast):
             measures.append(Measure(expr=expr_text, alias=alias))
         else:
             plain_selects.append((expr_text, alias))

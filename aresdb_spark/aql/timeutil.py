@@ -20,7 +20,7 @@ Reference:
     happens in local wall-clock time. We use from_utc_timestamp (full DST
     rules) instead of the reference's constant-offset + DST-switch hack.
 
-All bucketizers emit JVM-side Column expressions (no UDFs) so Catalyst can
+All bucketizers emit Spark-SQL expression text (no UDFs) so Catalyst can
 constant-fold and push work into whole-stage codegen.
 """
 
@@ -31,8 +31,7 @@ import re
 from datetime import datetime, timedelta, timezone
 from zoneinfo import ZoneInfo
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from aresdb_spark.operators.util import lit
 
 # ---------------------------------------------------------------------------
 # Relative time grammar → (start, end) calendar windows
@@ -256,7 +255,7 @@ def time_filter_bounds(
 
 
 # ---------------------------------------------------------------------------
-# Time bucketizers → Column
+# Time bucketizers → Spark-SQL text
 # ---------------------------------------------------------------------------
 
 _N_UNIT = re.compile(r"^(\d+)\s+(minutes?|hours?)$")
@@ -266,35 +265,29 @@ _TRUNC_UNITS = {
 }
 
 
-def _localize(ts: Column, tz: "str | Column | None") -> Column:
-    """Shift a UTC timestamp to wall-clock time in `tz` (full DST rules —
-    supersedes the reference's constant-offset + DST-switch arithmetic,
-    query/time_bucketizer.go:93-146). None/UTC → unchanged. A Column tz
-    gives PER-ROW timezones — the timezone-column join
-    (query/aql_compiler.go:439-466)."""
-    if tz is None:
-        return ts
-    if isinstance(tz, str):
-        if tz.upper() == "UTC":
-            return ts
-        return F.from_utc_timestamp(ts, tz)
-    return F.from_utc_timestamp(ts, tz)
+def time_bucket(ts: str, bucketizer: str, tz: str | None = None) -> str:
+    """Regular + recurring time bucketizers (SURVEY §2.5) over the SQL
+    text ``ts`` of a UTC timestamp.
 
+    ``tz`` is the SQL text of the bucketing zone: a zone-name literal, or
+    a per-row zone expression — the timezone-column join
+    (query/aql_compiler.go:439-466); None buckets in UTC. The timestamp
+    shifts to wall-clock time in ``tz`` with full DST rules (supersedes
+    the reference's constant-offset + DST-switch arithmetic,
+    query/time_bucketizer.go:93-146).
 
-def time_bucket(ts: Column, bucketizer: str, tz: "str | Column | None" = None) -> Column:
-    """Regular + recurring time bucketizers (SURVEY §2.5).
-
-    Regular buckets return truncated TIMESTAMP columns (in `tz` wall-clock
-    when given); recurring buckets return INT columns. "day of week" is
+    Regular buckets return truncated TIMESTAMP values (in `tz` wall-clock
+    when given); recurring buckets return INT values. "day of week" is
     Monday=0..Sunday=6 per the reference bucketizer's -4d epoch shift
     (query/time_bucketizer.go:216-227) — NOT the scalar dayofweek().
     """
     b = bucketizer.strip().lower()
-    ts = _localize(ts, tz)
+    if tz is not None:
+        ts = f"from_utc_timestamp({ts}, {tz})"
 
     # regular: plain unit
     if b in _TRUNC_UNITS:
-        return F.date_trunc(_TRUNC_UNITS[b], ts)
+        return f"date_trunc('{_TRUNC_UNITS[b]}', {ts})"
     if b == "quarter-hour":
         return _floor_seconds(ts, 900)
     if b == "half-hour":
@@ -315,37 +308,31 @@ def time_bucket(ts: Column, bucketizer: str, tz: "str | Column | None" = None) -
         secs = n * {"m": 60, "h": 3600, "d": 86400}[m.group(2)]
         return _floor_seconds(ts, secs)
 
-    # recurring (reference: time_bucketizer.go:44-65)
+    # recurring (reference: time_bucketizer.go:44-65); the week starts
+    # Monday (reference -4d epoch shift): Sunday=1 → Monday=0
+    dow_mon0 = f"((dayofweek({ts}) + 5) % 7)"
     if b == "time of day":
-        return F.hour(ts) * 3600 + F.minute(ts) * 60 + F.second(ts)
+        return f"(((hour({ts}) * 3600) + (minute({ts}) * 60)) + second({ts}))"
     m = re.match(r"^(\d+)\s+minutes of day$", b)
     if m:
-        n = int(m.group(1))
-        mins = F.hour(ts) * 60 + F.minute(ts)
-        return (mins - mins % n)
+        mins = f"((hour({ts}) * 60) + minute({ts}))"
+        return f"({mins} - ({mins} % {int(m.group(1))}))"
     if b == "hour of day":
-        return F.hour(ts)
+        return f"hour({ts})"
     if b == "hour of week":
-        # week starts Monday (reference -4d epoch shift); Monday 00:00 = 0
-        dow_mon0 = (F.dayofweek(ts) + 5) % 7  # Sunday=1 → Monday=0
-        return dow_mon0 * 24 + F.hour(ts)
+        return f"(({dow_mon0} * 24) + hour({ts}))"
     if b == "day of week":
-        # Monday=0..Sunday=6 (reference bucketizer parity)
-        return (F.dayofweek(ts) + 5) % 7
-    if b == "day of month":
-        return F.dayofmonth(ts)
-    if b == "day of year":
-        return F.dayofyear(ts)
-    if b == "month of year":
-        return F.month(ts)
-    if b == "quarter of year":
-        return F.quarter(ts)
+        return dow_mon0
+    recurring = {"day of month": "dayofmonth", "day of year": "dayofyear",
+                 "month of year": "month", "quarter of year": "quarter"}
+    if b in recurring:
+        return f"{recurring[b]}({ts})"
     raise ValueError(f"unknown time bucketizer {bucketizer!r}")
 
 
-def _floor_seconds(ts: Column, secs: int) -> Column:
-    epoch = F.unix_timestamp(ts)
-    return F.timestamp_seconds((epoch - epoch % secs))
+def _floor_seconds(ts: str, secs: int) -> str:
+    epoch = f"unix_timestamp({ts})"
+    return f"timestamp_seconds(({epoch} - ({epoch} % {secs})))"
 
 
 def time_bucket_oracle_sql(col: str, bucketizer: str, tz: str | None = None) -> str:
@@ -392,23 +379,25 @@ def time_bucket_oracle_sql(col: str, bucketizer: str, tz: str | None = None) -> 
 # ---------------------------------------------------------------------------
 
 
-def numeric_bucket(col: Column, *, bucket_width: float | None = None,
+def numeric_bucket(col: str, *, bucket_width: float | None = None,
                    log_base: float | None = None,
-                   manual_partitions: list[float] | None = None) -> Column:
-    """Equal-width / log-width / manual-partition bucketing of a numeric
-    dimension; returns the bucket's lower bound (reference semantics)."""
+                   manual_partitions: list[float] | None = None) -> str:
+    """Equal-width / log-width / manual-partition bucketing of the
+    numeric SQL text ``col``; returns the bucket's lower bound (reference
+    semantics)."""
     if bucket_width is not None:
-        w = F.lit(float(bucket_width))
-        return F.floor(col / w) * w
+        w = lit(float(bucket_width))
+        return f"(floor(({col} / {w})) * {w})"
     if log_base is not None:
         import math
-        lb = math.log(float(log_base))
-        log_idx = F.floor(F.log(col.cast("double")) / F.lit(lb))
-        return F.pow(F.lit(float(log_base)), log_idx)
+        log_idx = (f"floor((ln(CAST({col} AS DOUBLE)) / "
+                   f"{lit(math.log(float(log_base)))}))")
+        return f"power({lit(float(log_base))}, {log_idx})"
     if manual_partitions:
         # bucket = greatest partition boundary <= value; below first → null
-        c: Column = F.lit(None).cast("double")
+        out = "CAST(NULL AS DOUBLE)"
         for b in sorted(manual_partitions):
-            c = F.when(col >= F.lit(float(b)), F.lit(float(b))).otherwise(c)
-        return c
+            out = (f"CASE WHEN ({col} >= {lit(float(b))}) "
+                   f"THEN {lit(float(b))} ELSE {out} END")
+        return out
     raise ValueError("numeric bucketizer requires bucket_width, log_base, or manual_partitions")

@@ -3,53 +3,45 @@
 Reference: query/geo_intersects.cu (ray-casting point-in-polygon on the
 GPU); compile constraints at query/aql_compiler.go:199-257; shape model =
 polygons with holes, GeoShape = array of rings of (lat, long) structs
-(query/time_series_aggregate.h:398-402). Even-odd (ray cast) rule: a point
-in an odd number of rings is inside (holes subtract).
+(query/time_series_aggregate.h:398-402), here
+``array<array<struct<lat: float, long: float>>>``. Even-odd (ray cast)
+rule: a point in an odd number of rings is inside (holes subtract).
 
 Spark design: shapes are a *small* dimension table (city boundaries etc.)
 → broadcast; the predicate is a deterministic expression over
 (shape, lat, lng). The ray-cast itself runs as a JVM-side higher-order
 aggregate over the ring arrays — no Python UDF, so the broadcast join +
-predicate stays inside codegen.
+predicate stays inside codegen. Every builder here maps Spark-SQL text
+arguments to Spark-SQL text; lambda variables carry a ``geo_`` prefix so
+they cannot shadow a column the arguments name.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
 from aresdb_spark.aql import expr as _expr
-
-# GeoShape Spark type: array of rings, ring = array of points
-GEO_POINT = T.StructType([
-    T.StructField("lat", T.FloatType()), T.StructField("long", T.FloatType())])
-GEO_SHAPE = T.ArrayType(T.ArrayType(GEO_POINT))
+from aresdb_spark.operators.util import let, lit
 
 
-def point_in_ring(ring: Column, lat: Column, lng: Column) -> Column:
+def point_in_ring(ring: str, lat: str, lng: str) -> str:
     """Ray-casting crossing test for one ring (array<struct<lat,long>>).
 
     Crossing count parity via fold over vertex pairs: for each edge
     (i, i+1), count if the horizontal ray from the point crosses it.
     Matches the reference's even-odd kernel (geo_intersects.cu)."""
-    n = F.size(ring)
-    idx = F.sequence(F.lit(0), n - 2)
+    def vertex(k: int, field: str) -> str:   # element_at is 1-based
+        return f"CAST(element_at({ring}, (geo_i + {k})).`{field}` AS DOUBLE)"
 
-    def crosses(i: Column) -> Column:
-        a = F.element_at(ring, i + 1)   # element_at is 1-based
-        b = F.element_at(ring, i + 2)
-        ay, ax = a["long"].cast("double"), a["lat"].cast("double")
-        by, bx = b["long"].cast("double"), b["lat"].cast("double")
-        cond = ((ay > lng) != (by > lng)) & (
-            lat < (bx - ax) * (lng - ay) / (by - ay) + ax)
-        return F.when(cond, F.lit(1)).otherwise(F.lit(0))
-
-    crossings = F.aggregate(idx, F.lit(0), lambda acc, i: acc + crosses(i))
-    return crossings % 2 == 1
+    ay, ax = vertex(1, "long"), vertex(1, "lat")
+    by, bx = vertex(2, "long"), vertex(2, "lat")
+    crosses = (f"((({ay} > {lng}) != ({by} > {lng})) AND ({lat} < "
+               f"(((({bx} - {ax}) * ({lng} - {ay})) / ({by} - {ay})) + {ax})))")
+    crossings = (f"aggregate(sequence(0, (size({ring}) - 2)), 0, "
+                 f"(geo_acc, geo_i) -> (geo_acc + "
+                 f"CASE WHEN {crosses} THEN 1 ELSE 0 END))")
+    return f"(({crossings} % 2) = 1)"
 
 
-def geography_intersects(shape: Column, lat: Column, lng: Column) -> Column:
+def geography_intersects(shape: str, lat: str, lng: str) -> str:
     """Point-in-shape with holes: inside an odd number of rings ⇒ inside
     (even-odd rule, like the reference kernel).
 
@@ -58,33 +50,34 @@ def geography_intersects(shape: Column, lat: Column, lng: Column) -> Column:
     the overwhelming majority when a fact table joins against many
     shapes — never pay the division-heavy crossing test. Result is
     identical (every ring lies inside the bbox)."""
-    lat_d, lng_d = lat.cast("double"), lng.cast("double")
-
-    def with_bbox(bb: Column) -> Column:
-        inside_bbox = ((lat_d >= bb["mnla"]) & (lat_d <= bb["mxla"])
-                       & (lng_d >= bb["mnlo"]) & (lng_d <= bb["mxlo"]))
-        ring_hits = F.aggregate(
-            shape, F.lit(0),
-            lambda acc, ring: acc + F.when(
-                point_in_ring(ring, lat_d, lng_d), 1).otherwise(0),
-        )
-        return F.when(inside_bbox, ring_hits % 2 == 1).otherwise(F.lit(False))
-
-    bbox = F.aggregate(
-        F.flatten(shape),
-        F.struct(F.lit(999.0).alias("mnla"), F.lit(-999.0).alias("mxla"),
-                 F.lit(999.0).alias("mnlo"), F.lit(-999.0).alias("mxlo")),
-        lambda acc, p: F.struct(
-            F.least(acc["mnla"], p["lat"].cast("double")).alias("mnla"),
-            F.greatest(acc["mxla"], p["lat"].cast("double")).alias("mxla"),
-            F.least(acc["mnlo"], p["long"].cast("double")).alias("mnlo"),
-            F.greatest(acc["mxlo"], p["long"].cast("double")).alias("mxlo")))
-    from aresdb_spark.operators.util import let as _let
-    return _let(bbox, with_bbox)
+    lat_d, lng_d = f"CAST({lat} AS DOUBLE)", f"CAST({lng} AS DOUBLE)"
+    inside_bbox = (f"(((({lat_d} >= geo_bb.mnla) AND ({lat_d} <= geo_bb.mxla))"
+                   f" AND ({lng_d} >= geo_bb.mnlo)) AND ({lng_d} <= geo_bb.mxlo))")
+    ring_hits = (f"aggregate({shape}, 0, (geo_hits, geo_ring) -> (geo_hits + "
+                 f"CASE WHEN {point_in_ring('geo_ring', lat_d, lng_d)} "
+                 f"THEN 1 ELSE 0 END))")
+    p_lat, p_lng = "CAST(geo_p.lat AS DOUBLE)", "CAST(geo_p.`long` AS DOUBLE)"
+    bbox = (f"aggregate(flatten({shape}), struct(999.0D AS mnla, "
+            f"-999.0D AS mxla, 999.0D AS mnlo, -999.0D AS mxlo), "
+            f"(geo_box, geo_p) -> struct("
+            f"least(geo_box.mnla, {p_lat}) AS mnla, "
+            f"greatest(geo_box.mxla, {p_lat}) AS mxla, "
+            f"least(geo_box.mnlo, {p_lng}) AS mnlo, "
+            f"greatest(geo_box.mxlo, {p_lng}) AS mxlo))")
+    return let(bbox, f"geo_bb -> CASE WHEN {inside_bbox} "
+                     f"THEN (({ring_hits} % 2) = 1) ELSE FALSE END")
 
 
-def wkt_to_geo_shape(col: Column) -> Column:
-    """WKT-ish polygon string → GEO_SHAPE (array of rings of
+# GeoShapeFromString's ring split, EXACTLY (no space before the comma), so
+# ingest-side and query-side accept the same inputs — a lenient variant
+# here would parse strings the wire codec's parser rejects
+_RING_SPLIT = lit(r"\),\s*\(")
+_PAIR_SPLIT = lit(r"\s*,\s*")
+_COORD_SPLIT = lit(r"\s+")
+
+
+def wkt_to_geo_shape(col: str) -> str:
+    """WKT-ish polygon string → GeoShape (array of rings of
     struct<lat,long>), entirely with built-in string/array functions so
     the conversion stays inside codegen — no Python in the path.
 
@@ -94,30 +87,21 @@ def wkt_to_geo_shape(col: Column) -> Column:
     first per WKT, stored lat-first like GeoPointGo. This is the bridge
     from wire-ingested shape columns (which the metastore types as
     string) to ``geography_intersects``."""
-    body = F.regexp_replace(F.lower(col), r"^[polygon() ]*", "")
-    body = F.regexp_replace(body, r"[polygon() ]*$", "")
-    # ring split matches GeoShapeFromString's regex EXACTLY (no space
-    # before the comma) so ingest-side and query-side accept the same
-    # inputs — a lenient variant here would parse strings the wire
-    # codec's parser rejects
-    rings = F.split(body, r"\),\s*\(")
-
-    def parse_pair(pair: Column) -> Column:
-        parts = F.split(F.trim(pair), r"\s+")
-        return F.struct(
-            F.element_at(parts, 2).cast("float").alias("lat"),
-            F.element_at(parts, 1).cast("float").alias("long"))
-
-    return F.transform(
-        rings, lambda ring: F.transform(F.split(ring, r"\s*,\s*"),
-                                        parse_pair))
+    body = f"regexp_replace(lower({col}), {lit('^[polygon() ]*')}, '')"
+    body = f"regexp_replace({body}, {lit('[polygon() ]*$')}, '')"
+    parts = f"split(trim(geo_pair), {_COORD_SPLIT})"
+    pair = (f"struct(CAST(element_at({parts}, 2) AS FLOAT) AS lat, "
+            f"CAST(element_at({parts}, 1) AS FLOAT) AS `long`)")
+    return (f"transform(split({body}, {_RING_SPLIT}), geo_ring -> "
+            f"transform(split(geo_ring, {_PAIR_SPLIT}), geo_pair -> {pair}))")
 
 
-def _geo_fn(args: list[Column]) -> Column:
+def _geo_fn(args: list[str]) -> str:
     # AQL surface: geography_intersects(shape_col, point_col) where point
     # is struct<lat,long>, OR (shape, lat, lng)
     if len(args) == 2:
-        return geography_intersects(args[0], args[1]["lat"], args[1]["long"])
+        return geography_intersects(args[0], f"{args[1]}.lat",
+                                    f"{args[1]}.`long`")
     return geography_intersects(args[0], args[1], args[2])
 
 

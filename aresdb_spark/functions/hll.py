@@ -5,8 +5,8 @@ sparse/dense binary sketches (query/hll.go, query/hll.cu, binary format
 query/common/hll.go:43-68).
 
 Capability parity on Spark:
-  - query-time approx distinct → approx_count_distinct (HLL++ built-in;
-    rsd 0.0065 ≈ 1.04/√2^14 matches the reference's register count)
+  - query-time approx distinct → the AQL compiler's hll(x) template,
+    approx_count_distinct (HLL++ built-in) at Spark's default rsd 0.05
   - *mergeable, persistable* sketches (the reason the reference has a
     binary format: brokers merge datanode sketches; dashboards merge
     day-sketches) → hll_sketch_agg / hll_sketch_estimate / hll_union
@@ -18,15 +18,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from aresdb_spark.aql import expr as _expr
-
-# match the reference's 2^14 registers (query/time_series_aggregate.h:42-44)
-HLL_PRECISION_RSD = 1.04 / (2 ** 14) ** 0.5  # ≈ 0.0081
-
-
-def approx_distinct(col: Column, rsd: float = HLL_PRECISION_RSD) -> Column:
-    return F.approx_count_distinct(col, rsd)
 
 
 def hll_sketch(col: Column, lg_k: int = 14) -> Column:
@@ -121,9 +112,3 @@ def hll_distinct(df: DataFrame, dims: list[str], col: str) -> DataFrame:
                             columns=[*dims, "estimate"])
 
     return regs.groupBy(*dims).applyInPandas(_estimate, schema)
-
-
-# AQL surface: hll(x) in a measure is handled by the planner; expression-
-# level usage maps to approx_count_distinct
-_expr.register_function("hll", lambda a: approx_distinct(a[0]))
-_expr.register_function("countdistincthll", lambda a: approx_distinct(a[0]))

@@ -11,11 +11,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def let(bound: Column, body) -> Column:
+def let(bound: Column | str, body) -> Column | str:
     """Poor-man's let-binding: evaluate `bound` ONCE per row and feed it to
     `body` as a lambda variable (single-element array + transform).
     ``body`` is a Python function of that variable, or the text of a
-    Spark-SQL lambda (``"x -> ..."``, see ``hof``).
+    Spark-SQL lambda (``"x -> ..."``, see ``hof``). A ``bound`` given as
+    SQL text (with a text ``body``) returns SQL text.
 
     Catalyst does not common-subexpression-eliminate across higher-order-
     function lambdas — without this, expressions that reference an
@@ -23,6 +24,8 @@ def let(bound: Column, body) -> Column:
     quality score's 3 token statistics) re-expand the whole pipeline N
     times per row. Measured 40× slowdown on the MinHash signature at
     sf0.1 before this fix."""
+    if isinstance(bound, str):
+        return f"element_at({hof('transform', f'array({bound})', body)}, 1)"
     arr = F.array(bound)
     return F.element_at(hof("transform", arr, body) if isinstance(body, str)
                         else F.transform(arr, body), 1)
@@ -85,10 +88,13 @@ def sql_type(dt: T.DataType) -> str:
     return dt.simpleString()
 
 
-def hof(name: str, arg: Column, fn: str) -> Column:
+def hof(name: str, arg: Column | str, fn: str) -> Column | str:
     """Higher-order function ``name`` over ``arg`` with a lambda given as
     SQL text (``"x -> ..."``): the lambda parses JVM-side in one call,
-    where a Python lambda costs ~33 Py4J round trips."""
+    where a Python lambda costs ~33 Py4J round trips. An ``arg`` given as
+    SQL text returns SQL text."""
+    if isinstance(arg, str):
+        return f"{name}({arg}, {fn})"
     return F.call_function(name, arg, F.expr(fn))
 
 

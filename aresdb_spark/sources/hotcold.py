@@ -1310,7 +1310,11 @@ class SignatureStore(_PointerStore):
         """``mode="append"`` logs ``bands`` as the next increment;
         "overwrite" (or any mode on a root with no committed state)
         re-initializes the store to ``bands``, displacing the old base
-        and every logged increment."""
+        and every logged increment. Any other mode raises before the
+        store is touched."""
+        if mode not in ("append", "overwrite"):
+            raise ValueError(f"signature store mode must be 'append' or "
+                             f"'overwrite', got {mode!r}")
         with pointer.write_lock(self.path):
             st = self._state(new_ok=True)
             if mode == "append" and st is not None:

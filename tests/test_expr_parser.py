@@ -122,14 +122,17 @@ def test_parser_fuzz_error_discipline():
     run()
 
 
-def test_parser_roundtrip_compile():
-    """Every expression the parser accepts must also compile to a Column
-    against a permissive resolver (no late AttributeErrors)."""
+def test_parser_roundtrip_compile(spark):
+    """Every expression the parser accepts must also compile to SQL text
+    that Spark's expression parser accepts, against a permissive
+    resolver (no late AttributeErrors or unparseable text)."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
-    from pyspark.sql import functions as F
 
     from aresdb_spark.aql import expr as E
+    from aresdb_spark.operators.util import ident
+
+    parser = spark._jsparkSession.sessionState().sqlParser()
 
     exprs = st.sampled_from([
         "a + b * 2", "a in (1, 2, 3)", "not a", "a is not null",
@@ -142,8 +145,9 @@ def test_parser_roundtrip_compile():
     @given(exprs)
     def run(text):
         ast = E.parse(text)
-        col = E.compile_expr(text, lambda name: F.col(name.replace(".", "_")))
-        assert col is not None and ast is not None
+        sql = E.compile_expr(text, lambda name: ident(name.replace(".", "_")))
+        # F.expr parses lazily; the session's parser raises on bad text
+        assert parser.parseExpression(sql) is not None and ast is not None
 
     run()
 

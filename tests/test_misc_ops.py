@@ -167,9 +167,8 @@ def test_convert_tz_semantics(spark):
     from aresdb_spark.aql.expr import compile_expr
 
     df = spark.createDataFrame([(datetime(2024, 1, 15, 12, 0),)], "ts timestamp")
-    got = df.select(compile_expr(
-        "convert_tz(ts, 'UTC', 'America/New_York')",
-        lambda n: F.col(n)).alias("x")).first()["x"]
+    got = df.select(F.expr(compile_expr(
+        "convert_tz(ts, 'UTC', 'America/New_York')")).alias("x")).first()["x"]
     assert got == datetime(2024, 1, 15, 7, 0)  # UTC noon = 07:00 EST
 
 

@@ -490,8 +490,8 @@ def test_frame_sample(spark):
 
 
 def test_geo_point_in_polygon(spark):
-    import aresdb_spark.functions.geo  # noqa: F401 registers the function
     from aresdb_spark.functions.geo import geography_intersects
+    from aresdb_spark.operators.util import lit
 
     # unit square with a hole in the middle
     shape = [[  # outer ring
@@ -512,8 +512,8 @@ def test_geo_point_in_polygon(spark):
         (5.0, 2.0, True),
     ]
     for lat, lng, want in pts:
-        got = df.select(geography_intersects(
-            F.col("shape"), F.lit(lat), F.lit(lng)).alias("hit")).first()["hit"]
+        got = df.select(F.expr(geography_intersects(
+            "shape", lit(lat), lit(lng))).alias("hit")).first()["hit"]
         assert got == want, (lat, lng, want, got)
 
 

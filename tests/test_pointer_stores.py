@@ -411,6 +411,26 @@ def test_signature_store_crash_before_commit_is_invisible(spark, tmp_path,
         set(range(130, 140))
 
 
+@pytest.mark.parametrize("mode", ["apend", "ignore"])
+def test_signature_store_rejects_unknown_mode(spark, tmp_path, mode):
+    """A mistyped mode raises before the store is touched: it never
+    re-initializes a built store to the increment alone."""
+    from aresdb_spark.operators.dedup import (build_signature_store,
+                                              read_signature_store)
+
+    path = str(tmp_path / "sig")
+    build_signature_store(_sig_docs(spark, 0, "how vexingly quick daft zebras"),
+                          path)
+    rows = lambda: sorted(  # noqa: E731
+        map(tuple, read_signature_store(spark, path).collect()))
+    before, st = rows(), pointer_mod.read_state(path)
+    with pytest.raises(ValueError, match="'append' or 'overwrite'"):
+        build_signature_store(_sig_docs(spark, 100, "jackdaws love my sphinx"),
+                              path, mode=mode)
+    assert pointer_mod.read_state(path) == st
+    assert rows() == before
+
+
 def test_signature_store_leaves_catalog_untouched(spark, tmp_path):
     """Build, append, read, compact and gc go through the pointer alone:
     the session catalog lists the same tables before and after."""

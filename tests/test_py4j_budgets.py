@@ -2,11 +2,11 @@
 
 Every Python-built Column node and every DataFrame op is at least one
 round trip to the JVM, so on the freshness path (ingest, then a
-``Catalog.load``-backed query) the driver, not Spark, sets the floor.
-These paths build each expression list as Spark-SQL text — one
-``selectExpr`` / ``filter(str)`` / ``F.expr`` per list — and each budget
-below is about half of what the per-node Column trees cost, so a
-regression back to Column trees fails it. Counts are deterministic for
+``Catalog.load``-backed query through the AQL front door) the driver,
+not Spark, sets the floor. These paths build each expression list as
+Spark-SQL text — one ``selectExpr`` / ``filter(str)`` / ``F.expr`` per
+list — and each budget below is about half of what the per-node Column
+trees cost, so a regression back to Column trees fails it. Counts are deterministic for
 a given schema; the budgets leave headroom for py4j/pyspark changes.
 """
 
@@ -86,3 +86,32 @@ def test_minhash_signature_budget(spark):
     from aresdb_spark.operators.dedup import minhash_signature
     n = count_py4j(spark, lambda: minhash_signature(F.col("text")))
     assert n <= 190, n   # as Column trees: 389
+
+
+# the realtime benchmark's query shape (perfbench/realtime.py QUERY)
+REALTIME_QUERY = {
+    "table": "events",
+    "dimensions": [{"sqlExpression": "event_type", "alias": "et"}],
+    "measures": [{"sqlExpression": "count(*)", "alias": "c"},
+                 {"sqlExpression": "sum(value)", "alias": "s"}],
+    "timeFilter": {"column": "ts", "from": "2024-01-28", "to": "2024-03-31"}}
+
+
+def test_execute_request_budget(spark):
+    from aresdb_spark.aql.api import execute_request
+    from aresdb_spark.catalog import Catalog
+    from tests.conftest import SF_DIR
+    cat, req = Catalog(SF_DIR), {"queries": [REALTIME_QUERY]}
+    assert "errors" not in execute_request(spark, cat, req)  # warm
+    n = count_py4j(spark, lambda: execute_request(spark, cat, req))
+    assert n <= 54, n    # as Column trees: 107
+
+
+def test_geo_compile_budget(spark):
+    from aresdb_spark.aql import expr as E
+    from aresdb_spark.aql import planner  # noqa: F401 registers the geo functions
+    geo = "geography_intersects(g.shape, lat, lng)"
+    n = count_py4j(spark, lambda: E.compile_expr(geo))
+    assert n <= 480, n   # as Column trees: 964
+    parser = spark._jsparkSession.sessionState().sqlParser()
+    assert parser.parseExpression(E.compile_expr(geo)) is not None
