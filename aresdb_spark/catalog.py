@@ -111,10 +111,12 @@ class Catalog:
         pushes into the parquet scan (row-group/partition pruning — the
         analog of the reference's archive-batch day-range pruning,
         query/aql_compiler.go:1047-1056).
+
+        A plain-parquet table's raw relation is opened once and cached
+        (one driver-side file listing and schema read per catalog);
+        every load, time-filtered or not, builds on it.
         """
         tdef = self.table_def(name)
-        if time_range is None and name in self._cache:
-            return self._cache[name]
 
         # runtime SQL confs: on Spark 3 INT64 TIMESTAMP(NANOS) parquet is
         # unreadable without the legacy flag (Spark 4 ignores it and reads
@@ -145,7 +147,15 @@ class Catalog:
             df = DimensionStore(path=f"{self.sf_dir}/{name}",
                                 primary_key=tdef.primary_key).read(spark)
         else:
-            df = spark.read.parquet(f"{self.sf_dir}/{name}.parquet")
+            # hotcold/dimension stores above resolve through the pointer
+            # on every load: a cached plan would pin the version dirs of
+            # ONE committed state, and once a later mutation's grace
+            # window expires the reaper deletes those files out from
+            # under it
+            if name not in self._cache:
+                self._cache[name] = spark.read.parquet(
+                    f"{self.sf_dir}/{name}.parquet")
+            df = self._cache[name]
         if time_range is not None and tdef.time_column:
             # normalize bounds through the SAME helper the hotcold
             # day-list pruning uses (utc_naive): a tz-aware non-UTC
@@ -167,13 +177,6 @@ class Catalog:
                 # matches DuckDB's truncating ns→us cast)
                 df = df.withColumn(
                     c, F.expr(f"timestamp_micros({ident(c)} div 1000)"))
-        if time_range is None and not tdef.hotcold:
-            # hotcold/dimension stores resolve through the pointer: a
-            # cached plan would pin the version dirs of ONE committed
-            # state, and once a later mutation's grace window expires
-            # the reaper deletes those files out from under it. Store
-            # resolution is a pointer read — re-resolve per load.
-            self._cache[name] = df
         return df
 
     def register_all(self, spark: SparkSession) -> None:

@@ -54,6 +54,8 @@ import struct
 
 import numpy as np
 
+from aresdb_spark.operators.util import map_payloads, map_rows
+
 WAV_SIGNATURE = b"RIFF"
 
 # IMA ADPCM tables (public constants from the IMA spec / RFC 3551 DVI4;
@@ -892,57 +894,31 @@ def synthetic_au_media(ids, id_col: str = "media_id"):
     the expansions exact, so a DuckDB oracle recomputes every decoded
     statistic bit-for-bit through real big-endian .snd headers.
     Output: (media_id, payload binary)."""
-    from collections.abc import Iterator
+    def payload_of(d):
+        n, v = 44 + d % 19, d % 7
+        rate = 8000 * (1 + d % 2)
+        if v == 0:
+            s = ((d * 97 + np.arange(n * 2) * 61) % 2001 - 1000) \
+                .reshape(n, 2)
+            return encode_au(s, rate, encoding=_AU_ENC_PCM16,
+                             annotation=b"r14!")
+        if v == 1:
+            s = (d * 97 + np.arange(n) * 61) % 255 - 127
+            return encode_au(s, rate, encoding=_AU_ENC_PCM8)
+        if v == 2:
+            s = (d * 97 + np.arange(n) * 61) % 200001 - 100000
+            return encode_au(s, rate, encoding=_AU_ENC_PCM24)
+        if v == 3:
+            s = (d * 97 + np.arange(n) * 61) % 4000001 - 2000000
+            return encode_au(s, rate, encoding=_AU_ENC_PCM32)
+        if v == 4:
+            k = (d * 89 + np.arange(n) * 53) % 4001 - 2000
+            return encode_au(k / 256.0, rate, encoding=_AU_ENC_F32)
+        raw = ((d * 3 + np.arange(n) * 17) % 256).astype(np.uint8).tobytes()
+        return encode_au(None, rate, raw_bytes=raw,
+                         encoding=_AU_ENC_MULAW if v == 5 else _AU_ENC_ALAW)
 
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), False),
-    ])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col].astype("int64"):
-                d = int(d)
-                n, v = 44 + d % 19, d % 7
-                rate = 8000 * (1 + d % 2)
-                if v == 0:
-                    s = ((d * 97 + np.arange(n * 2) * 61) % 2001
-                         - 1000).reshape(n, 2)
-                    payloads.append(encode_au(
-                        s, rate, encoding=_AU_ENC_PCM16,
-                        annotation=b"r14!"))
-                elif v == 1:
-                    s = (d * 97 + np.arange(n) * 61) % 255 - 127
-                    payloads.append(encode_au(s, rate,
-                                              encoding=_AU_ENC_PCM8))
-                elif v == 2:
-                    s = (d * 97 + np.arange(n) * 61) % 200001 - 100000
-                    payloads.append(encode_au(s, rate,
-                                              encoding=_AU_ENC_PCM24))
-                elif v == 3:
-                    s = (d * 97 + np.arange(n) * 61) % 4000001 - 2000000
-                    payloads.append(encode_au(s, rate,
-                                              encoding=_AU_ENC_PCM32))
-                elif v == 4:
-                    k = (d * 89 + np.arange(n) * 53) % 4001 - 2000
-                    payloads.append(encode_au(k / 256.0, rate,
-                                              encoding=_AU_ENC_F32))
-                else:
-                    raw = ((d * 3 + np.arange(n) * 17) % 256) \
-                        .astype(np.uint8).tobytes()
-                    payloads.append(encode_au(
-                        None, rate,
-                        encoding=_AU_ENC_MULAW if v == 5
-                        else _AU_ENC_ALAW,
-                        raw_bytes=raw))
-            yield pd.DataFrame({"media_id": pdf[id_col].astype("int64"),
-                                "payload": payloads})
-
-    return ids.mapInPandas(gen, schema=out_schema)
+    return map_payloads(ids, id_col, payload_of)
 
 
 def synthetic_flac_media(ids, id_col: str = "media_id"):
@@ -958,55 +934,34 @@ def synthetic_flac_media(ids, id_col: str = "media_id"):
       stereo flat: ``(d*97 + i*61) % 2001 - 1000`` over 2n samples
       24-bit: ``(d*131 + i*997) % 2000001 - 1000000``
     Output: (media_id, payload binary)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from aresdb_spark.operators.flac import encode_flac
 
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), False),
-    ])
+    def payload_of(d):
+        n, v = 48 + 4 * (d % 7), d % 6
+        rate = 8000 * (1 + d % 2)
+        mono = (d * 97 + np.arange(n) * 61) % 2001 - 1000
+        if v == 0:
+            return encode_flac(mono, rate, block_size=32, subframe="fixed",
+                               fixed_order=2)
+        if v == 1:
+            return encode_flac(mono, rate, block_size=32,
+                               subframe="verbatim")
+        if v == 2:
+            return encode_flac(mono, rate, block_size=32, subframe="lpc",
+                               lpc_coefs=[3, -1], lpc_shift=1)
+        if v == 3:
+            st = ((d * 97 + np.arange(n * 2) * 61) % 2001 - 1000) \
+                .reshape(n, 2)
+            return encode_flac(st, rate, block_size=32, stereo="mid_side",
+                               fixed_order=2)
+        if v == 4:
+            return encode_flac(mono, rate, block_size=32, fixed_order=1,
+                               partition_order=1, escape_partitions=True)
+        s24 = (d * 131 + np.arange(n) * 997) % 2000001 - 1000000
+        return encode_flac(s24, rate, bps=24, block_size=32, fixed_order=4,
+                           partition_order=2)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col].astype("int64"):
-                d = int(d)
-                n, v = 48 + 4 * (d % 7), d % 6
-                rate = 8000 * (1 + d % 2)
-                mono = (d * 97 + np.arange(n) * 61) % 2001 - 1000
-                if v == 0:
-                    blob = encode_flac(mono, rate, block_size=32,
-                                       subframe="fixed", fixed_order=2)
-                elif v == 1:
-                    blob = encode_flac(mono, rate, block_size=32,
-                                       subframe="verbatim")
-                elif v == 2:
-                    blob = encode_flac(mono, rate, block_size=32,
-                                       subframe="lpc",
-                                       lpc_coefs=[3, -1], lpc_shift=1)
-                elif v == 3:
-                    st = ((d * 97 + np.arange(n * 2) * 61) % 2001
-                          - 1000).reshape(n, 2)
-                    blob = encode_flac(st, rate, block_size=32,
-                                       stereo="mid_side", fixed_order=2)
-                elif v == 4:
-                    blob = encode_flac(mono, rate, block_size=32,
-                                       fixed_order=1, partition_order=1,
-                                       escape_partitions=True)
-                else:
-                    s24 = (d * 131 + np.arange(n) * 997) % 2000001 \
-                        - 1000000
-                    blob = encode_flac(s24, rate, bps=24, block_size=32,
-                                       fixed_order=4, partition_order=2)
-                payloads.append(blob)
-            yield pd.DataFrame({"media_id": pdf[id_col].astype("int64"),
-                                "payload": payloads})
-
-    return ids.mapInPandas(gen, schema=out_schema)
+    return map_payloads(ids, id_col, payload_of)
 
 
 def audio_stats(df):
@@ -1016,43 +971,25 @@ def audio_stats(df):
     units; IEEE-float payloads report Q8.8 fixed point (×256, rounded)
     so the stats stay integer-exact — the synthetic float generator
     emits dyadic rationals k/256, so the quantization is lossless and
-    the decode path is oracle-checkable bit-for-bit. Arrow-batched
-    mapInPandas, same shape as multimodal.decode_stats; metadata
+    the decode path is oracle-checkable bit-for-bit. The per-row map
+    (``map_rows``) of multimodal.decode_stats; metadata
     filters prune before any decode."""
-    from collections.abc import Iterator
+    def row(mid, payload):
+        s, rate = decode_audio(payload)
+        if np.issubdtype(s.dtype, np.floating):
+            flat = np.round(s.ravel() * 256.0).astype(np.int64)
+        else:
+            flat = s.astype(np.int64).ravel()
+        return [(mid, s.shape[0], s.shape[1], rate,
+                 s.shape[0] * 1000 // rate, int(flat.sum()),
+                 int(flat.min()), int(flat.max()), int(np.abs(flat).sum()))]
 
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("n_samples", T.LongType(), False),
-        T.StructField("channels", T.LongType(), False),
-        T.StructField("sample_rate", T.LongType(), False),
-        T.StructField("duration_ms", T.LongType(), False),
-        T.StructField("amp_sum", T.LongType(), False),
-        T.StructField("amp_min", T.LongType(), False),
-        T.StructField("amp_max", T.LongType(), False),
-        T.StructField("abs_sum", T.LongType(), False),
-    ])
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                s, rate = decode_audio(bytes(payload))
-                if np.issubdtype(s.dtype, np.floating):
-                    flat = np.round(s.ravel() * 256.0).astype(np.int64)
-                else:
-                    flat = s.astype(np.int64).ravel()
-                rows.append((int(mid), s.shape[0], s.shape[1], rate,
-                             s.shape[0] * 1000 // rate,
-                             int(flat.sum()), int(flat.min()),
-                             int(flat.max()), int(np.abs(flat).sum())))
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema])
-
-    return df.select("media_id", "payload").mapInPandas(
-        process, schema=out_schema)
+    return map_rows(
+        df, ["media_id", "payload"],
+        "media_id BIGINT NOT NULL, n_samples BIGINT NOT NULL, channels"
+        " BIGINT NOT NULL, sample_rate BIGINT NOT NULL, duration_ms BIGINT"
+        " NOT NULL, amp_sum BIGINT NOT NULL, amp_min BIGINT NOT NULL,"
+        " amp_max BIGINT NOT NULL, abs_sum BIGINT NOT NULL", row)
 
 
 def synthetic_wav_media(ids, id_col: str = "media_id"):
@@ -1062,30 +999,12 @@ def synthetic_wav_media(ids, id_col: str = "media_id"):
     ``8000 * (1 + d % 2)`` — pure integer arithmetic, PCM is lossless,
     so a SQL oracle recomputes every decoded statistic exactly.
     Output: (media_id, payload binary)."""
-    from collections.abc import Iterator
+    def payload_of(d):
+        samples = ((d * 97 + np.arange(64 + d % 33) * 61) % 2001 - 1000) \
+            .astype(np.int16)
+        return encode_wav(samples, sample_rate=8000 * (1 + d % 2))
 
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), False),
-    ])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col].astype("int64"):
-                d = int(d)
-                n = 64 + d % 33
-                samples = ((d * 97 + np.arange(n) * 61) % 2001 - 1000) \
-                    .astype(np.int16)
-                payloads.append(encode_wav(
-                    samples, sample_rate=8000 * (1 + d % 2)))
-            yield pd.DataFrame({"media_id": pdf[id_col].astype("int64"),
-                                "payload": payloads})
-
-    return ids.mapInPandas(gen, schema=out_schema)
+    return map_payloads(ids, id_col, payload_of)
 
 
 def synthetic_float_wav_media(ids, id_col: str = "media_id"):
@@ -1096,30 +1015,12 @@ def synthetic_float_wav_media(ids, id_col: str = "media_id"):
     odd. audio_stats' Q8.8 quantization recovers k_i exactly, so a SQL
     oracle recomputes every statistic with no tolerance.
     Output: (media_id, payload binary)."""
-    from collections.abc import Iterator
+    def payload_of(d):
+        k = (d * 89 + np.arange(48 + d % 29) * 53) % 4001 - 2000
+        return encode_wav_float(k / 256.0, sample_rate=16000,
+                                bits=32 if d % 2 == 0 else 64)
 
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), False),
-    ])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col].astype("int64"):
-                d = int(d)
-                n = 48 + d % 29
-                k = (d * 89 + np.arange(n) * 53) % 4001 - 2000
-                payloads.append(encode_wav_float(
-                    k / 256.0, sample_rate=16000,
-                    bits=32 if d % 2 == 0 else 64))
-            yield pd.DataFrame({"media_id": pdf[id_col].astype("int64"),
-                                "payload": payloads})
-
-    return ids.mapInPandas(gen, schema=out_schema)
+    return map_payloads(ids, id_col, payload_of)
 
 
 def synthetic_adpcm_wav_media(ids, id_col: str = "media_id"):
@@ -1131,36 +1032,17 @@ def synthetic_adpcm_wav_media(ids, id_col: str = "media_id"):
     means a DuckDB RECURSIVE CTE can replay the published decode state
     machine — step table, clamps, index walk — and check the decoder
     differentially, sample by sample. Output: (media_id, payload)."""
-    from collections.abc import Iterator
+    def payload_of(d):
+        n_nibs = 40 + 2 * (d % 13)
+        nibs = [(d * 7 + i * 5) % 16 for i in range(n_nibs)]
+        header = struct.pack("<hBB", (d * 31) % 1001 - 500, d % 89, 0)
+        packed = bytes(nibs[i] | (nibs[i + 1] << 4)
+                       for i in range(0, n_nibs, 2))
+        fmt = _fmt_chunk(0x11, 1, 8000, 4 + n_nibs // 2, 4,
+                         struct.pack("<HH", 2, n_nibs + 1))
+        return _riff(fmt, header + packed)
 
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), False),
-    ])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col].astype("int64"):
-                d = int(d)
-                n_nibs = 40 + 2 * (d % 13)
-                pred0 = (d * 31) % 1001 - 500
-                idx0 = d % 89
-                nibs = [(d * 7 + i * 5) % 16 for i in range(n_nibs)]
-                header = struct.pack("<hBB", pred0, idx0, 0)
-                packed = bytes(nibs[i] | (nibs[i + 1] << 4)
-                               for i in range(0, n_nibs, 2))
-                block_align = 4 + n_nibs // 2
-                fmt = _fmt_chunk(0x11, 1, 8000, block_align, 4,
-                                 struct.pack("<HH", 2, n_nibs + 1))
-                payloads.append(_riff(fmt, header + packed))
-            yield pd.DataFrame({"media_id": pdf[id_col].astype("int64"),
-                                "payload": payloads})
-
-    return ids.mapInPandas(gen, schema=out_schema)
+    return map_payloads(ids, id_col, payload_of)
 
 
 def synthetic_aiff_media(ids, id_col: str = "media_id"):
@@ -1177,65 +1059,42 @@ def synthetic_aiff_media(ids, id_col: str = "media_id"):
     µ-law expansion is exact, so a DuckDB oracle recomputes every
     decoded statistic bit-for-bit through real big-endian IFF
     containers. Output: (media_id, payload binary)."""
-    from collections.abc import Iterator
+    def chunk(cid, body):
+        return cid + struct.pack(">I", len(body)) + body \
+            + (b"\0" if len(body) % 2 else b"")
 
-    import pandas as pd
-    from pyspark.sql import types as T
+    def payload_of(d):
+        n, v = 40 + d % 17, d % 6
+        rate = 8000 * (1 + d % 2)
+        if v == 0:
+            s = ((d * 97 + np.arange(n * 2) * 61) % 2001 - 1000) \
+                .reshape(n, 2)
+            return encode_aiff(s, rate, bits=16)
+        if v == 1:
+            s = (d * 97 + np.arange(n) * 61) % 255 - 127
+            return encode_aiff(s, rate, bits=8)
+        if v == 2:
+            s = (d * 97 + np.arange(n) * 61) % 200001 - 100000
+            return encode_aiff(s, rate, bits=24)
+        if v == 3:
+            s = (d * 97 + np.arange(n) * 61) % 2001 - 1000
+            return encode_aiff(s, rate, compression=b"sowt")
+        if v == 4:
+            k = (d * 89 + np.arange(n) * 53) % 4001 - 2000
+            return encode_aiff(k / 256.0, rate, compression=b"fl32")
+        # raw µ-law byte stream (formula bytes, not a compress()
+        # round-trip — the oracle expands b closed-form, same strategy
+        # as the WAV G.711 row)
+        raw = ((d * 3 + np.arange(n) * 17) % 256).astype(np.uint8).tobytes()
+        comm = struct.pack(">HIH", 1, n, 8) + _f80_pack(rate) + b"ulaw" \
+            + b"\x04ULAW\x00"
+        chunks = chunk(b"FVER", struct.pack(">I", 0xA2805140)) \
+            + chunk(b"COMM", comm) \
+            + chunk(b"SSND", struct.pack(">II", 0, 0) + raw)
+        return b"FORM" + struct.pack(">I", 4 + len(chunks)) + b"AIFC" \
+            + chunks
 
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), False),
-    ])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col].astype("int64"):
-                d = int(d)
-                n, v = 40 + d % 17, d % 6
-                rate = 8000 * (1 + d % 2)
-                if v == 0:
-                    s = ((d * 97 + np.arange(n * 2) * 61) % 2001
-                         - 1000).reshape(n, 2)
-                    payloads.append(encode_aiff(s, rate, bits=16))
-                elif v == 1:
-                    s = (d * 97 + np.arange(n) * 61) % 255 - 127
-                    payloads.append(encode_aiff(s, rate, bits=8))
-                elif v == 2:
-                    s = (d * 97 + np.arange(n) * 61) % 200001 - 100000
-                    payloads.append(encode_aiff(s, rate, bits=24))
-                elif v == 3:
-                    s = (d * 97 + np.arange(n) * 61) % 2001 - 1000
-                    payloads.append(encode_aiff(s, rate,
-                                                compression=b"sowt"))
-                elif v == 4:
-                    k = (d * 89 + np.arange(n) * 53) % 4001 - 2000
-                    payloads.append(encode_aiff(k / 256.0, rate,
-                                                compression=b"fl32"))
-                else:
-                    # raw µ-law byte stream (formula bytes, not a
-                    # compress() round-trip — the oracle expands b
-                    # closed-form, same strategy as the WAV G.711 row)
-                    raw = ((d * 3 + np.arange(n) * 17) % 256) \
-                        .astype(np.uint8).tobytes()
-                    comm = struct.pack(">HIH", 1, n, 8) \
-                        + _f80_pack(rate) + b"ulaw" + b"\x04ULAW\x00"
-
-                    def chunk(cid, body):
-                        return cid + struct.pack(">I", len(body)) \
-                            + body + (b"\0" if len(body) % 2 else b"")
-
-                    chunks = chunk(b"FVER",
-                                   struct.pack(">I", 0xA2805140)) \
-                        + chunk(b"COMM", comm) \
-                        + chunk(b"SSND", struct.pack(">II", 0, 0) + raw)
-                    payloads.append(b"FORM"
-                                    + struct.pack(">I", 4 + len(chunks))
-                                    + b"AIFC" + chunks)
-            yield pd.DataFrame({"media_id": pdf[id_col].astype("int64"),
-                                "payload": payloads})
-
-    return ids.mapInPandas(gen, schema=out_schema)
+    return map_payloads(ids, id_col, payload_of)
 
 
 def audio_window_stats(df, window: int = 16):
@@ -1245,51 +1104,36 @@ def audio_window_stats(df, window: int = 16):
     (RMS/VAD/fingerprint) starts from, with all-integer outputs so the
     window walk is oracle-checkable bit-for-bit. ``zero_cross`` counts
     adjacent pairs WITHIN the window whose product is negative (strict
-    sign changes; zeros break a run). Arrow-batched mapInPandas; the
-    per-window reduction is vectorized numpy, not a Python loop per
-    sample."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
+    sign changes; zeros break a run). A per-row map (``map_rows``)
+    with one output row per window; the per-window reduction is
+    vectorized numpy, not a Python loop per sample."""
     if window <= 0:
         raise ValueError("window must be positive")
 
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("win_idx", T.LongType(), False),
-        T.StructField("n", T.LongType(), False),
-        T.StructField("amp_sum", T.LongType(), False),
-        T.StructField("abs_sum", T.LongType(), False),
-        T.StructField("amp_min", T.LongType(), False),
-        T.StructField("amp_max", T.LongType(), False),
-        T.StructField("zero_cross", T.LongType(), False),
-    ])
+    def row(mid, payload):
+        s, _rate = decode_audio(payload)
+        mono = s[:, 0]
+        if np.issubdtype(mono.dtype, np.floating):
+            mono = np.round(mono * 256.0)
+        mono = mono.astype(np.int64)
+        cross = (mono[1:] * mono[:-1] < 0)
+        out = []
+        for wi in range(-(-len(mono) // window)):
+            seg = mono[wi * window:(wi + 1) * window]
+            # pair (i-1, i) belongs to i's window; exclude the
+            # window-opening sample's pair (cross-window)
+            cseg = cross[wi * window:wi * window + len(seg) - 1]
+            out.append((mid, wi, len(seg), int(seg.sum()),
+                        int(np.abs(seg).sum()), int(seg.min()),
+                        int(seg.max()), int(cseg.sum())))
+        return out
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                s, _rate = decode_audio(bytes(payload))
-                mono = s[:, 0]
-                if np.issubdtype(mono.dtype, np.floating):
-                    mono = np.round(mono * 256.0)
-                mono = mono.astype(np.int64)
-                nwin = -(-len(mono) // window)
-                cross = (mono[1:] * mono[:-1] < 0)
-                for wi in range(nwin):
-                    seg = mono[wi * window:(wi + 1) * window]
-                    # pair (i-1, i) belongs to i's window; exclude the
-                    # window-opening sample's pair (cross-window)
-                    cseg = cross[wi * window:wi * window + len(seg) - 1]
-                    rows.append((int(mid), wi, len(seg), int(seg.sum()),
-                                 int(np.abs(seg).sum()), int(seg.min()),
-                                 int(seg.max()), int(cseg.sum())))
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema])
-
-    return df.select("media_id", "payload").mapInPandas(
-        process, schema=out_schema)
+    return map_rows(
+        df, ["media_id", "payload"],
+        "media_id BIGINT NOT NULL, win_idx BIGINT NOT NULL, n BIGINT NOT"
+        " NULL, amp_sum BIGINT NOT NULL, abs_sum BIGINT NOT NULL, amp_min"
+        " BIGINT NOT NULL, amp_max BIGINT NOT NULL, zero_cross BIGINT NOT"
+        " NULL", row)
 
 
 def synthetic_g711_wav_media(ids, id_col: str = "media_id"):
@@ -1300,30 +1144,13 @@ def synthetic_g711_wav_media(ids, id_col: str = "media_id"):
     segment/mantissa formulas, so a SQL oracle recomputes every decoded
     sample exactly (complement/XOR, shift, bias — no tables).
     Output: (media_id, payload binary)."""
-    from collections.abc import Iterator
+    def payload_of(d):
+        raw = ((d * 3 + np.arange(56 + d % 21) * 17) % 256).astype(np.uint8)
+        fmt = _fmt_chunk(7 if d % 2 == 0 else 6, 1, 8000, 1, 8,
+                         struct.pack("<H", 0))
+        return _riff(fmt, raw.tobytes())
 
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), False),
-    ])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col].astype("int64"):
-                d = int(d)
-                n = 56 + d % 21
-                raw = ((d * 3 + np.arange(n) * 17) % 256).astype(np.uint8)
-                tag = 7 if d % 2 == 0 else 6
-                fmt = _fmt_chunk(tag, 1, 8000, 1, 8, struct.pack("<H", 0))
-                payloads.append(_riff(fmt, raw.tobytes()))
-            yield pd.DataFrame({"media_id": pdf[id_col].astype("int64"),
-                                "payload": payloads})
-
-    return ids.mapInPandas(gen, schema=out_schema)
+    return map_payloads(ids, id_col, payload_of)
 
 
 def synthetic_msadpcm_wav_media(ids, id_col: str = "media_id"):
@@ -1337,40 +1164,22 @@ def synthetic_msadpcm_wav_media(ids, id_col: str = "media_id"):
     clamp, delta adaptation with the 16-entry table — so the decoder is
     checked differentially sample by sample, across all 7 predictor
     pairs. Output: (media_id, payload binary)."""
-    from collections.abc import Iterator
+    def payload_of(d):
+        n_nibs = 30 + 2 * (d % 11)
+        nibs = [(d * 11 + i * 7) % 16 for i in range(n_nibs)]
+        header = bytes([d % 7]) + struct.pack(
+            "<hhh", 16 + (d * 13) % 300, (d * 29) % 2001 - 1000,
+            (d * 37) % 2001 - 1000)
+        packed = bytes((nibs[i] << 4) | nibs[i + 1]
+                       for i in range(0, n_nibs, 2))
+        extra = struct.pack("<HHH", 4 + 4 * len(MSADPCM_COEFS), n_nibs + 2,
+                            len(MSADPCM_COEFS))
+        for a, b in MSADPCM_COEFS:
+            extra += struct.pack("<hh", a, b)
+        fmt = _fmt_chunk(2, 1, 8000, 7 + n_nibs // 2, 4, extra)
+        return _riff(fmt, header + packed)
 
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), False),
-    ])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col].astype("int64"):
-                d = int(d)
-                n_nibs = 30 + 2 * (d % 11)
-                nibs = [(d * 11 + i * 7) % 16 for i in range(n_nibs)]
-                header = bytes([d % 7])
-                header += struct.pack("<h", 16 + (d * 13) % 300)
-                header += struct.pack("<h", (d * 29) % 2001 - 1000)
-                header += struct.pack("<h", (d * 37) % 2001 - 1000)
-                packed = bytes((nibs[i] << 4) | nibs[i + 1]
-                               for i in range(0, n_nibs, 2))
-                block_align = 7 + n_nibs // 2
-                extra = struct.pack("<HHH", 4 + 4 * len(MSADPCM_COEFS),
-                                    n_nibs + 2, len(MSADPCM_COEFS))
-                for a, b in MSADPCM_COEFS:
-                    extra += struct.pack("<hh", a, b)
-                fmt = _fmt_chunk(2, 1, 8000, block_align, 4, extra)
-                payloads.append(_riff(fmt, header + packed))
-            yield pd.DataFrame({"media_id": pdf[id_col].astype("int64"),
-                                "payload": payloads})
-
-    return ids.mapInPandas(gen, schema=out_schema)
+    return map_payloads(ids, id_col, payload_of)
 
 
 # --- audio near-duplicate detection (r13, VERDICT r12 directive 7) ----------
@@ -1523,42 +1332,25 @@ def synthetic_near_dup_audio(ids, id_col: str = "media_id"):
     """Deterministic mixed-container corpus with PLANTED audio
     duplicates (r13, VERDICT r12 directive 7 — the dedup corpora were
     image-only + WAV; this one feeds FLAC and AIFF payloads through
-    the same mapInPandas decode path): samples from
+    the same per-row decode path): samples from
     ``near_dup_audio_samples``; containers — WAV PCM16 everywhere
     except the 3g+1 container twins, which encode as FLAC (g % 3 == 0,
     Rice-coded, operators/flac.py) or AIFF (g % 3 == 1, big-endian
     PCM). All three are lossless, so the all-pairs enumeration over
     the sample formula is the oracle. Output: (media_id, payload)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from aresdb_spark.operators.flac import encode_flac
 
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), False),
-    ])
+    def payload_of(d):
+        g, role = d // 3, d % 3
+        samples = near_dup_audio_samples(d)
+        if role == 1 and g % 3 == 0:
+            return encode_flac(samples, 16000, block_size=1024,
+                               fixed_order=2)
+        if role == 1 and g % 3 == 1:
+            return encode_aiff(samples, 16000)
+        return encode_wav(samples, 16000)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col].astype("int64"):
-                d = int(d)
-                g, role = d // 3, d % 3
-                samples = near_dup_audio_samples(d)
-                if role == 1 and g % 3 == 0:
-                    payloads.append(encode_flac(
-                        samples, 16000, block_size=1024, fixed_order=2))
-                elif role == 1 and g % 3 == 1:
-                    payloads.append(encode_aiff(samples, 16000))
-                else:
-                    payloads.append(encode_wav(samples, 16000))
-            yield pd.DataFrame({"media_id": pdf[id_col].astype("int64"),
-                                "payload": payloads})
-
-    return ids.mapInPandas(gen, schema=out_schema)
+    return map_payloads(ids, id_col, payload_of)
 
 
 def audio_near_dup_oracle_pairs(n_ids: int,

@@ -40,6 +40,8 @@ import struct
 
 import numpy as np
 
+from aresdb_spark.operators.util import map_payloads, map_rows
+
 GIF_SIGNATURES = (b"GIF87a", b"GIF89a")
 
 
@@ -530,27 +532,11 @@ def synthetic_gif_anim_media(ids, id_col: str = "media_id"):
     dispose-to-transparent — over the gray-ramp palette, so the
     composited canvases are integer-exact and a SQL oracle recomputes
     every statistic. Output: (media_id, payload)."""
-    from collections.abc import Iterator
+    def payload_of(d):
+        w, h, frames = _gif_anim_frame_specs(d)
+        return encode_gif_anim(frames, w, h, loop_count=d % 4)
 
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), False),
-    ])
-
-    def gen(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col].astype("int64"):
-                w, h, frames = _gif_anim_frame_specs(int(d))
-                payloads.append(encode_gif_anim(
-                    frames, w, h, loop_count=int(d) % 4))
-            yield pd.DataFrame({"media_id": pdf[id_col].astype("int64"),
-                                "payload": payloads})
-
-    return ids.mapInPandas(gen, schema=out_schema)
+    return map_payloads(ids, id_col, payload_of)
 
 
 def gif_anim_stats(df):
@@ -558,35 +544,20 @@ def gif_anim_stats(df):
     GCE walk + LZW decode + canvas compositing: (media_id, n_frames,
     width, height, delay_total_cs, px_sum) where px_sum sums every
     composited frame's RGB values (transparent canvas = 0).
-    Arrow-batched mapInPandas, column-pruned."""
-    from collections.abc import Iterator
+    A column-pruned per-row map (``map_rows``)."""
+    def row(mid, payload):
+        meta = gif_anim_probe(payload)
+        frames, delays = decode_gif_anim(payload)
+        return [(mid, len(frames), meta["width"], meta["height"],
+                 int(sum(delays)),
+                 sum(int(f[:, :, :3].astype(np.int64).sum())
+                     for f in frames))]
 
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("n_frames", T.IntegerType(), False),
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("height", T.IntegerType(), False),
-        T.StructField("delay_total_cs", T.LongType(), False),
-        T.StructField("px_sum", T.LongType(), False),
-    ])
-
-    def process(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                meta = gif_anim_probe(bytes(payload))
-                frames, delays = decode_gif_anim(bytes(payload))
-                px_sum = sum(int(f[:, :, :3].astype(np.int64).sum())
-                             for f in frames)
-                rows.append((int(mid), len(frames), meta["width"],
-                             meta["height"], int(sum(delays)), px_sum))
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema])
-
-    return df.select("media_id", "payload").mapInPandas(
-        process, schema=out_schema)
+    return map_rows(
+        df, ["media_id", "payload"],
+        "media_id BIGINT NOT NULL, n_frames INT NOT NULL, width INT NOT"
+        " NULL, height INT NOT NULL, delay_total_cs BIGINT NOT NULL, px_sum"
+        " BIGINT NOT NULL", row)
 
 
 def encode_gif_anim(frames: "list[tuple]", screen_w: int, screen_h: int,

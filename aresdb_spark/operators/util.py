@@ -1,11 +1,13 @@
 """Shared operator utilities: expression let-binding, expression text,
-the local-parallelism guard and plan sizing. All exist for 100 TB-scale
-reasons — see docstrings."""
+the per-row Python map, the local-parallelism guard and plan sizing.
+All exist for 100 TB-scale reasons — see docstrings."""
 
 from __future__ import annotations
 
 from datetime import datetime, timezone
+from typing import Callable, Iterable
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -96,6 +98,57 @@ def hof(name: str, arg: Column | str, fn: str) -> Column | str:
     if isinstance(arg, str):
         return f"{name}({arg}, {fn})"
     return F.call_function(name, arg, F.expr(fn))
+
+
+# -- the per-row Python map: every media operator and synthetic payload
+# generator is a row function plus an output schema over this one
+# Arrow-batched mapInPandas.
+
+# integer column types built as nullable integer arrays: a NULL in a
+# plain list would turn the column float64, which rounds past 2^53
+_INT_DTYPES = {T.LongType: "Int64", T.IntegerType: "Int32"}
+PAYLOAD_SCHEMA = "media_id BIGINT NOT NULL, payload BINARY NOT NULL"
+
+
+def _column(values, dt: T.DataType):
+    if isinstance(dt, T.LongType):
+        # a 64-bit hash with bit 63 set rides as its two's complement
+        values = [v - (1 << 64) if v is not None and v >= 1 << 63 else v
+                  for v in values]
+    dtype = _INT_DTYPES.get(type(dt))
+    return pd.array(values, dtype=dtype) if dtype \
+        else pd.Series(values, dtype=object)
+
+
+def map_rows(df: DataFrame, cols: "list[str]", schema: str,
+             fn: "Callable[..., Iterable[tuple]]") -> DataFrame:
+    """``df`` pruned to ``cols``, then ONE Arrow-batched ``mapInPandas``
+    that calls ``fn(*row)`` on each input row — values as Python
+    objects (int, bytes, str, None) — and emits the zero or more
+    tuples ``fn`` returns, in the field order of ``schema`` (DDL text,
+    ``NOT NULL`` where a column cannot be NULL). The pruning keeps
+    payload bytes off the Arrow transfer of every column the row does
+    not read; payloads never round-trip through Spark Row objects."""
+    out = T.StructType.fromDDL(schema)
+
+    def run(batches: "Iterable[pd.DataFrame]") -> "Iterable[pd.DataFrame]":
+        for pdf in batches:
+            rows = [r for row in zip(*(pdf[c].tolist() for c in cols))
+                    for r in fn(*row)]
+            columns = list(zip(*rows)) or [()] * len(out.fields)
+            yield pd.DataFrame({f.name: _column(v, f.dataType)
+                                for f, v in zip(out.fields, columns)})
+
+    return df.select(*cols).mapInPandas(run, schema=out)
+
+
+def map_payloads(ids: DataFrame, id_col: str,
+                 payload_of: "Callable[[int], bytes]") -> DataFrame:
+    """(media_id, payload) with ``payload_of(d)`` for each id ``d`` of
+    ``ids[id_col]``, built executor-side: the one shape of every
+    synthetic media generator."""
+    return map_rows(ids, [id_col], PAYLOAD_SCHEMA,
+                    lambda d: [(d, payload_of(d))])
 
 
 # Forced-broadcast ceiling: a relation planned at or under this many

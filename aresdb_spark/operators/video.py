@@ -37,7 +37,9 @@ from __future__ import annotations
 
 import struct
 
-import numpy as np  # noqa: F401  (parity with the other media modules)
+import numpy as np
+
+from aresdb_spark.operators.util import map_payloads, map_rows
 
 MP4_BRANDS = (b"isom", b"iso2", b"mp41", b"mp42", b"avc1", b"M4V ")
 
@@ -486,116 +488,64 @@ def sample_video_frames(payload: bytes, every_ms: int) -> "list[tuple]":
 def video_probe_stats(df):
     """media table → exact integer container metadata per payload:
     (media_id, brand fourcc as string, timescale, duration_ms, n_tracks,
-    video_width, video_height). Arrow-batched mapInPandas; parsing is
-    lossless so the row is oracle-checkable bit-for-bit."""
-    from collections.abc import Iterator
+    video_width, video_height). A per-row map (``map_rows``); parsing
+    is lossless so the row is oracle-checkable bit-for-bit."""
+    def row(mid, payload):
+        m = probe_mp4(payload)
+        vids = [t for t in m["tracks"] if t["handler"] == "vide"]
+        return [(mid, m["brand"], m["timescale"], m["duration_ms"],
+                 len(m["tracks"]), vids[0]["width"] if vids else None,
+                 vids[0]["height"] if vids else None)]
 
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("brand", T.StringType(), False),
-        T.StructField("timescale", T.LongType(), False),
-        T.StructField("duration_ms", T.LongType(), False),
-        T.StructField("n_tracks", T.LongType(), False),
-        T.StructField("video_width", T.LongType(), True),
-        T.StructField("video_height", T.LongType(), True),
-    ])
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                m = probe_mp4(bytes(payload))
-                vids = [t for t in m["tracks"] if t["handler"] == "vide"]
-                rows.append((int(mid), m["brand"], m["timescale"],
-                             m["duration_ms"], len(m["tracks"]),
-                             vids[0]["width"] if vids else None,
-                             vids[0]["height"] if vids else None))
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema])
-
-    return df.select("media_id", "payload").mapInPandas(
-        process, schema=out_schema)
+    return map_rows(
+        df, ["media_id", "payload"],
+        "media_id BIGINT NOT NULL, brand STRING NOT NULL, timescale BIGINT"
+        " NOT NULL, duration_ms BIGINT NOT NULL, n_tracks BIGINT NOT NULL,"
+        " video_width BIGINT, video_height BIGINT", row)
 
 
 def video_frame_stats(df):
     """media table → one row per DECODED video frame: (media_id,
     frame_idx, width, height, n_px, px_sum, px_min, px_max) — exact
     integer statistics over real container + codec bytes, so the row is
-    oracle-checkable bit-for-bit for block-constant samples. Same
-    Arrow-batched, column-pruned mapInPandas shape as decode_stats;
+    oracle-checkable bit-for-bit for block-constant samples. The same
+    column-pruned per-row map as decode_stats (``_px_stats``);
     the container metadata filters (probe_mp4 columns) prune upstream
     of this decode, which is the expensive half."""
-    from collections.abc import Iterator
+    from aresdb_spark.operators.multimodal import _px_stats
 
-    import pandas as pd
-    from pyspark.sql import types as T
+    def row(mid, payload):
+        out = []
+        for fi, px in enumerate(decode_video_frames(payload)):
+            w, h, _ch, *rest = _px_stats(px)
+            out.append((mid, fi, w, h, *rest))
+        return out
 
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("frame_idx", T.LongType(), False),
-        T.StructField("width", T.LongType(), False),
-        T.StructField("height", T.LongType(), False),
-        T.StructField("n_px", T.LongType(), False),
-        T.StructField("px_sum", T.LongType(), False),
-        T.StructField("px_min", T.LongType(), False),
-        T.StructField("px_max", T.LongType(), False),
-    ])
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                for fi, px in enumerate(decode_video_frames(bytes(payload))):
-                    h, w = px.shape[0], px.shape[1]
-                    ch = 1 if px.ndim == 2 else px.shape[2]
-                    flat = px.astype(np.int64).ravel()
-                    rows.append((int(mid), fi, w, h, flat.size,
-                                 int(flat.sum()), int(flat.min()),
-                                 int(flat.max())))
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema])
-
-    return df.select("media_id", "payload").mapInPandas(
-        process, schema=out_schema)
+    return map_rows(
+        df, ["media_id", "payload"],
+        "media_id BIGINT NOT NULL, frame_idx BIGINT NOT NULL, width BIGINT"
+        " NOT NULL, height BIGINT NOT NULL, n_px BIGINT NOT NULL, px_sum"
+        " BIGINT NOT NULL, px_min BIGINT NOT NULL, px_max BIGINT NOT NULL",
+        row)
 
 
 def video_frame_sample_stats(df, every_ms: int = 250):
     """media table → one row per SAMPLING TARGET: (media_id, target_ms,
     frame_idx, pts_ms, width, height, px_sum) — real stts timing picks
     the frame for each target and only chosen samples decode
-    (sample_video_frames). Arrow-batched, column-pruned mapInPandas;
+    (sample_video_frames). A column-pruned per-row map (``map_rows``);
     exact integers, so block-constant tracks are oracle-checkable
     bit-for-bit including the TIMING math (floor-ms starts, cumulative
     stts runs)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("target_ms", T.LongType(), False),
-        T.StructField("frame_idx", T.LongType(), False),
-        T.StructField("pts_ms", T.LongType(), False),
-        T.StructField("width", T.LongType(), False),
-        T.StructField("height", T.LongType(), False),
-        T.StructField("px_sum", T.LongType(), False),
-    ])
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                for t, fi, pts, px in sample_video_frames(
-                        bytes(payload), every_ms):
-                    rows.append((int(mid), t, fi, pts,
-                                 px.shape[1], px.shape[0],
-                                 int(px.astype(np.int64).sum())))
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema])
-
-    return df.select("media_id", "payload").mapInPandas(
-        process, schema=out_schema)
+    return map_rows(
+        df, ["media_id", "payload"],
+        "media_id BIGINT NOT NULL, target_ms BIGINT NOT NULL, frame_idx"
+        " BIGINT NOT NULL, pts_ms BIGINT NOT NULL, width BIGINT NOT NULL,"
+        " height BIGINT NOT NULL, px_sum BIGINT NOT NULL",
+        lambda mid, payload: [
+            (mid, t, fi, pts, px.shape[1], px.shape[0],
+             int(px.astype(np.int64).sum()))
+            for t, fi, pts, px in sample_video_frames(payload, every_ms)])
 
 
 def synthetic_avi_media(ids, id_col: str = "media_id"):
@@ -608,43 +558,23 @@ def synthetic_avi_media(ids, id_col: str = "media_id"):
     in-repo JPEG encoder); odd ids write UNCOMPRESSED bottom-up DIB
     frames (equal-channel RGB, lossless), so one graded set covers
     both movi chunk kinds. Output: (media_id, payload binary)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from aresdb_spark.operators.avi import encode_avi
     from aresdb_spark.operators.jpeg import encode_jpeg
 
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), False),
-    ])
+    def payload_of(d):
+        wb, hb = 1 + d % 3, 1 + d % 2
+        frames = []
+        for f in range(1 + d % 3):
+            vals = np.array([[(d * 11 + f * 29 + bx * 37 + by * 53) % 256
+                              for bx in range(wb)] for by in range(hb)],
+                            dtype=np.uint8)
+            px = np.kron(vals, np.ones((8, 8), np.uint8))
+            frames.append(encode_jpeg(px) if d % 2 == 0
+                          else np.stack([px] * 3, axis=2))
+        return encode_avi(frames, 8 * wb, 8 * hb, fps=10,
+                          mjpeg=d % 2 == 0)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col].astype("int64"):
-                d = int(d)
-                wb, hb = 1 + d % 3, 1 + d % 2
-                n_frames = 1 + d % 3
-                frames = []
-                for f in range(n_frames):
-                    vals = np.array(
-                        [[(d * 11 + f * 29 + bx * 37 + by * 53) % 256
-                          for bx in range(wb)] for by in range(hb)],
-                        dtype=np.uint8)
-                    px = np.kron(vals, np.ones((8, 8), np.uint8))
-                    if d % 2 == 0:
-                        frames.append(encode_jpeg(px))
-                    else:
-                        frames.append(np.stack([px] * 3, axis=2))
-                payloads.append(encode_avi(
-                    frames, 8 * wb, 8 * hb, fps=10, mjpeg=d % 2 == 0))
-            yield pd.DataFrame({"media_id": pdf[id_col].astype("int64"),
-                                "payload": payloads})
-
-    return ids.mapInPandas(gen, schema=out_schema)
+    return map_payloads(ids, id_col, payload_of)
 
 
 def synthetic_mjpeg_timed_media(ids, id_col: str = "media_id"):
@@ -655,34 +585,17 @@ def synthetic_mjpeg_timed_media(ids, id_col: str = "media_id"):
     box carries real multi-entry runs and a SQL oracle recomputes every
     presentation timestamp (cumulative floor-ms) and the chosen frame
     per sampling target exactly. Output: (media_id, payload binary)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from aresdb_spark.operators.jpeg import encode_jpeg
 
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), False),
-    ])
+    def payload_of(d):
+        nf = 2 + d % 4
+        frames = [encode_jpeg(np.full((8, 8), (d * 23 + f * 47) % 256,
+                                      dtype=np.uint8)) for f in range(nf)]
+        durs = [100 + 50 * ((d + f) % 3) for f in range(nf)]
+        return encode_mp4_mjpeg(frames, 8, 8, timescale=600,
+                                frame_durations=durs)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col].astype("int64"):
-                d = int(d)
-                nf = 2 + d % 4
-                frames = [encode_jpeg(np.full(
-                    (8, 8), (d * 23 + f * 47) % 256, dtype=np.uint8))
-                    for f in range(nf)]
-                durs = [100 + 50 * ((d + f) % 3) for f in range(nf)]
-                payloads.append(encode_mp4_mjpeg(
-                    frames, 8, 8, timescale=600, frame_durations=durs))
-            yield pd.DataFrame({"media_id": pdf[id_col].astype("int64"),
-                                "payload": payloads})
-
-    return ids.mapInPandas(gen, schema=out_schema)
+    return map_payloads(ids, id_col, payload_of)
 
 
 def synthetic_mjpeg_media(ids, id_col: str = "media_id"):
@@ -695,39 +608,21 @@ def synthetic_mjpeg_media(ids, id_col: str = "media_id"):
     samples survive the lossy path exactly (jpeg.py oracle note), so a
     SQL oracle recomputes every frame statistic through REAL container
     + codec bytes. Output: (media_id, payload binary)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from aresdb_spark.operators.jpeg import encode_jpeg
 
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), False),
-    ])
+    def payload_of(d):
+        wb, hb = 1 + d % 3, 1 + d % 2
+        frames = []
+        for f in range(1 + d % 3):
+            vals = np.array([[(d * 11 + f * 29 + bx * 37 + by * 53) % 256
+                              for bx in range(wb)] for by in range(hb)],
+                            dtype=np.uint8)
+            frames.append(encode_jpeg(
+                np.kron(vals, np.ones((8, 8), dtype=np.uint8))))
+        return encode_mp4_mjpeg(frames, 8 * wb, 8 * hb,
+                                n_chunks=2 if d % 2 else 1)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col].astype("int64"):
-                d = int(d)
-                wb, hb = 1 + d % 3, 1 + d % 2
-                frames = []
-                for f in range(1 + d % 3):
-                    vals = np.array(
-                        [[(d * 11 + f * 29 + bx * 37 + by * 53) % 256
-                          for bx in range(wb)] for by in range(hb)],
-                        dtype=np.uint8)
-                    frames.append(encode_jpeg(
-                        np.kron(vals, np.ones((8, 8), dtype=np.uint8))))
-                payloads.append(encode_mp4_mjpeg(
-                    frames, 8 * wb, 8 * hb,
-                    n_chunks=2 if d % 2 else 1))
-            yield pd.DataFrame({"media_id": pdf[id_col].astype("int64"),
-                                "payload": payloads})
-
-    return ids.mapInPandas(gen, schema=out_schema)
+    return map_payloads(ids, id_col, payload_of)
 
 
 def synthetic_mjpeg_media_mixed(ids, id_col: str = "media_id"):
@@ -743,44 +638,25 @@ def synthetic_mjpeg_media_mixed(ids, id_col: str = "media_id"):
     progressive carries the same coefficients as baseline), so one
     DuckDB oracle covers sample-table walk + per-frame codec dispatch +
     chroma path + progressive scan assembly bit-for-bit."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from aresdb_spark.operators.jpeg import encode_jpeg
 
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), False),
-    ])
+    def payload_of(d):
+        tw, th = 1 + d % 2, 1 + (d // 2) % 2
+        frames = []
+        for f in range(1 + d % 3):
+            vals = np.array([[(d * 17 + f * 29 + bx * 43 + by * 61) % 256
+                              for bx in range(tw)] for by in range(th)],
+                            dtype=np.uint8)
+            gray = np.kron(vals, np.ones((16, 16), dtype=np.uint8))
+            mode = (d + f) % 3
+            img = gray if mode == 0 else np.stack([gray] * 3, axis=2)
+            frames.append(encode_jpeg(
+                img, subsampling="420" if mode == 2 else "444",
+                progressive=(d // 3) % 2 == 1))
+        return encode_mp4_mjpeg(frames, 16 * tw, 16 * th,
+                                n_chunks=2 if d % 2 else 1)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col].astype("int64"):
-                d = int(d)
-                tw, th = 1 + d % 2, 1 + (d // 2) % 2
-                frames = []
-                for f in range(1 + d % 3):
-                    vals = np.array(
-                        [[(d * 17 + f * 29 + bx * 43 + by * 61) % 256
-                          for bx in range(tw)] for by in range(th)],
-                        dtype=np.uint8)
-                    gray = np.kron(vals, np.ones((16, 16), dtype=np.uint8))
-                    mode = (d + f) % 3
-                    img = gray if mode == 0 \
-                        else np.stack([gray] * 3, axis=2)
-                    frames.append(encode_jpeg(
-                        img, subsampling="420" if mode == 2 else "444",
-                        progressive=(d // 3) % 2 == 1))
-                payloads.append(encode_mp4_mjpeg(
-                    frames, 16 * tw, 16 * th,
-                    n_chunks=2 if d % 2 else 1))
-            yield pd.DataFrame({"media_id": pdf[id_col].astype("int64"),
-                                "payload": payloads})
-
-    return ids.mapInPandas(gen, schema=out_schema)
+    return map_payloads(ids, id_col, payload_of)
 
 
 def synthetic_mp4_media(ids, id_col: str = "media_id"):
@@ -790,36 +666,17 @@ def synthetic_mp4_media(ids, id_col: str = "media_id"):
     ``16*(1 + d % 15)``, track 2 soun), 64-bit mvhd/tkhd variants when
     ``d % 3 == 0`` (exercises the probe's v1 path). Parsing is
     lossless, so a SQL oracle recomputes every probed value."""
-    from collections.abc import Iterator
+    def payload_of(d):
+        dur = 600 + (d * 37) % 100000
+        tracks = [{"id": 1, "handler": b"vide", "width": 16 * (1 + d % 20),
+                   "height": 16 * (1 + d % 15), "duration_units": dur}]
+        if d % 2:
+            tracks.append({"id": 2, "handler": b"soun",
+                           "duration_units": dur})
+        return encode_mp4_skeleton(dur, 600 * (1 + d % 2), tracks,
+                                   version=1 if d % 3 == 0 else 0)
 
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), False),
-    ])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col].astype("int64"):
-                d = int(d)
-                dur = 600 + (d * 37) % 100000
-                tracks = [{"id": 1, "handler": b"vide",
-                           "width": 16 * (1 + d % 20),
-                           "height": 16 * (1 + d % 15),
-                           "duration_units": dur}]
-                if d % 2:
-                    tracks.append({"id": 2, "handler": b"soun",
-                                   "duration_units": dur})
-                payloads.append(encode_mp4_skeleton(
-                    dur, 600 * (1 + d % 2), tracks,
-                    version=1 if d % 3 == 0 else 0))
-            yield pd.DataFrame({"media_id": pdf[id_col].astype("int64"),
-                                "payload": payloads})
-
-    return ids.mapInPandas(gen, schema=out_schema)
+    return map_payloads(ids, id_col, payload_of)
 
 
 # --- video near-duplicate detection (r13) ------------------------------------
@@ -923,60 +780,38 @@ def synthetic_near_dup_videos(ids, id_col: str = "media_id"):
     DIB (otherwise g odd, equal-RGB). Every path is pixel-exact for
     the blocky pattern class, so the all-pairs enumeration over the
     frame formula is the oracle. Output: (media_id, payload binary)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from aresdb_spark.operators.avi import encode_avi
+    from aresdb_spark.operators.gif import encode_gif_anim
     from aresdb_spark.operators.jpeg import encode_jpeg
+    from aresdb_spark.operators.webp import encode_webp_anim
 
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), False),
-    ])
+    def payload_of(d):
+        g, role = d // 3, d % 3
+        frames = near_dup_video_frames(d)
+        twin = role == 1 and g % 3 != 2
+        if twin and g % 4 == 1:
+            # r14: animated-WebP container twin — the SAME frames as
+            # full-canvas lossless VP8L ANMF frames (equal-channel RGB,
+            # overwrite compositing); decode is pixel-exact, so the twin
+            # fingerprints identically (Hamming 0) like the AVI re-packs
+            return encode_webp_anim(
+                [(0, 0, np.stack([f] * 3, axis=2), 40, 1, 0)
+                 for f in frames], 64, 64)
+        if twin and g % 4 == 3:
+            # r14: animated-GIF container twin — gray-ramp palette
+            # indices ARE the pixel values, full frames, no
+            # transparency/disposal; lossless, so Hamming 0 like the
+            # other re-packs
+            return encode_gif_anim([(0, 0, f, 4, 0, None) for f in frames],
+                                   64, 64)
+        if twin and g % 2 == 0:
+            return encode_avi([encode_jpeg(f) for f in frames], 64, 64)
+        if twin:
+            return encode_avi([np.stack([f] * 3, axis=2) for f in frames],
+                              64, 64, mjpeg=False)
+        return encode_mp4_mjpeg([encode_jpeg(f) for f in frames], 64, 64)
 
-    def gen(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col].astype("int64"):
-                d = int(d)
-                g, role = d // 3, d % 3
-                frames = near_dup_video_frames(d)
-                if role == 1 and g % 3 != 2 and g % 4 == 1:
-                    # r14: animated-WebP container twin — the SAME
-                    # frames as full-canvas lossless VP8L ANMF frames
-                    # (equal-channel RGB, overwrite compositing);
-                    # decode is pixel-exact, so the twin fingerprints
-                    # identically (Hamming 0) like the AVI re-packs
-                    from aresdb_spark.operators.webp import \
-                        encode_webp_anim
-                    payloads.append(encode_webp_anim(
-                        [(0, 0, np.stack([f] * 3, axis=2), 40, 1, 0)
-                         for f in frames], 64, 64))
-                elif role == 1 and g % 3 != 2 and g % 4 == 3:
-                    # r14: animated-GIF container twin — gray-ramp
-                    # palette indices ARE the pixel values, full
-                    # frames, no transparency/disposal; lossless, so
-                    # Hamming 0 like the other re-packs
-                    from aresdb_spark.operators.gif import \
-                        encode_gif_anim
-                    payloads.append(encode_gif_anim(
-                        [(0, 0, f, 4, 0, None) for f in frames],
-                        64, 64))
-                elif role == 1 and g % 3 != 2 and g % 2 == 0:
-                    payloads.append(encode_avi(
-                        [encode_jpeg(f) for f in frames], 64, 64))
-                elif role == 1 and g % 3 != 2 and g % 2 == 1:
-                    rgb = [np.stack([f] * 3, axis=2) for f in frames]
-                    payloads.append(encode_avi(rgb, 64, 64, mjpeg=False))
-                else:
-                    payloads.append(encode_mp4_mjpeg(
-                        [encode_jpeg(f) for f in frames], 64, 64))
-            yield pd.DataFrame({"media_id": pdf[id_col].astype("int64"),
-                                "payload": payloads})
-
-    return ids.mapInPandas(gen, schema=out_schema)
+    return map_payloads(ids, id_col, payload_of)
 
 
 def video_near_dup_oracle_pairs(n_ids: int,

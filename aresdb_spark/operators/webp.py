@@ -55,6 +55,8 @@ import struct
 
 import numpy as np
 
+from aresdb_spark.operators.util import map_payloads, map_rows
+
 # the spec's 120-entry short-distance map: (dx, dy) neighborhood
 # offsets; plane codes 1..120 map here, codes > 120 mean dist-120
 _DIST_MAP = [
@@ -1379,65 +1381,33 @@ def synthetic_webp_anim_media(ids, id_col: str = "media_id"):
     is opaque + no-blend, so the composited canvases are integer-exact
     and a SQL oracle recomputes every statistic. Output:
     (media_id, payload)."""
-    from collections.abc import Iterator
+    def payload_of(d):
+        w, h, frames, bg, loop = _anim_frame_specs(d)
+        return encode_webp_anim(frames, w, h, background_rgba=bg,
+                                loop_count=loop)
 
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), False),
-    ])
-
-    def gen(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col].astype("int64"):
-                w, h, frames, bg, loop = _anim_frame_specs(int(d))
-                payloads.append(encode_webp_anim(
-                    frames, w, h, background_rgba=bg, loop_count=loop))
-            yield pd.DataFrame({"media_id": pdf[id_col].astype("int64"),
-                                "payload": payloads})
-
-    return ids.mapInPandas(gen, schema=out_schema)
+    return map_payloads(ids, id_col, payload_of)
 
 
 def webp_anim_stats(df):
     """media table → per-payload animation statistics through the REAL
     ANMF walk + VP8L decode + canvas compositing: (media_id, n_frames,
     loop_count, width, height, dur_total, px_sum) where px_sum sums
-    every composited frame's RGB values. Arrow-batched mapInPandas,
-    column-pruned — the animated sibling of webp_alpha_stats."""
-    from collections.abc import Iterator
+    every composited frame's RGB values. A column-pruned per-row map
+    (``map_rows``) — the animated sibling of webp_alpha_stats."""
+    def row(mid, payload):
+        meta = webp_anim_probe(payload)
+        frames, durs = decode_webp_anim(payload)
+        return [(mid, len(frames), meta["loop_count"], meta["width"],
+                 meta["height"], int(sum(durs)),
+                 sum(int(f[:, :, :3].astype(np.int64).sum())
+                     for f in frames))]
 
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("n_frames", T.IntegerType(), False),
-        T.StructField("loop_count", T.IntegerType(), False),
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("height", T.IntegerType(), False),
-        T.StructField("dur_total", T.LongType(), False),
-        T.StructField("px_sum", T.LongType(), False),
-    ])
-
-    def process(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                meta = webp_anim_probe(bytes(payload))
-                frames, durs = decode_webp_anim(bytes(payload))
-                px_sum = sum(int(f[:, :, :3].astype(np.int64).sum())
-                             for f in frames)
-                rows.append((int(mid), len(frames), meta["loop_count"],
-                             meta["width"], meta["height"],
-                             int(sum(durs)), px_sum))
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema])
-
-    return df.select("media_id", "payload").mapInPandas(
-        process, schema=out_schema)
+    return map_rows(
+        df, ["media_id", "payload"],
+        "media_id BIGINT NOT NULL, n_frames INT NOT NULL, loop_count INT NOT"
+        " NULL, width INT NOT NULL, height INT NOT NULL, dur_total BIGINT"
+        " NOT NULL, px_sum BIGINT NOT NULL", row)
 
 
 def vp8_key_frame_stub(w: int, h: int) -> bytes:
@@ -1683,65 +1653,33 @@ def synthetic_webp_alpha_media(ids, id_col: str = "media_id"):
     so a SQL oracle recomputes every decoded statistic exactly. The
     VP8 chunk is the 10-byte key-frame header stub: its metadata
     probes, its pixels honestly raise. Output: (media_id, payload)."""
-    from collections.abc import Iterator
+    def payload_of(d):
+        w, h = 8 + d % 9, 6 + d % 7
+        y, x = np.mgrid[0:h, 0:w]
+        alpha = ((d * 23 + x * 5 + y * 11) % 256).astype(np.uint8)
+        return encode_webp_extended(alpha, vp8_key_frame_stub(w, h),
+                                    filtering=d % 4,
+                                    compression=0 if d % 5 == 0 else 1)
 
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), False),
-    ])
-
-    def gen(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col].astype("int64"):
-                d = int(d)
-                w, h = 8 + d % 9, 6 + d % 7
-                y, x = np.mgrid[0:h, 0:w]
-                alpha = ((d * 23 + x * 5 + y * 11) % 256).astype(np.uint8)
-                payloads.append(encode_webp_extended(
-                    alpha, vp8_key_frame_stub(w, h), filtering=d % 4,
-                    compression=0 if d % 5 == 0 else 1))
-            yield pd.DataFrame({"media_id": pdf[id_col].astype("int64"),
-                                "payload": payloads})
-
-    return ids.mapInPandas(gen, schema=out_schema)
+    return map_payloads(ids, id_col, payload_of)
 
 
 def webp_alpha_stats(df):
     """media table → per-payload alpha-plane statistics through the
     REAL container walk + ALPH decode (probe the VP8X canvas, decode
     the plane, aggregate): (media_id, width, height, a_sum, a_min,
-    a_max). Arrow-batched mapInPandas, column-pruned to id+payload —
-    the same decode-pipeline shape as multimodal.decode_stats."""
-    from collections.abc import Iterator
+    a_max). A per-row map (``map_rows``), column-pruned to id+payload
+    — the same decode-pipeline shape as multimodal.decode_stats."""
+    def row(mid, payload):
+        a = decode_webp_alpha(payload)
+        return [(mid, a.shape[1], a.shape[0], int(a.astype(np.int64).sum()),
+                 int(a.min()), int(a.max()))]
 
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("height", T.IntegerType(), False),
-        T.StructField("a_sum", T.LongType(), False),
-        T.StructField("a_min", T.IntegerType(), False),
-        T.StructField("a_max", T.IntegerType(), False),
-    ])
-
-    def process(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                a = decode_webp_alpha(bytes(payload))
-                rows.append((int(mid), a.shape[1], a.shape[0],
-                             int(a.astype(np.int64).sum()),
-                             int(a.min()), int(a.max())))
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema])
-
-    return df.select("media_id", "payload").mapInPandas(
-        process, schema=out_schema)
+    return map_rows(
+        df, ["media_id", "payload"],
+        "media_id BIGINT NOT NULL, width INT NOT NULL, height INT NOT NULL,"
+        " a_sum BIGINT NOT NULL, a_min INT NOT NULL, a_max INT NOT NULL",
+        row)
 
 
 def synthetic_webp_probe_media(ids, id_col: str = "media_id"):
@@ -1754,71 +1692,35 @@ def synthetic_webp_probe_media(ids, id_col: str = "media_id"):
     ``w = 3 + d % 6`` by ``h = 2 + d % 5`` in every kind, so one
     formula oracle covers the probe output. Output: (media_id,
     payload)."""
-    from collections.abc import Iterator
+    def payload_of(d):
+        w, h = 3 + d % 6, 2 + d % 5
+        if d % 3 == 0:
+            y, x = np.mgrid[0:h, 0:w]
+            px = ((d * 3 + x * 7 + y * 11) % 256).astype(np.uint8)
+            return encode_webp(np.stack([px] * 3, axis=2))
+        if d % 3 == 1:
+            return encode_webp_extended(np.full((h, w), d % 256, np.uint8),
+                                        vp8_key_frame_stub(w, h))
+        body = vp8_key_frame_stub(w, h)
+        chunk = b"VP8 " + struct.pack("<I", len(body)) + body
+        if len(body) % 2:
+            chunk += b"\0"
+        return b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk
 
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), False),
-    ])
-
-    def gen(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col].astype("int64"):
-                d = int(d)
-                w, h = 3 + d % 6, 2 + d % 5
-                if d % 3 == 0:
-                    y, x = np.mgrid[0:h, 0:w]
-                    px = ((d * 3 + x * 7 + y * 11) % 256).astype(np.uint8)
-                    payloads.append(encode_webp(
-                        np.stack([px] * 3, axis=2)))
-                elif d % 3 == 1:
-                    alpha = np.full((h, w), d % 256, np.uint8)
-                    payloads.append(encode_webp_extended(
-                        alpha, vp8_key_frame_stub(w, h)))
-                else:
-                    body = vp8_key_frame_stub(w, h)
-                    chunk = b"VP8 " + struct.pack("<I", len(body)) + body
-                    if len(body) % 2:
-                        chunk += b"\0"
-                    payloads.append(
-                        b"RIFF" + struct.pack("<I", 4 + len(chunk))
-                        + b"WEBP" + chunk)
-            yield pd.DataFrame({"media_id": pdf[id_col].astype("int64"),
-                                "payload": payloads})
-
-    return ids.mapInPandas(gen, schema=out_schema)
+    return map_payloads(ids, id_col, payload_of)
 
 
 def webp_probe_stats(df):
     """media table → container metadata through the REAL probe (no
     pixel decode): (media_id, kind, width, height, has_alpha).
-    Arrow-batched mapInPandas, column-pruned — the WebP analog of
+    A column-pruned per-row map (``map_rows``) — the WebP analog of
     video.video_probe_stats."""
-    from collections.abc import Iterator
+    def row(mid, payload):
+        p = webp_probe(payload)
+        return [(mid, p["kind"], p["width"], p["height"],
+                 int(bool(p.get("has_alpha"))))]
 
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("height", T.IntegerType(), False),
-        T.StructField("has_alpha", T.IntegerType(), False),
-    ])
-
-    def process(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                p = webp_probe(bytes(payload))
-                rows.append((int(mid), p["kind"], p["width"],
-                             p["height"], int(bool(p.get("has_alpha")))))
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema])
-
-    return df.select("media_id", "payload").mapInPandas(
-        process, schema=out_schema)
+    return map_rows(
+        df, ["media_id", "payload"],
+        "media_id BIGINT NOT NULL, kind STRING NOT NULL, width INT NOT NULL,"
+        " height INT NOT NULL, has_alpha INT NOT NULL", row)

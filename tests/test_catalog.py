@@ -33,3 +33,24 @@ def test_register_all_spark_sql(spark, duck):
     want = dict(duck.execute(
         "SELECT event_type, count(*) FROM events GROUP BY 1").fetchall())
     assert {r["event_type"]: r["c"] for r in got} == want
+
+
+def test_time_filtered_load_reuses_the_table_relation(spark):
+    """A plain-parquet table is listed once per catalog: a second
+    time-filtered load discovers no files, and its rows equal a fresh
+    read's over the same range."""
+    from datetime import datetime
+
+    discovered = spark._jvm.org.apache.spark.metrics.source \
+        .HiveCatalogMetrics.METRIC_FILES_DISCOVERED()
+    cat = Catalog(SF_DIR)
+    cat.load(spark, "events", time_range=(datetime(2024, 1, 2),
+                                          datetime(2024, 1, 9)))
+    rng = (datetime(2024, 1, 5), datetime(2024, 1, 12))
+    before = discovered.getCount()
+    got = cat.load(spark, "events", time_range=rng)
+    assert discovered.getCount() == before
+    want = Catalog(SF_DIR).load(spark, "events", time_range=rng)
+    assert discovered.getCount() > before       # a fresh read lists
+    rows = sorted(tuple(r) for r in got.collect())
+    assert rows and rows == sorted(tuple(r) for r in want.collect())

@@ -1509,12 +1509,10 @@ def test_png_decode_rejects_unimplemented_formats():
         decode_image(b"packedmystery-format\x00\x01")
     with pytest.raises(ValueError, match="PNM raster truncated"):
         decode_image(b"P6 3 3 255 binaryppm")
-    # ... unless the synthetic-plumbing fake is opted into explicitly,
-    # which applies ONLY to unknown magics: a KNOWN container with a
-    # malformed stream still errors from inside its codec
-    assert decode_image(b"\x7fmystery", allow_fake=True).shape == (8, 8)
+    # a KNOWN container with a malformed stream errors from inside its
+    # codec
     with pytest.raises(ValueError, match="BMP"):
-        decode_image(b"BM\x3a\x00\x00\x00\x00\x00", allow_fake=True)
+        decode_image(b"BM\x3a\x00\x00\x00\x00\x00")
     # and the dispatcher decodes a real PNG for real
     px = np.arange(64, dtype=np.uint8).reshape(8, 8)
     assert np.array_equal(decode_image(encode_png(px)),
